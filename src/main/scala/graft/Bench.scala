@@ -1,49 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — prints ONE JSON line with per-query wall-clock.
   *
   * Timing protocol (matches BASELINE.md "single warmed SparkSession"):
-  * one untimed warm-up pass primes the JVM (codegen, classloading,
-  * parquet footers), then a second pass is timed per query. Each pass
-  * executes the full query with a count() sink.
+  * the base tables are cached, one untimed warm-up pass primes the JVM
+  * (codegen, classloading, parquet footers), then two timed passes run
+  * per query and the faster one is reported. Each pass executes the
+  * full query into a noop write sink.
+  *
+  * The session is `Engine.session`'s, so the plans timed here are the
+  * plans `Verify` dumps for the oracle. Environment: SPARK_GRAFT_SF_DIR
+  * (input tables), SPARK_GRAFT_CPUS (local cores and shuffle
+  * partitions), SPARK_GRAFT_ONLY (comma-separated query subset) and
+  * SPARK_GRAFT_DUMP (path for the full per-query timings).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // AQE's runtime broadcast threshold inherits the static 10MB
-      // default, which already converts the small side of every
-      // fact-fact join here once measured (verified: raising it to 64m
-      // moved nothing outside noise — the sub-second rows are stage
-      // floor, not join strategy)
-      // sf0.1 parquet files are single-digit MB — below the default 128MB
-      // split size every scan (and its cached InMemoryRelation) is ONE
-      // partition, so per-query table scans run single-threaded. Small
-      // splits parallelize the scan stage across the local cores; at
-      // cluster scale files are row-group sized and this is moot.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", (1024 * 1024).toString))
-      // the generated-class cache (default 100 entries) thrashes under a
-      // 187-query inventory — every pass re-compiles evicted classes and
-      // runs them interpreted until HotSpot catches up (observed 4-8x
-      // run-to-run variance on the late-alphabet queries)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      // plan-description events (posted per action AND per AQE stage
-      // update) pay a full formatted plan rendering each — 10-40ms per
-      // action on wide plans; "simple" keeps them cheap (floor profile:
-      // tools/FloorProfile.scala)
-      .config("spark.sql.ui.explainMode", "simple")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Engine.session(s"local[$cpus]", shufflePartitions = cpus)
     // optional comma-separated filter for local iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Streaming queries run LAST: each leaves loaded state-store
@@ -62,13 +37,10 @@ object Bench {
       catch { case _: Throwable => () }
     // warm the buffer pool: cache the base tables in memory (the
     // single-warmed-session analog of the reference's buffer manager —
-    // DuckDB also serves repeat queries from resident data). Disable
-    // with SPARK_GRAFT_CACHE=0.
-    if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "1") == "1") {
-      Engine.TableNames.foreach { t =>
-        try Engine.table(spark, sfDir, t).cache().count()
-        catch { case _: Throwable => () }
-      }
+    // DuckDB also serves repeat queries from resident data)
+    Engine.TableNames.foreach { t =>
+      try Engine.table(spark, sfDir, t).cache().count()
+      catch { case _: Throwable => () }
     }
     // warm-up pass (untimed): JIT, codegen caches, file footers —
     // through the SAME sink as the timed passes (plan identity)
@@ -101,8 +73,7 @@ object Bench {
       if (name.contains("stream")) unloadStreamingState()
       if (ok) w else -1.0
     }
-    val nPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    val passes = (1 to nPasses).map(_ => names.map(n => n -> timeOne(n)))
+    val passes = (1 to 2).map(_ => names.map(n => n -> timeOne(n)))
     val results = names.map { n =>
       val ts = passes.map(_.toMap.apply(n))
       n -> (if (ts.exists(_ < 0)) -1.0 else ts.min)

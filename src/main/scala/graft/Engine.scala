@@ -42,8 +42,8 @@ object Engine {
       // every action (and every AQE stage update) posts a plan
       // description event whose FORMATTED rendering walks the whole plan
       // tree — measured 10-40ms per action on wide plans with the UI
-      // disabled anyway; "simple" keeps the event cheap (floor profile:
-      // tools/FloorProfile.scala)
+      // disabled anyway; "simple" keeps the event cheap (BASELINE.md
+      // "Measured fixed-cost floor")
       .config("spark.sql.ui.explainMode", "simple")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -686,7 +686,7 @@ object Engine {
   // the wrong table's plan). SUMMARIZE is a catalog inspection command
   // run repeatedly against stable tables; re-deriving the same
   // physical plan (analysis + optimization + codegen + AQE bookkeeping)
-  // on every call was pure driver floor (~80-90 ms, tools/FloorProfile).
+  // on every call was pure driver floor (~80-90 ms, BASELINE.md floor).
   // The memoized Dataset re-executes its job from the files on every
   // collect() — results are NOT cached — but the file LISTING is captured
   // at first planning, so files added under the same path after the
@@ -701,7 +701,8 @@ object Engine {
     * action computes min/max/non-null count for every column, then
     * pivots driver-side to the per-column row layout.
     *
-    * Plan shape (profiled in tools/SummProf): a single combined
+    * Plan shape (profiled by the retired SummProf lab,
+    * d38a371:src/main/scala/graft/tools/SummProf.scala): a single combined
     * aggregate would plan as SortAggregate — a min/max over a STRING
     * column cannot live in HashAggregate's fixed-width mutable buffer,
     * and one such function demotes the whole 3N+1-function aggregate

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * concatenate-and-chunk sequence packing, stratified quota sampling.
   * All three are pure DataFrame transforms with no driver-side state;
   * the scale rationale per operator is on its doc comment (stress-tested
-  * beyond sf0.1 in `tools/ScaleStress`).
+  * beyond sf0.1 by d38a371:src/main/scala/graft/tools/ScaleStress.scala).
   */
 object Curation {
 
@@ -74,8 +74,8 @@ object Curation {
     * token lands in. `numShards` bounds every window partition — ONE
     * window per stratum is a one-reducer sort once a stratum holds
     * billions of docs, so shard count must grow with corpus size
-    * (ScaleStress scales it with the multiplier; the fixed inventory
-    * query pins 8 for the oracle).
+    * (grow it with the corpus multiplier; the fixed inventory query
+    * pins 8 for the oracle).
     */
   def packSequences(docs: DataFrame, idCol: String, strataCol: String,
                     textCol: String, budget: Int, numShards: Int): DataFrame = {
@@ -525,11 +525,15 @@ object Curation {
     // lexicographic-with-null-first semantics in three mutable
     // primitive buffer slots, so the per-gram aggregate plans as a
     // plain two-phase codegen HashAggregate — no sort anywhere before
-    // the TakeOrdered top-k.
+    // the TakeOrdered top-k. min_pair_ord takes integral ids only;
+    // any other id type keeps the exact min(struct) form.
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    val sample =
+      if (graft.plans.MinPairOrd.isIntegral(idType))
+        call_function("min_pair_ord", col(idCol), col("__p0"))
+      else min(struct(col(idCol).as("doc"), col("__p0").cast("long").as("pos")))
     val topk = perDoc.groupBy(col("__g"))
-      .agg(count(lit(1)).as("n_docs"),
-        call_function("min_pair_ord",
-          col(idCol), col("__p0").cast("long")).as("__s"))
+      .agg(count(lit(1)).as("n_docs"), sample.as("__s"))
       .filter(col("n_docs") >= 2)
       .select(col("__g"), col("n_docs"),
         col("__s").getField("doc").as("sample_doc"),

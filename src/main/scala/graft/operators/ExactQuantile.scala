@@ -266,18 +266,24 @@ object ExactQuantile {
     * query construction — two extra driver actions per execution at any
     * scale. The decision only selects between two plans whose outputs
     * are bit-equal (pinned in ExactQuantileSpec), so a stale entry can
-    * never change a result, only the routing; keyed on the canonicalized
-    * analyzed plan + group column + crossover, bounded LRU. */
+    * never change a result, only the routing. Keyed on the canonicalized
+    * analyzed plan's hash, the schema, a fingerprint of the sorted input
+    * file listing (the plan hash alone does not change when files are
+    * appended to a table directory), the group column and the
+    * crossover; bounded LRU. */
+  private type RefineKey = (Int, StructType, (Int, Int), String, Long)
   private val refineCache =
-    new java.util.LinkedHashMap[(Int, String, Long), java.lang.Boolean](16, 0.75f, true) {
+    new java.util.LinkedHashMap[RefineKey, java.lang.Boolean](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, String, Long), java.lang.Boolean]): Boolean =
+          e: java.util.Map.Entry[RefineKey, java.lang.Boolean]): Boolean =
         size > 64
     }
 
   def shouldBinRefine(df: DataFrame, groupCol: String,
                       crossover: Long = CrossoverRowsPerGroup): Boolean = {
-    val key = (df.queryExecution.analyzed.semanticHash(), groupCol, crossover)
+    val files = df.inputFiles.sorted.toSeq
+    val key = (df.queryExecution.analyzed.semanticHash(), df.schema,
+      (files.size, scala.util.hashing.MurmurHash3.seqHash(files)), groupCol, crossover)
     val cached = refineCache.synchronized(Option(refineCache.get(key)))
     cached.map(_.booleanValue()).getOrElse {
       val v = maxGroupRows(df, groupCol) >= crossover

@@ -23,7 +23,7 @@ object Multimodal {
     * write` convenience methods back every image with a temp FILE in
     * `java.io.tmpdir` (`FileCacheImageInput/OutputStream`) — one file
     * per decode/encode call, so a per-document decode pipeline's
-    * wall-clock is hostage to tmpdir state (MmLab r17: 1114 ms vs
+    * wall-clock is hostage to tmpdir state (BASELINE.md r17 MmLab: 1114 ms vs
     * 338 ms full-query on a healthy tmpdir; the r16 3.08 s reading was
     * the same code under tmpdir pressure). Objects are per-JVM
     * singletons, so referencing this lazy val from any executor-side

@@ -194,7 +194,7 @@ object TextAnalysis {
     * and the within-doc pre-collapse is GONE: it removed only ~3% of
     * rows at sf0.1 while costing a full (id, a, b) exchange and a
     * 600k-entry hash aggregate inside the serial scan stage
-    * (tools/BigramLab, 934 → 408 ms). c2 and c1 attach in place as
+    * (BASELINE.md round 11, 934 → 408 ms). c2 and c1 attach in place as
     * unbounded windows over the (a, b) and (a) partitions of one
     * hash(a) exchange. Hot contexts make that window partition an
     * unsplittable straggler at scale — saltBuckets is the escape hatch.

@@ -9,10 +9,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * Spark's own `Round` on DoubleType goes through
   * `BigDecimal.valueOf(x).setScale(s, HALF_UP)` per row — `valueOf`
   * stringifies the double (shortest decimal representation) and the
-  * whole trip allocates three objects per value. Measured in
-  * tools/WinIgnLab.scala: the four `round(_, 2)` projections of
-  * win_ignore_nulls cost ~55 ms of a 248 ms row (600k rounds), the
-  * single hottest non-structural component left in the window cohort.
+  * whole trip allocates three objects per value. Measured (BASELINE.md
+  * "win_ignore_nulls: lab-decomposed and rebuilt"): the four
+  * `round(_, 2)` projections of win_ignore_nulls cost ~55 ms of a
+  * 248 ms row (600k rounds), the single hottest non-structural
+  * component left in the window cohort.
   *
   * This expression computes the same function with double arithmetic:
   * y = x*10^s, inc = (y - floor(y)) > 0.5, result (floor(y)+inc)/10^s.

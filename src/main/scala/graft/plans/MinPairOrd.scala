@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.DataTypeMismatch
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.types._
@@ -29,12 +31,30 @@ import org.apache.spark.sql.types._
   * "current minimum has a null doc", which a two-slot buffer cannot.
   * Result is struct<doc: long, pos: long> (null when no input rows),
   * matching what the callers previously read from min(struct).
+  *
+  * Both arguments must be integral (byte/short/int/long, widened to
+  * long): any other type fails analysis. A silent cast would NULL string
+  * ids, reorder numeric strings and truncate doubles; callers with
+  * non-integral ids use `min(struct(doc, pos))` instead.
   */
 case class MinPairOrd(doc: Expression, pos: Expression)
-  extends DeclarativeAggregate with ExpectsInputTypes {
+  extends DeclarativeAggregate {
 
   override def children: Seq[Expression] = Seq(doc, pos)
-  override def inputTypes = Seq(LongType, LongType)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    children.zip(Seq("first", "second")).collectFirst {
+      case (c, ordinal) if !MinPairOrd.isIntegral(c.dataType) =>
+        DataTypeMismatch("UNEXPECTED_INPUT_TYPE", Map(
+          "paramIndex" -> ordinal,
+          "requiredType" -> "\"INTEGRAL\"",
+          "inputSql" -> s"\"${c.sql}\"",
+          "inputType" -> s"\"${c.dataType.sql}\""))
+    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
+
+  private lazy val docL = Cast(doc, LongType)
+  private lazy val posL = Cast(pos, LongType)
+
   override def nullable: Boolean = true
   override def dataType: DataType = StructType(Seq(
     StructField("doc", LongType), StructField("pos", LongType)))
@@ -68,11 +88,11 @@ case class MinPairOrd(doc: Expression, pos: Expression)
   }
 
   override lazy val updateExpressions: Seq[Expression] = {
-    val better = Or(Not(seen), pairLess(doc, pos, mDoc, mPos))
+    val better = Or(Not(seen), pairLess(docL, posL, mDoc, mPos))
     Seq(
       Literal(true) /* any input row marks the group non-empty */,
-      If(better, doc, mDoc),
-      If(better, pos, mPos))
+      If(better, docL, mDoc),
+      If(better, posL, mPos))
   }
 
   override lazy val mergeExpressions: Seq[Expression] = {
@@ -96,6 +116,10 @@ case class MinPairOrd(doc: Expression, pos: Expression)
 }
 
 object MinPairOrd {
-  val builder: Seq[Expression] => Expression = args =>
-    MinPairOrd(Cast(args(0), LongType), Cast(args(1), LongType))
+  def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  val builder: Seq[Expression] => Expression = args => MinPairOrd(args(0), args(1))
 }

@@ -823,7 +823,7 @@ object Pipeline {
       // session): the shuffle topology here is statically known — one
       // exchange on 8 cluster ids feeding a self-join — so AQE has
       // nothing to re-plan, and its per-exchange materialization job
-      // waves were the row's dominant cost (tools/SemLab.scala: 235 ms
+      // waves were the row's dominant cost (BASELINE.md "pipeline_semdedup": 235 ms
       // AQE-on vs 161 ms off, stage work identical). A real 100 TB run
       // with k≈50k clusters would keep AQE for skew handling — the pin
       // encodes "tiny known topology", not a general policy.

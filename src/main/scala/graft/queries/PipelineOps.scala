@@ -238,8 +238,8 @@ object PipelineOps {
       // interpreted zip_with pair lambda (HOFs are CodegenFallback) plus
       // a within-doc pre-collapse that removed ~3% of rows for a full
       // extra exchange — the fused ws_token_hashes kernel + raw-pair
-      // windows took the row 0.93 → ~0.41 s (tools/BigramLab, stage
-      // decomposition in BASELINE.md). Default keeps the second light
+      // windows took the row 0.93 → ~0.41 s (stage decomposition in
+      // BASELINE.md round 11). Default keeps the second light
       // vocab scan (shadowed by the longer pairs stage locally); at
       // cluster scale flip vocabFromPairs=true — V rides the window
       // exchange and the corpus is scanned once (plan-asserted in

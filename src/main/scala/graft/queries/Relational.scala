@@ -23,7 +23,7 @@ object Relational {
 
   // Bit-identical to functions.round on doubles (FastRoundSpec), minus the
   // per-row BigDecimal trip — the four/five rounds of the wide window rows
-  // were ~55 ms of win_ignore_nulls' 248 ms (tools/WinIgnLab.scala)
+  // were ~55 ms of win_ignore_nulls' 248 ms (BASELINE.md round 14)
   private def fround(c: org.apache.spark.sql.Column, s: Int) =
     call_function("fast_round", c, lit(s))
 
@@ -258,16 +258,19 @@ object Relational {
       // (l_returnflag is NOT NULL) so every output row is identical;
       // this makes the rewrite equivalent on ANY input, matching
       // ExactQuantile.quantilesByCounts' own <=> recomposition.
+      // All three legs derive from ONE `li`, so `l1(k) <=> l2(k)` would
+      // resolve both sides to the same attribute and fold to TRUE (a
+      // condition-less nested-loop cross product, 9 rows for 3): each
+      // joined leg carries its key under its own name.
       val li = t(s, dir, "lineitem")
-      def leg(a: org.apache.spark.sql.Column) =
-        li.groupBy(col("l_returnflag")).agg(a)
-      val l1 = leg(countDistinct(col("l_partkey")).as("nd_part"))
-      val l2 = leg(countDistinct(col("l_suppkey")).as("nd_supp"))
-      val l3 = leg(round(sum_distinct(col("l_quantity")), 2).as("sum_d_qty"))
-      l1.join(l2, l1("l_returnflag") <=> l2("l_returnflag"))
-        .drop(l2("l_returnflag"))
-        .join(l3, l1("l_returnflag") <=> l3("l_returnflag"))
-        .drop(l3("l_returnflag"))
+      def leg(a: org.apache.spark.sql.Column, key: String) =
+        li.groupBy(col("l_returnflag").as(key)).agg(a)
+      val l1 = leg(countDistinct(col("l_partkey")).as("nd_part"), "l_returnflag")
+      val l2 = leg(countDistinct(col("l_suppkey")).as("nd_supp"), "__rf2")
+      val l3 = leg(round(sum_distinct(col("l_quantity")), 2).as("sum_d_qty"), "__rf3")
+      l1.join(l2, col("l_returnflag") <=> col("__rf2"))
+        .join(l3, col("l_returnflag") <=> col("__rf3"))
+        .drop("__rf2", "__rf3")
     }),
 
     "agg_filtered" -> ((s, dir) => {
@@ -904,7 +907,7 @@ object Relational {
       // the exact qty rank table FUSE into ONE full scan: groupBy(flag,
       // qty) carries the two ep probe counters alongside the qty value
       // counts, so cum(<v)/cum(<=v) for p10/p90 and the ep rank check
-      // all come out of a single pass (tools/QuantLab: 635 → 543 ms
+      // all come out of a single pass (the retired QuantLab, 635 → 543 ms
       // local; at 100 TB it is 1 full pass + a few head row groups
       // instead of 3 full passes). The gate stays GENUINE — the
       // estimate comes from an aggregate the probe never sees, and the

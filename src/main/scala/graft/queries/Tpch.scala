@@ -165,7 +165,8 @@ object Tpch {
       // Same rewrite a 100 TB plan wants: the join moves the post-HAVING
       // survivors, never the lineitem fact. Catalyst cannot derive this
       // (the agg is keyed on the join key of a 1:n join) — measured
-      // 0.51 -> 0.40 s at sf0.1 (tools/JoinShape).
+      // 0.51 -> 0.40 s at sf0.1
+      // (d38a371:src/main/scala/graft/tools/JoinShape.scala).
       val o = t(s, dir, "orders"); val l = t(s, dir, "lineitem")
       l.groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity")).as("raw_qty"))

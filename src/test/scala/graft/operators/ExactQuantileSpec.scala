@@ -263,4 +263,19 @@ class ExactQuantileSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
     assert(m(buffered) == m(refined))
   }
+
+  test("shouldBinRefine re-routes when files are appended to the table directory") {
+    // the analyzed plan of a re-read directory hashes the same before
+    // and after an append (the file index compares by root path), so a
+    // plan-hash-only memo key kept the stale routing
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("refine_append").toString + "/t.parquet"
+    Seq(("a", 1.0), ("a", 2.0), ("b", 3.0)).toDF("g", "v").write.parquet(path)
+    val xo = 5L
+    assert(!ExactQuantile.shouldBinRefine(spark.read.parquet(path), "g", xo))
+    (1 to 4).map(i => ("a", i.toDouble)).toDF("g", "v")
+      .write.mode("append").parquet(path)
+    assert(ExactQuantile.shouldBinRefine(spark.read.parquet(path), "g", xo),
+      "group a now holds 6 rows, past the crossover of 5")
+  }
 }

@@ -88,11 +88,9 @@ class MinPairOrdSpec extends SparkSpec {
     assert(hashes.nonEmpty, "expected the per-gram min-pair HashAggregate in the plan")
   }
 
-  test("boilerplateGrams output unchanged by the MinPairOrd rewrite (vs min(struct) reference)") {
-    // reference recomputation of the whole operator with min(struct),
-    // inlined from the pre-r19 shape — rows must match exactly
-    graft.functions.DuckFunctions.register(spark)
-    val docs = graft.Engine.table(spark, "/root/testdata/sf0.001", "documents")
+  /** boilerplateGrams recomputed with `min(struct(id, pos))`, inlined
+    * from the pre-r19 shape: the reference every id type must match. */
+  private def minStructReference(docs: org.apache.spark.sql.DataFrame) = {
     val n = 10
     val pos = docs
       .select(col("doc_id"), call_function("ws_token_hashes", col("text")).as("__th"))
@@ -110,7 +108,7 @@ class MinPairOrdSpec extends SparkSpec {
         col("__s").getField("__p0").cast("long").as("sample_pos"))
       .orderBy(col("n_docs").desc, col("sample_doc"), col("sample_pos"))
       .limit(20)
-    val ref = docs
+    docs
       .select(col("doc_id").as("sample_doc"),
         filter(split(lower(col("text")), "\\s+"), x => x =!= "").as("__w"))
       .join(broadcast(topkRef), Seq("sample_doc"))
@@ -120,6 +118,12 @@ class MinPairOrdSpec extends SparkSpec {
         col("n_docs"), col("sample_doc"), col("sample_pos"))
       .orderBy(col("n_docs").desc, col("sample_doc"), col("sample_pos"))
       .collect().toSeq
+  }
+
+  test("boilerplateGrams output unchanged by the MinPairOrd rewrite (vs min(struct) reference)") {
+    graft.functions.DuckFunctions.register(spark)
+    val docs = graft.Engine.table(spark, "/root/testdata/sf0.001", "documents")
+    val ref = minStructReference(docs)
     val got = graft.operators.Curation.boilerplateGrams(
         docs, "doc_id", "text", n = 10, k = 20)
       .collect().toSeq
@@ -127,21 +131,58 @@ class MinPairOrdSpec extends SparkSpec {
       s"boilerplateGrams rows changed under MinPairOrd:\n got=$got\n ref=$ref")
   }
 
+  test("boilerplateGrams with string doc ids matches the min(struct) reference") {
+    // numeric strings order differently from their numbers ("10" < "9"),
+    // and a cast to long would NULL any non-numeric id — string ids
+    // must take the exact min(struct) path
+    graft.functions.DuckFunctions.register(spark)
+    val docs = graft.Engine.table(spark, "/root/testdata/sf0.001", "documents")
+      .withColumn("doc_id", col("doc_id").cast("string"))
+    val ref = minStructReference(docs)
+    val got = graft.operators.Curation.boilerplateGrams(
+        docs, "doc_id", "text", n = 10, k = 20)
+      .collect().toSeq
+    assert(ref.nonEmpty, "the fixture must mine at least one shared gram")
+    assert(got == ref, s"string-id boilerplateGrams diverged:\n got=$got\n ref=$ref")
+  }
+
+  test("min_pair_ord rejects non-integral arguments instead of casting them") {
+    import spark.implicits._
+    graft.functions.DuckFunctions.register(spark)
+    val df = Seq(("a", 1.5, 2)).toDF("s", "d", "i")
+    for (bad <- Seq(Seq(col("s"), col("i")), Seq(col("d"), col("i")), Seq(col("i"), col("d")))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.agg(call_function("min_pair_ord", bad: _*)).collect()
+      }
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), e.getMessage)
+    }
+    // integral arguments of any width widen to long
+    val r = df.agg(call_function("min_pair_ord", col("i"), col("i").cast("short")).as("m"))
+      .select(col("m").getField("doc"), col("m").getField("pos")).head()
+    assert(r.getLong(0) == 2L && r.getLong(1) == 2L)
+  }
+
   test("shouldBinRefine memo: repeat probe runs zero jobs") {
     val li = graft.Engine.table(spark, "/root/testdata/sf0.001", "lineitem")
     // distinct crossover value → guaranteed cold key for this test
     val xo = 123457L
     graft.operators.ExactQuantile.shouldBinRefine(li, "l_returnflag", xo)
+    // count only jobs submitted under this test's own job group: other
+    // suites' jobs in the shared SparkContext must not fail it
+    val group = s"min-pair-ord-memo-${java.util.UUID.randomUUID()}"
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          counter.incrementAndGet(); ()
+        }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val v = graft.operators.ExactQuantile.shouldBinRefine(li, "l_returnflag", xo)
+      spark.sparkContext.setJobGroup(group, "memoized shouldBinRefine probe")
+      val v = try graft.operators.ExactQuantile.shouldBinRefine(li, "l_returnflag", xo)
+        finally spark.sparkContext.clearJobGroup()
       // listener delivery is async; a memoized probe submits no job, so
       // a short settle window is enough for any stray submission to land
       Thread.sleep(300)
