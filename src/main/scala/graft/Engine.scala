@@ -281,8 +281,11 @@ object Engine {
   }
 
   /** SQL entry point (the reference's Connection::Query,
-    * duckdb-7.cpp:2453) with dialect pre-rewrites (QUALIFY, DISTINCT ON,
-    * LIMIT n%, USING SAMPLE, read_csv replacement scans). */
+    * duckdb-7.cpp:2453): [[SqlDialect]] tokenizes the statement once,
+    * dispatches it on its leading keywords (DDL, DML, COPY, PRAGMA, …)
+    * and runs everything else as a query — table functions and
+    * replacement scans bound to temp views in one pass, then the
+    * dialect's expression rewrites and Spark SQL. */
   def sql(spark: SparkSession, query: String): DataFrame =
     SqlDialect.sql(spark, query)
 
@@ -294,8 +297,8 @@ object Engine {
   def createTable(spark: SparkSession, name: String, df: DataFrame): Unit = {
     df.createOrReplaceTempView(name)
     // the programmatic CREATE TABLE path carries TABLE provenance just
-    // like the SQL path — duckdb_tables() lists it, duckdb_views() not
-    markAsTable(spark, name)
+    // like the SQL CTAS — duckdb_tables() lists it, duckdb_views() not
+    putTableEntry(spark, name, TableEntry())
   }
 
   /** INSERT INTO name (append rows; lineage truncated so repeated inserts
@@ -320,6 +323,53 @@ object Engine {
     updated.localCheckpoint().createOrReplaceTempView(name)
   }
 
+  // ---- per-session table entries (reference catalog table entries):
+  // graft backs CTAS snapshots and CREATE TABLE definitions with temp
+  // views, and keeps ONE entry per name created as a table. A name has an
+  // entry exactly when it has TABLE provenance — the reference lists it
+  // in duckdb_tables() only, never in duckdb_views() (probed). CTAS and
+  // CREATE TABLE put the entry, ALTER … RENAME TO moves it, DROP and a
+  // CREATE VIEW over the name remove it.
+
+  /** Declared metadata of one table: the PRIMARY KEY (the conflict key
+    * of OR REPLACE / ON CONFLICT), column DEFAULT exprs (SQL text by
+    * lowercased column), NOT NULL columns, labeled unique keys (label =
+    * "primary key" | "unique"), CHECK exprs (SQL text; NULL passes, like
+    * SQL) and FOREIGN KEYs (cols, referenced table, referenced cols). A
+    * CTAS entry is empty. */
+  final case class TableEntry(primaryKey: Seq[String] = Nil,
+                              defaults: Map[String, String] = Map.empty,
+                              notNull: Seq[String] = Nil,
+                              unique: Seq[(String, Seq[String])] = Nil,
+                              checks: Seq[String] = Nil,
+                              foreignKeys: Seq[(Seq[String], String, Seq[String])] = Nil)
+
+  private val tableEntryMaps = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      scala.collection.concurrent.TrieMap[String, TableEntry]]())
+
+  /** The session's table entries, keyed by lowercased name. */
+  def tableEntries(spark: SparkSession): scala.collection.concurrent.TrieMap[String, TableEntry] =
+    tableEntryMaps.computeIfAbsent(spark,
+      _ => new scala.collection.concurrent.TrieMap[String, TableEntry])
+
+  def tableEntry(spark: SparkSession, name: String): Option[TableEntry] =
+    tableEntries(spark).get(name.toLowerCase)
+
+  def putTableEntry(spark: SparkSession, name: String, entry: TableEntry): Unit =
+    tableEntries(spark)(name.toLowerCase) = entry
+
+  def dropTableEntry(spark: SparkSession, name: String): Unit =
+    tableEntries(spark).remove(name.toLowerCase)
+
+  /** A renamed table keeps its entry under the new name (no-op for a
+    * name without one — renaming a view must not invent a table). */
+  def renameTableEntry(spark: SparkSession, from: String, to: String): Unit =
+    tableEntries(spark).remove(from.toLowerCase).foreach(putTableEntry(spark, to, _))
+
+  private def isTableProvenance(spark: SparkSession, name: String): Boolean =
+    tableEntries(spark).contains(name.toLowerCase)
+
   // ---- declared-constraint validation (reference NotNullConstraint/
   // CheckConstraint/UniqueConstraint binding, duckdb.hpp:20267-20272;
   // PhysicalInsert verifies them per chunk). Enforcement here is a
@@ -332,18 +382,6 @@ object Engine {
   // reference's Constraint Error messages so migrated error handling
   // keeps matching.
 
-  /** Declared constraints of one table: NOT NULL columns, labeled
-    * unique keys (label = "primary key" | "unique"), CHECK expressions
-    * (SQL text, evaluated over the incoming rows; NULL passes, like
-    * SQL). */
-  final case class TableConstraints(notNull: Seq[String] = Nil,
-                                    unique: Seq[(String, Seq[String])] = Nil,
-                                    checks: Seq[String] = Nil,
-                                    foreignKeys: Seq[(Seq[String], String, Seq[String])] = Nil) {
-    def isEmpty: Boolean =
-      notNull.isEmpty && unique.isEmpty && checks.isEmpty && foreignKeys.isEmpty
-  }
-
   final class ConstraintViolation(msg: String) extends RuntimeException(msg)
 
   /** Validate an incoming batch against `cons`. NOT NULL and CHECK are
@@ -355,7 +393,7 @@ object Engine {
     * RESOLUTION input, not an error, but NOT NULL/CHECK still raise
     * (verified against the reference's INSERT OR IGNORE). */
   def validateConstraints(spark: SparkSession, name: String, rows: DataFrame,
-                          cons: TableConstraints, checkUnique: Boolean): Unit = {
+                          cons: TableEntry, checkUnique: Boolean): Unit = {
     if (cons.notNull.nonEmpty || cons.checks.nonEmpty) {
       val aggs =
         cons.notNull.map(c =>
@@ -427,7 +465,7 @@ object Engine {
   // ---- conflict-clause DML (reference ON CONFLICT binding,
   // duckdb-4.cpp:9996-10015: OR REPLACE = delete-then-insert on the key,
   // DO NOTHING = skip conflicting rows, DO UPDATE = in-place assignment).
-  // The key comes from the dialect's PRIMARY KEY registry — Spark has no
+  // The key comes from the table's entry (its declared PRIMARY KEY) — Spark has no
   // constraint enforcement, so the key is planning metadata, not an
   // integrity guarantee (documented).
 
@@ -486,7 +524,7 @@ object Engine {
   /** duckdb_tables() analog. Dialect-internal `__graft_*` helper views
     * are excluded — the native function would not list them either.
     * The provenance split is two-sided (ADVICE r13 #6): only names
-    * CREATED as tables (CTAS / CREATE TABLE, via the registry below)
+    * CREATED as tables (CTAS / CREATE TABLE: a table entry)
     * plus genuinely managed non-view catalog tables list here; true
     * views and the base parquet view registrations belong to
     * duckdb_views() — the same split the reference catalog keeps and
@@ -549,46 +587,12 @@ object Engine {
       .toDF("schema_name", "internal")
   }
 
-  // ---- table-provenance registry (r13, closes r12 self-review #5):
-  // graft's storage model backs CTAS snapshots and CREATE TABLE
-  // definitions with temp views, but the reference catalog lists them
-  // only in duckdb_tables() — duckdb_views() must not show them
-  // (probed). The dialect marks names at their creation sites; DROP /
-  // CREATE VIEW over the same name unmarks.
-  private val snapshotTables = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
-
-  /** Record `name` as TABLE-provenance (CTAS / CREATE TABLE). */
-  def markAsTable(spark: SparkSession, name: String): Unit =
-    snapshotTables.computeIfAbsent(spark,
-      _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
-      .add(name.toLowerCase)
-
-  /** Forget `name`'s TABLE provenance (DROP, or a VIEW took the name). */
-  def unmarkTable(spark: SparkSession, name: String): Unit = {
-    val s = snapshotTables.get(spark)
-    if (s != null) s.remove(name.toLowerCase)
-  }
-
-  /** Provenance follows ALTER TABLE … RENAME TO (no-op for a name that
-    * was never marked — renaming a view must not invent a table). */
-  def renameTableMark(spark: SparkSession, from: String, to: String): Unit = {
-    val s = snapshotTables.get(spark)
-    if (s != null && s.remove(from.toLowerCase)) s.add(to.toLowerCase)
-  }
-
-  private def isTableProvenance(spark: SparkSession, name: String): Boolean = {
-    val s = snapshotTables.get(spark)
-    s != null && s.contains(name.toLowerCase)
-  }
-
   /** duckdb_views() analog: one row per resolvable view. Graft registers
     * its parquet tables as temp views — the same catalog shape the
     * oracle harness gives DuckDB (CREATE VIEW over read_parquet), so the
     * two engines' view listings probe identically. Names created as
-    * TABLES (CTAS snapshots, CREATE TABLE) are excluded via the
-    * provenance registry — the reference lists those only in
-    * duckdb_tables(). */
+    * TABLES (CTAS snapshots, CREATE TABLE) are excluded via their table
+    * entries — the reference lists those only in duckdb_tables(). */
   def viewsTable(spark: SparkSession): DataFrame = {
     import spark.implicits._
     spark.catalog.listTables().collect().toSeq

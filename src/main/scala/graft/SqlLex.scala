@@ -14,16 +14,17 @@ package graft
   *    COLLATE in `WHERE CASE … END … COLLATE` instead of raising), and
   *    quoted identifiers (`"order"`, `"group by"`) can no longer
   *    masquerade as clause keywords.
-  *  - [[keywordIndex]] — depth-0 keyword lookup (QUALIFY / ORDER /
-  *    LIMIT / FROM boundaries), replacing the char-walking
-  *    topLevelIndex; a keyword is a BARE identifier token, so `t."from"`
-  *    or a string literal can never match.
+  *  - [[keywordIndex]] / [[keywordTok]] — depth-0 keyword lookup
+  *    (QUALIFY / ORDER / LIMIT / FROM boundaries, and the statement
+  *    handlers' AS / SET / WHERE / RETURNING / ON CONFLICT / TO
+  *    clauses); a keyword is a BARE identifier token, so `t."from"` or
+  *    a string literal can never match.
   *  - [[splitWithPrefix]] — the leading `WITH name [(cols)] AS (…), …`
   *    splitter, previously hand-matched text (the round-9 AS-token bug
   *    class: `WITH atlas (…)` — structurally impossible on tokens).
   *
   * Tokens carry [start, end) offsets into the ORIGINAL text so the
-  * regex-based rewriters keep splicing on exact positions.
+  * rewriters splice on exact positions.
   */
 private[graft] object SqlLex {
 
@@ -412,6 +413,14 @@ private[graft] object SqlLex {
     keywordIndex(tokenize(s), kw)
 
   def keywordIndex(toks: Vector[Tok], kw: String): Int = {
+    val k = keywordTok(toks, kw)
+    if (k < 0) -1 else toks(k).start
+  }
+
+  /** Token index of the first depth-0 bare keyword `kw` at or after
+    * token `from` (depth counted from the first token), or -1 — the
+    * clause-boundary lookup of the statement handlers. */
+  def keywordTok(toks: Vector[Tok], kw: String, from: Int = 0): Int = {
     val w = kw.toLowerCase
     var depth = 0
     var k = 0
@@ -420,9 +429,24 @@ private[graft] object SqlLex {
       t.kind match {
         case LParen => depth += 1
         case RParen => depth -= 1
-        case Ident if depth == 0 && t.lower == w &&
+        case Ident if k >= from && depth == 0 && t.lower == w &&
           !(k > 0 && toks(k - 1).kind == Punct && toks(k - 1).lower == ".") =>
-          return t.start
+          return k
+        case _ => ()
+      }
+      k += 1
+    }
+    -1
+  }
+
+  /** Token index of the `)` closing the `(` at token `open`, or -1. */
+  def closeParen(toks: Vector[Tok], open: Int): Int = {
+    var depth = 0
+    var k = open
+    while (k < toks.length) {
+      toks(k).kind match {
+        case LParen => depth += 1
+        case RParen => depth -= 1; if (depth == 0) return k
         case _ => ()
       }
       k += 1
