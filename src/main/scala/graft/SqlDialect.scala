@@ -22,6 +22,15 @@ import org.apache.spark.sql.functions._
   * grammar: Catalyst parses what comes out (the reference vendors a whole
   * Postgres parser, duckdb-libpg_query.cpp).
   *
+  * Every expression pass runs on one of two shared loops: [[fixpoint]]
+  * rewrites the first match on the current tokens and re-tokenizes until
+  * nothing matches; [[spliceAll]] collects the splices of a single-scan
+  * pass.
+  * The binary operators are rows of one table ([[BinOp]]: operator →
+  * function, operand precedence, unary-sign binding, guards) served by
+  * one operand-capture routine ([[binary]]); each row runs at its
+  * place in `rewriteCore`'s pass order.
+  *
   * Declared table metadata (TABLE provenance, PRIMARY KEY, DEFAULTs,
   * constraints) is one entry per table in [[Engine.tableEntries]].
   */
@@ -178,6 +187,8 @@ object SqlDialect {
     def isName(i: Int): Boolean = i >= 0 && i < n && toks(i).kind == SqlLex.Ident
     def isStr(i: Int): Boolean = i >= 0 && i < n && toks(i).kind == SqlLex.Str
     def isOpen(i: Int): Boolean = i >= 0 && i < n && toks(i).kind == SqlLex.LParen
+    def isClose(i: Int): Boolean = i >= 0 && i < n && toks(i).kind == SqlLex.RParen
+    def isQuoted(i: Int): Boolean = i >= 0 && i < n && toks(i).kind == SqlLex.QIdent
     def isPunct(i: Int, p: String): Boolean =
       i >= 0 && i < n && toks(i).kind == SqlLex.Punct && toks(i).lower == p
     /** Unsigned numeric literal of digits (and dots when `dots`). */
@@ -191,12 +202,17 @@ object SqlDialect {
     def span(i: Int, j: Int): String =
       if (i >= j || i >= n) "" else q.substring(toks(i).start, toks(j - 1).end)
     def rest(i: Int): String = span(i, n)
-    /** Token index of the ')' closing the '(' at `open`, or -1. */
-    def close(open: Int): Int = SqlLex.closeParen(toks, open)
+    /** Source text strictly between tokens i and j. */
+    def between(i: Int, j: Int): String = q.substring(toks(i).end, toks(j).start)
+    /** The statement with tokens i..j (inclusive) replaced by `rep`. */
+    def replace(i: Int, j: Int, rep: String): String =
+      q.substring(0, toks(i).start) + rep + q.substring(toks(j).end)
+    /** Token index of the delimiter closing the `(`/`[`/`{` at `open`, or -1. */
+    def close(open: Int): Int = SqlLex.closeOf(toks, open)
     /** A balanced paren group opens at `open` and ends the statement. */
     def groupEnds(open: Int): Boolean = isOpen(open) && close(open) == n - 1
     /** Text inside the balanced parens opened at `open`. */
-    def inner(open: Int): String = q.substring(toks(open).end, toks(close(open)).start)
+    def inner(open: Int): String = between(open, close(open))
     /** Comma-separated items inside the balanced parens opened at `open`. */
     def items(open: Int): Seq[String] =
       splitTopLevel(inner(open)).map(_.trim).filter(_.nonEmpty)
@@ -1149,6 +1165,182 @@ object SqlDialect {
     splice(s.q, subs)
   }
 
+  // ---- the shared expression-rewrite loops ---------------------------
+
+  /** Rewrite `q` to a fixpoint: `at(s, k)` is the statement rewritten at
+    * token `k`, or None. Each round applies the first hit and
+    * re-tokenizes, so nested and chained forms resolve one site per
+    * round. */
+  private def fixpoint(q: String)(at: (Stmt, Int) => Option[String]): String = {
+    var cur = q
+    var changed = true
+    while (changed) {
+      val s = new Stmt(cur)
+      changed = false
+      var k = 0
+      while (!changed && k < s.n) {
+        at(s, k).foreach { r => cur = r; changed = true }
+        k += 1
+      }
+    }
+    cur
+  }
+
+  /** One scan: `at(s, k)` is a (start, end, text) splice at token `k`;
+    * tokens inside an earlier splice are not visited. */
+  private def spliceAll(q: String)(at: (Stmt, Int) => Option[(Int, Int, String)]): String = {
+    val s = new Stmt(q)
+    val subs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
+    var end = 0
+    for (k <- 0 until s.n if s.toks(k).start >= end; sub <- at(s, k)) {
+      subs += sub
+      end = sub._2
+    }
+    splice(q, subs)
+  }
+
+  // ---- binary operators ------------------------------------------------
+
+  private val castOnly = Set("::")
+  private val mulOps = Set("*", "/", "%", "::")
+  private val addOps = mulOps ++ Set("+", "-")
+
+  /** One row of the binary-operator rewrite: `l op r` → `fn(l, r)` for
+    * each operator token → function in `fns`.
+    *  - `left` / `right`: the chain operators each operand spans (its
+    *    precedence); the right operand may open with a unary sign.
+    *  - `sign`: unary signs before the left operand — 0 stay outside,
+    *    1 one binds in (`-2**2` is 4), 2 they fold into the `left` chain
+    *    (`x * -3 - y` takes `x * -3`).
+    *  - `typed`: typed literals (`DATE '…'`, `INTERVAL 4 HOUR`) are whole
+    *    operands on either side.
+    *  - `prefix`: no left operand (`@x` → abs(x)).
+    *  - `ok(stmt, leftStart, op, rightEnd)` vetoes a capture. */
+  private final case class BinOp(
+      fns: Map[String, String], left: Set[String], right: Set[String],
+      sign: Int = 0, typed: Boolean = false, prefix: Boolean = false,
+      ok: (Stmt, Int, Int, Int) => Boolean = (_, _, _, _) => true)
+
+  /** `a ** b` / `a ^ b` → power(a, b) and prefix `@x` → abs(x)
+    * (duck-probed r15: the reference's `^` is EXPONENTIATION returning
+    * DOUBLE — `2^3`=8.0 where Spark's `^` is xor, a silent-wrong
+    * class; `**`/`^` bind tighter than `* / %` — `2*3**2`=18,
+    * `2^3*2`=16 — are left-associative — `2**3**2`=64 — and a unary
+    * sign binds INTO the left operand: `-2**2`=4; `@ -5.5` = 5.5). */
+  private val powOp = BinOp(Map("**" -> "power", "^" -> "power"), castOnly, castOnly, sign = 1)
+  private val absOp = BinOp(Map("@" -> "abs"), Set.empty, castOnly, prefix = true)
+
+  /** duck `a // b` (duck-probed r14b): truncating integer division for
+    * integral operands, PLAIN division otherwise — dispatched at plan
+    * time by [[graft.functions.DuckFloorDiv]]. Multiplicative-precedence
+    * capture: `a + b // c` is `a + (b//c)` and `a // b * c` stays
+    * `(a//b) * c`. */
+  private val floorDivOp = BinOp(Map("//" -> "graft_fdiv"), mulOps, castOnly)
+
+  /** duck `a / b` and `a % b` → duck_div / duck_mod (r15 arithmetic-
+    * edge sweep; [[graft.functions.DuckDiv]] / [[graft.functions.DuckMod]]
+    * dispatch on operand types at plan time: NULL on a zero divisor at
+    * every numeric type, `/` always DOUBLE — probed `typeof(5/2)` =
+    * `typeof(1.5/2.5)` = DOUBLE — and the per-width `min % -1`
+    * overflow error). An INTERVAL literal on the left — `INTERVAL 4
+    * HOUR` (capture on the unit) or `INTERVAL '4 hours'` (capture on
+    * the string) — keeps Spark's own interval arithmetic. */
+  private val divModOp = BinOp(Map("/" -> "duck_div", "%" -> "duck_mod"), mulOps, castOnly,
+    ok = (s, ls, _, _) =>
+      !(s.kw(ls - 2) == "interval" || (s.isStr(ls) && s.kw(ls - 1) == "interval")))
+
+  /** duck `a - b` → duck_sub (r15 battery tranche 2): DATE - DATE is
+    * an INTEGER day count on the reference (probed: 31) where Spark
+    * yields a day-time interval, and duck_sub dispatches every interval
+    * pairing incl. the MIXED ym/dt classes Spark cannot combine (r16);
+    * other operand types pass through to Spark's Subtract. Additive-
+    * precedence capture; unary minus never rewrites (no left operand). */
+  private val subOp = BinOp(Map("-" -> "duck_sub"), addOps, mulOps, sign = 2, typed = true)
+
+  /** duck `a << b` / `a >> b` → duck_lshift / duck_rshift (probed r15:
+    * the reference raises on negative or ≥-width left shifts and on
+    * overflow past the operand width's SIGNED max — `1 << 31` at INT32
+    * raises; `>>` yields 0 for out-of-range amounts — while Spark
+    * wraps at Java semantics). Probed precedence: looser than + -
+    * (`1+1<<2`=8), tighter than & (`3 & 1<<1`=2), left-associative.
+    * A leading unary sign binds into the left operand so `-1 << 2`
+    * raises like the reference. `>>>` is its own token, untouched. */
+  private val shiftOp = BinOp(Map("<<" -> "duck_lshift", ">>" -> "duck_rshift"),
+    addOps, addOps, sign = 1)
+
+  /** JSON arrow operators (r15 tranche 3): `j -> 'key'` extracts JSON
+    * text, `j ->> 'key'` extracts unquoted text (probed; keys accept
+    * bare names or $-paths). The arrow is also the LAMBDA arrow, so
+    * only forms a lambda can never take rewrite: the RIGHT side must
+    * be a string literal and the LEFT operand must not be a bare
+    * identifier or a paren group (lambda parameter shapes; a CALL
+    * `name(…)` is fine) — a bare-ident json column uses json_extract()
+    * instead (documented). */
+  private val jsonOp = BinOp(Map("->" -> "json_extract", "->>" -> "json_extract_string"),
+    castOnly, Set.empty, ok = (s, ls, k, re) =>
+      re == k + 1 && s.isStr(re) && !(ls == k - 1 && s.isName(ls)) &&
+        !(s.isOpen(ls) && s.isClose(k - 1) && !s.isName(ls - 1) && !s.isQuoted(ls - 1)))
+
+  /** Rewrite `l op r` for `rows`' operators to a fixpoint, leftmost
+    * first (so left-associative). */
+  private def binary(q: String, rows: BinOp*): String = fixpoint(q) { (s, k) =>
+    val t = s.toks(k)
+    val row = if (t.kind == SqlLex.Punct) rows.find(_.fns.contains(t.lower)) else None
+    row.flatMap { r =>
+      val ls = if (r.prefix) k else leftStart(r, s, k - 1)
+      val sign = if (s.isPunct(k + 1, "-") || s.isPunct(k + 1, "+")) 1 else 0
+      val end = SqlLex.operandEnd(s.toks, k + 1 + sign, r.right)
+      val re = if (r.typed && sign == 0) typedEnd(s, k + 1, end) else end
+      if (ls < 0 || re < 0 || !r.ok(s, ls, k, re)) None
+      else {
+        val args = (if (r.prefix) "" else s.span(ls, k) + ", ") + s.span(k + 1, re + 1)
+        Some(s.replace(ls, re, s"${r.fns(t.lower)}($args)"))
+      }
+    }
+  }
+
+  /** A sign token at `i` is UNARY when the tokens before it cannot end
+    * an operand (`2 - 3**2` keeps the binary minus out of the operand;
+    * `(-2)**2` and `a * -2 ** 2` pull the sign in). */
+  private def unarySign(s: Stmt, i: Int): Boolean =
+    (s.isPunct(i, "-") || s.isPunct(i, "+")) &&
+      (i == 0 || SqlLex.operandStart(s.toks, i - 1, castOnly) < 0)
+
+  /** Typed-literal keywords: a captured Str operand whose PREVIOUS
+    * token is one of these belongs to a typed literal — the keyword
+    * must travel with the operand (`DATE '1994-01-01' - 1` must not
+    * capture just the string). */
+  private val typedLitKw = Set("date", "timestamp", "time", "interval")
+
+  /** Start of `row`'s left operand ending at token `j`, or -1. */
+  private def leftStart(row: BinOp, s: Stmt, j: Int): Int = {
+    var ls = SqlLex.operandStart(s.toks, j, row.left)
+    var more = ls >= 0 && row.sign > 0
+    while (more) {
+      more = false
+      if (row.typed && s.isStr(ls) && typedLitKw(s.kw(ls - 1))) ls -= 1
+      if (ls > 0 && unarySign(s, ls - 1)) {
+        ls -= 1
+        if (row.sign == 2 && ls >= 2 && s.toks(ls - 1).kind == SqlLex.Punct &&
+          row.left(s.toks(ls - 1).lower)) {
+          val ls2 = SqlLex.operandStart(s.toks, ls - 2, row.left)
+          if (ls2 >= 0) { ls = ls2; more = true }
+        }
+      }
+    }
+    // keyword-form interval (`INTERVAL 4 HOUR - …`): the capture lands
+    // on the unit ident — extend to the keyword
+    if (row.typed && s.kw(ls - 2) == "interval") ls - 2 else ls
+  }
+
+  /** End of a typed-literal right operand starting at token `i`
+    * (`DATE '…'`, `INTERVAL '…'`, `INTERVAL 4 HOUR`), else `re`. */
+  private def typedEnd(s: Stmt, i: Int, re: Int): Int =
+    if (typedLitKw(s.kw(i)) && s.isStr(i + 1)) i + 1
+    else if (s.kw(i) == "interval" && i + 2 < s.n && s.toks(i + 1).kind == SqlLex.Num &&
+      s.isName(i + 2)) i + 2
+    else re
+
   /** Text-level rewrites that stay inside one SQL statement. */
   private[graft] def rewriteCore(spark: SparkSession, query: String): String = {
     var q = query
@@ -1161,22 +1353,12 @@ object SqlDialect {
     // rewrite, a double quote INSIDE a string literal is untouchable by
     // construction; `[…]` is list syntax in the reference, never an
     // identifier (SqlLex scaladoc).
-    locally {
-      val toks = SqlLex.tokenize(q)
-      if (toks.exists(t => t.kind == SqlLex.QIdent && t.start < q.length &&
-          q.charAt(t.start) == '"')) {
-        val sb = new StringBuilder
-        var last = 0
-        toks.foreach { t =>
-          if (t.kind == SqlLex.QIdent && q.charAt(t.start) == '"') {
-            sb.append(q.substring(last, t.start))
-            val inner = q.substring(t.start, t.end)
-              .stripPrefix("\"").stripSuffix("\"").replace("\"\"", "\"")
-            sb.append('`').append(inner.replace("`", "``")).append('`')
-            last = t.end
-          }
-        }
-        q = sb.append(q.substring(last)).toString
+    q = spliceAll(q) { (s, k) =>
+      val t = s.toks(k)
+      if (t.kind != SqlLex.QIdent || s.q.charAt(t.start) != '"') None
+      else {
+        val inner = s.text(k).stripPrefix("\"").stripSuffix("\"").replace("\"\"", "\"")
+        Some((t.start, t.end, "`" + inner.replace("`", "``") + "`"))
       }
     }
 
@@ -1188,35 +1370,13 @@ object SqlDialect {
     // resolve case-insensitively to the same identifier). Pattern is
     // token-structural: (WITH | ,) recursive [(cols)] AS ( — an ident
     // followed by AS( cannot occur elsewhere in valid SQL.
-    locally {
-      val toks = SqlLex.tokenize(q)
-      val quoteAt = scala.collection.mutable.ArrayBuffer.empty[SqlLex.Tok]
-      var i = 1
-      while (i < toks.length) {
-        val t = toks(i)
-        if (t.kind == SqlLex.Ident && t.lower == "recursive" &&
-            ((toks(i - 1).kind == SqlLex.Ident && toks(i - 1).lower == "with") ||
-             (toks(i - 1).kind == SqlLex.Punct && toks(i - 1).lower == ","))) {
-          var j = i + 1
-          if (j < toks.length && toks(j).kind == SqlLex.LParen) {
-            // Consume the opening LParen first, then balance to depth 0
-            // (mirrors SqlLex.skipGroup); exiting the loop leaves j one
-            // past the column list's matching RParen.
-            var depth = 1
-            j += 1
-            while (j < toks.length && depth > 0) {
-              if (toks(j).kind == SqlLex.LParen) depth += 1
-              else if (toks(j).kind == SqlLex.RParen) depth -= 1
-              j += 1
-            }
-          }
-          if (j + 1 < toks.length && toks(j).kind == SqlLex.Ident &&
-              toks(j).lower == "as" && toks(j + 1).kind == SqlLex.LParen)
-            quoteAt += t
-        }
-        i += 1
-      }
-      q = splice(q, quoteAt.map(t => (t.start, t.end, "`recursive`")))
+    q = spliceAll(q) { (s, k) =>
+      lazy val cols = if (s.isOpen(k + 1)) s.close(k + 1) else k
+      lazy val as = if (cols < 0) s.n else cols + 1
+      if (s.kw(k) == "recursive" && (s.kw(k - 1) == "with" || s.isPunct(k - 1, ",")) &&
+        s.kw(as) == "as" && s.isOpen(as + 1))
+        Some((s.toks(k).start, s.toks(k).end, "`recursive`"))
+      else None
     }
 
     // duck list literals, `a // b`, and in-call ordered aggregates —
@@ -1236,8 +1396,8 @@ object SqlDialect {
     q = rewriteBracketOps(q)
     // exponentiation and prefix-abs BEFORE the division passes (the
     // reference binds ** / ^ tighter than * / % — probed `2*3**2`=18)
-    q = rewritePowAbs(q)
-    q = rewriteFloorDiv(q)
+    q = binary(q, powOp, absOp)
+    q = binary(q, floorDivOp)
     // duck cast targets (::/CAST int + varchar families) before the
     // div/mod pass so operand chains see plain calls
     q = rewriteCasts(q)
@@ -1251,33 +1411,12 @@ object SqlDialect {
     // string literals by then and can never match (r17 review
     // finding) — and after rewriteStructLits, whose MAP {…} braces
     // now emit map_from_arrays themselves.
-    locally {
-      var changed = true
-      while (changed) {
-        changed = false
-        val toks = SqlLex.tokenize(q)
-        var k = 0
-        while (!changed && k < toks.length) {
-          val t = toks(k)
-          if (t.kind == SqlLex.Ident && t.lower == "map" &&
-            k + 1 < toks.length && toks(k + 1).kind == SqlLex.LParen &&
-            !(k > 0 && ((toks(k - 1).kind == SqlLex.Punct &&
-              (toks(k - 1).lower == "." || toks(k - 1).lower == "::")) ||
-              (toks(k - 1).kind == SqlLex.Ident &&
-                toks(k - 1).lower == "as")))) {
-            val close = SqlLex.closeParen(toks, k + 1)
-            if (close > 0) {
-              val inner = q.substring(toks(k + 1).end, toks(close).start)
-              if (splitTopLevel(inner).map(_.trim).count(_.nonEmpty) == 2) {
-                q = q.substring(0, t.start) + "map_from_arrays" +
-                  q.substring(t.end)
-                changed = true
-              }
-            }
-          }
-          k += 1
-        }
-      }
+    q = spliceAll(q) { (s, k) =>
+      val t = s.toks(k)
+      if (s.kw(k) == "map" && s.isOpen(k + 1) && s.close(k + 1) > 0 &&
+        !(s.isPunct(k - 1, ".") || s.isPunct(k - 1, "::") || s.kw(k - 1) == "as") &&
+        s.items(k + 1).length == 2) Some((t.start, t.end, "map_from_arrays"))
+      else None
     }
     // SQL-surface function renames to the duck_-prefixed registrations
     // (the registry also resolves API names in Spark 4, so the
@@ -1285,20 +1424,21 @@ object SqlDialect {
     q = rewriteFnNames(q)
     // `/` and `%` → reference semantics (NULL on zero divisor, always-
     // double division — r15 arithmetic-edge sweep)
-    q = rewriteDivMod(q)
+    q = binary(q, divModOp)
     // binary `-` → duck_sub (DATE - DATE is an integer day count)
-    q = rewriteDateSub(q)
+    q = binary(q, subOp)
     // << / >> → range-checked shifts (looser than + -, so after the
     // passes that consume tighter operators)
-    q = rewriteShiftOps(q)
+    q = binary(q, shiftOp)
     q = rewriteSortedAggs(q)
     q = rewriteListFns(q)
     // aggregate FILTER (expr) without WHERE (the reference accepts both)
     q = rewriteFilterWhere(q)
     // quantified subquery comparisons (= ANY / <> ALL / op ANY|ALL)
     q = rewriteQuantified(q)
-    // JSON arrow operators (before dateSub would see the minus)
-    q = rewriteJsonArrows(q)
+    // JSON arrow operators (`->` / `->>` are their own tokens, so the
+    // subtraction pass above never sees their minus)
+    q = binary(q, jsonOp)
     // frame EXCLUDE: strip the no-op form, name the unsupported ones
     q = rewriteFrameExclude(q)
     // window-edge parity (r16 tranche 5): FILTER-before-OVER, empty
@@ -1311,18 +1451,13 @@ object SqlDialect {
     // reference binds SIMILAR TO to regexp_full_match — the pattern is a
     // regex matched against the WHOLE string, duckdb-6.cpp:5993-6041 —
     // so wrapping ^(?:…)$ is the exact Spark equivalent, per SURVEY §2.8)
-    locally {
-      val s = new Stmt(q)
-      val subs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-      (0 until s.n).foreach { k =>
-        if (s.kw(k) == "similar" && s.kw(k + 1) == "to" && s.isStr(k + 2) &&
-            s.text(k + 2).length > 1 && s.text(k + 2).endsWith("'")) {
-          val neg = s.kw(k - 1) == "not"
-          subs += ((s.toks(if (neg) k - 1 else k).start, s.toks(k + 2).end,
-            s" ${if (neg) "NOT " else ""}RLIKE '^(?:${s.text(k + 2).drop(1).dropRight(1)})$$'"))
-        }
-      }
-      q = splice(q, subs)
+    q = spliceAll(q) { (s, k) =>
+      if (s.kw(k) == "similar" && s.kw(k + 1) == "to" && s.isStr(k + 2) &&
+          s.text(k + 2).length > 1 && s.text(k + 2).endsWith("'")) {
+        val neg = s.kw(k - 1) == "not"
+        Some((s.toks(if (neg) k - 1 else k).start, s.toks(k + 2).end,
+          s" ${if (neg) "NOT " else ""}RLIKE '^(?:${s.text(k + 2).drop(1).dropRight(1)})$$'"))
+      } else None
     }
 
     // COLLATE NOCASE / NOACCENT (reference collation registry,
@@ -1331,12 +1466,9 @@ object SqlDialect {
     // folds BOTH operands (`lower(a) = lower(b)`), while in an ORDER BY
     // / windowed ORDER BY item only the sort key folds — the projected
     // value keeps its original case either way, matching the
-    // reference. Operands are the textual expression shapes (string
-    // literal / identifier / dotted column / function call with one
-    // paren-nesting level / parenthesized group), optionally chained
-    // with || + - * / — so `(a || b) = c COLLATE NOCASE` and
-    // `a || b = c COLLATE NOCASE` fold BOTH full sides (the chain must
-    // be captured whole: folding just the nearest atom would rewrite
+    // reference. Operands are whole operand chains (|| + - * / ::), so
+    // `(a || b) = c COLLATE NOCASE` and `a || b = c COLLATE NOCASE`
+    // fold BOTH full sides (folding just the nearest atom would rewrite
     // `a || lower(b)` and silently change the comparison). NOACCENT
     // maps to the registered strip_accents UDF (same fold
     // `TypeHelpers.collateNoaccent` uses).
@@ -1374,17 +1506,11 @@ object SqlDialect {
     q
   }
 
-  private[graft] def rewriteRawStrings(q0: String): String = {
-    val toks = SqlLex.tokenize(q0)
-    val subs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    toks.foreach { t =>
-      if (t.kind == SqlLex.Str) {
-        val body = q0.substring(t.start, t.end)
-        if (body.indexOf('\\') >= 0)
-          subs += ((t.start, t.end, body.replace("\\", "\\\\")))
-      }
-    }
-    splice(q0, subs)
+  private[graft] def rewriteRawStrings(q0: String): String = spliceAll(q0) { (s, k) =>
+    val t = s.toks(k)
+    if (s.isStr(k) && s.text(k).indexOf('\\') >= 0)
+      Some((t.start, t.end, s.text(k).replace("\\", "\\\\")))
+    else None
   }
 
   // aggregates whose RESULT is decided by comparisons of the annotated
@@ -1399,6 +1525,21 @@ object SqlDialect {
     "quantile_cont", "first_value", "last_value")
 
   private val cmpOps = Set("=", "<>", "!=", "<=", ">=", "<", ">")
+
+  private val collations = Set("nocase", "noaccent")
+
+  /** The comparison key of `e` under collation `coll`. */
+  private def fold(coll: String, e: String): String =
+    if (coll == "nocase") s"lower($e)" else s"strip_accents($e)"
+
+  /** Raise the reference's binder error when tokens lo..hi carry a
+    * COLLATE other than `coll`. */
+  private def mixedCheck(s: Stmt, lo: Int, hi: Int, coll: String): Unit =
+    for (i <- lo to hi)
+      if (s.kw(i) == "collate" && collations(s.kw(i + 1)) && s.kw(i + 1) != coll)
+        throw new IllegalArgumentException(
+          "graft: Cannot combine types with different collation! " +
+            "(reference binder wording; collation registry duckdb-5.cpp:5156)")
 
   /** COLLATE NOCASE / NOACCENT (reference collation registry,
     * duckdb-5.cpp:5156-5158) as comparison-key folding, token-span
@@ -1423,80 +1564,59 @@ object SqlDialect {
     *    named error (the fold would change semantics silently, or —
     *    for min/arg_min — need the ORIGINAL value under the folded
     *    order, inexpressible as a text rewrite). */
-  private[graft] def rewriteCollate(query: String): String = {
-    var q = query
-    def fold(c: String, e: String): String =
-      if (c == "nocase") s"lower($e)" else s"strip_accents($e)"
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 1
-      while (!changed && k + 1 < toks.length) {
-        val t = toks(k)
-        if (t.kind == SqlLex.Ident && t.lower == "collate" &&
-          toks(k + 1).kind == SqlLex.Ident &&
-          Set("nocase", "noaccent")(toks(k + 1).lower)) {
-          val coll = toks(k + 1).lower
-          val s1 = SqlLex.operandStart(toks, k - 1)
-          if (s1 >= 0) {
-            val rhs = q.substring(toks(s1).start, toks(k - 1).end)
-            val leftCmp = s1 - 1 >= 0 && toks(s1 - 1).kind == SqlLex.Punct &&
-              cmpOps(toks(s1 - 1).lower)
-            val rightCmp = k + 2 < toks.length &&
-              toks(k + 2).kind == SqlLex.Punct && cmpOps(toks(k + 2).lower)
-            if (leftCmp && SqlLex.operandStart(toks, s1 - 2) >= 0) {
-              val s0 = SqlLex.operandStart(toks, s1 - 2)
-              val lhs = q.substring(toks(s0).start, toks(s1 - 2).end)
-              q = q.substring(0, toks(s0).start) +
-                s"${fold(coll, lhs)} ${toks(s1 - 1).lower} ${fold(coll, rhs)}" +
-                q.substring(toks(k + 1).end)
-              changed = true
-            } else if (rightCmp && SqlLex.operandEnd(toks, k + 3) >= 0) {
-              val e2 = SqlLex.operandEnd(toks, k + 3)
-              val rhs2 = q.substring(toks(k + 3).start, toks(e2).end)
-              q = q.substring(0, toks(s1).start) +
-                s"${fold(coll, rhs)} ${toks(k + 2).lower} ${fold(coll, rhs2)}" +
-                q.substring(toks(e2).end)
-              changed = true
-            } else collateCompareForms(q, toks, k, s1, coll) match {
-              case Some(nq) =>
-                q = nq
-                changed = true
-              case None =>
-                val pos = toks(s1).start
-                val repl = SqlLex.clauseAt(toks, pos) match {
-                  case "sort" if SqlLex.callNameAt(toks, pos).isEmpty =>
-                    fold(coll, rhs)
-                  case "sort" => rhs
-                  case "select" => rhs
-                  case "func" if !collationAggregates(SqlLex.callNameAt(toks, pos)) =>
-                    rhs
-                  case ctx => throw new IllegalArgumentException(
-                    s"graft: COLLATE ${coll.toUpperCase} on a single operand in a " +
-                      s"$ctx position would change ${if (ctx == "group") "grouping" else "matching"} " +
-                      "semantics silently — fold explicitly with lower()/strip_accents() " +
-                      "(reference collation registry, duckdb-5.cpp:5156)")
-                }
-                q = q.substring(0, toks(s1).start) + repl + q.substring(toks(k + 1).end)
-                changed = true
-            }
-          }
+  private[graft] def rewriteCollate(query: String): String = fixpoint(query) { (s, k) =>
+    import s.toks
+    val coll = s.kw(k + 1)
+    val s1 = if (k >= 1 && s.kw(k) == "collate" && collations(coll))
+      SqlLex.operandStart(toks, k - 1) else -1
+    if (s1 < 0) None
+    else {
+      val rhs = s.span(s1, k)
+      val leftCmp = s1 - 1 >= 0 && toks(s1 - 1).kind == SqlLex.Punct &&
+        cmpOps(toks(s1 - 1).lower)
+      val rightCmp = k + 2 < toks.length &&
+        toks(k + 2).kind == SqlLex.Punct && cmpOps(toks(k + 2).lower)
+      if (leftCmp && SqlLex.operandStart(toks, s1 - 2) >= 0) {
+        val s0 = SqlLex.operandStart(toks, s1 - 2)
+        Some(s.replace(s0, k + 1,
+          s"${fold(coll, s.span(s0, s1 - 1))} ${toks(s1 - 1).lower} ${fold(coll, rhs)}"))
+      } else if (rightCmp && SqlLex.operandEnd(toks, k + 3) >= 0) {
+        val e2 = SqlLex.operandEnd(toks, k + 3)
+        Some(s.replace(s1, e2,
+          s"${fold(coll, rhs)} ${toks(k + 2).lower} ${fold(coll, s.span(k + 3, e2 + 1))}"))
+      } else collateCompareForms(s, k, s1, coll).orElse {
+        val pos = toks(s1).start
+        val repl = SqlLex.clauseAt(toks, pos) match {
+          case "sort" if SqlLex.callNameAt(toks, pos).isEmpty => fold(coll, rhs)
+          case "sort" => rhs
+          case "select" => rhs
+          case "func" if !collationAggregates(SqlLex.callNameAt(toks, pos)) => rhs
+          case ctx => throw new IllegalArgumentException(
+            s"graft: COLLATE ${coll.toUpperCase} on a single operand in a " +
+              s"$ctx position would change ${if (ctx == "group") "grouping" else "matching"} " +
+              "semantics silently — fold explicitly with lower()/strip_accents() " +
+              "(reference collation registry, duckdb-5.cpp:5156)")
         }
-        k += 1
+        Some(s.replace(s1, k + 1, repl))
       }
     }
-    q
   }
 
   /** Identifiers after which a `[` opens a LIST LITERAL rather than an
     * index — clause keywords and operators; a `[` directly after an
-    * identifier, quoted identifier, `)`, `]`, or string is indexing. */
+    * identifier, quoted identifier, `)`, `]`, `}`, or string is indexing. */
   private val bracketLiteralWords = Set(
     "select", "where", "when", "then", "else", "and", "or", "not", "in",
     "on", "using", "by", "as", "values", "union", "all", "except",
     "intersect", "distinct", "having", "qualify", "limit", "offset",
     "returning", "set", "between", "like", "ilike", "case", "is", "from")
+
+  /** The `[` at token `k` subscripts the value before it (`w[i]`,
+    * `f(x)[1]`, `{'a': 1}['a']`) instead of opening a list literal. */
+  private def indexing(s: Stmt, k: Int): Boolean =
+    s.isClose(k - 1) || s.isStr(k - 1) || s.isQuoted(k - 1) ||
+      s.isPunct(k - 1, "]") || s.isPunct(k - 1, "}") ||
+      (s.isName(k - 1) && !bracketLiteralWords(s.kw(k - 1)))
 
   /** duck `[e1, e2, …]` list literals → `array(e1, e2, …)` (reference
     * list constructor syntax; Spark's parser has no bracket literal).
@@ -1504,342 +1624,29 @@ object SqlDialect {
     * alone: Spark shares duck's bracket-index syntax. Runs after the
     * replacement scans so `read_csv(… names=['a'])` options are
     * already consumed. */
-  private[graft] def rewriteListLiterals(q0: String): String = {
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 0
-      while (!changed && k < toks.length) {
-        val t = toks(k)
-        if (t.kind == SqlLex.Punct && t.lower == "[") {
-          val prev = if (k > 0) toks(k - 1) else null
-          val indexing = prev != null && (prev.kind == SqlLex.RParen ||
-            prev.kind == SqlLex.Str || prev.kind == SqlLex.QIdent ||
-            (prev.kind == SqlLex.Punct && prev.lower == "]") ||
-            (prev.kind == SqlLex.Ident && !bracketLiteralWords(prev.lower)))
-          if (!indexing) {
-            var depth = 0
-            var j = k
-            var close = -1
-            while (close < 0 && j < toks.length) {
-              val w = toks(j)
-              if (w.kind == SqlLex.Punct && w.lower == "[") depth += 1
-              else if (w.kind == SqlLex.Punct && w.lower == "]") {
-                depth -= 1
-                if (depth == 0) close = j
-              }
-              j += 1
-            }
-            if (close > 0) {
-              // duck list COMPREHENSIONS (r15 probed: `[x*2 FOR x IN
-              // [1,2,3] IF x > 1]` = [4,6]) → transform/filter lambdas;
-              // detection: depth-1 bare FOR … IN inside the brackets
-              var forIdx = -1
-              var inIdx = -1
-              var ifIdx = -1
-              locally {
-                var d = 0
-                var m = k
-                while (m < close) {
-                  val w = toks(m)
-                  if ((w.kind == SqlLex.Punct && w.lower == "[") ||
-                    w.kind == SqlLex.LParen) d += 1
-                  else if ((w.kind == SqlLex.Punct && w.lower == "]") ||
-                    w.kind == SqlLex.RParen) d -= 1
-                  else if (d == 1 && w.kind == SqlLex.Ident) {
-                    if (w.lower == "for" && forIdx < 0) forIdx = m
-                    else if (w.lower == "in" && forIdx > 0 && inIdx < 0) inIdx = m
-                    else if (w.lower == "if" && inIdx > 0 && ifIdx < 0) ifIdx = m
-                  }
-                  m += 1
-                }
-              }
-              if (forIdx > 0 && inIdx == forIdx + 2 &&
-                toks(forIdx + 1).kind == SqlLex.Ident) {
-                val v = q.substring(toks(forIdx + 1).start, toks(forIdx + 1).end)
-                val e = q.substring(t.end, toks(forIdx).start).trim
-                val listEnd = if (ifIdx > 0) toks(ifIdx).start else toks(close).start
-                val lst = q.substring(toks(inIdx).end, listEnd).trim
-                val src = if (ifIdx > 0) {
-                  val cond = q.substring(toks(ifIdx).end, toks(close).start).trim
-                  s"filter($lst, $v -> $cond)"
-                } else lst
-                q = q.substring(0, t.start) + s"transform($src, $v -> $e)" +
-                  q.substring(toks(close).end)
-              } else {
-                q = q.substring(0, t.start) + "array(" +
-                  q.substring(t.end, toks(close).start) + ")" +
-                  q.substring(toks(close).end)
-              }
-              changed = true
-            }
-          }
-        }
-        k += 1
-      }
+  private[graft] def rewriteListLiterals(q0: String): String = fixpoint(q0) { (s, k) =>
+    val close = if (s.isPunct(k, "[") && !indexing(s, k)) s.close(k) else -1
+    if (close < 0) None
+    else {
+      // duck list COMPREHENSIONS (r15 probed: `[x*2 FOR x IN
+      // [1,2,3] IF x > 1]` = [4,6]) → transform/filter lambdas;
+      // detection: bare FOR … IN directly inside the brackets
+      val top = SqlLex.topLevel(s.toks, k + 1, close)
+      def first(w: String, after: Int) =
+        if (after < 0) -1 else top.find(i => i > after && s.kw(i) == w).getOrElse(-1)
+      val forIdx = first("for", k)
+      val inIdx = first("in", forIdx)
+      val ifIdx = first("if", inIdx)
+      if (forIdx > 0 && inIdx == forIdx + 2 && s.isName(forIdx + 1)) {
+        val v = s.text(forIdx + 1)
+        val e = s.between(k, forIdx).trim
+        val lst = s.between(inIdx, if (ifIdx > 0) ifIdx else close).trim
+        val src = if (ifIdx > 0) s"filter($lst, $v -> ${s.between(ifIdx, close).trim})"
+          else lst
+        Some(s.replace(k, close, s"transform($src, $v -> $e)"))
+      } else Some(s.replace(k, close, "array(" + s.between(k, close) + ")"))
     }
-    q
   }
-
-  /** duck `a // b` (duck-probed r14b): truncating integer division for
-    * integral operands, PLAIN division otherwise — dispatched at plan
-    * time by [[graft.functions.DuckFloorDiv]]. Operand capture is
-    * multiplicative-precedence only (`a + b // c` is `a + (b//c)`):
-    * the left side chains across * / % :: and the right side is one
-    * atom (plus an optional sign and :: casts) — `a // b * c` stays
-    * `(a//b) * c`. */
-  private[graft] def rewriteFloorDiv(q0: String): String = {
-    val mulOps = Set("*", "/", "%", "::")
-    val castOnly = Set("::")
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 1
-      while (!changed && k + 1 < toks.length) {
-        val a = toks(k)
-        val b = toks(k + 1)
-        if (a.kind == SqlLex.Punct && a.lower == "/" &&
-          b.kind == SqlLex.Punct && b.lower == "/" && a.end == b.start) {
-          val ls = SqlLex.operandStart(toks, k - 1, mulOps)
-          // optional unary sign on the right operand
-          val signTok = if (k + 2 < toks.length && toks(k + 2).kind == SqlLex.Punct &&
-            (toks(k + 2).lower == "-" || toks(k + 2).lower == "+")) 1 else 0
-          val re = SqlLex.operandEnd(toks, k + 2 + signTok, castOnly)
-          if (ls >= 0 && re >= 0) {
-            val l = q.substring(toks(ls).start, toks(k - 1).end)
-            val r = q.substring(toks(k + 2).start, toks(re).end)
-            q = q.substring(0, toks(ls).start) + s"graft_fdiv($l, $r)" +
-              q.substring(toks(re).end)
-            changed = true
-          }
-        }
-        k += 1
-      }
-    }
-    q
-  }
-
-  /** `a ** b` / `a ^ b` → power(a, b) and prefix `@x` → abs(x)
-    * (duck-probed r15: the reference's `^` is EXPONENTIATION returning
-    * DOUBLE — `2^3`=8.0 where Spark's `^` is xor, a silent-wrong
-    * class; `**`/`^` bind tighter than `* / %` — `2*3**2`=18,
-    * `2^3*2`=16 — are left-associative — `2**3**2`=64 — and a unary
-    * sign binds INTO the left operand: `-2**2`=4). Scanning leftmost-
-    * first per pass yields left associativity. */
-  private[graft] def rewritePowAbs(q0: String): String = {
-    val castOnly = Set("::")
-    // a sign token is UNARY when the tokens before it cannot end an
-    // operand (`2 - 3**2` keeps the binary minus out of the operand;
-    // `(-2)**2` and `a * -2 ** 2` pull the sign in)
-    def unarySign(toks: Vector[SqlLex.Tok], i: Int): Boolean =
-      toks(i).kind == SqlLex.Punct &&
-        (toks(i).lower == "-" || toks(i).lower == "+") &&
-        (i == 0 || SqlLex.operandStart(toks, i - 1, castOnly) < 0)
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 0
-      while (!changed && k < toks.length) {
-        val t = toks(k)
-        val isPow2 = t.kind == SqlLex.Punct && t.lower == "*" &&
-          k + 1 < toks.length && toks(k + 1).kind == SqlLex.Punct &&
-          toks(k + 1).lower == "*" && t.end == toks(k + 1).start
-        val isCaret = t.kind == SqlLex.Punct && t.lower == "^"
-        if ((isPow2 || isCaret) && k >= 1) {
-          val opEnd = if (isPow2) k + 1 else k
-          var ls = SqlLex.operandStart(toks, k - 1, castOnly)
-          if (ls > 0 && unarySign(toks, ls - 1)) ls -= 1
-          val rSign = if (opEnd + 1 < toks.length &&
-            toks(opEnd + 1).kind == SqlLex.Punct &&
-            (toks(opEnd + 1).lower == "-" || toks(opEnd + 1).lower == "+")) 1 else 0
-          val re = if (opEnd + 1 + rSign < toks.length)
-            SqlLex.operandEnd(toks, opEnd + 1 + rSign, castOnly) else -1
-          if (ls >= 0 && re >= 0) {
-            val l = q.substring(toks(ls).start, toks(k - 1).end)
-            val r = q.substring(toks(opEnd + 1).start, toks(re).end)
-            q = q.substring(0, toks(ls).start) + s"power($l, $r)" +
-              q.substring(toks(re).end)
-            changed = true
-          }
-        } else if (t.kind == SqlLex.Punct && t.lower == "@" &&
-          k + 1 < toks.length) {
-          // prefix abs (probed `@ -5.5` = 5.5): operand is an optional
-          // sign + one atom with casts
-          val rSign = if (toks(k + 1).kind == SqlLex.Punct &&
-            (toks(k + 1).lower == "-" || toks(k + 1).lower == "+")) 1 else 0
-          val re = if (k + 1 + rSign < toks.length)
-            SqlLex.operandEnd(toks, k + 1 + rSign, castOnly) else -1
-          if (re >= 0) {
-            val r = q.substring(toks(k + 1).start, toks(re).end)
-            q = q.substring(0, t.start) + s"abs($r)" + q.substring(toks(re).end)
-            changed = true
-          }
-        }
-        k += 1
-      }
-    }
-    q
-  }
-
-  /** duck `a / b` and `a % b` → duck_div / duck_mod (r15 arithmetic-
-    * edge sweep; [[graft.functions.DuckDiv]] / [[graft.functions.DuckMod]]
-    * dispatch on operand types at plan time: NULL on a zero divisor at
-    * every numeric type, `/` always DOUBLE — probed `typeof(5/2)` =
-    * `typeof(1.5/2.5)` = DOUBLE — and the per-width `min % -1`
-    * overflow error). Same multiplicative operand capture as
-    * [[rewriteFloorDiv]]. An INTERVAL literal on the left keeps
-    * Spark's own interval arithmetic (the capture would otherwise take
-    * just the unit keyword). */
-  private[graft] def rewriteDivMod(q0: String): String = {
-    val mulOps = Set("*", "/", "%", "::")
-    val castOnly = Set("::")
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 1
-      while (!changed && k < toks.length) {
-        val t = toks(k)
-        if (t.kind == SqlLex.Punct && (t.lower == "/" || t.lower == "%")) {
-          val fn = if (t.lower == "/") "duck_div" else "duck_mod"
-          val ls = SqlLex.operandStart(toks, k - 1, mulOps)
-          // two token shapes: `INTERVAL 4 HOUR` (keyword at ls-2, the
-          // capture lands on the unit ident) and the quoted form
-          // `INTERVAL '4 hours'` (keyword at ls-1, capture on the Str)
-          val intervalLeft = (ls >= 2 &&
-            toks(ls - 2).kind == SqlLex.Ident && toks(ls - 2).lower == "interval") ||
-            (ls >= 1 && toks(ls).kind == SqlLex.Str &&
-              toks(ls - 1).kind == SqlLex.Ident && toks(ls - 1).lower == "interval")
-          val rSign = if (k + 1 < toks.length && toks(k + 1).kind == SqlLex.Punct &&
-            (toks(k + 1).lower == "-" || toks(k + 1).lower == "+")) 1 else 0
-          val re = if (k + 1 + rSign < toks.length)
-            SqlLex.operandEnd(toks, k + 1 + rSign, castOnly) else -1
-          if (ls >= 0 && re >= 0 && !intervalLeft) {
-            val l = q.substring(toks(ls).start, toks(k - 1).end)
-            val r = q.substring(toks(k + 1).start, toks(re).end)
-            q = q.substring(0, toks(ls).start) + s"$fn($l, $r)" +
-              q.substring(toks(re).end)
-            changed = true
-          }
-        }
-        k += 1
-      }
-    }
-    q
-  }
-
-  /** Typed-literal keywords: a captured Str operand whose PREVIOUS
-    * token is one of these belongs to a typed literal — the keyword
-    * must travel with the operand (`DATE '1994-01-01' - 1` must not
-    * capture just the string). */
-  private val typedLitKw = Set("date", "timestamp", "time", "interval")
-
-  private def withTypedLitKw(toks: Vector[SqlLex.Tok], ls: Int): Int =
-    if (ls > 0 && toks(ls).kind == SqlLex.Str &&
-      toks(ls - 1).kind == SqlLex.Ident && typedLitKw(toks(ls - 1).lower)) ls - 1
-    else ls
-
-  /** duck `a - b` → duck_sub (r15 battery tranche 2): DATE - DATE is
-    * an INTEGER day count on the reference (probed: 31) where Spark
-    * yields a day-time interval; all other operand types pass through
-    * to Spark's own Subtract resolution. Additive-precedence capture;
-    * unary minus never rewrites (no left operand). */
-  private[graft] def rewriteDateSub(q0: String): String = {
-    val addOps = Set("*", "/", "%", "::", "+", "-")
-    val mulOps = Set("*", "/", "%", "::")
-    val castOnly = Set("::")
-    def unarySign(toks: Vector[SqlLex.Tok], i: Int): Boolean =
-      toks(i).kind == SqlLex.Punct &&
-        (toks(i).lower == "-" || toks(i).lower == "+") &&
-        (i == 0 || SqlLex.operandStart(toks, i - 1, castOnly) < 0)
-    // additive-chain start with unary signs folded INTO the chain
-    // (`x * -3 - y` must capture `x * -3`, not just `3`)
-    def extStart(toks: Vector[SqlLex.Tok], j: Int): Int = {
-      var s = SqlLex.operandStart(toks, j, addOps)
-      if (s < 0) return -1
-      var more = true
-      while (more) {
-        more = false
-        s = withTypedLitKw(toks, s)
-        if (s > 0 && unarySign(toks, s - 1)) {
-          s -= 1
-          if (s > 0 && toks(s - 1).kind == SqlLex.Punct &&
-            addOps(toks(s - 1).lower) && s - 2 >= 0) {
-            val s2 = SqlLex.operandStart(toks, s - 2, addOps)
-            if (s2 >= 0) { s = s2; more = true }
-          }
-        }
-      }
-      s
-    }
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 1
-      while (!changed && k + 1 < toks.length) {
-        val t = toks(k)
-        // a binary minus only (tokens before it can end an operand);
-        // `->` arrows pass through
-        val isArrow = toks(k + 1).kind == SqlLex.Punct &&
-          toks(k + 1).lower == ">" && t.end == toks(k + 1).start
-        // `1e-7`: the lexer splits a signed exponent into Num('1e') -
-        // Num('7'); an adjacent minus between them is the literal's
-        // exponent sign, not subtraction
-        val isSciExp = toks(k - 1).kind == SqlLex.Num &&
-          toks(k - 1).end == t.start && k + 1 < toks.length &&
-          toks(k + 1).kind == SqlLex.Num && t.end == toks(k + 1).start && {
-            val p = q.substring(toks(k - 1).start, toks(k - 1).end)
-            p.endsWith("e") || p.endsWith("E")
-          }
-        if (t.kind == SqlLex.Punct && t.lower == "-" && !isArrow && !isSciExp &&
-          SqlLex.operandStart(toks, k - 1, castOnly) >= 0) {
-          var ls = extStart(toks, k - 1)
-          // keyword-form interval on the left (`INTERVAL 4 HOUR - …`):
-          // the capture lands on the unit ident — extend to the
-          // keyword so duck_sub sees the whole literal (r16; duck_sub
-          // now dispatches every interval pairing incl. the MIXED
-          // ym/dt classes Spark cannot combine)
-          if (ls >= 2 && toks(ls - 2).kind == SqlLex.Ident &&
-            toks(ls - 2).lower == "interval") ls -= 2
-          val rSign = if (toks(k + 1).kind == SqlLex.Punct &&
-            (toks(k + 1).lower == "-" || toks(k + 1).lower == "+")) 1 else 0
-          var re = if (k + 1 + rSign < toks.length)
-            SqlLex.operandEnd(toks, k + 1 + rSign, mulOps) else -1
-          // typed literal on the right (DATE '…' parses as ident+str)
-          if (re >= 0 && rSign == 0 && toks(k + 1).kind == SqlLex.Ident &&
-            typedLitKw(toks(k + 1).lower) && re == k + 1 &&
-            k + 2 < toks.length && toks(k + 2).kind == SqlLex.Str) re = k + 2
-          // INTERVAL right operands (quoted and keyword forms) rewrite
-          // too since r16 — duck_sub owns all interval pairings
-          if (re < 0 && rSign == 0 && toks(k + 1).kind == SqlLex.Ident &&
-            toks(k + 1).lower == "interval" && k + 2 < toks.length) {
-            if (toks(k + 2).kind == SqlLex.Str) re = k + 2
-            else if (toks(k + 2).kind == SqlLex.Num && k + 3 < toks.length &&
-              toks(k + 3).kind == SqlLex.Ident) re = k + 3
-          }
-          if (ls >= 0 && re >= 0) {
-            val l = q.substring(toks(ls).start, toks(k - 1).end)
-            val r = q.substring(toks(k + 1).start, toks(re).end)
-            q = q.substring(0, toks(ls).start) + s"duck_sub($l, $r)" +
-              q.substring(toks(re).end)
-            changed = true
-          }
-        }
-        k += 1
-      }
-    }
-    q
-  }
-
 
   /** duck cast targets (r15): `CAST/TRY_CAST(x AS <int-name>)` and
     * `x::<int-name>` route through duck_icast (float inputs round half
@@ -1847,220 +1654,102 @@ object SqlDialect {
     * all probed), and the VARCHAR/TEXT/STRING targets route through
     * duck_str (fixes Spark's bare-VARCHAR rejection and renders
     * doubles with the reference's shortest-round-trip format). */
-
   private[graft] def rewriteCasts(q0: String): String = {
     val intNames = graft.functions.DuckICast.targets.keySet
     val strNames = Set("varchar", "text", "string")
     val boolNames = Set("boolean", "bool", "logical")
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 0
-      while (!changed && k < toks.length) {
-        val t = toks(k)
-        if (t.kind == SqlLex.Ident && (t.lower == "cast" || t.lower == "try_cast") &&
-          k + 1 < toks.length && toks(k + 1).kind == SqlLex.LParen) {
-          var depth = 0
-          var j = k + 1
-          var close = -1
-          var asIdx = -1
-          while (close < 0 && j < toks.length) {
-            val w = toks(j)
-            if (w.kind == SqlLex.LParen) depth += 1
-            else if (w.kind == SqlLex.RParen) { depth -= 1; if (depth == 0) close = j }
-            else if (depth == 1 && w.kind == SqlLex.Ident && w.lower == "as") asIdx = j
-            j += 1
+    fixpoint(q0) { (s, k) =>
+      import s.{kw, toks}
+      if ((kw(k) == "cast" || kw(k) == "try_cast") && s.isOpen(k + 1)) {
+        val close = s.close(k + 1)
+        val asIdx = if (close < 0) -1
+          else SqlLex.topLevel(toks, k + 2, close).filter(kw(_) == "as").lastOption.getOrElse(-1)
+        val typed = close > 0 && asIdx > k + 2
+        // stringy targets incl. length modifiers: the reference
+        // treats CHAR(10) / VARCHAR(3) / CHARACTER VARYING(2) /
+        // BPCHAR as plain VARCHAR — no padding, no truncation
+        // (probed r16: CAST('abc' AS CHAR(10)) || 'Z' = 'abcZ')
+        // where Spark's CHAR(n) space-pads and VARCHAR(n) truncates
+        val strTypeEnd: Int = if (typed && s.isName(asIdx + 1)) {
+          val ty0 = kw(asIdx + 1)
+          var e = -1
+          if (strNames(ty0) || ty0 == "char" || ty0 == "character" || ty0 == "bpchar") {
+            e = asIdx + 1
+            if ((ty0 == "character" || ty0 == "char") && e + 1 < close && kw(e + 1) == "varying")
+              e += 1
+            if (e + 3 <= close && s.isOpen(e + 1) && toks(e + 2).kind == SqlLex.Num &&
+              s.isClose(e + 3)) e += 3
+            if (e + 1 != close) e = -1 // trailing junk — not ours
           }
-          // stringy targets incl. length modifiers: the reference
-          // treats CHAR(10) / VARCHAR(3) / CHARACTER VARYING(2) /
-          // BPCHAR as plain VARCHAR — no padding, no truncation
-          // (probed r16: CAST('abc' AS CHAR(10)) || 'Z' = 'abcZ')
-          // where Spark's CHAR(n) space-pads and VARCHAR(n) truncates
-          val strTypeEnd: Int = if (close > 0 && asIdx > k + 2 &&
-            toks(asIdx + 1).kind == SqlLex.Ident) {
-            val ty0 = toks(asIdx + 1).lower
-            var e = -1
-            if (strNames(ty0) || ty0 == "char" || ty0 == "character" ||
-              ty0 == "bpchar") {
-              e = asIdx + 1
-              if ((ty0 == "character" || ty0 == "char") && e + 1 < close &&
-                toks(e + 1).kind == SqlLex.Ident && toks(e + 1).lower == "varying")
-                e += 1
-              if (e + 3 <= close && toks(e + 1).kind == SqlLex.LParen &&
-                toks(e + 2).kind == SqlLex.Num &&
-                toks(e + 3).kind == SqlLex.RParen) e += 3
-              if (e + 1 != close) e = -1 // trailing junk — not ours
-            }
-            e
-          } else -1
-          // single-ident target directly before the close, or `T[]`
-          // array targets (DECIMAL(p,s) falls through to Spark)
-          val singleIdent = close > 0 && asIdx > k + 2 && asIdx + 2 == close &&
-            toks(asIdx + 1).kind == SqlLex.Ident
-          val arrayIdent = close > 0 && asIdx > k + 2 && asIdx + 4 == close &&
-            toks(asIdx + 1).kind == SqlLex.Ident &&
-            toks(asIdx + 2).kind == SqlLex.Punct && toks(asIdx + 2).lower == "[" &&
-            toks(asIdx + 3).kind == SqlLex.Punct && toks(asIdx + 3).lower == "]"
-          // nested targets: STRUCT(…)/MAP(…) (at any depth, incl.
-          // array suffixes) and multi-dim T[][] route through
-          // duck_ncast — by-name struct matching + leaf-level TRY
-          // (r17 BATTERY7; functions/DuckNestedCast.scala)
-          val nestedTarget: Option[String] =
-            if (close > 0 && asIdx > k + 2 && asIdx + 1 < close) {
-              val tt = q.substring(toks(asIdx).end, toks(close).start).trim
-              val headIsNested = toks(asIdx + 1).kind == SqlLex.Ident &&
-                Set("struct", "map")(toks(asIdx + 1).lower) &&
-                asIdx + 2 < close && toks(asIdx + 2).kind == SqlLex.LParen
-              val multiDim =
-                """\]\s*\[""".r.findFirstIn(tt).isDefined
-              if (headIsNested || multiDim) Some(tt) else None
-            } else None
-          if (nestedTarget.isDefined) {
-            val isTry = t.lower == "try_cast"
-            val expr = q.substring(toks(k + 2).start, toks(asIdx).start).trim
-            val tyLit = nestedTarget.get.replace("'", "''")
-            q = q.substring(0, t.start) +
-              (if (isTry) "duck_try_ncast(" else "duck_ncast(") +
-              expr + s", '$tyLit')" + q.substring(toks(close).end)
-            changed = true
-          } else if (strTypeEnd > 0) {
-            val isTry = t.lower == "try_cast"
-            val expr = q.substring(toks(k + 2).start, toks(asIdx).start).trim
-            q = q.substring(0, t.start) +
-              (if (isTry) "duck_try_str(" else "duck_str(") + expr + ")" +
-              q.substring(toks(close).end)
-            changed = true
-          } else if (singleIdent || arrayIdent) {
-            val ty = toks(asIdx + 1).lower
-            val isTry = t.lower == "try_cast"
-            val expr = q.substring(toks(k + 2).start, toks(asIdx).start).trim
-            val call =
-              if (arrayIdent) Some(
-                (if (isTry) "duck_try_acast(" else "duck_acast(") + expr + s", '$ty')")
-              else if (intNames(ty)) Some(
-                (if (isTry) "duck_try_icast(" else "duck_icast(") + expr + s", '$ty')")
-              else if (strNames(ty)) Some(
-                (if (isTry) "duck_try_str(" else "duck_str(") + expr + ")")
-              else if (boolNames(ty)) Some(
-                (if (isTry) "duck_try_bcast(" else "duck_bcast(") + expr + ")")
-              else None
-            call.foreach { c =>
-              q = q.substring(0, t.start) + c + q.substring(toks(close).end)
-              changed = true
-            }
-          }
-        } else if (t.kind == SqlLex.Punct && t.lower == "::" && k >= 1 &&
-          k + 1 < toks.length && toks(k + 1).kind == SqlLex.Ident &&
-          Set("struct", "map")(toks(k + 1).lower) &&
-          k + 2 < toks.length && toks(k + 2).kind == SqlLex.LParen) {
-          // x::STRUCT(…) / x::MAP(…,…) [+ optional [] suffixes] → the
-          // by-name nested cast (r17 BATTERY7)
-          val ls = SqlLex.operandStart(toks, k - 1, Set("::"))
-          if (ls >= 0) {
-            val close = SqlLex.closeParen(toks, k + 2)
-            if (close > 0) {
-              var te = close
-              while (te + 2 < toks.length &&
-                toks(te + 1).kind == SqlLex.Punct && toks(te + 1).lower == "[" &&
-                toks(te + 2).kind == SqlLex.Punct && toks(te + 2).lower == "]")
-                te += 2
-              val operand = q.substring(toks(ls).start, toks(k - 1).end)
-              val tyLit = q.substring(toks(k + 1).start, toks(te).end)
-                .replace("'", "''")
-              q = q.substring(0, toks(ls).start) +
-                s"duck_ncast($operand, '$tyLit')" + q.substring(toks(te).end)
-              changed = true
-            }
-          }
-        } else if (t.kind == SqlLex.Punct && t.lower == "::" && k >= 1 &&
-          k + 1 < toks.length && toks(k + 1).kind == SqlLex.Ident &&
-          (intNames(toks(k + 1).lower) || strNames(toks(k + 1).lower) ||
-            boolNames(toks(k + 1).lower) ||
-            Set("char", "character", "bpchar")(toks(k + 1).lower)) &&
-          !(k + 2 < toks.length && toks(k + 2).kind == SqlLex.Punct &&
-            toks(k + 2).lower == "[")) {
-          val ls = SqlLex.operandStart(toks, k - 1, Set("::"))
-          if (ls >= 0) {
-            val ty = toks(k + 1).lower
-            // stringy targets may carry VARYING and a length modifier
-            // — both ignored by the reference (probed 'abc'::CHAR(10))
-            val stringy = !intNames(ty) && !boolNames(ty)
-            var te = k + 1
-            if (stringy && (ty == "character" || ty == "char") &&
-              te + 1 < toks.length &&
-              toks(te + 1).kind == SqlLex.Ident && toks(te + 1).lower == "varying")
-              te += 1
-            if (stringy && te + 3 < toks.length &&
-              toks(te + 1).kind == SqlLex.LParen &&
-              toks(te + 2).kind == SqlLex.Num &&
-              toks(te + 3).kind == SqlLex.RParen) te += 3
-            val operand = q.substring(toks(ls).start, toks(k - 1).end)
-            val call = if (intNames(ty)) s"duck_icast($operand, '$ty')"
-              else if (boolNames(ty)) s"duck_bcast($operand)"
-              else s"duck_str($operand)"
-            q = q.substring(0, toks(ls).start) + call + q.substring(toks(te).end)
-            changed = true
-          }
+          e
+        } else -1
+        // single-ident target directly before the close, or `T[]`
+        // array targets (DECIMAL(p,s) falls through to Spark)
+        val singleIdent = typed && asIdx + 2 == close && s.isName(asIdx + 1)
+        val arrayIdent = typed && asIdx + 4 == close && s.isName(asIdx + 1) &&
+          s.isPunct(asIdx + 2, "[") && s.isPunct(asIdx + 3, "]")
+        // nested targets: STRUCT(…)/MAP(…) (at any depth, incl.
+        // array suffixes) and multi-dim T[][] route through
+        // duck_ncast — by-name struct matching + leaf-level TRY
+        // (r17 BATTERY7; functions/DuckNestedCast.scala)
+        val nested = typed && asIdx + 1 < close && (
+          (Set("struct", "map")(kw(asIdx + 1)) && asIdx + 2 < close && s.isOpen(asIdx + 2)) ||
+            (asIdx + 1 until close).exists(i => s.isPunct(i, "]") && s.isPunct(i + 1, "[")))
+        val isTry = kw(k) == "try_cast"
+        def expr = s.between(k + 1, asIdx).trim
+        val call =
+          if (nested)
+            Some((if (isTry) "duck_try_ncast(" else "duck_ncast(") + expr +
+              s", '${s.between(asIdx, close).trim.replace("'", "''")}')")
+          else if (strTypeEnd > 0) Some((if (isTry) "duck_try_str(" else "duck_str(") + expr + ")")
+          else if (singleIdent || arrayIdent) {
+            val ty = kw(asIdx + 1)
+            if (arrayIdent) Some(
+              (if (isTry) "duck_try_acast(" else "duck_acast(") + expr + s", '$ty')")
+            else if (intNames(ty)) Some(
+              (if (isTry) "duck_try_icast(" else "duck_icast(") + expr + s", '$ty')")
+            else if (strNames(ty)) Some(
+              (if (isTry) "duck_try_str(" else "duck_str(") + expr + ")")
+            else if (boolNames(ty)) Some(
+              (if (isTry) "duck_try_bcast(" else "duck_bcast(") + expr + ")")
+            else None
+          } else None
+        call.map(s.replace(k, close, _))
+      } else if (s.isPunct(k, "::") && Set("struct", "map")(kw(k + 1)) && s.isOpen(k + 2)) {
+        // x::STRUCT(…) / x::MAP(…,…) [+ optional [] suffixes] → the
+        // by-name nested cast (r17 BATTERY7)
+        val ls = SqlLex.operandStart(toks, k - 1, castOnly)
+        val close = if (ls >= 0) s.close(k + 2) else -1
+        if (close < 0) None
+        else {
+          var te = close
+          while (s.isPunct(te + 1, "[") && s.isPunct(te + 2, "]")) te += 2
+          val tyLit = s.span(k + 1, te + 1).replace("'", "''")
+          Some(s.replace(ls, te, s"duck_ncast(${s.span(ls, k)}, '$tyLit')"))
         }
-        k += 1
-      }
-    }
-    q
-  }
-
-  /** duck `a << b` / `a >> b` → duck_lshift / duck_rshift (probed r15:
-    * the reference raises on negative or ≥-width left shifts and on
-    * overflow past the operand width's SIGNED max — `1 << 31` at INT32
-    * raises; `>>` yields 0 for out-of-range amounts — while Spark
-    * wraps at Java semantics). Probed precedence: looser than + -
-    * (`1+1<<2`=8), tighter than & (`3 & 1<<1`=2), left-associative.
-    * A leading unary sign binds into the left operand so `-1 << 2`
-    * raises like the reference. `>>>` (three adjacent) is untouched. */
-  private[graft] def rewriteShiftOps(q0: String): String = {
-    val addOps = Set("*", "/", "%", "::", "+", "-")
-    val castOnly = Set("::")
-    def unarySign(toks: Vector[SqlLex.Tok], i: Int): Boolean =
-      toks(i).kind == SqlLex.Punct &&
-        (toks(i).lower == "-" || toks(i).lower == "+") &&
-        (i == 0 || SqlLex.operandStart(toks, i - 1, castOnly) < 0)
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 1
-      while (!changed && k + 1 < toks.length) {
-        val a = toks(k)
-        val b = toks(k + 1)
-        val twoOf = (c: String) => a.kind == SqlLex.Punct && a.lower == c &&
-          b.kind == SqlLex.Punct && b.lower == c && a.end == b.start &&
-          !(k + 2 < toks.length && toks(k + 2).kind == SqlLex.Punct &&
-            toks(k + 2).lower == c && b.end == toks(k + 2).start) &&
-          !(k >= 1 && toks(k - 1).kind == SqlLex.Punct &&
-            toks(k - 1).lower == c && toks(k - 1).end == a.start)
-        val fn = if (twoOf("<")) "duck_lshift"
-          else if (twoOf(">")) "duck_rshift" else null
-        if (fn != null) {
-          var ls = SqlLex.operandStart(toks, k - 1, addOps)
-          if (ls > 0 && unarySign(toks, ls - 1)) ls -= 1
-          val rSign = if (k + 2 < toks.length && toks(k + 2).kind == SqlLex.Punct &&
-            (toks(k + 2).lower == "-" || toks(k + 2).lower == "+")) 1 else 0
-          val re = if (k + 2 + rSign < toks.length)
-            SqlLex.operandEnd(toks, k + 2 + rSign, addOps) else -1
-          if (ls >= 0 && re >= 0) {
-            val l = q.substring(toks(ls).start, toks(k - 1).end)
-            val r = q.substring(toks(k + 2).start, toks(re).end)
-            q = q.substring(0, toks(ls).start) + s"$fn($l, $r)" +
-              q.substring(toks(re).end)
-            changed = true
-          }
+      } else if (s.isPunct(k, "::") && (intNames(kw(k + 1)) || strNames(kw(k + 1)) ||
+        boolNames(kw(k + 1)) || Set("char", "character", "bpchar")(kw(k + 1))) &&
+        !s.isPunct(k + 2, "[")) {
+        val ls = SqlLex.operandStart(toks, k - 1, castOnly)
+        if (ls < 0) None
+        else {
+          val ty = kw(k + 1)
+          // stringy targets may carry VARYING and a length modifier
+          // — both ignored by the reference (probed 'abc'::CHAR(10))
+          val stringy = !intNames(ty) && !boolNames(ty)
+          var te = k + 1
+          if (stringy && (ty == "character" || ty == "char") && kw(te + 1) == "varying")
+            te += 1
+          if (stringy && te + 3 < toks.length && s.isOpen(te + 1) &&
+            toks(te + 2).kind == SqlLex.Num && s.isClose(te + 3)) te += 3
+          val operand = s.span(ls, k)
+          val call = if (intNames(ty)) s"duck_icast($operand, '$ty')"
+            else if (boolNames(ty)) s"duck_bcast($operand)"
+            else s"duck_str($operand)"
+          Some(s.replace(ls, te, call))
         }
-        k += 1
-      }
+      } else None
     }
-    q
   }
 
   /** duck struct literals `{'k': v, …}` → named_struct('k', v, …) and
@@ -2069,100 +1758,52 @@ object SqlDialect {
     * brace literals). Outermost-first; nested literals resolve on the
     * next pass. Only braces whose first depth-1 item is `key :` are
     * touched. */
-  private[graft] def rewriteStructLits(q0: String): String = {
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 0
-      while (!changed && k < toks.length) {
-        val t = toks(k)
-        if (t.kind == SqlLex.Punct && t.lower == "{") {
-          var depth = 0
-          var j = k
-          var close = -1
-          val colons = scala.collection.mutable.ArrayBuffer.empty[Int]
-          val commas = scala.collection.mutable.ArrayBuffer.empty[Int]
-          while (close < 0 && j < toks.length) {
-            val w = toks(j)
-            if (w.kind == SqlLex.Punct && w.lower == "{") depth += 1
-            else if (w.kind == SqlLex.Punct && w.lower == "}") {
-              depth -= 1; if (depth == 0) close = j
-            } else if (depth == 1 && w.kind == SqlLex.LParen) {
-              // skip call groups whole so inner commas/colons don't count
-              var d2 = 1; j += 1
-              while (j < toks.length && d2 > 0) {
-                if (toks(j).kind == SqlLex.LParen) d2 += 1
-                else if (toks(j).kind == SqlLex.RParen) d2 -= 1
-                if (d2 > 0) j += 1
-              }
-            } else if (depth == 1 && w.kind == SqlLex.Punct && w.lower == ":")
-              colons += j
-            else if (depth == 1 && w.kind == SqlLex.Punct && w.lower == ",")
-              commas += j
-            j += 1
-          }
-          val isMap = k > 0 && toks(k - 1).kind == SqlLex.Ident &&
-            toks(k - 1).lower == "map"
-          // a struct/map literal iff the first content token is a key
-          // followed by a depth-1 colon
-          val looksLit = close > k + 2 && colons.nonEmpty &&
-            (toks(k + 1).kind == SqlLex.Str || toks(k + 1).kind == SqlLex.QIdent) &&
-            colons.head == k + 2
-          if (looksLit) {
-            val bounds = (Seq(k) ++ commas ++ Seq(close)).sliding(2).toSeq
-            val pairs = bounds.map { case Seq(a, b) =>
-              // item spans (a, b); its key:value split at the first
-              // depth-1 colon inside
-              val c = colons.find(i => i > a && i < b).getOrElse(-1)
-              require(c > 0, "struct literal item without ':'")
-              val key = q.substring(toks(a + 1).start, toks(c).start).trim
-              val v = q.substring(toks(c).end, toks(b).start).trim
-              val keyLit =
-                if (toks(a + 1).kind == SqlLex.QIdent)
-                  "'" + key.stripPrefix("\"").stripSuffix("\"") + "'"
-                else key
-              (keyLit, v)
-            }
-            // MAP {…} emits map_from_arrays (not Spark's alternating
-            // map(k,v…)) so the LATER two-arg MAP(list,list) rewrite
-            // can never mistake brace output for the reference's
-            // list-pair constructor (r17 review finding)
-            val body =
-              if (isMap)
-                s"map_from_arrays(array(${pairs.map(_._1).mkString(", ")}), " +
-                  s"array(${pairs.map(_._2).mkString(", ")}))"
-              else s"named_struct(${
-                pairs.map(p => s"${p._1}, ${p._2}").mkString(", ")})"
-            val from = if (isMap) toks(k - 1).start else t.start
-            q = q.substring(0, from) + body + q.substring(toks(close).end)
-            changed = true
-          }
-        } else if (t.kind == SqlLex.Ident &&
-          (t.lower == "struct_pack" || t.lower == "struct_insert") &&
-          k + 1 < toks.length && toks(k + 1).kind == SqlLex.LParen) {
-          val close = SqlLex.closeParen(toks, k + 1)
-          if (close > 0) {
-            val inner = q.substring(toks(k + 1).end, toks(close).start)
-            val conv = splitTopLevel(inner).map { arg =>
-              val i = arg.indexOf(":=")
-              if (i > 0) s"'${arg.substring(0, i).trim}', ${arg.substring(i + 2).trim}"
-              else if (t.lower == "struct_insert") arg.trim // the base struct
-              else throw new IllegalArgumentException(
-                "struct_pack expects name := value")
-            }
-            val fn = if (t.lower == "struct_pack") "named_struct"
-              else "duck_struct_insert"
-            q = q.substring(0, t.start) + fn + "(" +
-              conv.mkString(", ") + ")" + q.substring(toks(close).end)
-            changed = true
-          }
+  private[graft] def rewriteStructLits(q0: String): String = fixpoint(q0) { (s, k) =>
+    val t = s.toks(k)
+    if (s.isPunct(k, "{")) {
+      val close = s.close(k)
+      val top = if (close < 0) Vector.empty[Int] else SqlLex.topLevel(s.toks, k + 1, close)
+      val colons = top.filter(s.isPunct(_, ":"))
+      val isMap = s.kw(k - 1) == "map"
+      // a struct/map literal iff the first content token is a key
+      // followed by a depth-1 colon
+      if (!(close > k + 2 && colons.nonEmpty && (s.isStr(k + 1) || s.isQuoted(k + 1)) &&
+        colons.head == k + 2)) None
+      else {
+        val cuts = k +: top.filter(s.isPunct(_, ",")) :+ close
+        val pairs = cuts.zip(cuts.tail).map { case (a, b) =>
+          // item spans (a, b); its key:value split at the first
+          // depth-1 colon inside
+          val c = colons.find(i => i > a && i < b).getOrElse(-1)
+          require(c > 0, "struct literal item without ':'")
+          val key = s.between(a, c).trim
+          val keyLit =
+            if (s.isQuoted(a + 1)) "'" + key.stripPrefix("\"").stripSuffix("\"") + "'"
+            else key
+          (keyLit, s.between(c, b).trim)
         }
-        k += 1
+        // MAP {…} emits map_from_arrays (not Spark's alternating
+        // map(k,v…)) so the LATER two-arg MAP(list,list) rewrite
+        // can never mistake brace output for the reference's
+        // list-pair constructor (r17 review finding)
+        val body =
+          if (isMap)
+            s"map_from_arrays(array(${pairs.map(_._1).mkString(", ")}), " +
+              s"array(${pairs.map(_._2).mkString(", ")}))"
+          else s"named_struct(${pairs.map(p => s"${p._1}, ${p._2}").mkString(", ")})"
+        Some(s.replace(if (isMap) k - 1 else k, close, body))
       }
-    }
-    q
+    } else if ((s.kw(k) == "struct_pack" || s.kw(k) == "struct_insert") && s.isOpen(k + 1) &&
+      s.close(k + 1) > 0) {
+      val conv = splitTopLevel(s.inner(k + 1)).map { arg =>
+        val i = arg.indexOf(":=")
+        if (i > 0) s"'${arg.substring(0, i).trim}', ${arg.substring(i + 2).trim}"
+        else if (t.lower == "struct_insert") arg.trim // the base struct
+        else throw new IllegalArgumentException("struct_pack expects name := value")
+      }
+      val fn = if (t.lower == "struct_pack") "named_struct" else "duck_struct_insert"
+      Some(s.replace(k, s.close(k + 1), fn + "(" + conv.mkString(", ") + ")"))
+    } else None
   }
 
   /** duck bracket subscripts (r15 battery tranche 2 — the probe found
@@ -2172,152 +1813,98 @@ object SqlDialect {
     * negative-from-end, open bounds) → duck_slice(base, a, b). Runs
     * after rewriteListLiterals, so remaining `[` after a value token
     * are genuine subscripts. */
-  private[graft] def rewriteBracketOps(q0: String): String = {
-    val castOnly = Set("::")
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 1
-      while (!changed && k < toks.length) {
-        val t = toks(k)
-        val prev = toks(k - 1)
-        val indexing = t.kind == SqlLex.Punct && t.lower == "[" &&
-          (prev.kind == SqlLex.Str || prev.kind == SqlLex.QIdent ||
-            prev.kind == SqlLex.RParen ||
-            (prev.kind == SqlLex.Punct && prev.lower == "]") ||
-            (prev.kind == SqlLex.Ident && !bracketLiteralWords(prev.lower)))
-        if (indexing) {
-          var depth = 0
-          var j = k
-          var close = -1
-          var colon = -1
-          while (close < 0 && j < toks.length) {
-            val w = toks(j)
-            if (w.kind == SqlLex.Punct && w.lower == "[") depth += 1
-            else if (w.kind == SqlLex.Punct && w.lower == "]") {
-              depth -= 1; if (depth == 0) close = j
-            } else if (depth == 1 && w.kind == SqlLex.Punct && w.lower == ":")
-              colon = j
-            else if (w.kind == SqlLex.LParen) {
-              var d2 = 1; j += 1
-              while (j < toks.length && d2 > 0) {
-                if (toks(j).kind == SqlLex.LParen) d2 += 1
-                else if (toks(j).kind == SqlLex.RParen) d2 -= 1
-                if (d2 > 0) j += 1
-              }
-            }
-            j += 1
-          }
-          val bs = SqlLex.operandStart(toks, k - 1, castOnly)
-          // empty brackets are TYPE syntax (INTEGER[]), not a subscript
-          if (close > k + 1 && bs >= 0) {
-            val base = q.substring(toks(bs).start, prev.end)
-            val call =
-              if (colon > 0) {
-                val s = q.substring(t.end, toks(colon).start).trim
-                val e = q.substring(toks(colon).end, toks(close).start).trim
-                val sArg = if (s.isEmpty) "CAST(NULL AS INT)" else s
-                val eArg = if (e.isEmpty) "CAST(NULL AS INT)" else e
-                s"duck_slice($base, $sArg, $eArg)"
-              } else {
-                val i = q.substring(t.end, toks(close).start).trim
-                s"duck_idx($base, $i)"
-              }
-            q = q.substring(0, toks(bs).start) + call + q.substring(toks(close).end)
-            changed = true
-          }
-        }
-        k += 1
-      }
+  private[graft] def rewriteBracketOps(q0: String): String = fixpoint(q0) { (s, k) =>
+    val close = if (s.isPunct(k, "[") && indexing(s, k)) s.close(k) else -1
+    // empty brackets are TYPE syntax (INTEGER[]), not a subscript
+    val bs = if (close > k + 1) SqlLex.operandStart(s.toks, k - 1, castOnly) else -1
+    if (bs < 0) None
+    else {
+      val base = s.span(bs, k)
+      val colon = SqlLex.topLevel(s.toks, k + 1, close).filter(s.isPunct(_, ":"))
+        .lastOption.getOrElse(-1)
+      val call =
+        if (colon > 0) {
+          def bound(b: String) = if (b.isEmpty) "CAST(NULL AS INT)" else b
+          s"duck_slice($base, ${bound(s.between(k, colon).trim)}, " +
+            s"${bound(s.between(colon, close).trim)})"
+        } else s"duck_idx($base, ${s.between(k, close).trim})"
+      Some(s.replace(bs, close, call))
     }
-    q
   }
 
   /** C-style escape strings `e'…'` (reference/Postgres syntax; probed:
     * e'a\nb' is a two-line string) → plain literals with the escapes
     * decoded. */
-  private[graft] def rewriteEStrings(q0: String): String = {
-    val toks = SqlLex.tokenize(q0)
-    val subs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    var k = 0
-    while (k + 1 < toks.length) {
-      val t = toks(k)
-      val s = toks(k + 1)
-      if (t.kind == SqlLex.Ident && t.lower == "e" && s.kind == SqlLex.Str &&
-        t.end == s.start) {
-        val raw = q0.substring(s.start + 1, s.end - 1)
-        val out = new StringBuilder
-        var i = 0
-        // escape-produced bytes must be ASCII and non-zero on the
-        // reference (probed: e'\xff', e'\0', e'é' are all parser
-        // errors; only 0x01–0x7F results survive UTF-8 validation)
-        def appendCode(v: Int, form: String): Unit =
-          if (v >= 1 && v <= 0x7f) out.append(v.toChar)
-          else throw new IllegalArgumentException(
-            s"invalid e-string escape $form: byte value $v is not valid here")
-        def isHex(c: Char): Boolean =
-          (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
-        while (i < raw.length) {
-          val c = raw.charAt(i)
-          if (c == '\\' && i + 1 < raw.length) {
-            raw.charAt(i + 1) match {
-              case 'n' => out.append('\n'); i += 2
-              case 't' => out.append('\t'); i += 2
-              case 'r' => out.append('\r'); i += 2
-              case 'b' => out.append('\b'); i += 2
-              case 'f' => out.append('\f'); i += 2
-              case '\\' => out.append('\\'); i += 2
-              case '\'' => out.append('\''); i += 2
-              case 'x' =>
-                // \x + 1-2 hex digits (probed: e'\x41'='A', e'\x4.' =
-                // 0x04 then '.', bare e'\x'='x')
-                var j = i + 2
-                while (j < raw.length && j < i + 4 && isHex(raw.charAt(j))) j += 1
-                if (j == i + 2) { out.append('x'); i += 2 }
-                else {
-                  appendCode(Integer.parseInt(raw.substring(i + 2, j), 16), "\\x")
-                  i = j
-                }
-              case 'u' =>
-                // \u takes EXACTLY 4 hex digits (probed: e'\u004' is
-                // "invalid Unicode escape"); surrogates and non-ASCII
-                // codepoints are errors on the reference
-                val j = i + 2
-                if (j + 4 > raw.length || !raw.substring(j, j + 4).forall(isHex))
-                  throw new IllegalArgumentException("invalid Unicode escape")
-                val v = Integer.parseInt(raw.substring(j, j + 4), 16)
-                if (v >= 0xd800 && v <= 0xdfff) throw new IllegalArgumentException(
-                  "invalid Unicode surrogate pair")
-                appendCode(v, "\\u")
-                i = j + 4
-              case 'U' =>
-                // 8-digit \U escapes error on the reference for every
-                // probed codepoint (incl. \U00000041) — named error
-                val j = i + 2
-                if (j + 8 > raw.length || !raw.substring(j, j + 8).forall(isHex))
-                  throw new IllegalArgumentException("invalid Unicode escape")
-                throw new IllegalArgumentException(
-                  "invalid e-string escape \\U: 8-digit Unicode escapes are not supported here")
-              case d if d >= '0' && d <= '7' =>
-                // octal: 1-3 digits (probed: e'\101'='A', e'\479' =
-                // 0x27 then '9')
-                var j = i + 1
-                while (j < raw.length && j < i + 4 &&
-                  raw.charAt(j) >= '0' && raw.charAt(j) <= '7') j += 1
-                appendCode(Integer.parseInt(raw.substring(i + 1, j), 8), "\\octal")
+  private[graft] def rewriteEStrings(q0: String): String = spliceAll(q0) { (s, k) =>
+    if (!(s.kw(k) == "e" && s.isStr(k + 1) && s.toks(k).end == s.toks(k + 1).start)) None
+    else {
+      val raw = s.text(k + 1).drop(1).dropRight(1)
+      val out = new StringBuilder
+      var i = 0
+      // escape-produced bytes must be ASCII and non-zero on the
+      // reference (probed: e'\xff', e'\0', e'é' are all parser
+      // errors; only 0x01–0x7F results survive UTF-8 validation)
+      def appendCode(v: Int, form: String): Unit =
+        if (v >= 1 && v <= 0x7f) out.append(v.toChar)
+        else throw new IllegalArgumentException(
+          s"invalid e-string escape $form: byte value $v is not valid here")
+      def isHex(c: Char): Boolean =
+        (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
+      while (i < raw.length) {
+        val c = raw.charAt(i)
+        if (c == '\\' && i + 1 < raw.length) {
+          raw.charAt(i + 1) match {
+            case 'n' => out.append('\n'); i += 2
+            case 't' => out.append('\t'); i += 2
+            case 'r' => out.append('\r'); i += 2
+            case 'b' => out.append('\b'); i += 2
+            case 'f' => out.append('\f'); i += 2
+            case '\\' => out.append('\\'); i += 2
+            case '\'' => out.append('\''); i += 2
+            case 'x' =>
+              // \x + 1-2 hex digits (probed: e'\x41'='A', e'\x4.' =
+              // 0x04 then '.', bare e'\x'='x')
+              var j = i + 2
+              while (j < raw.length && j < i + 4 && isHex(raw.charAt(j))) j += 1
+              if (j == i + 2) { out.append('x'); i += 2 }
+              else {
+                appendCode(Integer.parseInt(raw.substring(i + 2, j), 16), "\\x")
                 i = j
-              case other => out.append(other); i += 2
-            }
-          } else { out.append(c); i += 1 }
-        }
-        subs += ((t.start, s.end, "'" + out.toString.replace("'", "''") + "'"))
-        k += 1
+              }
+            case 'u' =>
+              // \u takes EXACTLY 4 hex digits (probed: e'\u004' is
+              // "invalid Unicode escape"); surrogates and non-ASCII
+              // codepoints are errors on the reference
+              val j = i + 2
+              if (j + 4 > raw.length || !raw.substring(j, j + 4).forall(isHex))
+                throw new IllegalArgumentException("invalid Unicode escape")
+              val v = Integer.parseInt(raw.substring(j, j + 4), 16)
+              if (v >= 0xd800 && v <= 0xdfff) throw new IllegalArgumentException(
+                "invalid Unicode surrogate pair")
+              appendCode(v, "\\u")
+              i = j + 4
+            case 'U' =>
+              // 8-digit \U escapes error on the reference for every
+              // probed codepoint (incl. \U00000041) — named error
+              val j = i + 2
+              if (j + 8 > raw.length || !raw.substring(j, j + 8).forall(isHex))
+                throw new IllegalArgumentException("invalid Unicode escape")
+              throw new IllegalArgumentException(
+                "invalid e-string escape \\U: 8-digit Unicode escapes are not supported here")
+            case d if d >= '0' && d <= '7' =>
+              // octal: 1-3 digits (probed: e'\101'='A', e'\479' =
+              // 0x27 then '9')
+              var j = i + 1
+              while (j < raw.length && j < i + 4 &&
+                raw.charAt(j) >= '0' && raw.charAt(j) <= '7') j += 1
+              appendCode(Integer.parseInt(raw.substring(i + 1, j), 8), "\\octal")
+              i = j
+            case other => out.append(other); i += 2
+          }
+        } else { out.append(c); i += 1 }
       }
-      k += 1
+      Some((s.toks(k).start, s.toks(k + 1).end, "'" + out.toString.replace("'", "''") + "'"))
     }
-    splice(q0, subs)
   }
 
   /** Dollar-quoted strings `$tag$…$tag$` (reference/Postgres) → plain
@@ -2350,72 +1937,52 @@ object SqlDialect {
     sb.toString
   }
 
+  /** `<kw> '<text>'` typed literal at token `k`, not a dotted or `::`
+    * cast-target name. */
+  private def typedLiteral(s: Stmt, k: Int, kw: String): Boolean =
+    s.kw(k) == kw && s.isStr(k + 1) && !(s.isPunct(k - 1, ".") || s.isPunct(k - 1, "::"))
+
   /** `BLOB '<text>'` literals (reference blob literal with \xHH byte
     * escapes) → `unhex('<hex>')` computed at rewrite time (r16 —
     * Spark has no BLOB typed literal). */
-  private[graft] def rewriteBlobLiterals(q0: String): String = {
-    val toks = SqlLex.tokenize(q0)
-    val subs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    var k = 0
-    while (k + 1 < toks.length) {
-      val t = toks(k)
-      val s = toks(k + 1)
-      if (t.kind == SqlLex.Ident && t.lower == "blob" && s.kind == SqlLex.Str &&
-        (k == 0 || !(toks(k - 1).kind == SqlLex.Punct &&
-          (toks(k - 1).lower == "." || toks(k - 1).lower == "::")))) {
-        val raw = q0.substring(s.start + 1, s.end - 1).replace("''", "'")
-        val bytes = scala.collection.mutable.ArrayBuffer.empty[Byte]
-        var i = 0
-        while (i < raw.length) {
-          if (raw.charAt(i) == '\\' && i + 3 < raw.length &&
-            (raw.charAt(i + 1) == 'x' || raw.charAt(i + 1) == 'X')) {
-            bytes += Integer.parseInt(raw.substring(i + 2, i + 4), 16).toByte
-            i += 4
-          } else {
-            bytes ++= raw.substring(i, i + 1).getBytes("UTF-8")
-            i += 1
-          }
+  private[graft] def rewriteBlobLiterals(q0: String): String = spliceAll(q0) { (s, k) =>
+    if (!typedLiteral(s, k, "blob")) None
+    else {
+      val raw = s.text(k + 1).drop(1).dropRight(1).replace("''", "'")
+      val bytes = scala.collection.mutable.ArrayBuffer.empty[Byte]
+      var i = 0
+      while (i < raw.length) {
+        if (raw.charAt(i) == '\\' && i + 3 < raw.length &&
+          (raw.charAt(i + 1) == 'x' || raw.charAt(i + 1) == 'X')) {
+          bytes += Integer.parseInt(raw.substring(i + 2, i + 4), 16).toByte
+          i += 4
+        } else {
+          bytes ++= raw.substring(i, i + 1).getBytes("UTF-8")
+          i += 1
         }
-        val hex = bytes.map("%02X".format(_)).mkString
-        subs += ((t.start, s.end, s"unhex('$hex')"))
-        k += 1
       }
-      k += 1
+      Some((s.toks(k).start, s.toks(k + 1).end,
+        s"unhex('${bytes.map("%02X".format(_)).mkString}')"))
     }
-    splice(q0, subs)
   }
+
+  private val timeLiteral = """(\d{1,2}):(\d{2})(?::(\d{2})(?:\.(\d{1,6}))?)?""".r
 
   /** `TIME 'HH:MM:SS[.f]'` literals → the engine's documented TIME
     * encoding (LongType micros since midnight — TypeHelpers; the
-    * reference's dtime_t, duckdb.hpp:914). */
-  private[graft] def rewriteTimeLiterals(q0: String): String = {
-    val toks = SqlLex.tokenize(q0)
-    val subs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    var k = 0
-    while (k + 1 < toks.length) {
-      val t = toks(k)
-      val s = toks(k + 1)
-      if (t.kind == SqlLex.Ident && t.lower == "time" && s.kind == SqlLex.Str &&
-        // not TIME_TZ / not a column named time compared to a string:
-        // the literal form is exactly TIME '<h:m:s>'
-        (k == 0 || !(toks(k - 1).kind == SqlLex.Punct &&
-          (toks(k - 1).lower == "." || toks(k - 1).lower == "::")))) {
-        val raw = q0.substring(s.start + 1, s.end - 1)
-        val m = """(\d{1,2}):(\d{2})(?::(\d{2})(?:\.(\d{1,6}))?)?""".r
-        raw match {
-          case m(h, mi, se, fr) =>
-            val frac = Option(fr).map(f => (f + "0" * (6 - f.length)).toLong)
-              .getOrElse(0L)
-            val us = h.toLong * 3600000000L + mi.toLong * 60000000L +
-              Option(se).map(_.toLong * 1000000L).getOrElse(0L) + frac
-            subs += ((t.start, s.end, s"CAST($us AS BIGINT)"))
-            k += 1
-          case _ => ()
-        }
-      }
-      k += 1
+    * reference's dtime_t, duckdb.hpp:914). Not TIME_TZ, and not a
+    * column named time compared to a string: the literal form is
+    * exactly TIME '<h:m:s>'. */
+  private[graft] def rewriteTimeLiterals(q0: String): String = spliceAll(q0) { (s, k) =>
+    if (!typedLiteral(s, k, "time")) None
+    else s.text(k + 1).drop(1).dropRight(1) match {
+      case timeLiteral(h, mi, se, fr) =>
+        val frac = Option(fr).map(f => (f + "0" * (6 - f.length)).toLong).getOrElse(0L)
+        val us = h.toLong * 3600000000L + mi.toLong * 60000000L +
+          Option(se).map(_.toLong * 1000000L).getOrElse(0L) + frac
+        Some((s.toks(k).start, s.toks(k + 1).end, s"CAST($us AS BIGINT)"))
+      case _ => None
     }
-    splice(q0, subs)
   }
 
   /** Mixed INTERVAL string literals (`INTERVAL '1 year 2 months 3
@@ -2427,41 +1994,22 @@ object SqlDialect {
     val dtU = Set("week", "weeks", "day", "days", "hour", "hours", "minute",
       "minutes", "second", "seconds", "millisecond", "milliseconds",
       "microsecond", "microseconds")
-    val toks = SqlLex.tokenize(q0)
-    val subs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    var k = 0
-    while (k + 1 < toks.length) {
-      val t = toks(k)
-      val s = toks(k + 1)
-      if (t.kind == SqlLex.Ident && t.lower == "interval" && s.kind == SqlLex.Str) {
-        val raw = q0.substring(s.start + 1, s.end - 1).trim.toLowerCase
-        val parts = raw.split("\\s+").toSeq
-        if (parts.length >= 4 && parts.length % 2 == 0 &&
-          parts.grouped(2).forall { case Seq(n, u) =>
-            n.matches("-?\\d+") && (ymU(u) || dtU(u)) }) {
-          val pairs = parts.grouped(2).map { case Seq(n, u) => (u, n.toLong) }.toSeq
-          val hasYm = pairs.exists(p => ymU(p._1))
-          val hasDt = pairs.exists(p => dtU(p._1))
-          if (hasYm && hasDt) {
-            def tot(us: Set[String], scale: String => Long): Long =
-              pairs.filter(p => us(p._1)).map(p => p._2 * scale(p._1)).sum
-            val y = tot(Set("year", "years"), _ => 1L)
-            val mo = tot(Set("month", "months"), _ => 1L) +
-              tot(Set("quarter", "quarters"), _ => 3L)
-            val w = tot(Set("week", "weeks"), _ => 1L)
-            val d = tot(Set("day", "days"), _ => 1L)
-            val h = tot(Set("hour", "hours"), _ => 1L)
-            val mi = tot(Set("minute", "minutes"), _ => 1L)
-            val se = tot(Set("second", "seconds"), _ => 1L)
-            subs += ((t.start, s.end,
-              s"make_interval($y, $mo, $w, $d, $h, $mi, $se)"))
-            k += 1
-          }
-        }
+    spliceAll(q0) { (s, k) =>
+      val parts = if (s.kw(k) == "interval" && s.isStr(k + 1))
+        s.text(k + 1).drop(1).dropRight(1).trim.toLowerCase.split("\\s+").toSeq else Nil
+      val pairs = if (parts.length >= 4 && parts.length % 2 == 0 &&
+        parts.grouped(2).forall { case Seq(n, u) => n.matches("-?\\d+") && (ymU(u) || dtU(u)) })
+        parts.grouped(2).map { case Seq(n, u) => (u, n.toLong) }.toSeq else Nil
+      if (!(pairs.exists(p => ymU(p._1)) && pairs.exists(p => dtU(p._1)))) None
+      else {
+        def tot(us: String*): Long = pairs.filter(p => us.contains(p._1)).map(_._2).sum
+        val y = tot("year", "years")
+        val mo = tot("month", "months") + 3 * tot("quarter", "quarters")
+        Some((s.toks(k).start, s.toks(k + 1).end, s"make_interval($y, $mo, " +
+          s"${tot("week", "weeks")}, ${tot("day", "days")}, ${tot("hour", "hours")}, " +
+          s"${tot("minute", "minutes")}, ${tot("second", "seconds")})"))
       }
-      k += 1
     }
-    splice(q0, subs)
   }
 
   /** SQL-surface call renames to the duck_-prefixed registrations
@@ -2525,59 +2073,24 @@ object SqlDialect {
     "date_trunc" -> "duck_date_trunc", "datetrunc" -> "duck_date_trunc",
     "printf" -> "duck_printf")
 
-  private[graft] def rewriteFnNames(q0: String): String = {
-    val toks = SqlLex.tokenize(q0)
-    val subs = scala.collection.mutable.ArrayBuffer.empty[(SqlLex.Tok, String)]
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      if (t.kind == SqlLex.Ident && fnRenames.contains(t.lower) &&
-        i + 1 < toks.length && toks(i + 1).kind == SqlLex.LParen &&
-        !(i > 0 && toks(i - 1).kind == SqlLex.Punct && toks(i - 1).lower == ".")) {
-        // cast-TARGET position: `CAST(x AS CHAR(10))` / `x::char(10)`
-        // names a TYPE, not a call — a rename makes a parse error
-        val castTarget = i > 0 && {
-          val p = toks(i - 1)
-          (p.kind == SqlLex.Ident && p.lower == "as") ||
-            (p.kind == SqlLex.Punct && p.lower == "::")
-        }
-        // `substring(x FROM a FOR b)` and `trim(BOTH c FROM s)` are
-        // parser-special syntax on the bare name — a renamed call
-        // would not parse; skip when the call carries a depth-1 FROM
-        // or opens with a LEADING/TRAILING/BOTH specifier
-        val fromFamily = t.lower == "substring" || t.lower == "substr" ||
-          t.lower == "trim" || t.lower == "ltrim" || t.lower == "rtrim"
-        val skipFromForm = fromFamily && {
-          var d = 0; var j = i + 1; var sawFrom = false; var stop = false
-          while (!stop && j < toks.length) {
-            val w = toks(j)
-            if (w.kind == SqlLex.LParen) { d += 1
-              if (d == 1 && j == i + 1 && j + 1 < toks.length &&
-                toks(j + 1).kind == SqlLex.Ident &&
-                Set("leading", "trailing", "both")(toks(j + 1).lower)) {
-                sawFrom = true; stop = true
-              }
-            }
-            else if (w.kind == SqlLex.RParen) { d -= 1; if (d == 0) stop = true }
-            else if (d == 1 && w.kind == SqlLex.Ident && w.lower == "from")
-              sawFrom = true
-            j += 1
-          }
-          sawFrom
-        }
-        if (!castTarget && !skipFromForm) subs += ((t, fnRenames(t.lower)))
-      }
-      i += 1
-    }
-    splice(q0, subs.map { case (t, name) => (t.start, t.end, name) })
+  private[graft] def rewriteFnNames(q0: String): String = spliceAll(q0) { (s, k) =>
+    val t = s.toks(k)
+    if (!(fnRenames.contains(s.kw(k)) && s.isOpen(k + 1) && !s.dotted(k))) None
+    // cast-TARGET position: `CAST(x AS CHAR(10))` / `x::char(10)`
+    // names a TYPE, not a call — a rename makes a parse error
+    else if (s.kw(k - 1) == "as" || s.isPunct(k - 1, "::")) None
+    // `substring(x FROM a FOR b)` and `trim(BOTH c FROM s)` are
+    // parser-special syntax on the bare name — a renamed call
+    // would not parse; skip when the call carries a depth-1 FROM
+    // or opens with a LEADING/TRAILING/BOTH specifier
+    else if (Set("substring", "substr", "trim", "ltrim", "rtrim")(t.lower) &&
+      (Set("leading", "trailing", "both")(s.kw(k + 2)) || {
+        val close = s.close(k + 1)
+        SqlLex.topLevel(s.toks, k + 2, if (close < 0) s.n else close).exists(s.kw(_) == "from")
+      })) None
+    else Some((t.start, t.end, fnRenames(t.lower)))
   }
 
-  /** Window frame EXCLUDE clauses (r15 tranche 3): `EXCLUDE NO
-    * OTHERS` is the default — stripped; the active exclusions
-    * (CURRENT ROW / GROUP / TIES) have no Spark frame analog and raise
-    * a NAMED error instead of the parse error. Detection: EXCLUDE
-    * following a frame-bound keyword region inside parens (the star
-    * modifier `* EXCLUDE (…)` has a following LParen and is skipped). */
   /** Window-edge parity (r16 battery tranche 5; reference segment-tree
     * window executor, `duckdb-3.cpp:10800-12291`). Four reference-valid
     * shapes that are Spark ANALYSIS ERRORS get structural rewrites:
@@ -2600,254 +2113,105 @@ object SqlDialect {
   private[graft] def rewriteWindowEdges(q0: String): String = {
     val orderReq = Set("row_number", "rank", "dense_rank", "percent_rank",
       "cume_dist", "ntile", "lag", "lead")
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      def closeOf(open: Int): Int = {
-        var d = 0; var j = open
-        while (j < toks.length) {
-          if (toks(j).kind == SqlLex.LParen) d += 1
-          else if (toks(j).kind == SqlLex.RParen) { d -= 1; if (d == 0) return j }
-          j += 1
-        }
-        -1
-      }
-      def openOf(close: Int): Int = {
-        var d = 0; var j = close
-        while (j >= 0) {
-          if (toks(j).kind == SqlLex.RParen) d += 1
-          else if (toks(j).kind == SqlLex.LParen) { d -= 1; if (d == 0) return j }
-          j -= 1
-        }
-        -1
-      }
-      // the agg call directly before token i: `fn ( args )` with its
-      // closing paren at i-1; returns (fnIdx, argsOpen, argsClose)
-      def callBefore(i: Int): Option[(Int, Int, Int)] =
-        if (i >= 1 && toks(i - 1).kind == SqlLex.RParen) {
-          val ao = openOf(i - 1)
-          if (ao >= 1 && toks(ao - 1).kind == SqlLex.Ident)
-            Some((ao - 1, ao, i - 1))
-          else None
-        } else None
+    // the agg call directly before token i: `fn ( args )` with its
+    // closing paren at i-1; returns (fnIdx, argsOpen, argsClose)
+    def callBefore(s: Stmt, i: Int): Option[(Int, Int, Int)] = {
+      val ao = if (s.isClose(i - 1)) SqlLex.openOf(s.toks, i - 1) else -1
+      if (ao >= 1 && s.isName(ao - 1)) Some((ao - 1, ao, i - 1)) else None
+    }
 
-      var k = 0
-      while (!changed && k < toks.length) {
-        val t = toks(k)
-
-        // 1. FILTER (WHERE c) immediately before OVER
-        if (t.kind == SqlLex.Ident && t.lower == "filter" &&
-          k + 1 < toks.length && toks(k + 1).kind == SqlLex.LParen) {
-          val fc = closeOf(k + 1)
-          val isWin = fc > 0 && fc + 1 < toks.length &&
-            toks(fc + 1).kind == SqlLex.Ident && toks(fc + 1).lower == "over"
-          callBefore(k) match {
-            case Some((fi, ao, ac)) if isWin =>
-              val fn = toks(fi).lower
-              // rewriteFilterWhere has already normalized to WHERE form
-              val condStart =
-                if (toks(k + 2).kind == SqlLex.Ident &&
-                  toks(k + 2).lower == "where") k + 3 else k + 2
-              val cond = q.substring(toks(condStart).start, toks(fc).start).trim
-              val args = q.substring(toks(ao).end, toks(ac).start).trim
-              val newCall =
-                if (fn == "count" && args == "*")
-                  s"count(CASE WHEN $cond THEN 1 END)"
-                else {
-                  val parts = splitTopLevel(args).map(_.trim)
-                  val first = parts.head
-                  val (pre, core) =
-                    if (first.toUpperCase.startsWith("DISTINCT "))
-                      ("DISTINCT ", first.substring(9))
-                    else ("", first)
-                  q.substring(toks(fi).start, toks(ao).end) +
-                    ((s"${pre}CASE WHEN $cond THEN $core END") +: parts.tail)
-                      .mkString(", ") + ")"
-                }
-              q = q.substring(0, toks(fi).start) + newCall +
-                q.substring(toks(fc).end)
-              changed = true
-            case _ => ()
+    // 1. FILTER (WHERE c) immediately before OVER
+    def filterOver(s: Stmt, k: Int): Option[String] = {
+      val fc = if (s.kw(k) == "filter" && s.isOpen(k + 1)) s.close(k + 1) else -1
+      if (fc < 0 || s.kw(fc + 1) != "over") None
+      else callBefore(s, k).map { case (fi, ao, ac) =>
+        // rewriteFilterWhere has already normalized to WHERE form
+        val cond = s.q.substring(s.toks(if (s.kw(k + 2) == "where") k + 3 else k + 2).start,
+          s.toks(fc).start).trim
+        val args = s.between(ao, ac).trim
+        val newCall =
+          if (s.kw(fi) == "count" && args == "*") s"count(CASE WHEN $cond THEN 1 END)"
+          else {
+            val parts = splitTopLevel(args).map(_.trim)
+            val first = parts.head
+            val (pre, core) =
+              if (first.toUpperCase.startsWith("DISTINCT ")) ("DISTINCT ", first.substring(9))
+              else ("", first)
+            s.q.substring(s.toks(fi).start, s.toks(ao).end) +
+              ((s"${pre}CASE WHEN $cond THEN $core END") +: parts.tail).mkString(", ") + ")"
           }
-        }
-
-        // 3. nth_value with a nonpositive literal offset
-        if (!changed && t.kind == SqlLex.Ident && t.lower == "nth_value" &&
-          k + 1 < toks.length && toks(k + 1).kind == SqlLex.LParen) {
-          val ac = closeOf(k + 1)
-          if (ac > 0 && ac + 1 < toks.length &&
-            toks(ac + 1).kind == SqlLex.Ident && toks(ac + 1).lower == "over") {
-            val parts = splitTopLevel(
-              q.substring(toks(k + 1).end, toks(ac).start)).map(_.trim)
-            val nonPos = parts.length == 2 &&
-              parts(1).matches("-?\\d+") && parts(1).toLong <= 0
-            if (nonPos) {
-              val (overEnd, overText) =
-                if (ac + 2 < toks.length && toks(ac + 2).kind == SqlLex.LParen) {
-                  val oc = closeOf(ac + 2)
-                  (oc, q.substring(toks(ac + 2).start, toks(oc).end))
-                } else (ac + 2, q.substring(toks(ac + 2).start, toks(ac + 2).end))
-              q = q.substring(0, t.start) +
-                s"(CASE WHEN 1=0 THEN nth_value(${parts.head}, 1) " +
-                s"OVER $overText END)" + q.substring(toks(overEnd).end)
-              changed = true
-            }
-          }
-        }
-
-        // 2. empty literal frame / 4. missing ORDER BY on ranking fns
-        if (!changed && t.kind == SqlLex.Ident && t.lower == "over" &&
-          k + 1 < toks.length && toks(k + 1).kind == SqlLex.LParen) {
-          val oc = closeOf(k + 1)
-          if (oc > 0) {
-            // depth-1 scan of the spec interior
-            var d = 0
-            var frameIdx = -1
-            var hasOrder = false
-            var j = k + 1
-            while (j < oc) {
-              toks(j).kind match {
-                case SqlLex.LParen => d += 1
-                case SqlLex.RParen => d -= 1
-                case SqlLex.Ident if d == 1 =>
-                  val w = toks(j).lower
-                  if (w == "order") hasOrder = true
-                  else if ((w == "rows" || w == "range") && frameIdx < 0)
-                    frameIdx = j
-                case _ => ()
-              }
-              j += 1
-            }
-            // literal frame bounds: Some(v) finite, None non-literal
-            def bound(s: Int): (Option[Long], Int) = {
-              if (s >= oc) (None, s)
-              else if (toks(s).kind == SqlLex.Ident &&
-                toks(s).lower == "unbounded") (None, s + 2)
-              else if (toks(s).kind == SqlLex.Ident &&
-                toks(s).lower == "current") (Some(0L), s + 2)
-              else if (toks(s).kind == SqlLex.Num && s + 1 < oc &&
-                toks(s + 1).kind == SqlLex.Ident &&
-                (toks(s + 1).lower == "preceding" ||
-                  toks(s + 1).lower == "following")) {
-                val raw = q.substring(toks(s).start, toks(s).end)
-                val v = try Some(raw.toLong) catch { case _: Exception => None }
-                (v.map(x => if (toks(s + 1).lower == "preceding") -x else x),
-                  s + 2)
-              } else (None, s + 2)
-            }
-            val emptyFrame = frameIdx > 0 && frameIdx + 1 < oc &&
-              toks(frameIdx + 1).kind == SqlLex.Ident &&
-              toks(frameIdx + 1).lower == "between" && {
-                val (lo, after) = bound(frameIdx + 2)
-                val andOk = after < oc && toks(after).kind == SqlLex.Ident &&
-                  toks(after).lower == "and"
-                val (hi, _) = if (andOk) bound(after + 1) else (None, 0)
-                lo.isDefined && hi.isDefined && lo.get > hi.get
-              }
-            if (emptyFrame) {
-              callBefore(k) match {
-                case Some((fi, _, ac)) =>
-                  val fnCall = q.substring(toks(fi).start, toks(ac).end)
-                  val specPrefix = q.substring(toks(k + 1).end,
-                    toks(frameIdx).start)
-                  val tail = if (toks(fi).lower == "count") " ELSE 0" else ""
-                  q = q.substring(0, toks(fi).start) +
-                    s"(CASE WHEN 1=0 THEN $fnCall OVER ($specPrefix " +
-                    s"ROWS BETWEEN CURRENT ROW AND CURRENT ROW)$tail END)" +
-                    q.substring(toks(oc).end)
-                  changed = true
-                case None => ()
-              }
-            } else if (!hasOrder) {
-              callBefore(k) match {
-                case Some((fi, _, _)) if orderReq(toks(fi).lower) =>
-                  val at = if (frameIdx > 0) toks(frameIdx).start
-                    else toks(oc).start
-                  q = q.substring(0, at) + " ORDER BY 1 " + q.substring(at)
-                  changed = true
-                case _ => ()
-              }
-            }
-          }
-        }
-        k += 1
+        s.replace(fi, fc, newCall)
       }
     }
-    q
+
+    // 3. nth_value with a nonpositive literal offset
+    def nthValue(s: Stmt, k: Int): Option[String] = {
+      val ac = if (s.kw(k) == "nth_value" && s.isOpen(k + 1)) s.close(k + 1) else -1
+      val parts = if (ac > 0 && s.kw(ac + 1) == "over") splitTopLevel(s.inner(k + 1)).map(_.trim)
+        else Nil
+      if (!(parts.length == 2 && parts(1).matches("-?\\d+") && parts(1).toLong <= 0)) None
+      else {
+        val overEnd = if (s.isOpen(ac + 2)) s.close(ac + 2) else ac + 2
+        Some(s.replace(k, overEnd, s"(CASE WHEN 1=0 THEN nth_value(${parts.head}, 1) " +
+          s"OVER ${s.span(ac + 2, overEnd + 1)} END)"))
+      }
+    }
+
+    // 2. empty literal frame / 4. missing ORDER BY on ranking fns
+    def overSpec(s: Stmt, k: Int): Option[String] = {
+      val oc = if (s.kw(k) == "over" && s.isOpen(k + 1)) s.close(k + 1) else -1
+      if (oc < 0) return None
+      val spec = SqlLex.topLevel(s.toks, k + 2, oc)
+      val hasOrder = spec.exists(s.kw(_) == "order")
+      val frameIdx = spec.find(i => s.kw(i) == "rows" || s.kw(i) == "range").getOrElse(-1)
+      // literal frame bounds: Some(v) finite, None non-literal
+      def bound(b: Int): (Option[Long], Int) =
+        if (b >= oc) (None, b)
+        else if (s.kw(b) == "unbounded") (None, b + 2)
+        else if (s.kw(b) == "current") (Some(0L), b + 2)
+        else if (s.toks(b).kind == SqlLex.Num && b + 1 < oc &&
+          (s.kw(b + 1) == "preceding" || s.kw(b + 1) == "following")) {
+          val v = try Some(s.text(b).toLong) catch { case _: Exception => None }
+          (v.map(x => if (s.kw(b + 1) == "preceding") -x else x), b + 2)
+        } else (None, b + 2)
+      val emptyFrame = frameIdx > 0 && frameIdx + 1 < oc && s.kw(frameIdx + 1) == "between" && {
+        val (lo, after) = bound(frameIdx + 2)
+        val (hi, _) = if (after < oc && s.kw(after) == "and") bound(after + 1) else (None, 0)
+        lo.isDefined && hi.isDefined && lo.get > hi.get
+      }
+      if (emptyFrame) callBefore(s, k).map { case (fi, _, ac) =>
+        val tail = if (s.kw(fi) == "count") " ELSE 0" else ""
+        s.replace(fi, oc, s"(CASE WHEN 1=0 THEN ${s.span(fi, ac + 1)} OVER " +
+          s"(${s.between(k + 1, frameIdx)} ROWS BETWEEN CURRENT ROW AND CURRENT ROW)$tail END)")
+      }
+      else if (hasOrder) None
+      else callBefore(s, k).filter(c => orderReq(s.kw(c._1))).map { _ =>
+        val at = s.toks(if (frameIdx > 0) frameIdx else oc).start
+        s.q.substring(0, at) + " ORDER BY 1 " + s.q.substring(at)
+      }
+    }
+
+    fixpoint(q0)((s, k) => filterOver(s, k).orElse(nthValue(s, k)).orElse(overSpec(s, k)))
   }
 
-  private[graft] def rewriteFrameExclude(q0: String): String = {
-    val toks = SqlLex.tokenize(q0)
-    val subs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var k = 1
-    while (k < toks.length) {
-      val t = toks(k)
-      if (t.kind == SqlLex.Ident && t.lower == "exclude" &&
-        k + 1 < toks.length && toks(k + 1).kind != SqlLex.LParen &&
-        (toks(k - 1).kind == SqlLex.Ident &&
-          Set("row", "following", "preceding")(toks(k - 1).lower))) {
-        val rest = toks.drop(k + 1).take(2).map(_.lower)
-        if (rest.startsWith(Seq("no", "others")))
-          subs += ((t.start, toks(k + 2).end))
-        else throw new UnsupportedOperationException(
-          "unsupported DuckDB construct: window frame EXCLUDE " +
-            rest.mkString(" ").toUpperCase +
-            " (no Spark frame analog; rewrite the aggregate explicitly, " +
-            "e.g. sum(x) OVER frame - x for EXCLUDE CURRENT ROW)")
-      }
-      k += 1
+  /** Window frame EXCLUDE clauses (r15 tranche 3): `EXCLUDE NO
+    * OTHERS` is the default — stripped; the active exclusions
+    * (CURRENT ROW / GROUP / TIES) have no Spark frame analog and raise
+    * a NAMED error instead of the parse error. Detection: EXCLUDE
+    * following a frame-bound keyword (the star modifier `* EXCLUDE
+    * (…)` has a following LParen and is skipped). */
+  private[graft] def rewriteFrameExclude(q0: String): String = spliceAll(q0) { (s, k) =>
+    if (!(s.kw(k) == "exclude" && k + 1 < s.n && !s.isOpen(k + 1) &&
+      Set("row", "following", "preceding")(s.kw(k - 1)))) None
+    else {
+      val rest = s.toks.drop(k + 1).take(2).map(_.lower)
+      if (rest.startsWith(Seq("no", "others"))) Some((s.toks(k).start, s.toks(k + 2).end, ""))
+      else throw new UnsupportedOperationException(
+        "unsupported DuckDB construct: window frame EXCLUDE " +
+          rest.mkString(" ").toUpperCase +
+          " (no Spark frame analog; rewrite the aggregate explicitly, " +
+          "e.g. sum(x) OVER frame - x for EXCLUDE CURRENT ROW)")
     }
-    splice(q0, subs.map { case (a, b) => (a, b, "") })
-  }
-
-  /** JSON arrow operators (r15 tranche 3): `j -> 'key'` extracts JSON
-    * text, `j ->> 'key'` extracts unquoted text (probed; keys accept
-    * bare names or $-paths). The arrow is also the LAMBDA arrow, so
-    * only forms a lambda can never take rewrite: the RIGHT side must
-    * be a string literal and the LEFT operand must not be a bare
-    * identifier or a paren group (lambda parameter shapes) — a
-    * bare-ident json column uses json_extract() instead (documented). */
-  private[graft] def rewriteJsonArrows(q0: String): String = {
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 1
-      while (!changed && k + 1 < toks.length) {
-        val t = toks(k)
-        val isArrow = t.kind == SqlLex.Punct && t.lower == "-" &&
-          toks(k + 1).kind == SqlLex.Punct && toks(k + 1).lower == ">" &&
-          t.end == toks(k + 1).start
-        if (isArrow) {
-          val dbl = k + 2 < toks.length && toks(k + 2).kind == SqlLex.Punct &&
-            toks(k + 2).lower == ">" && toks(k + 1).end == toks(k + 2).start
-          val keyIdx = if (dbl) k + 3 else k + 2
-          if (keyIdx < toks.length && toks(keyIdx).kind == SqlLex.Str) {
-            val ls = SqlLex.operandStart(toks, k - 1, Set("::"))
-            val bareIdent = ls == k - 1 && toks(ls).kind == SqlLex.Ident
-            val parenGroup = ls >= 0 && toks(ls).kind == SqlLex.LParen &&
-              toks(k - 1).kind == SqlLex.RParen &&
-              // a CALL name(…) before the arrow is fine; a plain paren
-              // group could be lambda params
-              !(ls > 0 && (toks(ls - 1).kind == SqlLex.Ident ||
-                toks(ls - 1).kind == SqlLex.QIdent))
-            if (ls >= 0 && !bareIdent && !parenGroup) {
-              val l = q.substring(toks(ls).start, toks(k - 1).end)
-              val key = q.substring(toks(keyIdx).start, toks(keyIdx).end)
-              val fn = if (dbl) "json_extract_string" else "json_extract"
-              q = q.substring(0, toks(ls).start) + s"$fn($l, $key)" +
-                q.substring(toks(keyIdx).end)
-              changed = true
-            }
-          }
-        }
-        k += 1
-      }
-    }
-    q
   }
 
   /** Quantified subquery comparisons (r15 grammar census — reference
@@ -2860,94 +2224,42 @@ object SqlDialect {
     * documented class as IN-subquery (BATTERY2_r15.json). Only
     * subquery operands rewrite (group must start with SELECT/WITH/
     * VALUES); array forms stay errors. */
-  private[graft] def rewriteQuantified(q0: String): String = {
-    val cmp2 = Set("<=", ">=", "<>", "!=")
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 1
-      while (!changed && k + 1 < toks.length) {
-        val t = toks(k)
-        if (t.kind == SqlLex.Ident &&
-          (t.lower == "any" || t.lower == "some" || t.lower == "all") &&
-          toks(k + 1).kind == SqlLex.LParen) {
-          // the comparison operator directly before: one Punct or an
-          // adjacent pair (<=, >=, <>, !=)
-          // the lexer may emit two-char comparisons as one token or as
-          // an adjacent pair — accept both
-          val single = Set("=", "<", ">", "<>", "!=", "<=", ">=")
-          var opStart = -1
-          var opText = ""
-          if (k >= 2 && toks(k - 1).kind == SqlLex.Punct &&
-            toks(k - 2).kind == SqlLex.Punct &&
-            toks(k - 2).end == toks(k - 1).start &&
-            cmp2(toks(k - 2).lower + toks(k - 1).lower)) {
-            opStart = k - 2; opText = toks(k - 2).lower + toks(k - 1).lower
-          } else if (toks(k - 1).kind == SqlLex.Punct && single(toks(k - 1).lower)) {
-            opStart = k - 1; opText = toks(k - 1).lower
-          }
-          // subquery group only
-          val firstIn = if (k + 2 < toks.length) toks(k + 2) else toks(k + 1)
-          val isSub = firstIn.kind == SqlLex.Ident &&
-            Set("select", "with", "values")(firstIn.lower)
-          if (opStart > 0 && isSub) {
-            val ls = SqlLex.operandStart(toks, opStart - 1)
-            val close = SqlLex.closeParen(toks, k + 1)
-            if (ls >= 0 && close > 0) {
-              val l = q.substring(toks(ls).start, toks(opStart).start).trim
-              val sub = q.substring(toks(k + 1).end, toks(close).start)
-              val isAll = t.lower == "all"
-              val rep =
-                if (opText == "=" && !isAll) s"($l IN ($sub))"
-                else if ((opText == "<>" || opText == "!=") && isAll)
-                  s"($l NOT IN ($sub))"
-                else if (!isAll)
-                  s"(EXISTS (SELECT 1 FROM ($sub) __qany(__qv) WHERE ($l) $opText __qv))"
-                else
-                  // the `($l) IS NULL` disjunct covers a NULL left
-                  // operand (probed r16: NULL > ALL (SELECT 2) is NULL
-                  // — falsy in predicates — where the two-clause form
-                  // returned TRUE and kept the row)
-                  s"(NOT EXISTS (SELECT 1 FROM ($sub) __qall(__qv) " +
-                    s"WHERE NOT (($l) $opText __qv) OR __qv IS NULL OR ($l) IS NULL))"
-              q = q.substring(0, toks(ls).start) + rep + q.substring(toks(close).end)
-              changed = true
-            }
-          }
-        }
-        k += 1
-      }
+  private[graft] def rewriteQuantified(q0: String): String = fixpoint(q0) { (s, k) =>
+    val quant = s.kw(k)
+    // the comparison operator directly before (the lexer emits the
+    // two-char comparisons whole)
+    val op = if (k >= 2 && s.toks(k - 1).kind == SqlLex.Punct) s.toks(k - 1).lower else ""
+    val close = if ((quant == "any" || quant == "some" || quant == "all") && cmpOps(op) &&
+      s.isOpen(k + 1) && Set("select", "with", "values")(s.kw(k + 2))) s.close(k + 1) else -1
+    val ls = if (close > 0) SqlLex.operandStart(s.toks, k - 2) else -1
+    if (ls < 0) None
+    else {
+      val l = s.q.substring(s.toks(ls).start, s.toks(k - 1).start).trim
+      val sub = s.between(k + 1, close)
+      val isAll = quant == "all"
+      val rep =
+        if (op == "=" && !isAll) s"($l IN ($sub))"
+        else if ((op == "<>" || op == "!=") && isAll) s"($l NOT IN ($sub))"
+        else if (!isAll)
+          s"(EXISTS (SELECT 1 FROM ($sub) __qany(__qv) WHERE ($l) $op __qv))"
+        else
+          // the `($l) IS NULL` disjunct covers a NULL left
+          // operand (probed r16: NULL > ALL (SELECT 2) is NULL
+          // — falsy in predicates — where the two-clause form
+          // returned TRUE and kept the row)
+          s"(NOT EXISTS (SELECT 1 FROM ($sub) __qall(__qv) " +
+            s"WHERE NOT (($l) $op __qv) OR __qv IS NULL OR ($l) IS NULL))"
+      Some(s.replace(ls, close, rep))
     }
-    q
   }
 
   /** Aggregate `FILTER (expr)` → `FILTER (WHERE expr)` (the reference
     * accepts the WHERE-less form — probed r15). Only after a closing
     * paren (an aggregate call); the filter() HOF never follows one. */
-  private[graft] def rewriteFilterWhere(q0: String): String = {
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 1
-      while (!changed && k + 1 < toks.length) {
-        val t = toks(k)
-        if (t.kind == SqlLex.Ident && t.lower == "filter" &&
-          toks(k - 1).kind == SqlLex.RParen &&
-          toks(k + 1).kind == SqlLex.LParen &&
-          k + 2 < toks.length &&
-          !(toks(k + 2).kind == SqlLex.Ident && toks(k + 2).lower == "where")) {
-          q = q.substring(0, toks(k + 1).end) + "WHERE " +
-            q.substring(toks(k + 1).end)
-          changed = true
-        }
-        k += 1
-      }
-    }
-    q
+  private[graft] def rewriteFilterWhere(q0: String): String = spliceAll(q0) { (s, k) =>
+    if (s.kw(k) == "filter" && s.isClose(k - 1) && s.isOpen(k + 1) && k + 2 < s.n &&
+      s.kw(k + 2) != "where") Some((s.toks(k + 1).end, s.toks(k + 1).end, "WHERE "))
+    else None
   }
 
   /** Append `NULLS LAST` to every sort key that carries no explicit
@@ -2957,67 +2269,33 @@ object SqlDialect {
     * Spark's ASC default is NULLS FIRST, silently wrong whenever a
     * LIMIT, window, or DISTINCT ON consumes the order). DESC keys keep
     * Spark's matching NULLS LAST default; a bare `ORDER BY ALL` is
-    * left untouched (Spark rejects a modifier there). */
+    * left untouched (Spark rejects a modifier there). Nested ORDER BYs
+    * (a window inside a sort key) get their own keys. */
   private[graft] def rewriteOrderByNulls(q0: String): String = {
-    val toks = SqlLex.tokenize(q0)
     val enders = Set("limit", "offset", "rows", "range", "groups", "window",
       "union", "except", "intersect", "having", "qualify", "fetch")
+    val s = new Stmt(q0)
     val ins = scala.collection.mutable.ArrayBuffer.empty[Int] // char positions
-    var depth = 0
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      if (t.kind == SqlLex.LParen) depth += 1
-      else if (t.kind == SqlLex.RParen) depth -= 1
-      else if (t.kind == SqlLex.Ident && t.lower == "order" &&
-        i + 1 < toks.length && toks(i + 1).kind == SqlLex.Ident &&
-        toks(i + 1).lower == "by") {
-        val d0 = depth
-        var j = i + 2
-        var d = depth
-        var keyStart = j
-        var keyEnd = -1
-        var done = false
-        def closeKey(endTok: Int): Unit = {
-          keyEnd = endTok
-          if (keyEnd >= keyStart) {
-            val last = toks(keyEnd)
-            val skip = (last.kind == SqlLex.Ident &&
-              (last.lower == "first" || last.lower == "last" ||
-                last.lower == "desc")) ||
-              (keyEnd == keyStart && last.kind == SqlLex.Ident &&
-                last.lower == "all")
-            if (!skip) ins += last.end
-          }
-        }
-        while (!done && j < toks.length) {
-          val w = toks(j)
-          if (w.kind == SqlLex.LParen) d += 1
-          else if (w.kind == SqlLex.RParen) {
-            d -= 1
-            if (d < d0) { closeKey(j - 1); done = true }
-          } else if (d == d0) {
-            if (w.kind == SqlLex.Punct && (w.lower == "," || w.lower == ";")) {
-              closeKey(j - 1)
-              if (w.lower == ";") done = true else keyStart = j + 1
-            } else if (w.kind == SqlLex.Ident && enders(w.lower)) {
-              closeKey(j - 1); done = true
-            }
-          }
-          j += 1
-        }
-        if (!done) closeKey(toks.length - 1)
-        // continue the outer scan from the first key token so nested
-        // ORDER BYs (a window inside a sort key) are visited too
+    // a key ends before a depth-0 `,`, `;`, ender or the enclosing `)`
+    def closeKey(keyStart: Int, keyEnd: Int): Unit =
+      if (keyEnd >= keyStart) {
+        val last = s.kw(keyEnd)
+        if (!(last == "first" || last == "last" || last == "desc" ||
+          (keyEnd == keyStart && last == "all"))) ins += s.toks(keyEnd).end
       }
-      i += 1
+    for (i <- 0 until s.n if s.kw(i) == "order" && s.kw(i + 1) == "by") {
+      val ends = SqlLex.topLevel(s.toks, i + 2).iterator.filter(j => s.isPunct(j, ",") ||
+        s.isPunct(j, ";") || s.isClose(j) || enders(s.kw(j)))
+      var keyStart = i + 2
+      var open = true
+      while (open && ends.hasNext) {
+        val j = ends.next()
+        closeKey(keyStart, j - 1)
+        if (s.isPunct(j, ",")) keyStart = j + 1 else open = false
+      }
+      if (open) closeKey(keyStart, s.n - 1)
     }
-    if (ins.isEmpty) q0
-    else {
-      val sb = new StringBuilder(q0)
-      ins.sorted(Ordering[Int].reverse).foreach(p => sb.insert(p, " NULLS LAST"))
-      sb.toString
-    }
+    splice(q0, ins.sorted.map(p => (p, p, " NULLS LAST")))
   }
 
   /** duck's in-call ordered aggregates (duck-probed r14b):
@@ -3033,101 +2311,65 @@ object SqlDialect {
     * calls whose argument list carries a depth-0 ORDER BY rewrite;
     * plain `list(x)` / `string_agg(x, s)` keep their registered
     * mappings. */
-  private[graft] def rewriteSortedAggs(q0: String): String = {
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 0
-      while (!changed && k + 1 < toks.length) {
-        val t = toks(k)
-        val isName = t.kind == SqlLex.Ident &&
-          Set("string_agg", "list", "array_agg")(t.lower) &&
-          toks(k + 1).kind == SqlLex.LParen &&
-          !(k > 0 && toks(k - 1).kind == SqlLex.Punct && toks(k - 1).lower == ".")
-        if (isName) {
-          val close = SqlLex.closeParen(toks, k + 1)
-          if (close > 0) {
-            val inner = q.substring(toks(k + 1).end, toks(close).start)
-            val itoks = SqlLex.tokenize(inner)
-            // depth-0 ORDER BY inside the argument list
-            var oi = -1
-            var d = 0
-            var m = 0
-            while (oi < 0 && m + 1 < itoks.length) {
-              itoks(m).kind match {
-                case SqlLex.LParen => d += 1
-                case SqlLex.RParen => d -= 1
-                case SqlLex.Ident if d == 0 && itoks(m).lower == "order" &&
-                  itoks(m + 1).kind == SqlLex.Ident && itoks(m + 1).lower == "by" =>
-                  oi = m
-                case _ => ()
+  private[graft] def rewriteSortedAggs(q0: String): String = fixpoint(q0) { (s, k) =>
+    val fn = s.kw(k)
+    val close = if (Set("string_agg", "list", "array_agg")(fn) && s.isOpen(k + 1) &&
+      !s.dotted(k)) s.close(k + 1) else -1
+    // depth-0 ORDER BY inside the argument list
+    val oi = if (close < 0) -1 else SqlLex.topLevel(s.toks, k + 2, close)
+      .find(m => s.kw(m) == "order" && m + 1 < close && s.kw(m + 1) == "by").getOrElse(-1)
+    if (oi < 0) None
+    else {
+      val spec = s.between(oi + 1, close).trim
+      val args = splitTopLevel(s.between(k + 1, oi)).map(_.trim).filter(_.nonEmpty)
+      val repl =
+        if (fn == "string_agg") {
+          val sep = if (args.length > 1) args(1) else "','"
+          s"listagg(${args.head}, $sep) WITHIN GROUP (ORDER BY $spec)"
+        } else {
+          // per-key (expr, desc, nullsFirst) with duck defaults
+          val keys = splitTopLevel(spec).map(_.trim).filter(_.nonEmpty).map { e =>
+            val et = SqlLex.tokenize(e)
+            var end = et.length
+            var desc = false
+            var nullsFirst = false
+            var sawNulls = false
+            var stop = false
+            while (!stop && end > 1 && et(end - 1).kind == SqlLex.Ident) {
+              et(end - 1).lower match {
+                case "desc" => desc = true; end -= 1
+                case "asc" => end -= 1
+                case "first" | "last" if end > 2 &&
+                  et(end - 2).kind == SqlLex.Ident && et(end - 2).lower == "nulls" =>
+                  sawNulls = true
+                  nullsFirst = et(end - 1).lower == "first"
+                  end -= 2
+                case _ => stop = true
               }
-              m += 1
             }
-            if (oi >= 0) {
-              val argsText = inner.substring(0, itoks(oi).start)
-              val spec = inner.substring(itoks(oi + 1).end).trim
-              val args = splitTopLevel(argsText).map(_.trim).filter(_.nonEmpty)
-              val repl =
-                if (t.lower == "string_agg") {
-                  val sep = if (args.length > 1) args(1) else "','"
-                  s"listagg(${args.head}, $sep) WITHIN GROUP (ORDER BY $spec)"
-                } else {
-                  // per-key (expr, desc, nullsFirst) with duck defaults
-                  val keys = splitTopLevel(spec).map(_.trim).filter(_.nonEmpty)
-                    .map { e =>
-                      val et = SqlLex.tokenize(e)
-                      var end = et.length
-                      var desc = false
-                      var nullsFirst = false
-                      var sawNulls = false
-                      var stop = false
-                      while (!stop && end > 1 && et(end - 1).kind == SqlLex.Ident) {
-                        et(end - 1).lower match {
-                          case "desc" => desc = true; end -= 1
-                          case "asc" => end -= 1
-                          case "first" | "last" if end > 2 &&
-                            et(end - 2).kind == SqlLex.Ident &&
-                            et(end - 2).lower == "nulls" =>
-                            sawNulls = true
-                            nullsFirst = et(end - 1).lower == "first"
-                            end -= 2
-                          case _ => stop = true
-                        }
-                      }
-                      val expr = e.substring(et.head.start, et(end - 1).end)
-                      (expr, desc, if (sawNulls) nullsFirst else false)
-                    }
-                  val fields = keys.zipWithIndex
-                    .map { case ((e, _, _), i) => s"'o$i', $e" }
-                    .mkString(", ") + s", 'v', ${args.head}"
-                  def cmp(i: Int): String =
-                    if (i >= keys.length) "0"
-                    else {
-                      val (_, desc, nf) = keys(i)
-                      val lt = if (desc) "1" else "-1"
-                      val gt = if (desc) "-1" else "1"
-                      val nl = if (nf) "-1" else "1" // null vs value
-                      val nr = if (nf) "1" else "-1"
-                      s"CASE WHEN l.o$i IS NULL AND r.o$i IS NULL THEN ${cmp(i + 1)} " +
-                        s"WHEN l.o$i IS NULL THEN $nl WHEN r.o$i IS NULL THEN $nr " +
-                        s"WHEN l.o$i < r.o$i THEN $lt WHEN l.o$i > r.o$i THEN $gt " +
-                        s"ELSE ${cmp(i + 1)} END"
-                    }
-                  s"transform(array_sort(array_agg(named_struct($fields)), " +
-                    s"(l, r) -> ${cmp(0)}), s -> s.v)"
-                }
-              q = q.substring(0, t.start) + repl + q.substring(toks(close).end)
-              changed = true
-            }
+            (e.substring(et.head.start, et(end - 1).end), desc, sawNulls && nullsFirst)
           }
+          val fields = keys.zipWithIndex
+            .map { case ((e, _, _), i) => s"'o$i', $e" }
+            .mkString(", ") + s", 'v', ${args.head}"
+          def cmp(i: Int): String =
+            if (i >= keys.length) "0"
+            else {
+              val (_, desc, nf) = keys(i)
+              val lt = if (desc) "1" else "-1"
+              val gt = if (desc) "-1" else "1"
+              val nl = if (nf) "-1" else "1" // null vs value
+              val nr = if (nf) "1" else "-1"
+              s"CASE WHEN l.o$i IS NULL AND r.o$i IS NULL THEN ${cmp(i + 1)} " +
+                s"WHEN l.o$i IS NULL THEN $nl WHEN r.o$i IS NULL THEN $nr " +
+                s"WHEN l.o$i < r.o$i THEN $lt WHEN l.o$i > r.o$i THEN $gt " +
+                s"ELSE ${cmp(i + 1)} END"
+            }
+          s"transform(array_sort(array_agg(named_struct($fields)), " +
+            s"(l, r) -> ${cmp(0)}), s -> s.v)"
         }
-        k += 1
-      }
+      Some(s.replace(k, close, repl))
     }
-    q
   }
 
   /** duck scalar list aggregates (duck-probed r14b): `list_aggregate(e,
@@ -3141,54 +2383,33 @@ object SqlDialect {
   private[graft] def rewriteListFns(q0: String): String = {
     val names = Set("list_aggregate", "list_aggr", "list_sum", "list_min",
       "list_max", "list_avg")
-    var q = q0
-    var changed = true
-    while (changed) {
-      changed = false
-      val toks = SqlLex.tokenize(q)
-      var k = 0
-      while (!changed && k + 1 < toks.length) {
-        val t = toks(k)
-        if (t.kind == SqlLex.Ident && names(t.lower) &&
-          toks(k + 1).kind == SqlLex.LParen &&
-          !(k > 0 && toks(k - 1).kind == SqlLex.Punct && toks(k - 1).lower == ".")) {
-          val close = SqlLex.closeParen(toks, k + 1)
-          if (close > 0) {
-            val args = splitTopLevel(q.substring(toks(k + 1).end, toks(close).start))
-              .map(_.trim).filter(_.nonEmpty)
-            val call = t.lower match {
-              case "list_aggregate" | "list_aggr" if args.length >= 2 &&
-                args(1).startsWith("'") =>
-                Some((args(1).stripPrefix("'").stripSuffix("'").toLowerCase,
-                  args.head, args.drop(2)))
-              case "list_aggregate" | "list_aggr" => None
-              case other => Some((other.stripPrefix("list_"), args.head, args.tail))
-            }
-            val repl = call.flatMap { case (nm, e, extra) =>
-              def nn = s"filter($e, x -> x IS NOT NULL)"
-              nm match {
-                case "sum" => Some(s"(CASE WHEN size($nn) = 0 THEN NULL " +
-                  s"ELSE reduce($nn, 0, (a, x) -> a + x) END)")
-                case "min" => Some(s"array_min($e)")
-                case "max" => Some(s"array_max($e)")
-                case "avg" | "mean" => Some(s"(CASE WHEN size($nn) = 0 THEN NULL " +
-                  s"ELSE reduce($nn, CAST(0 AS DOUBLE), (a, x) -> a + x) / size($nn) END)")
-                case "count" => Some(s"size($nn)")
-                case "string_agg" =>
-                  Some(s"array_join($e, ${extra.headOption.getOrElse("','")})")
-                case _ => None
-              }
-            }
-            repl.foreach { r =>
-              q = q.substring(0, t.start) + r + q.substring(toks(close).end)
-              changed = true
-            }
-          }
+    fixpoint(q0) { (s, k) =>
+      val close = if (names(s.kw(k)) && s.isOpen(k + 1) && !s.dotted(k)) s.close(k + 1) else -1
+      if (close < 0) None
+      else {
+        val args = s.items(k + 1)
+        val call = s.kw(k) match {
+          case "list_aggregate" | "list_aggr" if args.length >= 2 && args(1).startsWith("'") =>
+            Some((args(1).stripPrefix("'").stripSuffix("'").toLowerCase, args.head, args.drop(2)))
+          case "list_aggregate" | "list_aggr" => None
+          case other => Some((other.stripPrefix("list_"), args.head, args.tail))
         }
-        k += 1
+        call.flatMap { case (nm, e, extra) =>
+          def nn = s"filter($e, x -> x IS NOT NULL)"
+          nm match {
+            case "sum" => Some(s"(CASE WHEN size($nn) = 0 THEN NULL " +
+              s"ELSE reduce($nn, 0, (a, x) -> a + x) END)")
+            case "min" => Some(s"array_min($e)")
+            case "max" => Some(s"array_max($e)")
+            case "avg" | "mean" => Some(s"(CASE WHEN size($nn) = 0 THEN NULL " +
+              s"ELSE reduce($nn, CAST(0 AS DOUBLE), (a, x) -> a + x) / size($nn) END)")
+            case "count" => Some(s"size($nn)")
+            case "string_agg" => Some(s"array_join($e, ${extra.headOption.getOrElse("','")})")
+            case _ => None
+          }
+        }.map(s.replace(k, close, _))
       }
     }
-    q
   }
 
   /** Comparison forms beyond the six binary operators (duck-probed
@@ -3218,212 +2439,137 @@ object SqlDialect {
     * spans may still contain the triggering COLLATE tokens — the next
     * pass drops them via the scalar-call rule (`lower(x COLLATE C)` →
     * `lower(x)`), which also bounds the rewrite loop. */
-  private def collateCompareForms(q: String, toks: Vector[SqlLex.Tok],
-      k: Int, s1: Int, coll: String): Option[String] = {
+  private def collateCompareForms(s: Stmt, k: Int, s1: Int, coll: String): Option[String] = {
     import SqlLex._
-    def fold(e: String): String =
-      if (coll == "nocase") s"lower($e)" else s"strip_accents($e)"
-    def tokAt(j: Int): Tok = if (j >= 0 && j < toks.length) toks(j) else null
-    def id(j: Int): String = {
-      val t = tokAt(j)
-      if (t != null && t.kind == Ident) t.lower else ""
-    }
-    val rhs = q.substring(toks(s1).start, toks(k - 1).end)
+    import s.{kw, q, toks}
+    val rhs = s.span(s1, k)
     def drop: Option[String] =
       Some(q.substring(0, toks(k - 1).end) + q.substring(toks(k + 1).end))
-    def mixedCheck(lo: Int, hi: Int): Unit = {
-      var i = lo
-      while (i <= hi) {
-        if (toks(i).kind == Ident && toks(i).lower == "collate" &&
-          i + 1 < toks.length && toks(i + 1).kind == Ident &&
-          Set("nocase", "noaccent")(toks(i + 1).lower) &&
-          toks(i + 1).lower != coll)
-          throw new IllegalArgumentException(
-            "graft: Cannot combine types with different collation! " +
-              "(reference binder wording; collation registry duckdb-5.cpp:5156)")
-        i += 1
-      }
-    }
-    def matchRightIdx(open: Int): Int = {
-      var depth = 0
-      var m = open
-      while (m < toks.length) {
-        toks(m).kind match {
-          case LParen => depth += 1
-          case RParen => depth -= 1; if (depth == 0) return m
-          case _ => ()
-        }
-        m += 1
-      }
-      -1
-    }
+    def foldAll(items: String): String =
+      splitTopLevel(items).map(e => fold(coll, e.trim)).mkString(", ")
+    val subquery = Set("select", "with", "values")
 
     // ---- forms announced by the token AFTER the collation name ----
     val j = k + 2
     // quantified comparison (`= ANY/ALL/SOME (subquery)`): the
     // annotation is IGNORED, like the IN-subquery form (duck-probed:
     // `'B' COLLATE NOCASE = ANY (SELECT 'b')` is false — byte)
-    if (tokAt(j) != null && toks(j).kind == Punct && cmpOps(toks(j).lower) &&
-      Set("any", "all", "some")(id(j + 1)) &&
-      tokAt(j + 2) != null && toks(j + 2).kind == LParen) return drop
-    val neg = id(j) == "not"
+    if (j < toks.length && toks(j).kind == Punct && cmpOps(toks(j).lower) &&
+      Set("any", "all", "some")(kw(j + 1)) && s.isOpen(j + 2)) return drop
+    val neg = kw(j) == "not"
     val j0 = if (neg) j + 1 else j
-    id(j0) match {
+    kw(j0) match {
       // rlike: SIMILAR TO has already been rewritten to anchored RLIKE
       // by the time this pass runs (rewriteCore order)
       case "like" | "ilike" | "glob" | "rlike" => return drop
-      case "similar" if id(j0 + 1) == "to" => return drop
+      case "similar" if kw(j0 + 1) == "to" => return drop
       case "between" =>
         val lowStart = j0 + 1
         val lowEnd = operandEnd(toks, lowStart)
-        if (lowEnd >= 0 && id(lowEnd + 1) == "and") {
+        if (lowEnd >= 0 && kw(lowEnd + 1) == "and") {
           val hiStart = lowEnd + 2
           val hiEnd = operandEnd(toks, hiStart)
           if (hiEnd >= 0) {
-            mixedCheck(k + 2, hiEnd)
-            val low = q.substring(toks(lowStart).start, toks(lowEnd).end)
-            val hi = q.substring(toks(hiStart).start, toks(hiEnd).end)
-            val kw = if (neg) "NOT BETWEEN" else "BETWEEN"
-            return Some(q.substring(0, toks(s1).start) +
-              s"${fold(rhs)} $kw ${fold(low)} AND ${fold(hi)}" +
-              q.substring(toks(hiEnd).end))
+            mixedCheck(s, k + 2, hiEnd, coll)
+            val word = if (neg) "NOT BETWEEN" else "BETWEEN"
+            return Some(s.replace(s1, hiEnd, s"${fold(coll, rhs)} $word " +
+              s"${fold(coll, s.span(lowStart, lowEnd + 1))} AND ${fold(coll, s.span(hiStart, hiEnd + 1))}"))
           }
         }
-      case "in" if tokAt(j0 + 1) != null && tokAt(j0 + 1).kind == LParen =>
-        val close = matchRightIdx(j0 + 1)
+      case "in" if s.isOpen(j0 + 1) =>
+        val close = s.close(j0 + 1)
         if (close > 0) {
-          val h = tokAt(j0 + 2)
-          val isSub = h != null && h.kind == Ident &&
-            Set("select", "with", "values")(h.lower)
-          if (isSub) return drop // probed: annotation ignored vs a subquery
-          mixedCheck(j0 + 2, close - 1)
-          val interior = q.substring(toks(j0 + 1).end, toks(close).start)
-          val elems = splitTopLevel(interior).map(e => fold(e.trim))
-          val kw = if (neg) "NOT IN" else "IN"
-          return Some(q.substring(0, toks(s1).start) +
-            s"${fold(rhs)} $kw (${elems.mkString(", ")})" +
-            q.substring(toks(close).end))
+          // probed: annotation ignored vs a subquery
+          if (subquery(kw(j0 + 2))) return drop
+          mixedCheck(s, j0 + 2, close - 1, coll)
+          val word = if (neg) "NOT IN" else "IN"
+          return Some(s.replace(s1, close,
+            s"${fold(coll, rhs)} $word (${foldAll(s.between(j0 + 1, close))})"))
         }
       case "is" if !neg =>
-        if (id(j0 + 1) == "null" ||
-          (id(j0 + 1) == "not" && id(j0 + 2) == "null")) return drop
+        if (kw(j0 + 1) == "null" || (kw(j0 + 1) == "not" && kw(j0 + 2) == "null")) return drop
         val dIdx =
-          if (id(j0 + 1) == "distinct") j0 + 1
-          else if (id(j0 + 1) == "not" && id(j0 + 2) == "distinct") j0 + 2
+          if (kw(j0 + 1) == "distinct") j0 + 1
+          else if (kw(j0 + 1) == "not" && kw(j0 + 2) == "distinct") j0 + 2
           else -1
-        if (dIdx > 0 && id(dIdx + 1) == "from") {
+        if (dIdx > 0 && kw(dIdx + 1) == "from") {
           val rStart = dIdx + 2
           val rEnd = operandEnd(toks, rStart)
           if (rEnd >= 0) {
-            mixedCheck(rStart, rEnd)
-            val right = q.substring(toks(rStart).start, toks(rEnd).end)
-            val isKw = q.substring(toks(j0).start, toks(dIdx + 1).end)
-            return Some(q.substring(0, toks(s1).start) +
-              s"${fold(rhs)} $isKw ${fold(right)}" + q.substring(toks(rEnd).end))
+            mixedCheck(s, rStart, rEnd, coll)
+            return Some(s.replace(s1, rEnd, s"${fold(coll, rhs)} ${s.span(j0, dIdx + 2)} " +
+              fold(coll, s.span(rStart, rEnd + 1))))
           }
         }
       case _ => ()
     }
 
     // ---- forms announced by the token BEFORE the operand ----
+    // the CASE owning the WHEN before token `from` (nested CASE … END
+    // and paren groups skipped), or -1
     def owningCase(from: Int): Int = {
       var depth = 1
       var m = from
-      while (m >= 0 && depth > 0) {
-        val t = toks(m)
-        if (t.kind == RParen) {
-          var d = 0
-          var i = m
-          var open = -1
-          while (open < 0 && i >= 0) {
-            toks(i).kind match {
-              case RParen => d += 1
-              case LParen => d -= 1; if (d == 0) open = i
-              case _ => ()
-            }
-            i -= 1
-          }
-          if (open < 0) return -1
-          m = open - 1
-        } else {
-          if (t.kind == Ident && t.lower == "end") depth += 1
-          else if (t.kind == Ident && t.lower == "case") {
-            depth -= 1
-            if (depth == 0) return m
-          }
-          m -= 1
+      while (m >= 0) {
+        if (toks(m).kind == RParen) {
+          m = openOf(toks, m)
+          if (m < 0) return -1
+        } else if (kw(m) == "end") depth += 1
+        else if (kw(m) == "case") {
+          depth -= 1
+          if (depth == 0) return m
         }
+        m -= 1
       }
       -1
     }
-    id(s1 - 1) match {
+    kw(s1 - 1) match {
       case "like" | "ilike" | "glob" | "rlike" | "to" | "escape" =>
         return drop // pattern-side annotation: byte-wise matching, probed
-      case "from" if id(s1 - 2) == "distinct" =>
+      case "from" if kw(s1 - 2) == "distinct" =>
         // right side of IS [NOT] DISTINCT FROM (probed: folds both sides)
-        val isIdx = if (id(s1 - 3) == "not") s1 - 4 else s1 - 3
-        if (id(isIdx) == "is") {
+        val isIdx = if (kw(s1 - 3) == "not") s1 - 4 else s1 - 3
+        if (kw(isIdx) == "is") {
           val lend = isIdx - 1
           val lstart = operandStart(toks, lend)
           if (lstart >= 0) {
-            mixedCheck(lstart, lend)
-            val left = q.substring(toks(lstart).start, toks(lend).end)
-            val isKw = q.substring(toks(isIdx).start, toks(s1 - 1).end)
-            return Some(q.substring(0, toks(lstart).start) +
-              s"${fold(left)} $isKw ${fold(rhs)}" + q.substring(toks(k + 1).end))
+            mixedCheck(s, lstart, lend, coll)
+            return Some(s.replace(lstart, k + 1, s"${fold(coll, s.span(lstart, lend + 1))} " +
+              s"${s.span(isIdx, s1)} ${fold(coll, rhs)}"))
           }
         }
       case "case" =>
         // != q guard: a malformed CASE (no matching END) folds to the
         // unchanged text, which must fall through to classification
         // instead of spinning the rewrite loop on the same site
-        val f = foldSimpleCase(q, toks, s1 - 1, coll)
+        val f = foldSimpleCase(s, s1 - 1, coll)
         if (f != q) return Some(f)
       case "when" =>
         val ci = owningCase(s1 - 2)
         // only a SIMPLE case (operand directly after CASE) is a collated
         // matching group; a searched case's WHEN is a boolean expression
-        if (ci >= 0 && tokAt(ci + 1) != null && id(ci + 1) != "when") {
-          val f = foldSimpleCase(q, toks, ci, coll)
+        if (ci >= 0 && ci + 1 < toks.length && kw(ci + 1) != "when") {
+          val f = foldSimpleCase(s, ci, coll)
           if (f != q) return Some(f)
         }
       case _ => ()
     }
 
     // ---- the operand is an element of an enclosing IN list ----
-    var stack = List.empty[Int]
-    var i2 = 0
-    while (i2 < s1) {
-      toks(i2).kind match {
-        case LParen => stack ::= i2
-        case RParen => if (stack.nonEmpty) stack = stack.tail
-        case _ => ()
-      }
-      i2 += 1
-    }
-    stack.headOption.foreach { pIdx =>
-      val h = tokAt(pIdx + 1)
-      val isSub = h != null && h.kind == Ident &&
-        Set("select", "with", "values")(h.lower)
-      if (!isSub && pIdx > 0 && toks(pIdx - 1).kind == Ident &&
-        toks(pIdx - 1).lower == "in" &&
-        !(pIdx > 1 && toks(pIdx - 2).kind == Punct && toks(pIdx - 2).lower == ".")) {
-        val negIn = pIdx - 2 >= 0 && toks(pIdx - 2).kind == Ident &&
-          toks(pIdx - 2).lower == "not"
-        val lend = if (negIn) pIdx - 3 else pIdx - 2
-        val lstart = operandStart(toks, lend)
-        val close = matchRightIdx(pIdx)
-        if (lstart >= 0 && close > 0) {
-          mixedCheck(lstart, pIdx - 1)
-          mixedCheck(pIdx + 1, close - 1)
-          val left = q.substring(toks(lstart).start, toks(lend).end)
-          val interior = q.substring(toks(pIdx).end, toks(close).start)
-          val elems = splitTopLevel(interior).map(e => fold(e.trim))
-          val kw = if (negIn) "NOT IN" else "IN"
-          return Some(q.substring(0, toks(lstart).start) +
-            s"${fold(left)} $kw (${elems.mkString(", ")})" +
-            q.substring(toks(close).end))
-        }
+    var pIdx = s1 - 1
+    while (pIdx >= 0 && toks(pIdx).kind != LParen)
+      pIdx = if (toks(pIdx).kind == RParen) openOf(toks, pIdx) - 1 else pIdx - 1
+    if (pIdx > 0 && !subquery(kw(pIdx + 1)) && kw(pIdx - 1) == "in" && !s.dotted(pIdx - 1)) {
+      val negIn = kw(pIdx - 2) == "not"
+      val lend = if (negIn) pIdx - 3 else pIdx - 2
+      val lstart = operandStart(toks, lend)
+      val close = s.close(pIdx)
+      if (lstart >= 0 && close > 0) {
+        mixedCheck(s, lstart, pIdx - 1, coll)
+        mixedCheck(s, pIdx + 1, close - 1, coll)
+        val word = if (negIn) "NOT IN" else "IN"
+        return Some(s.replace(lstart, close,
+          s"${fold(coll, s.span(lstart, lend + 1))} $word (${foldAll(s.between(pIdx, close))})"))
       }
     }
 
@@ -3434,17 +2580,13 @@ object SqlDialect {
     // for grouping positions (the allowlist below) — a call's or a
     // quantifier's argument paren (`min(…)`, `ANY(…)`) is a boundary the
     // annotation must NOT cross (probed: scalar-call args byte-compare).
-    if (s1 - 1 >= 0 && toks(s1 - 1).kind == LParen &&
-      matchRightIdx(s1 - 1) == k + 2) {
-      val prev = tokAt(s1 - 2)
-      val groupingPos = prev == null || prev.kind == Punct ||
-        prev.kind == LParen ||
-        (prev.kind == Ident && Set("where", "and", "or", "when", "then",
-          "else", "on", "select", "having", "qualify", "by")(prev.lower))
+    if (s.isOpen(s1 - 1) && s.close(s1 - 1) == k + 2) {
+      val groupingPos = s1 - 2 < 0 || toks(s1 - 2).kind == Punct || s.isOpen(s1 - 2) ||
+        Set("where", "and", "or", "when", "then", "else", "on", "select", "having",
+          "qualify", "by")(kw(s1 - 2))
       if (groupingPos)
         return Some(q.substring(0, toks(s1 - 1).start) + "(" + rhs + ") " +
-          q.substring(toks(k).start, toks(k + 1).end) +
-          q.substring(toks(k + 2).end))
+          s.span(k, k + 2) + q.substring(toks(k + 2).end))
     }
     None
   }
@@ -3453,60 +2595,34 @@ object SqlDialect {
     * collated matching group (THEN/ELSE results untouched). `caseIdx`
     * is the CASE token; spans may contain the triggering COLLATE — the
     * next rewrite pass drops it inside the fold call. */
-  private def foldSimpleCase(q: String, toks: Vector[SqlLex.Tok],
-      caseIdx: Int, coll: String): String = {
-    import SqlLex._
-    def fold(e: String): String =
-      if (coll == "nocase") s"lower($e)" else s"strip_accents($e)"
+  private def foldSimpleCase(s: Stmt, caseIdx: Int, coll: String): String = {
     val spans = Vector.newBuilder[(Int, Int)]
-    var m = caseIdx + 1
     var caseDepth = 1
-    var groupDepth = 0
-    var spanStart = m
+    var spanStart = caseIdx + 1
     var inComparand = true
     var endIdx = -1
-    while (m < toks.length && endIdx < 0) {
-      val t = toks(m)
-      t.kind match {
-        case LParen => groupDepth += 1
-        case RParen => groupDepth -= 1
-        case Ident if groupDepth == 0 =>
-          t.lower match {
-            case "case" => caseDepth += 1
-            case "end" =>
-              caseDepth -= 1
-              if (caseDepth == 0) endIdx = m
-            case "when" if caseDepth == 1 =>
-              if (inComparand && m > spanStart) spans += ((spanStart, m - 1))
-              spanStart = m + 1
-              inComparand = true
-            case "then" if caseDepth == 1 =>
-              if (inComparand && m > spanStart) spans += ((spanStart, m - 1))
-              inComparand = false
-            case _ => ()
-          }
+    val it = SqlLex.topLevel(s.toks, caseIdx + 1).iterator
+    while (endIdx < 0 && it.hasNext) {
+      val m = it.next()
+      s.kw(m) match {
+        case "case" => caseDepth += 1
+        case "end" =>
+          caseDepth -= 1
+          if (caseDepth == 0) endIdx = m
+        case "when" if caseDepth == 1 =>
+          if (inComparand && m > spanStart) spans += ((spanStart, m - 1))
+          spanStart = m + 1
+          inComparand = true
+        case "then" if caseDepth == 1 =>
+          if (inComparand && m > spanStart) spans += ((spanStart, m - 1))
+          inComparand = false
         case _ => ()
       }
-      m += 1
     }
     val sp = spans.result()
-    if (endIdx < 0 || sp.isEmpty) return q // malformed — leave for the parser
-    for ((a, b) <- sp; i <- a to b)
-      if (toks(i).kind == Ident && toks(i).lower == "collate" &&
-        i + 1 < toks.length && toks(i + 1).kind == Ident &&
-        Set("nocase", "noaccent")(toks(i + 1).lower) && toks(i + 1).lower != coll)
-        throw new IllegalArgumentException(
-          "graft: Cannot combine types with different collation! " +
-            "(reference binder wording; collation registry duckdb-5.cpp:5156)")
-    val sb = new StringBuilder
-    var last = 0
-    for ((a, b) <- sp) {
-      sb.append(q.substring(last, toks(a).start))
-        .append(fold(q.substring(toks(a).start, toks(b).end)))
-      last = toks(b).end
-    }
-    sb.append(q.substring(last))
-    sb.toString
+    if (endIdx < 0 || sp.isEmpty) return s.q // malformed — leave for the parser
+    sp.foreach { case (a, b) => mixedCheck(s, a, b, coll) }
+    splice(s.q, sp.map { case (a, b) => (s.toks(a).start, s.toks(b).end, fold(coll, s.span(a, b + 1))) })
   }
 
   /** Inline every registered-macro call site. Iterative passes handle
@@ -3544,7 +2660,7 @@ object SqlDialect {
         }
         if (found < 0) done = true
         else {
-          val close = SqlLex.closeParen(toks, found + 1)
+          val close = SqlLex.closeOf(toks, found + 1)
           if (close < 0) searchFrom = toks(found + 1).end // unbalanced — skip
           else {
             val args = splitTopLevel(
@@ -3610,83 +2726,30 @@ object SqlDialect {
     * quotes — bracket nesting protects list/struct literals like
     * `names=['a','b']`). */
   private[graft] def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var inStr = false; var inBt = false; var inDq = false
-    var start = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inBt) { if (c == '`') inBt = false }
-      else if (inDq) { if (c == '"') inDq = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inBt = true
-        case '"' => inDq = true
-        case '(' | '[' | '{' => depth += 1
-        case ')' | ']' | '}' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
+    val toks = SqlLex.tokenize(s)
+    val cuts = SqlLex.topLevel(toks, 0)
+      .filter(i => toks(i).kind == SqlLex.Punct && toks(i).lower == ",").map(toks(_).start)
+    (-1 +: cuts).zip(cuts :+ s.length).map { case (a, b) => s.substring(a + 1, b) }
   }
 
-  /** Find `fn(args) OVER (window)` substrings in a predicate
-    * (paren-balanced scan, good for the common QUALIFY shapes). */
+  /** `fn(args) OVER (window)` and `fn(args) OVER name` spans in a
+    * predicate, distinct and longest first: a named reference can be a
+    * PREFIX of another (`… OVER w` vs `… OVER w2`), and the caller
+    * replaces each span by text, so the longer must go first. */
   private[graft] def extractWindowExprs(pred: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val re = """(?i)\b[a-z_][a-z0-9_]*\s*\(""".r
-    for (m <- re.findAllMatchIn(pred)) {
-      val argsEnd = matchParen(pred, m.end - 1)
-      if (argsEnd > 0) {
-        val after = pred.substring(argsEnd + 1)
-        val overRe = """(?is)^\s*OVER\s*\(""".r
-        val overNamed = """(?i)^\s*OVER\s+([a-z_][a-z0-9_]*)""".r
-        overRe.findFirstMatchIn(after) match {
-          case Some(om) =>
-            val winEnd = matchParen(after, om.end - 1)
-            if (winEnd > 0)
-              out += pred.substring(m.start, argsEnd + 1) + after.substring(0, winEnd + 1)
-          case None =>
-            // named-window reference `fn(args) OVER w` (reference window
-            // binder; QUALIFY may cite a WINDOW-clause name) — the
-            // aliased __qN column rides the inner select, where the
-            // WINDOW clause still lives and Spark resolves the name.
-            overNamed.findFirstMatchIn(after).foreach { om =>
-              out += pred.substring(m.start, argsEnd + 1) + after.substring(0, om.end)
-            }
-        }
-      }
+    val s = new Stmt(pred)
+    val spans = (0 until s.n).flatMap { k =>
+      val ac = if (s.isName(k) && s.isOpen(k + 1)) s.close(k + 1) else -1
+      if (ac < 0 || s.kw(ac + 1) != "over") None
+      else if (s.isOpen(ac + 2)) Some(s.close(ac + 2)).filter(_ > 0).map(w => s.span(k, w + 1))
+      // named-window reference `fn(args) OVER w` (reference window
+      // binder; QUALIFY may cite a WINDOW-clause name) — the aliased
+      // __qN column rides the inner select, where the WINDOW clause
+      // still lives and Spark resolves the name
+      else if (s.isName(ac + 2)) Some(s.span(k, ac + 3))
+      else None
     }
-    // distinct: a repeated expression must alias ONCE (the second
-    // text-replace would no-op and leave a dangling unused column).
-    // longest-first: a named reference can be a PREFIX of another
-    // (`… OVER w` vs `… OVER w2`) and replacing the shorter one first
-    // would corrupt the longer — inline `OVER (…)` forms end with a
-    // paren and never prefix each other.
-    out.distinct.sortBy(-_.length).toSeq
-  }
-
-  /** Index of the ')' matching the '(' at `open`, or -1 (quote-aware:
-    * parens inside string literals don't count). */
-  private[graft] def matchParen(s: String, open: Int): Int = {
-    var depth = 0; var i = open
-    var inStr = false; var inBt = false; var inDq = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inBt) { if (c == '`') inBt = false }
-      else if (inDq) { if (c == '"') inDq = false }
-      else if (c == '\'') inStr = true
-      else if (c == '`') inBt = true
-      else if (c == '"') inDq = true
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
+    spans.distinct.sortBy(-_.length)
   }
 
   /** Register a read_csv scan as a temp view; `opts` are the call's

@@ -22,6 +22,17 @@ package graft
   *  - [[splitWithPrefix]] — the leading `WITH name [(cols)] AS (…), …`
   *    splitter, previously hand-matched text (the round-9 AS-token bug
   *    class: `WITH atlas (…)` — structurally impossible on tokens).
+  *  - [[closeOf]] / [[openOf]] — the one matcher per delimiter
+  *    (`(`, `[`, `{`), and [[topLevel]], the depth-0 walk over a group
+  *    that the dialect passes use to find their clause words, colons and
+  *    commas.
+  *  - [[operandStart]] / [[operandEnd]] — the operand-chain spans of the
+  *    COLLATE pass and the binary-operator table.
+  *
+  * Numbers keep a signed exponent (`1e-1`), and the multi-character
+  * operators (`::`, `||`, `//`, `**`, `<<`, `>>`, `->`, `->>`, the
+  * two-char comparisons) are one token each, so no pass re-derives
+  * adjacency.
   *
   * Tokens carry [start, end) offsets into the ORIGINAL text so the
   * rewriters splice on exact positions.
@@ -87,18 +98,32 @@ private[graft] object SqlLex {
         out += Tok(Ident, s.substring(st, i).toLowerCase, st, i)
       } else if (c.isDigit) {
         val st = i
-        while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '.')) i += 1
+        while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '.' ||
+          signedExponent(s, st, i))) i += 1
         out += Tok(Num, s.substring(st, i), st, i)
       } else {
-        // 2-char operators kept whole so `::`/`:=`/`||`/`<=` splice as units
-        val two = if (i + 1 < n) s.substring(i, i + 2) else ""
-        val w = if (Set("||", "<=", ">=", "<>", "!=", "::", ":=").contains(two)) 2 else 1
+        // multi-char operators kept whole (longest first) so `::`, `||`,
+        // `//`, `**`, `<<`, `->>` splice as units; `>>>` is one token so
+        // it is never read as `>>`
+        val w = if (i + 2 < n && ops3(s.substring(i, i + 3))) 3
+          else if (i + 1 < n && ops2(s.substring(i, i + 2))) 2 else 1
         out += Tok(Punct, s.substring(i, i + w), i, i + w)
         i += w
       }
     }
     out.result()
   }
+
+  private val ops3 = Set("->>", ">>>")
+  private val ops2 = Set("||", "<=", ">=", "<>", "!=", "::", ":=", "//", "**", "<<", ">>", "->")
+
+  /** The sign at `i` continues the decimal number starting at `st` as
+    * its exponent (`1e-1`, `2.5E+3`); hex literals (`0x1e-1`) and
+    * identifiers never take a sign. */
+  private def signedExponent(s: String, st: Int, i: Int): Boolean =
+    (s.charAt(i) == '-' || s.charAt(i) == '+') && i + 1 < s.length &&
+      s.charAt(i + 1).isDigit && (s.charAt(i - 1) == 'e' || s.charAt(i - 1) == 'E') &&
+      (st until i - 1).forall(j => s.charAt(j).isDigit || s.charAt(j) == '.')
 
   /** Identifiers that make a following `(` a GROUPING paren (inherits
     * the clause context) rather than a function call. */
@@ -252,24 +277,9 @@ private[graft] object SqlLex {
   def operandStart(toks: Vector[Tok], j: Int): Int =
     operandStart(toks, j, chainOps)
 
-  /** As [[operandStart]] with an explicit chain-operator set — the
-    * `//` rewrite needs multiplicative-precedence chains only. */
+  /** As [[operandStart]] with an explicit chain-operator set — each
+    * binary-operator row spans operands of its own precedence. */
   def operandStart(toks: Vector[Tok], j: Int, ops: Set[String]): Int = {
-    def matchLeft(close: Int, isBracket: Boolean): Int = {
-      var depth = 0
-      var i = close
-      while (i >= 0) {
-        val t = toks(i)
-        val shuts = if (isBracket) t.kind == Punct && t.lower == "]"
-                    else t.kind == RParen
-        val opens = if (isBracket) t.kind == Punct && t.lower == "["
-                    else t.kind == LParen
-        if (shuts) depth += 1
-        if (opens) { depth -= 1; if (depth == 0) return i }
-        i -= 1
-      }
-      -1
-    }
     def dotChainStart(i: Int): Int = {
       var s = i
       while (s - 2 >= 0 && toks(s - 1).kind == Punct && toks(s - 1).lower == "." &&
@@ -290,7 +300,7 @@ private[graft] object SqlLex {
           var m = i - 1
           while (m >= 0 && depth > 0) {
             val w = toks(m)
-            if (w.kind == RParen) m = matchLeft(m, isBracket = false) - 1
+            if (w.kind == RParen) m = openOf(toks, m) - 1
             else {
               if (w.kind == Ident && w.lower == "end") depth += 1
               else if (w.kind == Ident && w.lower == "case") depth -= 1
@@ -301,14 +311,14 @@ private[graft] object SqlLex {
         case Ident if dotChainStart(i) == i && nonAtomWords(toks(i).lower) => -1
         case Ident | QIdent => dotChainStart(i)
         case RParen =>
-          val m = matchLeft(i, isBracket = false)
+          val m = openOf(toks, i)
           if (m < 0) -1
           else if (m - 1 >= 0 && ((toks(m - 1).kind == Ident &&
             !nonCallWords(toks(m - 1).lower)) || toks(m - 1).kind == QIdent))
             dotChainStart(m - 1) // call: name(…)
           else m // plain paren group
         case Punct if toks(i).lower == "]" =>
-          val m = matchLeft(i, isBracket = true)
+          val m = openOf(toks, i)
           if (m <= 0) -1 else atomStart(m - 1) // base[idx]
         case _ => -1
       }
@@ -333,24 +343,11 @@ private[graft] object SqlLex {
     operandEnd(toks, j, chainOps)
 
   def operandEnd(toks: Vector[Tok], j: Int, ops: Set[String]): Int = {
-    def matchRight(open: Int, isBracket: Boolean): Int = {
-      var depth = 0
-      var i = open
-      while (i < toks.length) {
-        val t = toks(i)
-        val opens = if (isBracket) t.kind == Punct && t.lower == "[" else t.kind == LParen
-        val shuts = if (isBracket) t.kind == Punct && t.lower == "]" else t.kind == RParen
-        if (opens) depth += 1
-        if (shuts) { depth -= 1; if (depth == 0) return i }
-        i += 1
-      }
-      -1
-    }
     def brackets(i: Int): Int = {
       var e = i
       while (e + 1 < toks.length && toks(e + 1).kind == Punct &&
         toks(e + 1).lower == "[") {
-        val m = matchRight(e + 1, isBracket = true)
+        val m = closeOf(toks, e + 1)
         if (m < 0) return e
         e = m
       }
@@ -366,7 +363,7 @@ private[graft] object SqlLex {
           while (m < toks.length && depth > 0) {
             val w = toks(m)
             if (w.kind == LParen) {
-              val r = matchRight(m, isBracket = false)
+              val r = closeOf(toks, m)
               if (r < 0) return -1
               m = r + 1
             } else {
@@ -383,11 +380,11 @@ private[graft] object SqlLex {
             toks(e + 1).lower == "." && isAtomIdent(toks(e + 2))) e += 2
           if (e + 1 < toks.length && toks(e + 1).kind == LParen &&
             !(toks(e).kind == Ident && nonCallWords(toks(e).lower))) {
-            val m = matchRight(e + 1, isBracket = false)
+            val m = closeOf(toks, e + 1)
             if (m < 0) e else brackets(m)
           } else brackets(e)
         case LParen =>
-          val m = matchRight(i, isBracket = false)
+          val m = closeOf(toks, i)
           if (m < 0) -1 else brackets(m)
         case _ => -1
       }
@@ -439,19 +436,61 @@ private[graft] object SqlLex {
     -1
   }
 
-  /** Token index of the `)` closing the `(` at token `open`, or -1. */
-  def closeParen(toks: Vector[Tok], open: Int): Int = {
+  /** The delimiter `t` is: one of `( ) [ ] { }`, else 0. */
+  private def delim(t: Tok): Char = t.kind match {
+    case LParen => '('
+    case RParen => ')'
+    case Punct if t.lower.length == 1 && "[]{}".indexOf(t.lower.charAt(0)) >= 0 =>
+      t.lower.charAt(0)
+    case _ => 0
+  }
+
+  private val closerOf = Map('(' -> ')', '[' -> ']', '{' -> '}')
+  private val openerOf = closerOf.map(_.swap)
+
+  /** Token index of the delimiter closing the `(`, `[` or `{` at token
+    * `open` (only its own kind nests), or -1. */
+  def closeOf(toks: Vector[Tok], open: Int): Int = matchFrom(toks, open, closerOf, 1)
+
+  /** Token index of the delimiter opening the `)`, `]` or `}` at token
+    * `close`, or -1. */
+  def openOf(toks: Vector[Tok], close: Int): Int = matchFrom(toks, close, openerOf, -1)
+
+  private def matchFrom(toks: Vector[Tok], from: Int, mate: Map[Char, Char],
+                        step: Int): Int = {
+    if (from < 0 || from >= toks.length) return -1
+    val me = delim(toks(from))
+    val other = mate.getOrElse(me, 0.toChar)
+    if (other == 0) return -1
     var depth = 0
-    var k = open
-    while (k < toks.length) {
-      toks(k).kind match {
-        case LParen => depth += 1
-        case RParen => depth -= 1; if (depth == 0) return k
-        case _ => ()
-      }
-      k += 1
+    var k = from
+    while (k >= 0 && k < toks.length) {
+      val d = delim(toks(k))
+      if (d == me) depth += 1
+      else if (d == other) { depth -= 1; if (depth == 0) return k }
+      k += step
     }
     -1
+  }
+
+  /** Token indices at nesting depth 0 from token `from` up to `until`: a
+    * nested `(`, `[` or `{` group is skipped whole (its opener is
+    * included). An unmatched closer — the end of the enclosing group —
+    * is included and ends the walk; so does an opener without a match. */
+  def topLevel(toks: Vector[Tok], from: Int, until: Int = Int.MaxValue): Vector[Int] = {
+    val out = Vector.newBuilder[Int]
+    val end = math.min(until, toks.length)
+    var k = from
+    while (k < end) {
+      out += k
+      val d = delim(toks(k))
+      if (closerOf.contains(d)) { // an opener: skip its group
+        val c = closeOf(toks, k)
+        k = if (c < 0) end else c + 1
+      } else if (openerOf.contains(d)) k = end // an unmatched closer
+      else k += 1
+    }
+    out.result()
   }
 
   /** Split a leading `WITH name [(cols)] AS (body) [, …]` chain off a
@@ -467,19 +506,9 @@ private[graft] object SqlLex {
     var k = 1
     def skipGroup(): Boolean = {
       // toks(k) must be LParen; advance past its matching RParen
-      if (k >= toks.length || toks(k).kind != LParen) return false
-      var depth = 0
-      while (k < toks.length) {
-        toks(k).kind match {
-          case LParen => depth += 1
-          case RParen =>
-            depth -= 1
-            if (depth == 0) { k += 1; return true }
-          case _ => ()
-        }
-        k += 1
-      }
-      false
+      val c = if (k < toks.length && toks(k).kind == LParen) closeOf(toks, k) else -1
+      if (c >= 0) k = c + 1
+      c >= 0
     }
     var end = -1
     var done = false

@@ -95,37 +95,24 @@ private[graft] object SqlSelect {
     * VALUES is a subquery (parse + transform + render); other groups
     * recurse for deeper subqueries. Text outside parens is untouched. */
   private def rewriteRawRegion(text: String): String = {
+    val toks = tokenize(text)
     val sb = new StringBuilder
-    var i = 0
-    var inStr = false
-    var inBt = false
-    var inDq = false // "-quoted identifiers may contain ' or unbalanced
-                     // parens ("o'brien") — the tokenizer handles them,
-                     // so the char-walker must too (ADVICE r13 #1)
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (inStr) { sb.append(c); if (c == '\'') inStr = false; i += 1 }
-      else if (inBt) { sb.append(c); if (c == '`') inBt = false; i += 1 }
-      else if (inDq) { sb.append(c); if (c == '"') inDq = false; i += 1 }
-      else if (c == '\'') { sb.append(c); inStr = true; i += 1 }
-      else if (c == '`') { sb.append(c); inBt = true; i += 1 }
-      else if (c == '"') { sb.append(c); inDq = true; i += 1 }
-      else if (c == '(') {
-        val close = SqlDialect.matchParen(text, i)
-        if (close > i) {
-          val interior = text.substring(i + 1, close)
-          val ht = tokenize(interior).headOption
-          val isSub = ht.exists(t => t.kind == Ident &&
-            Set("select", "with", "values")(t.lower))
-          sb.append('(')
-            .append(if (isSub) parseRender(interior) else rewriteRawRegion(interior))
-            .append(')')
-          i = close + 1
-        } else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
+    var last = 0
+    var k = 0
+    while (k < toks.length) {
+      val close = if (toks(k).kind == LParen) closeOf(toks, k) else -1
+      if (close > k) {
+        val interior = text.substring(toks(k).end, toks(close).start)
+        val isSub = toks(k + 1).kind == Ident &&
+          Set("select", "with", "values")(toks(k + 1).lower)
+        sb.append(text.substring(last, toks(k).start)).append('(')
+          .append(if (isSub) parseRender(interior) else rewriteRawRegion(interior))
+          .append(')')
+        last = toks(close).end
+        k = close + 1
+      } else k += 1
     }
-    sb.toString
+    sb.append(text.substring(last)).toString
   }
 
   // ---- parser ----------------------------------------------------------

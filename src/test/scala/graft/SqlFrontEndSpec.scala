@@ -24,7 +24,18 @@ class SqlFrontEndSpec extends SparkSpec {
     """SELECT 1 AS "o'clock", 'abc' SIMILAR TO 'a.*' AS m""" -> Seq(Seq(1, true)),
     """INSERT INTO fe_ret SELECT 2 AS "o'clock", 'b' RETURNING id""" -> Seq(Seq(2)),
     """SELECT 1 AS "o'k" UNION ALL BY NAME SELECT 2 AS "o'k"""" -> Seq(Seq(1), Seq(2)),
-    """SELECT 1 AS "o'clock", count(*) AS n FROM test_all_types()""" -> Seq(Seq(1, 3L)))
+    """SELECT 1 AS "o'clock", count(*) AS n FROM test_all_types()""" -> Seq(Seq(1, 3L)),
+    // a signed exponent is part of its number literal
+    "SELECT 10 / 1e-1" -> Seq(Seq(100.0)),
+    "SELECT 3 - 1e-1" -> Seq(Seq(2.9)),
+    "SELECT 2 ** 1e+1" -> Seq(Seq(1024.0)),
+    "SELECT 1E-1 / 2" -> Seq(Seq(0.05)),
+    "SELECT 5e-1 // 1" -> Seq(Seq(0.5)),
+    "SELECT 1e-1::VARCHAR" -> Seq(Seq("0.1")),
+    "SELECT 10 - 1E+1" -> Seq(Seq(0.0)),
+    // a `[` after a struct literal subscripts it
+    "SELECT {'a': 1}['a']" -> Seq(Seq(1)),
+    "SELECT {'a': [5,6]}['a'][2]" -> Seq(Seq(6)))
 
   for ((sql, want) <- cases) test(s"literal- and identifier-safe: $sql") {
     SqlDialect.sql(spark, "CREATE OR REPLACE TABLE fe_ret (id INTEGER, s VARCHAR)")

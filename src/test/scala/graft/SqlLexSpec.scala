@@ -106,5 +106,17 @@ class SqlLexSpec extends AnyFunSuite {
     val lst = SqlLex.tokenize("SELECT [1,2,3] AS l, names=['a','b'] FROM t")
     assert(lst.count(_.kind == SqlLex.QIdent) == 0)
     assert(lst.count(_.kind == SqlLex.Str) == 2)
+    // a signed exponent belongs to its number; hex, identifiers and a
+    // plain minus do not take the sign
+    def lexed(s: String) = SqlLex.tokenize(s).map(t => s.substring(t.start, t.end))
+    assert(lexed("1e-1 2.5E+3 1E-1") == Seq("1e-1", "2.5E+3", "1E-1"))
+    assert(lexed("0x1e-1") == Seq("0x1e", "-", "1"))
+    assert(lexed("x1e-1") == Seq("x1e", "-", "1"))
+    assert(lexed("x-1") == Seq("x", "-", "1"))
+    // multi-character operators are one token each; `>>>` is not `>>`
+    for (op <- Seq("//", "**", "<<", ">>", ">>>"))
+      assert(lexed(s"a${op}b") == Seq("a", op, "b"))
+    assert(lexed("j->'k'") == Seq("j", "->", "'k'"))
+    assert(lexed("j->>'k'") == Seq("j", "->>", "'k'"))
   }
 }
