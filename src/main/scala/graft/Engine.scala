@@ -523,7 +523,7 @@ object Engine {
 
   /** duckdb_tables() analog. Dialect-internal `__graft_*` helper views
     * are excluded — the native function would not list them either.
-    * The provenance split is two-sided (ADVICE r13 #6): only names
+    * The provenance split is two-sided (59b21ba:ADVICE.md #6): only names
     * CREATED as tables (CTAS / CREATE TABLE: a table entry)
     * plus genuinely managed non-view catalog tables list here; true
     * views and the base parquet view registrations belong to
@@ -551,12 +551,18 @@ object Engine {
       .toDF("table_name", "table_type", "temporary")
   }
 
-  /** pragma_table_info(name) analog. */
+  /** pragma_table_info(name) analog: (cid, name, type, notnull,
+    * dflt_value, pk) in the reference's type names. NOT NULL, DEFAULT
+    * and PRIMARY KEY come from the table's declared entry; a view or
+    * CTAS declares none. */
   def tableInfo(spark: SparkSession, name: String): DataFrame = {
     import spark.implicits._
-    spark.table(name).schema.fields.zipWithIndex
-      .map { case (f, i) => (i, f.name, f.dataType.simpleString, f.nullable) }.toSeq
-      .toDF("cid", "name", "type", "nullable")
+    val entry = tableEntry(spark, name).getOrElse(TableEntry())
+    def in(cols: Seq[String], c: String) = cols.exists(_.equalsIgnoreCase(c))
+    spark.table(name).schema.fields.zipWithIndex.map { case (f, i) =>
+      (i, f.name, duckTypeName(f.dataType), in(entry.notNull, f.name),
+        entry.defaults.get(f.name.toLowerCase), in(entry.primaryKey, f.name))
+    }.toSeq.toDF("cid", "name", "type", "notnull", "dflt_value", "pk")
   }
 
   /** duckdb_columns() analog (duckdb-6.cpp:14150-14176): one row per

@@ -17,8 +17,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("agg_q1_pricing")(spark, "/root/testdata/sf0.001")
 
-  // One registry module per SURVEY §2 family (round-7 consolidation of
-  // the formerly round-accreted files; keys unchanged):
+  // One registry module per SURVEY §2 family. An entry is either its
+  // oracle SQL through `queries.sqlQuery` (one text, run by both
+  // engines) or a hand-built DataFrame where the dialect does not yet
+  // plan the same; RegistrySweepSpec keeps the per-entry outcome table
+  // (src/test/resources/registry_twins.tsv).
   //   Relational — scans, joins, aggregates, windows, sets, samples
   //   ScalarFns  — the §2.8 function surface
   //   Catalog    — catalog/dialect/source formats (§2.1/§2.11)

@@ -96,7 +96,7 @@ object SqlDialect {
   /** Catalog dependency check (reference dependency manager): dropping,
     * replacing or renaming a table that other tables reference by
     * FOREIGN KEY raises the reference's "Cannot drop|alter entry … depend
-    * on it" (r11, ADVICE): a silently replaced or renamed parent would
+    * on it" (r11, ead240d:ADVICE.md): a silently replaced or renamed parent would
     * leave children holding FKs against a vanished table. */
   private def assertNoFkDependents(spark: SparkSession, name: String,
                                    verb: String): Unit = {
@@ -117,7 +117,7 @@ object SqlDialect {
     * statement removes from `parent` is still referenced by a declared
     * child FK. `removed(refCols)` projects the removed keys; `post` is the
     * parent's post-statement rows, the child side of a self-referential
-    * FK (r11, ADVICE: deleting a key together with every row that
+    * FK (r11, ead240d:ADVICE.md: deleting a key together with every row that
     * referenced it is consistent); `touches(refCols)` skips FKs the
     * statement cannot affect. */
   private def assertKeysUnreferenced(spark: SparkSession, parent: String,
@@ -283,10 +283,16 @@ object SqlDialect {
       // sequence) — drain the head statement WITHOUT buffering its
       // rows on the driver (a large head SELECT collect()ed here could
       // OOM the driver; foreachPartition evaluates every row
-      // executor-side and discards them)
-      sql(spark, s.q.substring(0, cut)).foreachPartition(
-        (it: Iterator[org.apache.spark.sql.Row]) =>
-          while (it.hasNext) it.next())
+      // executor-side and discards them). A statement handler (DDL,
+      // DML, COPY, …) has already applied its effects, so its result
+      // (a count, RETURNING rows) is drained only when evaluating it
+      // can still have one: a nondeterministic call such as nextval.
+      val head = new Stmt(s.q.substring(0, cut).trim)
+      val handled = statement(spark, head)
+      if (handled.forall(!_.queryExecution.analyzed.deterministic))
+        handled.getOrElse(runQuery(spark, head)).foreachPartition(
+          (it: Iterator[org.apache.spark.sql.Row]) =>
+            while (it.hasNext) it.next())
       return sql(spark, s.q.substring(cut + 1))
     }
     statement(spark, s).getOrElse(runQuery(spark, s))
@@ -1154,7 +1160,7 @@ object SqlDialect {
           val seed = if (sys == k + 8) s.text(k + 7) else "42"
           subs += ((s.toks(k - 2).start, s.toks(sys).end,
             s"FROM (SELECT * EXCEPT (__gblk) FROM (SELECT *, " +
-              s"floor(monotonically_increasing_id() / 2048) AS __gblk " +
+              s"monotonically_increasing_id() div 2048 AS __gblk " +
               s"FROM ${s.text(k - 1)}) WHERE pmod(hash(__gblk, $seed), 100) < $v)"))
           k = sys + 1
         } else if (s.isPunct(k + 3, "%")) {
@@ -2026,6 +2032,9 @@ object SqlDialect {
     "sqrt" -> "duck_sqrt", "ln" -> "duck_ln", "log10" -> "duck_log10",
     "log2" -> "duck_log2", "asin" -> "duck_asin", "acos" -> "duck_acos",
     "log" -> "duck_log", "trunc" -> "duck_trunc", "sign" -> "duck_sign",
+    "ceil" -> "duck_ceil", "ceiling" -> "duck_ceil", "floor" -> "duck_floor",
+    // BIGINT lengths and positions (probed typeof = BIGINT; Spark's are INT)
+    "length" -> "len", "array_length" -> "len", "instr" -> "strpos",
     "factorial" -> "duck_factorial", "mod" -> "duck_mod",
     "avg" -> "duck_avg", "mean" -> "duck_avg",
     // r15 tranche 2: null-skipping stringly concat, substr 0/negative-
@@ -2075,7 +2084,13 @@ object SqlDialect {
 
   private[graft] def rewriteFnNames(q0: String): String = spliceAll(q0) { (s, k) =>
     val t = s.toks(k)
-    if (!(fnRenames.contains(s.kw(k)) && s.isOpen(k + 1) && !s.dotted(k))) None
+    lazy val close = s.close(k + 1)
+    // `position(a IN b)` is parser syntax → `strpos(b, a)`
+    lazy val in = SqlLex.topLevel(s.toks, k + 2, close).find(s.kw(_) == "in")
+    if (s.kw(k) == "position" && s.isOpen(k + 1) && !s.dotted(k) && close > 0 && in.nonEmpty)
+      Some((t.start, s.toks(close).end, s"strpos(${rewriteFnNames(s.between(in.get, close))}, " +
+        s"${rewriteFnNames(s.between(k + 1, in.get))})"))
+    else if (!(fnRenames.contains(s.kw(k)) && s.isOpen(k + 1) && !s.dotted(k))) None
     // cast-TARGET position: `CAST(x AS CHAR(10))` / `x::char(10)`
     // names a TYPE, not a call — a rename makes a parse error
     else if (s.kw(k - 1) == "as" || s.isPunct(k - 1, "::")) None
@@ -2084,10 +2099,9 @@ object SqlDialect {
     // would not parse; skip when the call carries a depth-1 FROM
     // or opens with a LEADING/TRAILING/BOTH specifier
     else if (Set("substring", "substr", "trim", "ltrim", "rtrim")(t.lower) &&
-      (Set("leading", "trailing", "both")(s.kw(k + 2)) || {
-        val close = s.close(k + 1)
-        SqlLex.topLevel(s.toks, k + 2, if (close < 0) s.n else close).exists(s.kw(_) == "from")
-      })) None
+      (Set("leading", "trailing", "both")(s.kw(k + 2)) ||
+        SqlLex.topLevel(s.toks, k + 2, if (close < 0) s.n else close).exists(s.kw(_) == "from")))
+      None
     else Some((t.start, t.end, fnRenames(t.lower)))
   }
 

@@ -470,16 +470,35 @@ object DuckFactorial {
     a => DuckFactorial(Cast(a(0), LongType))
 }
 
-/** Floor-as-double (Spark's Floor returns BIGINT, which overflows on
-  * big doubles; the reference's fdiv stays DOUBLE). */
-case class FloorD(child: Expression) extends UnaryExpression {
+/** Floor (or ceiling) as double (Spark's Floor/Ceil return BIGINT,
+  * which overflows on big doubles and cannot hold ±inf or NaN; the
+  * reference's fdiv and 1-arg floor/ceil stay DOUBLE). */
+case class FloorD(child: Expression, ceil: Boolean = false) extends UnaryExpression {
   override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(v: Any): Any =
-    math.floor(v.asInstanceOf[Double])
+  override protected def nullSafeEval(v: Any): Any = {
+    val d = v.asInstanceOf[Double]
+    if (ceil) math.ceil(d) else math.floor(d)
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"java.lang.Math.floor($c)")
-  override def prettyName: String = "floor_d"
+    defineCodeGen(ctx, ev, c => s"java.lang.Math.${if (ceil) "ceil" else "floor"}($c)")
+  override def prettyName: String = if (ceil) "ceil_d" else "floor_d"
   override protected def withNewChildInternal(c: Expression): FloorD =
+    copy(child = c)
+}
+
+/** duck 1-arg ceil/floor (probed DuckDB 1.0): FLOAT stays FLOAT,
+  * DECIMAL(p,s) gives DECIMAL(p,0), every other numeric input DOUBLE
+  * (`typeof(floor(1::int))` = DOUBLE). */
+case class DuckCeilFloor(child: Expression, ceil: Boolean)
+  extends UnaryExpression with RuntimeReplaceable {
+  override lazy val replacement: Expression = child.dataType match {
+    case dt: DecimalType =>
+      Cast(if (ceil) Ceil(child) else Floor(child), DecimalType(dt.precision, 0))
+    case FloatType => Cast(FloorD(Cast(child, DoubleType), ceil), FloatType)
+    case _ => FloorD(Cast(child, DoubleType), ceil)
+  }
+  override def prettyName: String = if (ceil) "ceil" else "floor"
+  override protected def withNewChildInternal(c: Expression): DuckCeilFloor =
     copy(child = c)
 }
 

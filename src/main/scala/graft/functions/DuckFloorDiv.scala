@@ -58,17 +58,18 @@ object DuckFloorDiv {
 /** duck `len(x)` (probed r14b): element count for lists (`len([1,2,3])`
   * = 3, `len([])` = 0, `len(NULL)` = NULL), character count for
   * strings, byte count for blobs — Spark's native `len` is
-  * string-only and rejects arrays. Dispatch at plan time. */
+  * string-only and rejects arrays. Dispatch at plan time; BIGINT like
+  * the reference (`typeof(len('abc'))` = BIGINT, Spark's is INT). */
 case class DuckLen(child: Expression)
   extends UnaryExpression with RuntimeReplaceable {
 
-  override lazy val replacement: Expression = child.dataType match {
+  override lazy val replacement: Expression = Cast(child.dataType match {
     case _: ArrayType | _: MapType =>
       org.apache.spark.sql.catalyst.expressions.Size(child)
     case BinaryType =>
       org.apache.spark.sql.catalyst.expressions.OctetLength(child)
     case _ => org.apache.spark.sql.catalyst.expressions.Length(child)
-  }
+  }, LongType)
 
   override def prettyName: String = "len"
 

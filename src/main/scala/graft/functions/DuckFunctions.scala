@@ -468,7 +468,9 @@ object DuckFunctions {
         r("list_distinct", DuckStrFns.listDistinctB)
         r("list_unique", DuckStrFns.listUniqueB)
         alias("week", "weekofyear")
-        alias("strpos", "instr")
+        r("strpos", a => org.apache.spark.sql.catalyst.expressions.Cast(
+          org.apache.spark.sql.catalyst.expressions.StringInstr(a(0), a(1)),
+          org.apache.spark.sql.types.LongType))
         alias("starts_with", "startswith")
         alias("ends_with", "endswith")
         alias("regexp_matches", "rlike")
@@ -562,7 +564,6 @@ object DuckFunctions {
               zero, a(1), LambdaFunction(acc, Seq(acc)))
           })
         }
-        alias("array_length", "size")
         r("json_merge_patch", a =>
           org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
             DuckStrFns.getClass, org.apache.spark.sql.types.StringType,
@@ -673,6 +674,8 @@ object DuckFunctions {
         // (Spark's trunc is the 2-arg date truncation — kept)
         r("duck_trunc", a => if (a.length == 1) DuckTrunc1(a(0))
           else CTruncDate(a(0), a(1)))
+        r("duck_ceil", a => DuckCeilFloor(a(0), ceil = true))
+        r("duck_floor", a => DuckCeilFloor(a(0), ceil = false))
         r("duck_factorial", DuckFactorial.builder)
         r("duck_sign", a => DuckSign(a(0)))
         // new names with no Spark collision register bare

@@ -228,7 +228,7 @@ object TypeHelpers {
       "[+-]\\d{1,2}:(\\d{2})(?::\\d{2})?$", 1), lit("")).cast("long"), lit(0L))
     val os = coalesce(nullif(regexp_extract(s,
       "[+-]\\d{1,2}:\\d{2}:(\\d{2})$", 1), lit("")).cast("long"), lit(0L))
-    // malformed literal → NULL, not a silent +00 read (r11, ADVICE —
+    // malformed literal → NULL, not a silent +00 read (r11, ead240d:ADVICE.md —
     // the reference's TIMETZ cast raises a conversion error; a null is
     // the non-throwing analog TRY_CAST-style callers expect). A MISSING
     // offset is legal and reads +00, matching the reference (probed:

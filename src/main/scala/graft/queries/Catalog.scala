@@ -167,7 +167,7 @@ object Catalog {
       |  'substring_grapheme','tan','translate','trim','typeof','upper')
       |ORDER BY function_name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val hand: Map[String, Build] = Map(
 
     "csv_roundtrip" -> ((s, dir) => {
       // COPY TO csv + read_csv back (sniffed schema), aggregate must match
@@ -179,66 +179,6 @@ object Catalog {
         count(lit(1)).as("n"),
         round(sum(col("l_quantity")), 2).as("sum_qty"),
         round(sum(col("l_extendedprice")), 2).as("sum_price"))
-    }),
-
-    "dialect_qualify" -> ((s, dir) => {
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s,
-        """SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nk, c_acctbal,
-          |  CAST(row_number() OVER (PARTITION BY c_nationkey
-          |    ORDER BY c_acctbal DESC, c_custkey) AS BIGINT) AS rn
-          |FROM customer QUALIFY rn <= 3""".stripMargin)
-    }),
-
-    "dialect_distinct_on" -> ((s, dir) => {
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s,
-        """SELECT DISTINCT ON (c_nationkey) CAST(c_nationkey AS BIGINT) AS nk,
-          |  c_custkey, c_acctbal
-          |FROM customer ORDER BY c_acctbal DESC, c_custkey""".stripMargin)
-    }),
-
-    "dialect_limit_percent" -> ((s, dir) => {
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s,
-        "SELECT o_orderkey, round(o_totalprice, 2) AS price FROM orders ORDER BY o_orderkey LIMIT 10%")
-    }),
-
-    "dialect_exclude_replace" -> ((s, dir) => {
-      // star modifiers: EXCLUDE drops columns, REPLACE substitutes an
-      // expression under the same name (SqlDialect rewrite → Spark
-      // `* EXCEPT` + re-projection)
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s,
-        """SELECT * EXCLUDE (o_orderpriority)
-          |         REPLACE (round(o_totalprice / 1000, 2) AS o_totalprice)
-          |FROM orders WHERE o_orderkey <= 100""".stripMargin)
-    }),
-
-    "dialect_macro" -> ((s, dir) => {
-      // CREATE MACRO: bind-time inlining (reference ScalarMacroFunction
-      // duckdb-internal.hpp:9920) — nested macro reference + named
-      // default parameter, exercised through an aggregate
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s, "CREATE OR REPLACE MACRO disc_price(p, d) AS p * (1 - d)")
-      SqlDialect.sql(s,
-        "CREATE OR REPLACE MACRO taxed(p, d, t := 0.05) AS disc_price(p, d) * (1 + t)")
-      SqlDialect.sql(s,
-        """SELECT l_returnflag,
-          |  round(sum(disc_price(l_extendedprice, l_discount)), 2) AS sum_disc,
-          |  round(sum(taxed(l_extendedprice, l_discount)), 2) AS sum_taxed,
-          |  round(avg(taxed(l_extendedprice, l_discount, t := 0.10)), 2) AS avg_taxed10
-          |FROM lineitem GROUP BY l_returnflag""".stripMargin)
-    }),
-
-    "dialect_group_by_all" -> ((s, dir) => {
-      // GROUP BY ALL (reference duckdb-8.cpp:7745) — native in both
-      // engines; groups by every non-aggregated select item
-      Engine.registerAll(s, dir)
-      s.sql(
-        """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-          |  round(sum(o_totalprice), 2) AS total
-          |FROM orders GROUP BY ALL""".stripMargin)
     }),
 
     "scan_glob" -> ((s, dir) => {
@@ -269,15 +209,6 @@ object Catalog {
         .crossJoin(ns.table("exp_region").agg(count(lit(1)).as("n_region")))
     }),
 
-    "catalog_defaults" -> ((s, dir) => {
-      // column DEFAULTs + column-list INSERT + DEFAULT VALUES + UPDATE
-      // SET DEFAULT (r16 tranche 5; reference SetToDefault /
-      // CreateTableInfo defaults, duckdb-9.cpp) — same script text on
-      // both engines, final table state compared
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s, DefaultsScript)
-    }),
-
     "catalog_dml" -> ((s, dir) => {
       // INSERT/UPDATE/DELETE over the temp-view catalog (reference
       // PhysicalInsert/Delete/Update duckdb-4.cpp:9996-10015) — the
@@ -298,45 +229,6 @@ object Catalog {
         count(lit(1)).as("n"),
         sum(col("n_nationkey")).cast("long").as("key_sum"),
         count(when(col("n_name").endsWith("_X"), 1)).as("n_upd"))
-    }),
-
-    "catalog_table_info" -> ((s, dir) => {
-      // pragma_table_info analog (reference duckdb-6.cpp:14150): schema
-      // reflection reported in the reference's type names
-      Engine.registerAll(s, dir)
-      val duckType = Map("bigint" -> "BIGINT", "int" -> "INTEGER",
-        "string" -> "VARCHAR", "double" -> "DOUBLE",
-        "timestamp_ntz" -> "TIMESTAMP", "timestamp" -> "TIMESTAMP",
-        "date" -> "DATE", "boolean" -> "BOOLEAN")
-      import s.implicits._
-      Engine.tableInfo(s, "nation").collect()
-        .map(r => (r.getInt(0), r.getString(1),
-          duckType.getOrElse(r.getString(2), r.getString(2).toUpperCase)))
-        .toSeq.toDF("cid", "name", "type")
-    }),
-
-    "catalog_sql_dml" -> ((s, dir) => {
-      // the full SQL-level DML statement surface (INSERT positional /
-      // UPDATE assignments / DELETE / ALTER TABLE RENAME COLUMN) —
-      // identical statement text runs natively on the oracle
-      Engine.registerAll(s, dir)
-      sqlDmlStatements.foreach(stmt => SqlDialect.sql(s, stmt))
-      SqlDialect.sql(s, sqlDmlSelect)
-    }),
-
-    "dialect_create_view" -> ((s, dir) => {
-      // CREATE OR REPLACE VIEW (reference CreateViewInfo, duckdb-9.cpp)
-      // — plan-level view, re-evaluated per query (vs the CTAS snapshot)
-      Engine.registerAll(s, dir)
-      dialectViewStatements.foreach(stmt => SqlDialect.sql(s, stmt))
-      SqlDialect.sql(s, dialectViewSelect)
-    }),
-
-    "dialect_with_recursive" -> ((s, dir) => {
-      // SQL-level WITH RECURSIVE — native in Spark 4 (recursive CTE
-      // resolution); identical statement text runs on both engines
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s, withRecursiveSql)
     }),
 
     "dialect_pivot" -> ((s, dir) => {
@@ -383,17 +275,6 @@ object Catalog {
         .orderBy(col("o_orderstatus"))
     }),
 
-    "catalog_ctas" -> ((s, dir) => {
-      // SQL-level CREATE TABLE AS (reference CreateTableAs binder,
-      // duckdb-9.cpp) — snapshot semantics into the temp catalog
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s,
-        """CREATE OR REPLACE TABLE ctas_demo AS
-          |SELECT l_returnflag, round(sum(l_quantity), 2) AS qty
-          |FROM lineitem GROUP BY l_returnflag""".stripMargin)
-      SqlDialect.sql(s, "SELECT l_returnflag, qty FROM ctas_demo")
-    }),
-
     "catalog_summarize" -> ((s, dir) => {
       // SUMMARIZE (reference duckdb-6.cpp:9493) — deterministic column
       // subset; approx_unique/quantiles are engine-specific sketches and
@@ -413,35 +294,6 @@ object Catalog {
       graft.functions.TypeHelpers.createSequence("r3seq", start = 100, incrementBy = 7)
       (1L to 6L).map(i => (i, graft.functions.TypeHelpers.nextval("r3seq")))
         .toDF("i", "v")
-    }),
-
-    "sql_copy_parquet" -> ((s, dir) => {
-      // SQL-level COPY … TO (FORMAT PARQUET) + read_parquet replacement
-      // scan (reference PhysicalCopyToFile duckdb-4.cpp:4689): each
-      // engine round-trips through its own parquet file; the aggregates
-      // must agree because the source rows do
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s,
-        """COPY (SELECT l_orderkey, l_quantity, l_extendedprice
-          |      FROM lineitem WHERE l_orderkey <= 2000)
-          |TO '/root/repo/target/copy_spark_li' (FORMAT PARQUET)""".stripMargin)
-      SqlDialect.sql(s,
-        """SELECT count(*) AS n, round(sum(l_quantity), 2) AS sum_qty,
-          |  round(sum(l_extendedprice), 2) AS sum_price
-          |FROM read_parquet('/root/repo/target/copy_spark_li')""".stripMargin)
-    }),
-
-    "dialect_prepare" -> ((s, dir) => {
-      // PREPARE / EXECUTE (reference PrepareStatement duckdb-8.cpp:8942):
-      // $n placeholders bound at execute time, run through the dialect
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s,
-        """PREPARE qty_cut AS
-          |SELECT l_returnflag, count(*) AS n,
-          |  round(sum(l_extendedprice), 2) AS total
-          |FROM lineitem WHERE l_quantity <= $1 AND l_partkey % $2 = 0
-          |GROUP BY l_returnflag""".stripMargin)
-      SqlDialect.sql(s, "EXECUTE qty_cut(10, 3)")
     }),
 
     "scan_repeat" -> ((s, dir) => {
@@ -490,15 +342,6 @@ object Catalog {
       skipped.crossJoin(unioned).crossJoin(hp)
     }),
 
-    "scan_test_all_types" -> ((s, _) => {
-      // type-surface oracle (TestAllTypesSql doc): same text both engines
-      SqlDialect.sql(s, TestAllTypesSql)
-    }),
-
-    "scan_test_vector_types" -> ((s, _) => {
-      SqlDialect.sql(s, TestVectorTypesSql)
-    }),
-
     "scan_json" -> ((s, dir) => {
       // NDJSON replacement scan (read_json_auto — the reference's JSON
       // extension scan; Spark's json reader is NDJSON-native): both
@@ -514,26 +357,7 @@ object Catalog {
         s"""{"k": ${r.getLong(0)}, "name": "${r.getString(1)}", "rk": ${r.getLong(2)}}""")
       Files.write(base.resolve("nation.ndjson"),
         (lines.mkString("\n") + "\n").getBytes)
-      SqlDialect.sql(s,
-        """SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(k) AS BIGINT) AS key_sum,
-          |  min(name) AS lo_name, CAST(sum(rk) AS BIGINT) AS rk_sum,
-          |  CAST(count(*) FILTER (WHERE rk = 0) AS BIGINT) AS n_r0
-          |FROM read_json_auto('/root/repo/target/json_scan/nation.ndjson')""".stripMargin)
-    }),
-
-    "dialect_collate" -> ((s, dir) => {
-      // SQL-level COLLATE NOCASE (reference collation registry,
-      // duckdb-5.cpp:5156): the shim folds the COMPARISON — both
-      // operands of `a = b COLLATE NOCASE`, the sort key of an ORDER
-      // BY item — while projected values keep their case. Same
-      // statement text runs natively on DuckDB.
-      graft.functions.DuckFunctions.register(s)
-      SqlDialect.sql(s,
-        """SELECT s,
-          |  CAST(row_number() OVER (ORDER BY s COLLATE NOCASE, s) AS BIGINT) AS rk,
-          |  (s = 'BANANA' COLLATE NOCASE) AS is_banana,
-          |  (s < 'b' COLLATE NOCASE) AS lt_b
-          |FROM (VALUES ('apple'), ('Banana'), ('cherry'), ('APRICOT'), ('banana')) AS v(s)""".stripMargin)
+      sqlQuery(oracle("scan_json"))(s, dir)
     }),
 
     "csv_sniffer" -> ((s, dir) => {
@@ -577,28 +401,6 @@ object Catalog {
         .crossJoin(agg("tabs.csv", "tabs")).crossJoin(agg("gzip.csv.gz", "gz"))
     }),
 
-    "dialect_table_macro" -> ((s, dir) => {
-      // CREATE MACRO … AS TABLE (reference TableMacroFunction
-      // duckdb-internal.hpp:9955) — call site in FROM with an alias
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s,
-        """CREATE OR REPLACE MACRO top_parts(n) AS TABLE
-          |SELECT p_partkey, p_type, p_retailprice FROM part
-          |ORDER BY p_partkey LIMIT n""".stripMargin)
-      SqlDialect.sql(s,
-        """SELECT t.p_type, count(*) AS n, round(sum(t.p_retailprice), 2) AS price_sum
-          |FROM top_parts(50) t GROUP BY t.p_type""".stripMargin)
-    }),
-
-    "catalog_on_conflict" -> ((s, dir) => {
-      // INSERT OR REPLACE + ON CONFLICT DO NOTHING / DO UPDATE SET with
-      // excluded.* (reference conflict binding, duckdb-4.cpp:9996-10015)
-      // — identical statement text runs natively on the oracle
-      Engine.registerAll(s, dir)
-      onConflictStatements.foreach(stmt => SqlDialect.sql(s, stmt))
-      SqlDialect.sql(s, onConflictSelect)
-    }),
-
     "catalog_explain_analyze" -> ((s, dir) => {
       // EXPLAIN ANALYZE (reference QueryProfiler, duckdb-7.cpp:5536):
       // profiler output itself is engine-specific, so the oracle checks
@@ -613,34 +415,6 @@ object Catalog {
         .orderBy(col("operator_id"))
         .limit(1)
         .select(col("output_rows").cast("long").as("top_rows"))
-    }),
-
-    "catalog_functions" -> ((s, dir) => {
-      // duckdb_functions() catalog fn (duckdb-6.cpp:14150-14176): the
-      // probe list is a fixed set of DuckDB function names graft claims —
-      // a name missing from EITHER engine's registry drops a row and
-      // fails the hash compare, so this catches registry drift both ways
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s, functionsSql)
-    }),
-
-    "catalog_schemas_views" -> ((s, dir) => {
-      // r12 introspection long tail (ref duckdb-6.cpp:14150-14176):
-      // duckdb_schemas() (Spark's default database surfaces as the
-      // reference's `main`), duckdb_views() (both engines' tables are
-      // views over the parquet files — graft temp views vs the oracle
-      // harness's CREATE VIEW), duckdb_settings() (the reference's
-      // resource-setting NAMES resolve — values are machine state in
-      // both engines, so only names probe), and pragma_database_size()
-      // (a well-formed one-row accounting table; sizes are engine
-      // storage state, so the contract is shape + positivity).
-      // r13: plus the TABLE-vs-VIEW provenance split — a CTAS snapshot
-      // must surface in duckdb_tables() and NOT in duckdb_views(), a
-      // true view the other way (graft backs both with temp views; the
-      // provenance registry restores the reference catalog's split)
-      Engine.registerAll(s, dir)
-      provenanceSetup.foreach(SqlDialect.sql(s, _))
-      SqlDialect.sql(s, introspectionSql)
     })
   )
 
@@ -892,4 +666,9 @@ object Catalog {
     "catalog_schemas_views" ->
       (provenanceSetup :+ introspectionSql).mkString(";\n")
   )
+
+  // each engine round-trips COPY through its own file: a Spark part-file
+  // directory at DuckDB's path would make DuckDB's COPY TO fail
+  val queries: Map[String, Build] = registry(hand, oracle + ("sql_copy_parquet" ->
+    oracle("sql_copy_parquet").replace("copy_duck_li.parquet", "copy_spark_li")))
 }

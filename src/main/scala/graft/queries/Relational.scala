@@ -9,12 +9,13 @@ import graft.operators.{RangeJoin, Recursion}
 /** Relational operator inventory: scans, aggregation, joins, sort/limit,
   * set operations, windows (SURVEY.md §2.1-2.7).
   *
-  * Every query here is declarative DataFrame API — Catalyst plans the
-  * physical operators (hash agg partial+final, broadcast vs shuffle join,
-  * TakeOrderedAndProject, …). Aggregate outputs are aliased identically to
-  * the oracle SQL (driver hash-compares by sorted column name) and float
-  * aggregates are rounded the same on both sides so cross-engine summation
-  * order cannot flip a hash.
+  * An entry is its oracle SQL ([[registry]]) or, where the dialect does
+  * not plan it the same, declarative DataFrame API — either way Catalyst
+  * plans the physical operators (hash agg partial+final, broadcast vs
+  * shuffle join, TakeOrderedAndProject, …). Aggregate outputs are
+  * aliased identically to the oracle SQL (the oracle compare hashes by
+  * sorted column name) and float aggregates are rounded the same on both sides
+  * so cross-engine summation order cannot flip a hash.
   */
 object Relational {
 
@@ -184,18 +185,9 @@ object Relational {
       |             (8, TIMESTAMP '2024-01-01 09:30:00')) t(v, ts)
       |ORDER BY v""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val hand: Map[String, Build] = Map(
 
     // ---- scans / in-memory sources (SURVEY §2.1) ----
-
-    "scan_project_filter" -> ((s, dir) => {
-      // projection + predicate reach the parquet scan (PushedFilters)
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= expr("timestamp'1997-01-01 00:00:00'") &&
-          col("l_quantity") > 49.0)
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          col("l_quantity"), col("l_shipdate"))
-    }),
 
     "scan_values" -> ((s, _) => {
       // literal VALUES relation (reference: ExpressionScan, duckdb-4.cpp:9746)
@@ -228,18 +220,6 @@ object Relational {
           round(avg(col("l_discount")), 4).as("avg_disc"),
           count(lit(1)).as("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    "agg_global" -> ((s, dir) => {
-      // ungrouped (global) aggregate — PhysicalUngroupedAggregate analog
-      t(s, dir, "lineitem").agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(col("l_orderkey")).as("n_orders"),
-        sum(col("l_quantity")).as("sum_qty"),
-        min(col("l_extendedprice")).as("min_price"),
-        max(col("l_extendedprice")).as("max_price"),
-        min(col("l_shipdate")).as("min_ship"),
-        max(col("l_shipdate")).as("max_ship"))
     }),
 
     "agg_distinct" -> ((s, dir) => {
@@ -282,73 +262,11 @@ object Relational {
         round(avg(when(col("l_linestatus") === "F", col("l_quantity"))), 4).as("avg_f_qty"))
     }),
 
-    "agg_rollup" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), round(sum(col("l_quantity")), 2).as("sum_qty"),
-          grouping(col("l_returnflag")).cast("long").as("g_rf"),
-          grouping(col("l_linestatus")).cast("long").as("g_ls"))
-    }),
-
-    "agg_cube" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sum_price"))
-    }),
-
-    "agg_grouping_sets" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      o.groupingSets(
-        Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority"))),
-        col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), round(avg(col("o_totalprice")), 4).as("avg_price"))
-    }),
-
-    "agg_stats" -> ((s, dir) => {
-      // algebraic aggregate family (duckdb-4.cpp:12084-12098)
-      t(s, dir, "lineitem").groupBy(col("l_returnflag")).agg(
-        round(stddev_samp(col("l_quantity")), 6).as("sd_qty"),
-        round(stddev_pop(col("l_quantity")), 6).as("sdp_qty"),
-        round(var_samp(col("l_extendedprice")), 4).as("var_price"),
-        round(var_pop(col("l_extendedprice")), 4).as("varp_price"),
-        round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qp"),
-        round(covar_samp(col("l_quantity"), col("l_extendedprice")), 4).as("cov_qp"),
-        round(covar_pop(col("l_quantity"), col("l_extendedprice")), 4).as("covp_qp"))
-    }),
-
-    "agg_regression" -> ((s, dir) => {
-      // regr_* family (duckdb-5.cpp:1659-1670) — all Spark builtins
-      t(s, dir, "lineitem").groupBy(col("l_linestatus")).agg(
-        regr_count(col("l_extendedprice"), col("l_quantity")).as("r_n"),
-        round(regr_slope(col("l_extendedprice"), col("l_quantity")), 6).as("r_slope"),
-        round(regr_intercept(col("l_extendedprice"), col("l_quantity")), 4).as("r_icept"),
-        round(regr_r2(col("l_extendedprice"), col("l_quantity")), 6).as("r_r2"),
-        round(regr_avgx(col("l_extendedprice"), col("l_quantity")), 4).as("r_avgx"),
-        round(regr_avgy(col("l_extendedprice"), col("l_quantity")), 4).as("r_avgy"))
-    }),
-
-    "agg_minmax_by" -> ((s, dir) => {
-      // arg_min/arg_max (duckdb-4.cpp:14860) = min_by/max_by
-      t(s, dir, "orders").groupBy(col("o_orderstatus")).agg(
-        max_by(col("o_orderkey"), col("o_totalprice")).as("key_of_max"),
-        min_by(col("o_orderkey"), col("o_totalprice")).as("key_of_min"),
-        round(max(col("o_totalprice")), 2).as("max_price"))
-    }),
-
     "agg_string" -> ((s, dir) => {
       // ordered string_agg (sorted-aggregate machinery, duckdb-5.cpp:1680)
       t(s, dir, "nation").groupBy(col("n_regionkey").cast("long").as("rk")).agg(
         array_join(sort_array(collect_list(col("n_name"))), ",").as("names"),
         count(lit(1)).as("n"))
-    }),
-
-    "agg_bool_bit" -> ((s, dir) => {
-      t(s, dir, "lineitem").groupBy(col("l_returnflag")).agg(
-        bool_and(col("l_quantity") > 0).as("all_pos"),
-        bool_or(col("l_discount") > 0.09).as("any_hi_disc"),
-        bit_and(col("l_suppkey")).as("band"),
-        bit_or(col("l_suppkey")).as("bor"),
-        bit_xor(col("l_suppkey")).as("bxor"))
     }),
 
     "agg_quantile" -> ((s, dir) => {
@@ -422,14 +340,6 @@ object Relational {
         count(lit(1)).as("n"))
     }),
 
-    "agg_product" -> ((s, dir) => {
-      // custom Aggregator (graft.functions.Aggs.ProductAgg)
-      t(s, dir, "lineitem").filter(col("l_orderkey") <= 100)
-        .groupBy(col("l_orderkey")).agg(
-          round(expr("product_agg(1.0 + l_discount)"), 6).as("prod_disc"),
-          count(lit(1)).as("n"))
-    }),
-
     "agg_approx_distinct" -> ((s, dir) => {
       // HLL sketch (reference vendors hyperloglog, duckdb-hyperloglog.cpp).
       // Sketch estimates differ across implementations, so the oracle
@@ -480,14 +390,6 @@ object Relational {
 
     // ---- joins (SURVEY §2.3) ----
 
-    "join_inner" -> ((s, dir) => {
-      val o = t(s, dir, "orders"); val l = t(s, dir, "lineitem")
-      o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_items"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"))
-    }),
-
     "join_multiway_broadcast" -> ((s, dir) => {
       // TPC-H Q5 shape: fact-to-fact shuffle join + broadcast dims.
       // At 100 TB the dims stay broadcast; lineitem⋈orders co-shuffles
@@ -506,16 +408,6 @@ object Relational {
         .groupBy(col("n_name"))
         .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"),
           count(lit(1)).as("n"))
-    }),
-
-    "join_left_outer" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val big = t(s, dir, "lineitem").filter(col("l_quantity") > 45)
-      o.join(big, col("o_orderkey") === col("l_orderkey"), "left")
-        .groupBy(col("o_orderstatus")).agg(
-          count(lit(1)).as("n_rows"),
-          count(col("l_orderkey")).as("n_matched"),
-          round(sum(coalesce(col("l_quantity"), lit(0.0))), 2).as("sum_qty"))
     }),
 
     "join_full_outer" -> ((s, dir) => {
@@ -544,20 +436,27 @@ object Relational {
           round(sum(col("c_acctbal")), 2).as("sum_bal"))
     }),
 
-    "join_cross" -> ((s, dir) => {
-      val r = t(s, dir, "region"); val n = t(s, dir, "nation")
-      r.crossJoin(n).agg(count(lit(1)).as("n_pairs"),
-        sum(col("r_regionkey") * col("n_nationkey")).cast("long").as("xsum"))
-    }),
-
-    "join_range_inequality" -> ((s, dir) => {
-      // single-inequality range join (PiecewiseMergeJoin analog,
-      // duckdb-3.cpp:17261): supplier×customer on an acctbal band
-      val su = t(s, dir, "supplier")
-      val c = t(s, dir, "customer")
-      su.join(c, col("c_acctbal") > col("s_acctbal") - 10.0 &&
-        col("c_acctbal") <= col("s_acctbal"))
-        .groupBy(col("s_suppkey")).agg(count(lit(1)).as("n_in_band"))
+    "join_range_autorewrite" -> ((s, dir) => {
+      // the SAME plain inequality join as join_range_inequality, but with
+      // the RangeJoinRule's fixed-width path (plans.RangeJoinRule): the
+      // optimizer itself rewrites it to the bucketed equi-join. The width
+      // is pinned only while the plan materializes (optimization is
+      // lazy), so it never leaks into the session's later queries.
+      graft.functions.DuckFunctions.register(s)
+      val key = "spark.graft.rangeJoin.bucketWidth"
+      val before = s.conf.getOption(key)
+      s.conf.set(key, "10.0")
+      try {
+        val su = t(s, dir, "supplier"); val c = t(s, dir, "customer")
+        val joined = su.join(c, col("c_acctbal") > col("s_acctbal") - 10.0 &&
+            col("c_acctbal") <= col("s_acctbal"))
+          .groupBy(col("s_suppkey")).agg(count(lit(1)).as("n_in_band"))
+        joined.queryExecution.executedPlan
+        joined
+      } finally before match {
+        case Some(w) => s.conf.set(key, w)
+        case None => s.conf.unset(key)
+      }
     }),
 
     "join_theta_blockwise" -> ((s, dir) => {
@@ -605,28 +504,10 @@ object Relational {
 
     // ---- set operations (SURVEY §2.7) ----
 
-    "set_union_all" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_nationkey").cast("long").as("nk"))
-      val su = t(s, dir, "supplier").select(col("s_nationkey").cast("long").as("nk"))
-      c.unionAll(su).groupBy(col("nk")).agg(count(lit(1)).as("n"))
-    }),
-
     "set_union_distinct" -> ((s, dir) => {
       val c = t(s, dir, "customer").select((col("c_nationkey") % 7).cast("long").as("k"))
       val su = t(s, dir, "supplier").select((col("s_nationkey") % 5).cast("long").as("k"))
       c.union(su).distinct()
-    }),
-
-    "set_except" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey").as("k"))
-      val o = t(s, dir, "orders").select(col("o_custkey").as("k"))
-      c.except(o).agg(count(lit(1)).as("n_except"), sum(col("k")).cast("long").as("sum_k"))
-    }),
-
-    "set_intersect" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select((col("c_nationkey") + 10).cast("long").as("k"))
-      val n = t(s, dir, "nation").select(col("n_nationkey").cast("long").as("k"))
-      c.intersect(n)
     }),
 
     "set_allvariants" -> ((s, dir) => {
@@ -643,12 +524,6 @@ object Relational {
         .select(col("k"),
           coalesce(col("n_except_all"), lit(0L)).as("n_except_all"),
           coalesce(col("n_intersect_all"), lit(0L)).as("n_intersect_all"))
-    }),
-
-    "set_coercion" -> ((s, dir) => {
-      // reference-direction set-op member coercion (SetCoerceSql doc)
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s, SetCoerceSql)
     }),
 
     "set_recursive_cte" -> ((s, _) => {
@@ -735,34 +610,6 @@ object Relational {
     })
   ,
 
-    "sub_scalar_correlated" -> ((s, dir) => {
-      Engine.registerAll(s, dir)
-      s.sql(
-        """SELECT o_orderstatus, count(*) AS n_above,
-          |  round(sum(o_totalprice), 2) AS sum_above
-          |FROM orders o
-          |WHERE o_totalprice > 1.5 * (SELECT avg(o2.o_totalprice)
-          |  FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-          |GROUP BY o_orderstatus""".stripMargin)
-    }),
-
-    "sub_in_uncorrelated" -> ((s, dir) => {
-      Engine.registerAll(s, dir)
-      s.sql(
-        """SELECT count(*) AS n, round(sum(c_acctbal), 2) AS bal
-          |FROM customer
-          |WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey IN (0, 1))""".stripMargin)
-    }),
-
-    "sub_exists_correlated" -> ((s, dir) => {
-      Engine.registerAll(s, dir)
-      s.sql(
-        """SELECT count(*) AS n FROM customer c
-          |WHERE EXISTS (SELECT 1 FROM orders o
-          |  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
-          |    AND o.o_totalprice > c.c_acctbal * 10)""".stripMargin)
-    }),
-
     "sub_all_rewrite" -> ((s, dir) => {
       // `> ALL (…)` has no Spark form — rewritten to > (SELECT max(…)),
       // equivalent for non-empty null-free subqueries
@@ -771,29 +618,6 @@ object Relational {
         """SELECT count(*) AS n_top FROM supplier
           |WHERE s_acctbal > (SELECT max(a) FROM
           |  (SELECT avg(c_acctbal) AS a FROM customer GROUP BY c_nationkey))""".stripMargin)
-    }),
-
-    "win_edge_frames" -> ((s, dir) => {
-      // r16 tranche 5 window-edge parity (reference segment-tree window
-      // executor, duckdb-3.cpp:10800): descending RANGE offsets, EMPTY
-      // literal frames (NULL on the reference, 0 for count — Spark
-      // analysis errors without SqlDialect.rewriteWindowEdges), window
-      // FILTER with an explicit frame, nonpositive nth_value offsets,
-      // timestamp RANGE with interval bounds. Same text both engines.
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s, WinEdgeSql)
-    }),
-
-    "sub_in_projection_3vl" -> ((s, dir) => {
-      // IN / quantified comparisons in PROJECTION position carry the
-      // reference's three-valued logic (MARK joins, duckdb.hpp:13906):
-      // a NULL probe or a NULL subquery member yields NULL, not false —
-      // SqlSelect.rewrite3vl's CASE attaches the NULL corrections as
-      // uncorrelated 1-row stats (r16; Projection3vlSpec pins the truth
-      // table). Same text on both engines; the *_null sums are the
-      // discriminators (Spark's plain ExistenceJoin would return 0).
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s, Sub3vlSql)
     }),
 
     "win_ignore_nulls" -> ((s, dir) => {
@@ -812,14 +636,6 @@ object Relational {
         fround(lead(col("v"), 1, null, ignoreNulls = true).over(w), 2).as("next_nn"),
         fround(first(col("v"), ignoreNulls = true).over(wf), 2).as("first_nn"),
         fround(last(col("v"), ignoreNulls = true).over(wf), 2).as("last_nn"))
-    }),
-
-    "sample_fixed_count" -> ((s, dir) => {
-      // USING SAMPLE n ROWS via the dialect shim — the sampled COUNT is
-      // deterministic even though the rows are engine-local
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s,
-        "SELECT count(*) AS n FROM (SELECT * FROM lineitem USING SAMPLE 500 ROWS)")
     }),
 
     "sample_bernoulli" -> ((s, dir) => {
@@ -948,18 +764,6 @@ object Relational {
         views, clicks, "user_id", "ts", "value", "next_click")
         .select(col("event_id"), col("user_id"),
           round(col("next_click"), 2).as("next_click_value"))
-    }),
-
-    "join_range_autorewrite" -> ((s, dir) => {
-      // the SAME plain inequality join as join_range_inequality, but with
-      // the RangeJoinRule active: the optimizer itself rewrites it to the
-      // bucketed equi-join (plans.RangeJoinRule)
-      graft.functions.DuckFunctions.register(s)
-      s.conf.set("spark.graft.rangeJoin.bucketWidth", "10.0")
-      val su = t(s, dir, "supplier"); val c = t(s, dir, "customer")
-      su.join(c, col("c_acctbal") > col("s_acctbal") - 10.0 &&
-        col("c_acctbal") <= col("s_acctbal"))
-        .groupBy(col("s_suppkey")).agg(count(lit(1)).as("n_in_band"))
     }),
 
     "join_range_bucketed" -> ((s, dir) => {
@@ -1110,43 +914,6 @@ object Relational {
           grouping(col("l_returnflag")).cast("long").as("g_rf"),
           grouping(col("l_linestatus")).cast("long").as("g_ls"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    "join_range_autoplan" -> ((s, dir) => {
-      // the SAME plain band join as join_range_inequality with NO conf at
-      // all: RangeJoinRule derives quantile bucket boundaries from the
-      // point distribution at plan time (reference picks its range
-      // operators from the condition shape alone, duckdb-4.cpp:9054).
-      // bucketWidth is pinned to 0 because verify/bench share one session
-      // and join_range_autorewrite sets a width — this query must prove
-      // the statistics path specifically.
-      graft.functions.DuckFunctions.register(s)
-      val before = s.conf.getOption("spark.graft.rangeJoin.bucketWidth")
-      s.conf.set("spark.graft.rangeJoin.bucketWidth", "0")
-      try {
-        val su = t(s, dir, "supplier"); val c = t(s, dir, "customer")
-        val joined = su.join(c, col("c_acctbal") > col("s_acctbal") - 10.0 &&
-            col("c_acctbal") <= col("s_acctbal"))
-          .groupBy(col("s_suppkey")).agg(count(lit(1)).as("n_in_band"))
-        // materialize the plan under the pinned conf (optimization is
-        // lazy; restoring the conf first would re-enable the width path)
-        joined.queryExecution.executedPlan
-        joined
-      } finally before match {
-        case Some(w) => s.conf.set("spark.graft.rangeJoin.bucketWidth", w)
-        case None => s.conf.unset("spark.graft.rangeJoin.bucketWidth")
-      }
-    }),
-
-    "sample_system" -> ((s, dir) => {
-      // USING SAMPLE p% (system, seed): block-granular sampling
-      // (reference SampleMethod::SYSTEM_SAMPLE, duckdb.hpp:20017). RNG
-      // streams are engine-local, so the oracle checks the contract:
-      // non-empty proper subset, sampled fraction within a loose
-      // block-variance bound, and seeded determinism (same seed twice =
-      // same count). Each engine verifies its OWN sample.
-      Engine.registerAll(s, dir)
-      SqlDialect.sql(s, sampleSystemSql)
     })
   )
 
@@ -1644,4 +1411,6 @@ object Relational {
 
     "sample_system" -> sampleSystemSql
   )
+
+  val queries: Map[String, Build] = registry(hand, oracle)
 }

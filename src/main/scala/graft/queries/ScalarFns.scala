@@ -36,13 +36,6 @@ object ScalarFns {
     * with spaces to `width` UTF-8 BYTES (reference quirk: the pad target
     * counts bytes, so multi-byte block chars usually exceed it; verified
     * char-exact vs the reference over a 400-value sweep). */
-
-
-  /** bar(x, min, max, width): unicode bar chart (duckdb-5.cpp:12022
-    * generic list) — full blocks + one partial block char, right-padded
-    * with spaces to `width` UTF-8 BYTES (reference quirk: the pad target
-    * counts bytes, so multi-byte block chars usually exceed it; verified
-    * char-exact vs the reference over a 400-value sweep). */
   def bar(x: Double, lo: Double, hi: Double, width: Double): String = {
     if (x.isNaN || hi <= lo) return ""
     // Mirror the oracle's fp operation order exactly: w = width*(x-lo)/(hi-lo)
@@ -58,7 +51,7 @@ object ScalarFns {
     s + " " * math.max(0, width.toInt - bytes)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val hand: Map[String, Build] = Map(
 
     "fn_string_basic" -> ((s, dir) => {
       t(s, dir, "part").select(
@@ -236,8 +229,7 @@ object ScalarFns {
           col("s").getField("lo").as("s_lo"),
           col("s").getField("hi").as("s_hi"),
           col("s").getField("n").as("s_n"))
-    })
-  ,
+    }),
 
     "fn_datetime_make" -> ((s, dir) => {
       val ts = col("o_orderdate")
@@ -288,17 +280,6 @@ object ScalarFns {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
           min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-    }),
-
-    "fn_math_special" -> ((s, dir) => {
-      // nextafter / signbit / gamma / lgamma (graft UDFs vs reference
-      // natives); gamma kept to small args so rounding parity holds
-      t(s, dir, "lineitem").filter(col("l_orderkey") <= 100).select(
-        col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-        callUDF("nextafter", col("l_discount"), lit(1.0)).as("nxt"),
-        callUDF("signbit", col("l_quantity") - 25.0).as("sb"),
-        round(callUDF("gamma", col("l_linenumber").cast("double")), 6).as("gam"),
-        round(callUDF("lgamma", col("l_quantity")), 8).as("lgam"))
     }),
 
     "fn_typeof" -> ((s, dir) => {
@@ -615,22 +596,6 @@ object ScalarFns {
           enumFirst(prios).as("first_val"),
           enumLast(prios).as("last_val"),
           col("n"))
-    }),
-
-    // ---- r15 arithmetic-edge family (same text on both engines; the
-    // graft side runs through the dialect so duck_div/duck_mod/casts/
-    // pow/shift rewrites execute — per-case table ARITH_BATTERY_r15.json) ----
-    "arith_edges_div" -> ((s, dir) => {
-      Engine.registerAll(s, dir); Engine.sql(s, arithDivSql)
-    }),
-    "arith_edges_pow" -> ((s, dir) => {
-      Engine.registerAll(s, dir); Engine.sql(s, arithPowSql)
-    }),
-    "arith_edges_cast" -> ((s, dir) => {
-      Engine.registerAll(s, dir); Engine.sql(s, arithCastSql)
-    }),
-    "arith_edges_order" -> ((s, dir) => {
-      Engine.registerAll(s, dir); Engine.sql(s, arithOrderSql)
     })
   )
 
@@ -1075,4 +1040,6 @@ object ScalarFns {
     "arith_edges_cast" -> arithCastSql,
     "arith_edges_order" -> arithOrderSql
   )
+
+  val queries: Map[String, Build] = registry(hand, oracle)
 }

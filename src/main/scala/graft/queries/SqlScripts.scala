@@ -1,7 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.{Engine, SqlDialect}
+import org.apache.spark.sql.SparkSession
+import graft.Engine
 
 /** Round-5 batch: the three formerly-guardrailed dialect surfaces
   * (SIMILAR TO, COPY … FROM, DML RETURNING — each verified with the
@@ -14,11 +14,6 @@ import graft.{Engine, SqlDialect}
   * driver compare.
   */
 object SqlScripts {
-
-  private def script(s: SparkSession, dir: String, stmts: Seq[String]): DataFrame = {
-    Engine.registerAll(s, dir)
-    stmts.map(SqlDialect.sql(s, _)).last
-  }
 
   /** Engine-local scratch path for the COPY round-trip (each engine
     * writes and reads its OWN file — the aggregate result is what is
@@ -152,7 +147,7 @@ object SqlScripts {
       |  round(max(c.c_acctbal - s.s_acctbal), 2) AS max_gap
       |FROM supplier s JOIN customer c ON s.s_acctbal < c.c_acctbal""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val hand: Map[String, Build] = Map(
 
     "join_piecewise_merge" -> ((s, dir) => {
       // single-inequality inner join (reference PhysicalPiecewiseMergeJoin,
@@ -167,51 +162,29 @@ object SqlScripts {
       // query.
       val child = noBroadcastSession(s, dir)
       child.sql(piecewiseMergeSql)
-    }),
-
-    "fn_similar_to" -> ((s, dir) => {
-      // SIMILAR TO → anchored rlike (reference regexp_full_match binding,
-      // duckdb-6.cpp:5993-6041): same statement text on both engines;
-      // n_substr_trap pins the WHOLE-string semantics ('red' must not
-      // match 'red widget')
-      script(s, dir, Seq(similarToSql))
-    }),
-
-    "catalog_copy_from" -> ((s, dir) => {
-      // COPY t FROM 'file' (reference BufferedCSVReader → PhysicalInsert,
-      // duckdb-4.cpp:1949-3700): round-trip through each engine's own
-      // COPY TO output, appended twice to pin INSERT (not replace)
-      // semantics
-      script(s, dir, copyFromStmts(copyPathSpark))
-    }),
-
-    "catalog_returning" -> ((s, dir) => {
-      // DML RETURNING (reference insert planning, duckdb-4.cpp:9996):
-      // the UPDATE's returned rows carry the NEW values
-      script(s, dir, returningStmts)
-    }),
-
-    "catalog_tables_fn" -> ((s, dir) =>
-      script(s, dir, catalogSetup :+ tablesFnSql)),
-
-    "catalog_columns_fn" -> ((s, dir) =>
-      script(s, dir, catalogSetup :+ columnsFnSql)),
-
-    "catalog_constraints" -> ((s, dir) =>
-      script(s, dir, constraintsStmts)),
-
-    "catalog_constraints_fk" -> ((s, dir) =>
-      script(s, dir, fkStmts))
+    })
   )
 
   val oracle: Map[String, String] = Map(
     "join_piecewise_merge" -> piecewiseMergeSql,
+    // SIMILAR TO → anchored rlike (reference regexp_full_match binding,
+    // duckdb-6.cpp:5993-6041); n_substr_trap pins the WHOLE-string
+    // semantics ('red' must not match 'red widget')
     "fn_similar_to" -> similarToSql,
+    // COPY t FROM 'file' (reference BufferedCSVReader → PhysicalInsert,
+    // duckdb-4.cpp:1949-3700): round-trip through each engine's own
+    // COPY TO output, appended twice to pin INSERT (not replace)
+    // semantics
     "catalog_copy_from" -> copyFromStmts(copyPathDuck).mkString(";\n"),
+    // DML RETURNING (reference insert planning, duckdb-4.cpp:9996):
+    // the UPDATE's returned rows carry the NEW values
     "catalog_returning" -> returningStmts.mkString(";\n"),
     "catalog_tables_fn" -> (catalogSetup :+ tablesFnSql).mkString(";\n"),
     "catalog_columns_fn" -> (catalogSetup :+ columnsFnSql).mkString(";\n"),
     "catalog_constraints" -> constraintsStmts.mkString(";\n"),
     "catalog_constraints_fk" -> fkStmts.mkString(";\n")
   )
+
+  val queries: Map[String, Build] = registry(hand,
+    oracle + ("catalog_copy_from" -> copyFromStmts(copyPathSpark).mkString(";\n")))
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Engine
 
 /** TPC-DS-class optimizer stressors (round-6 verdict #8) — the shapes
@@ -12,12 +11,12 @@ import graft.Engine
   * driver's TPC-H-ish star schema.
   *
   * Each runs as the SAME SQL text on both engines (Spark via
-  * `Engine.registerAll` + `spark.sql`; DuckDB via the oracle map), so
-  * the comparison is parser-to-result: no DataFrame-side paraphrase to
-  * drift. Aggregate outputs are CAST/rounded in the text itself to
-  * pin identical result types on both engines (count/rank/grouping →
-  * BIGINT, sums/avgs → rounded DOUBLE — the established oracle
-  * convention).
+  * [[sqlQuery]], or raw `spark.sql` for the four in `hand`; DuckDB via
+  * the oracle map), so the comparison is parser-to-result: no
+  * DataFrame-side paraphrase to drift. Aggregate outputs are
+  * CAST/rounded in the text itself to pin identical result types on
+  * both engines (count/rank/grouping → BIGINT, sums/avgs → rounded
+  * DOUBLE — the established oracle convention).
   */
 object TpcDs {
 
@@ -118,19 +117,15 @@ object TpcDs {
       |WHERE r > 1.1 * peer OR r < 0.9 * peer
       |ORDER BY n_name, m""".stripMargin
 
-  private def sameText(sql: String): (SparkSession, String) => DataFrame =
+  private def sameText(sql: String): Build =
     (s, dir) => { Engine.registerAll(s, dir); s.sql(sql) }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Raw Spark SQL, not the dialect: through [[Engine.sql]] these four
+    * plan differently (`duck_icast`/`duck_sub`/`duck_avg` rewrites and
+    * `NULLS LAST`); the other three are their oracle text. */
+  private val hand: Map[String, Build] = Map(
     // window frame + rank layered over a join aggregate (TPC-DS q47/q57)
     "tpcds_window_over_join" -> sameText(windowOverJoinSql),
-    // multi-level ROLLUP with FILTER agg + HAVING + grouping() (q18/q22/q77)
-    "tpcds_rollup_filtered" -> sameText(rollupFilteredSql),
-    // correlated EXISTS chain + NOT EXISTS (q10/q35) — Catalyst
-    // decorrelates to semi/semi/anti joins on c_custkey
-    "tpcds_exists_chain" -> sameText(existsChainSql),
-    // channel INTERSECT then EXCEPT (q38/q87)
-    "tpcds_channel_intersect" -> sameText(channelIntersectSql),
     // rank-capped top-N per group over a joined aggregate (q67)
     "tpcds_topn_per_group" -> sameText(topnPerGroupSql),
     // heterogenous-channel UNION ALL re-aggregated (q5/q77) — partial
@@ -148,10 +143,16 @@ object TpcDs {
 
   val oracle: Map[String, String] = Map(
     "tpcds_window_over_join" -> windowOverJoinSql,
+    // multi-level ROLLUP with FILTER agg + HAVING + grouping() (q18/q22/q77)
     "tpcds_rollup_filtered" -> rollupFilteredSql,
+    // correlated EXISTS chain + NOT EXISTS (q10/q35) — Catalyst
+    // decorrelates to semi/semi/anti joins on c_custkey
     "tpcds_exists_chain" -> existsChainSql,
+    // channel INTERSECT then EXCEPT (q38/q87)
     "tpcds_channel_intersect" -> channelIntersectSql,
     "tpcds_topn_per_group" -> topnPerGroupSql,
     "tpcds_channel_union" -> channelUnionSql,
     "tpcds_moving_peer" -> movingPeerSql)
+
+  val queries: Map[String, Build] = registry(hand, oracle)
 }

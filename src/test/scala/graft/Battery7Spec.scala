@@ -83,7 +83,7 @@ class Battery7Spec extends SparkSpec {
       "SELECT s, length(t) AS n FROM read_csv('target/b7spec/t2', header=true)")
       .head()
     assert(r.getString(0) == "say \"hi\"")
-    assert(r.getInt(1) == 5)
+    assert(r.getLong(1) == 5L)
   }
 
   test("COPY TO PARTITION_BY writes a hive layout both formats read back") {

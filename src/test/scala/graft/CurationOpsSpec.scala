@@ -66,7 +66,7 @@ class CurationOpsSpec extends SparkSpec {
 
   test("lcgHash is injective and overflow-safe over a wide id range") {
     import spark.implicits._
-    // ADVICE r4: the old mod-1000003 pre-reduction gave ~1e6 distinct
+    // ADVICE r4 (5694f23:ADVICE.md): the old mod-1000003 pre-reduction gave ~1e6 distinct
     // values (ties biased quota samples toward low ids). The CRT-composed
     // form must be collision-free, nonneg (sortable identically by any
     // engine), and match a driver-side replay of the same formula.

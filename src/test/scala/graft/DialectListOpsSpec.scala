@@ -18,7 +18,7 @@ class DialectListOpsSpec extends SparkSpec {
         "len([1,2,3]) AS n FROM nation WHERE n_nationkey = 3").head()
     assert(r.getSeq[Int](0) == Seq(3, 1) || r.getSeq[Int](0).head == 3)
     assert(r.getSeq[Seq[Int]](1) == Seq(Seq(1, 2), Seq(3)))
-    assert(r.getInt(2) == 3)
+    assert(r.getLong(2) == 3L)
     // indexing stays indexing — and is 1-BASED like the reference
     // (r15 duck-probed: [1] is the first element, [0] is NULL; the r14
     // pin asserted Spark's 0-base, which silently shifted every

@@ -202,7 +202,7 @@ class DuckArithSpec extends SparkSpec {
   test("dialect rewrites stay out of strings, comments, and interval arithmetic") {
     val r = one("SELECT '5/0' AS a, 'a^b' AS b, length('x%y') AS c, " +
       "DATE '1994-01-01' + 1 AS d")
-    assert(r.getString(0) == "5/0" && r.getString(1) == "a^b" && r.getInt(2) == 3)
+    assert(r.getString(0) == "5/0" && r.getString(1) == "a^b" && r.getLong(2) == 3L)
     // interval division keeps Spark's own resolution (capture guard)
     val iv = one("SELECT INTERVAL '4' HOUR / 2 AS h")
     assert(iv.get(0) != null)

@@ -111,12 +111,12 @@ class DuckStrFnsSpec extends SparkSpec {
     assert(r.getInt(3) == 199352, "yearweek carries the ISO year")
     assert(r.getString(4) == "1 + 2 = 3")
     assert(r.getString(5) == "7-x")
-    assert(r.getInt(6) == 3)
+    assert(r.getLong(6) == 3L)
     assert(r.getBoolean(7))
     assert(r.getString(8) ==
       "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad")
     assert(r.getString(9) == "FF")
-    assert(r.getInt(10) == 36)
+    assert(r.getLong(10) == 36L)
   }
 
   test("frame EXCLUDE: NO OTHERS strips; active exclusions carry a named error") {

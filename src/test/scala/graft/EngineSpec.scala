@@ -99,7 +99,7 @@ class CatalogDmlSpec extends SparkSpec {
     assert(Engine.tables(spark).filter(col("table_name") === "t_intro").count() == 1)
     val info = Engine.tableInfo(spark, "t_intro").collect()
     assert(info.map(_.getString(1)).toSeq == Seq("k", "v"))
-    assert(info.map(_.getString(2)).toSeq == Seq("bigint", "double"))
+    assert(info.map(_.getString(2)).toSeq == Seq("BIGINT", "DOUBLE"))
     assert(Engine.summarize(Seq(1.0, 2.0, 3.0).toDF("x")).count() > 0)
   }
 

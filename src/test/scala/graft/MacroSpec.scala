@@ -305,7 +305,7 @@ class MacroSpec extends SparkSpec {
     Seq("fkr_child", "fkr_parent", "fkr_self", "fkr_lit", "fkr_uni").foreach(t =>
       SqlDialect.sql(spark, s"DROP TABLE IF EXISTS $t"))
     // CREATE OR REPLACE TABLE of an FK-referenced parent raises the same
-    // dependency error as DROP (ADVICE r11 — children would keep stale
+    // dependency error as DROP (ead240d:ADVICE.md — children would keep stale
     // resolved FKs against a vanished schema)
     SqlDialect.sql(spark, "CREATE TABLE fkr_parent (id INT PRIMARY KEY)")
     SqlDialect.sql(spark, "INSERT INTO fkr_parent VALUES (1)")
@@ -326,7 +326,7 @@ class MacroSpec extends SparkSpec {
     SqlDialect.sql(spark, "INSERT INTO fkr_lit VALUES (1, 'anything')") // no FK probe
     SqlDialect.sql(spark, "DROP TABLE fkr_lit")
     // self-referential FK: deleting a key together with every row that
-    // references it is consistent (post-delete probe, ADVICE r11)
+    // references it is consistent (post-delete probe, ead240d:ADVICE.md)
     SqlDialect.sql(spark,
       "CREATE TABLE fkr_self (id INT PRIMARY KEY, mgr INT REFERENCES fkr_self(id))")
     SqlDialect.sql(spark, "INSERT INTO fkr_self VALUES (1, NULL), (2, 1), (3, NULL)")

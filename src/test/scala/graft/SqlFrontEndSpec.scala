@@ -35,7 +35,21 @@ class SqlFrontEndSpec extends SparkSpec {
     "SELECT 10 - 1E+1" -> Seq(Seq(0.0)),
     // a `[` after a struct literal subscripts it
     "SELECT {'a': 1}['a']" -> Seq(Seq(1)),
-    "SELECT {'a': [5,6]}['a'][2]" -> Seq(Seq(6)))
+    "SELECT {'a': [5,6]}['a'][2]" -> Seq(Seq(6)),
+    // result types: DOUBLE roundings, BIGINT lengths and positions
+    "SELECT typeof(ceil(1.5::DOUBLE)), ceil(1.5::DOUBLE)" -> Seq(Seq("DOUBLE", 2.0)),
+    "SELECT typeof(floor(-1.5::DOUBLE)), floor(-1.5::DOUBLE)" -> Seq(Seq("DOUBLE", -2.0)),
+    "SELECT typeof(length('abc')), length('abc')" -> Seq(Seq("BIGINT", 3L)),
+    "SELECT typeof(len([1, 2])), len([1, 2])" -> Seq(Seq("BIGINT", 2L)),
+    "SELECT typeof(strpos('abc', 'b')), strpos('abc', 'b')" -> Seq(Seq("BIGINT", 2L)),
+    "SELECT typeof(instr('abc', 'c')), instr('abc', 'c')" -> Seq(Seq("BIGINT", 3L)),
+    "SELECT typeof(position('b' IN 'abc')), position('b' IN 'abc')" -> Seq(Seq("BIGINT", 2L)),
+    "SELECT typeof(array_length([1, 2, 3])), array_length([1, 2, 3])" -> Seq(Seq("BIGINT", 3L)),
+    // declared metadata in the reference's six columns and type names
+    "CREATE OR REPLACE TABLE fe_ti (id INTEGER PRIMARY KEY, v VARCHAR NOT NULL DEFAULT 'x', " +
+      "w DOUBLE); SELECT * FROM pragma_table_info('fe_ti')" -> Seq(
+        Seq(0, "id", "INTEGER", true, null, true), Seq(1, "v", "VARCHAR", true, "'x'", false),
+        Seq(2, "w", "DOUBLE", false, null, false)))
 
   for ((sql, want) <- cases) test(s"literal- and identifier-safe: $sql") {
     SqlDialect.sql(spark, "CREATE OR REPLACE TABLE fe_ret (id INTEGER, s VARCHAR)")

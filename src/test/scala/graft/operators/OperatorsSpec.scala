@@ -62,7 +62,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dedupAgainst never caps the batch side: hot batch bucket keeps all its candidates") {
-    // Regression (round-8 ADVICE): a batch-side (band, bucket) group
+    // Regression (round-8 ADVICE, 83b9da8:ADVICE.md): a batch-side (band, bucket) group
     // exceeding maxBucket must NOT be dropped — the cap applies to the
     // persisted HISTORY index only, keeping batch answers identical to
     // the streaming twin by construction. 150 byte-identical batch
@@ -203,7 +203,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash banding rejects band layouts that would collapse recall") {
-    // ADVICE r4: numBands > numHashes makes rows-per-band 0 (every doc
+    // ADVICE r4 (5694f23:ADVICE.md): numBands > numHashes makes rows-per-band 0 (every doc
     // collides into one bucket, then the skew cap drops everything —
     // silent recall 0); non-divisible layouts silently ignore trailing
     // signature slots. Both must fail loudly instead.
@@ -518,7 +518,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("semanticClusters rejects inputs outside the exact-arithmetic envelope") {
-    // ADVICE r4: the bit-exactness claim holds only while dim·max|w|² <
+    // ADVICE r4 (5694f23:ADVICE.md): the bit-exactness claim holds only while dim·max|w|² <
     // 2^52 — unnormalized embeddings (or an oversized `scale`) must fail
     // loudly, not silently drop low bits cross-engine.
     val huge = Seq((1L, Seq(1e9, 1e9)), (2L, Seq(-1e9, 1e9)))

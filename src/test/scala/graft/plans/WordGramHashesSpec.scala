@@ -63,7 +63,7 @@ class WordGramHashesSpec extends SparkSpec {
   }
 
   test("null tokens hash as the empty string in both paths (no NPE)") {
-    // ADVICE r4: ArrayType(StringType) admits containsNull, so SQL
+    // ADVICE r4 (5694f23:ADVICE.md): ArrayType(StringType) admits containsNull, so SQL
     // callers can pass array('a', NULL) — both eval and codegen must
     // treat the null token as the empty string instead of crashing
     val expected = {
