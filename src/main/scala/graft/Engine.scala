@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.{coalesce, col, expr, floor, hash, lit, monotonically_increasing_id, pmod, sum, when}
 
 /** Session + catalog facade for the graft engine.
@@ -291,7 +293,13 @@ object Engine {
 
   // ---- in-memory catalog DML (reference: PhysicalInsert/Delete/Update,
   // duckdb-4.cpp:9996-10015; here emulated over temp views — Spark is not
-  // a transactional store, SURVEY.md §2.11) ----
+  // a transactional store, SURVEY.md §2.11). Like the reference, which
+  // emits the affected-row count from the pipeline that applies the
+  // change, a statement is ONE job: its table's next state is one plan
+  // whose hidden flag column [[Hit]] marks the statement's rows, the count
+  // is observed (`Dataset.observe`) in the job of its one
+  // `localCheckpoint`, and RETURNING and constraint probes read that
+  // checkpoint. The view is replaced only by [[Dml.commit]]. ----
 
   /** CREATE TABLE name AS df. */
   def createTable(spark: SparkSession, name: String, df: DataFrame): Unit = {
@@ -301,27 +309,106 @@ object Engine {
     putTableEntry(spark, name, TableEntry())
   }
 
-  /** INSERT INTO name (append rows; lineage truncated so repeated inserts
-    * don't stack plans). */
-  def insertInto(spark: SparkSession, name: String, rows: DataFrame): Unit =
-    spark.table(name).unionByName(rows).localCheckpoint().createOrReplaceTempView(name)
+  /** Hidden flag column of a DML plan: TRUE on the rows the statement
+    * writes (INSERT, UPDATE) or removes (DELETE). */
+  private[graft] val Hit = "__graft_dml_hit"
+
+  /** `keep(df)` checkpointed in one job, with the number of `df`'s rows
+    * where `hit` is TRUE observed in that job (an empty relation reports 0
+    * without a job). */
+  private[graft] def checkpointCounted(df: DataFrame, hit: Column = lit(true),
+      keep: DataFrame => DataFrame = identity): (DataFrame, Long) = {
+    val obs = Observation()
+    val cp = keep(df.observe(obs, coalesce(sum(when(hit, 1L)), lit(0L)).as("n")))
+      .localCheckpoint()
+    (cp, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** One DML statement, materialized but not yet visible: `count` is the
+    * number of [[Hit]] rows. A statement staged with `flagged` keeps the
+    * flag (and a DELETE its removed rows) in the checkpoint, so `rows` can
+    * read what the statement wrote or removed. */
+  final class Dml private[Engine] (name: String, cp: DataFrame, val count: Long,
+                                   flagged: Boolean, removes: Boolean) {
+    /** The rows the statement wrote (as stored) or removed. */
+    def rows: DataFrame = {
+      require(flagged, s"DML on '$name': rows of a statement staged without its flag")
+      cp.filter(col(Hit)).drop(Hit)
+    }
+    /** The table's next state. */
+    def state: DataFrame = if (flagged) nextState(cp, removes) else cp
+    /** Replace the table's view with `state`; returns `count`. */
+    def commit(): Long = { state.createOrReplaceTempView(name); count }
+  }
+
+  private def nextState(next: DataFrame, removes: Boolean): DataFrame =
+    (if (removes) next.filter(!col(Hit)) else next).drop(Hit)
+
+  /** Materialize `next` (carrying [[Hit]]) with one `localCheckpoint`,
+    * its [[Hit]] rows counted in the same job. */
+  private def stage(name: String, next: DataFrame, flagged: Boolean,
+                    removes: Boolean = false): Dml = {
+    val (cp, n) = checkpointCounted(next, col(Hit),
+      if (flagged) identity else nextState(_, removes))
+    new Dml(name, cp, n, flagged, removes)
+  }
+
+  /** `kept` then `rows` (flagged), coalesced (narrow, no shuffle) to at
+    * most max(the table's partitions, defaultParallelism): a VALUES list
+    * parallelizes into up to defaultParallelism slices, and a plain union
+    * would add them all to the table on every INSERT. */
+  private def appended(spark: SparkSession, name: String, kept: DataFrame,
+                       rows: DataFrame): DataFrame =
+    kept.unionByName(rows.withColumn(Hit, lit(true)))
+      .coalesce(math.max(storedPartitions(spark.table(name)),
+        spark.sparkContext.defaultParallelism))
+
+  /** Partitions of a table's stored state, read without running a job. A
+    * plan with an exchange (a frame createTable registered unmaterialized)
+    * fixes its count only when it runs, at most spark.sql.shuffle.partitions. */
+  private def storedPartitions(t: DataFrame): Int = {
+    val plan = t.queryExecution.executedPlan
+    if (plan.exists(p => p.isInstanceOf[AdaptiveSparkPlanExec] || p.isInstanceOf[Exchange]))
+      t.sparkSession.sessionState.conf.numShufflePartitions
+    else plan.execute().getNumPartitions
+  }
+
+  private def unhit(df: DataFrame): DataFrame = df.withColumn(Hit, lit(false))
+
+  /** INSERT INTO name: stored rows then `rows`. */
+  private[graft] def stageInsert(spark: SparkSession, name: String, rows: DataFrame,
+                                 flagged: Boolean): Dml =
+    stage(name, appended(spark, name, unhit(spark.table(name)), rows), flagged)
 
   /** DELETE FROM name WHERE cond. SQL DELETE removes only rows where the
-    * predicate is TRUE — a NULL predicate keeps the row (filter(!cond)
-    * alone would drop it, since NOT NULL = NULL filters out). */
-  def deleteWhere(spark: SparkSession, name: String, cond: Column): Unit =
-    spark.table(name).filter(!coalesce(cond, lit(false)))
-      .localCheckpoint().createOrReplaceTempView(name)
+    * predicate is TRUE — a NULL predicate keeps the row and is not
+    * counted. */
+  private[graft] def stageDelete(spark: SparkSession, name: String, cond: Column,
+                                 flagged: Boolean): Dml =
+    stage(name, spark.table(name).withColumn(Hit, coalesce(cond, lit(false))),
+      flagged, removes = true)
 
-  /** UPDATE name SET col = value WHERE cond. */
+  /** UPDATE name SET col = value WHERE cond: every assignment reads the
+    * row's old values, as in SQL (`SET a = b, b = a` swaps). */
+  private[graft] def stageUpdate(spark: SparkSession, name: String, cond: Column,
+                                 assignments: Map[String, Column], flagged: Boolean): Dml =
+    stage(name, spark.table(name).withColumn(Hit, coalesce(cond, lit(false)))
+      .withColumns(assignments.map { case (c, v) => c -> when(col(Hit), v).otherwise(col(c)) }),
+      flagged)
+
+  /** INSERT INTO name (append rows). Returns the number of rows written. */
+  def insertInto(spark: SparkSession, name: String, rows: DataFrame): Long =
+    stageInsert(spark, name, rows, flagged = false).commit()
+
+  /** DELETE FROM name WHERE cond. Returns the number of rows removed. */
+  def deleteWhere(spark: SparkSession, name: String, cond: Column): Long =
+    stageDelete(spark, name, cond, flagged = false).commit()
+
+  /** UPDATE name SET col = value WHERE cond. Returns the number of rows
+    * updated. */
   def updateWhere(spark: SparkSession, name: String, cond: Column,
-                  assignments: Map[String, Column]): Unit = {
-    val t = spark.table(name)
-    val updated = assignments.foldLeft(t) { case (acc, (c, v)) =>
-      acc.withColumn(c, when(cond, v).otherwise(col(c)))
-    }
-    updated.localCheckpoint().createOrReplaceTempView(name)
-  }
+                  assignments: Map[String, Column]): Long =
+    stageUpdate(spark, name, cond, assignments, flagged = false).commit()
 
   // ---- per-session table entries (reference catalog table entries):
   // graft backs CTAS snapshots and CREATE TABLE definitions with temp
@@ -342,7 +429,11 @@ object Engine {
                               notNull: Seq[String] = Nil,
                               unique: Seq[(String, Seq[String])] = Nil,
                               checks: Seq[String] = Nil,
-                              foreignKeys: Seq[(Seq[String], String, Seq[String])] = Nil)
+                              foreignKeys: Seq[(Seq[String], String, Seq[String])] = Nil) {
+    /** Declares a constraint an INSERT or UPDATE probes. */
+    def constrained: Boolean =
+      notNull.nonEmpty || unique.nonEmpty || checks.nonEmpty || foreignKeys.nonEmpty
+  }
 
   private val tableEntryMaps = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
@@ -467,18 +558,16 @@ object Engine {
   // DO NOTHING = skip conflicting rows, DO UPDATE = in-place assignment).
   // The key comes from the table's entry (its declared PRIMARY KEY) — Spark has no
   // constraint enforcement, so the key is planning metadata, not an
-  // integrity guarantee (documented).
+  // integrity guarantee (documented). Each is one job, like the plain
+  // forms above.
 
   /** INSERT OR REPLACE: rows whose key already exists replace the stored
     * row (delete-then-insert). Returns the number of rows written. */
   def insertOrReplace(spark: SparkSession, name: String, rows: DataFrame,
                       keys: Seq[String]): Long = {
-    val target = spark.table(name)
-    val n = rows.count()
-    val kept = target.join(
+    val kept = spark.table(name).join(
       rows.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    kept.unionByName(rows).localCheckpoint().createOrReplaceTempView(name)
-    n
+    stage(name, appended(spark, name, unhit(kept), rows), flagged = false).commit()
   }
 
   /** ON CONFLICT DO NOTHING: insert only rows whose key is absent.
@@ -488,34 +577,29 @@ object Engine {
     val target = spark.table(name)
     val fresh = rows.join(
       target.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .localCheckpoint()
-    val n = fresh.count()
-    target.unionByName(fresh).localCheckpoint().createOrReplaceTempView(name)
-    n
+    stage(name, appended(spark, name, unhit(target), fresh), flagged = false).commit()
   }
 
   /** ON CONFLICT (keys) DO UPDATE SET c = expr: conflicting target rows
     * get the assignments applied (the incoming row is visible as
     * `excluded.<col>` in the expressions, like the reference); fresh rows
-    * insert as-is. Returns the number of incoming rows. */
+    * insert as-is. Returns the number of rows updated or inserted. */
   def insertOnConflictUpdate(spark: SparkSession, name: String, rows: DataFrame,
                              keys: Seq[String],
                              assignments: Map[String, String]): Long = {
     val target = spark.table(name)
-    val n = rows.count()
     val excl = rows.select(target.columns.map(c => col(c).as(s"__excl_$c")).toSeq: _*)
     val joined = target.join(excl,
       keys.map(k => col(k) === col(s"__excl_$k")).reduce(_ && _), "left")
-    val matched = keys.map(k => col(s"__excl_$k").isNotNull).reduce(_ && _)
+      .withColumn(Hit, keys.map(k => col(s"__excl_$k").isNotNull).reduce(_ && _))
     def rewriteExcluded(e: String): String =
       e.replaceAll("(?i)\\bexcluded\\s*\\.\\s*([A-Za-z_][A-Za-z0-9_]*)", "__excl_$1")
-    val updated = assignments.foldLeft(joined) { case (acc, (c, e)) =>
-      acc.withColumn(c, when(matched, expr(rewriteExcluded(e))).otherwise(col(c)))
-    }.select(target.columns.map(col).toSeq: _*)
+    val updated = joined.withColumns(assignments.map { case (c, e) =>
+      c -> when(col(Hit), expr(rewriteExcluded(e))).otherwise(col(c)) })
+      .select((target.columns :+ Hit).map(col).toSeq: _*)
     val freshRows = rows.join(
       target.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    updated.unionByName(freshRows).localCheckpoint().createOrReplaceTempView(name)
-    n
+    stage(name, appended(spark, name, updated, freshRows), flagged = false).commit()
   }
 
   // ---- introspection (reference: duckdb_tables()/pragma_table_info,

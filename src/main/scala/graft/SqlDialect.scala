@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dialect front end: reference-SQL statements onto Spark SQL (SURVEY.md
@@ -111,6 +111,11 @@ object SqlDialect {
 
   private def validationEnabled(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.validateConstraints").forall(_.toBoolean)
+
+  /** A declared FOREIGN KEY references `name`, so its DELETE and UPDATE
+    * run the parent-side probe. */
+  private def referenced(spark: SparkSession, name: String): Boolean =
+    Engine.tableEntries(spark).values.exists(_.foreignKeys.exists(_._2.equalsIgnoreCase(name)))
 
   /** Parent-side FOREIGN KEY probe (reference ForeignKeyConstraint,
     * duckdb.hpp:20272) shared by DELETE and UPDATE: raises when a key the
@@ -456,19 +461,22 @@ object SqlDialect {
 
   /** CREATE [OR REPLACE] TABLE <name> (`i`) — `AS <select>` is a CTAS
     * snapshot (reference CreateTableAs, duckdb-9.cpp binder), materialized
-    * eagerly so later DML sees a stable snapshot; a CTAS result declares
-    * no constraints, so the replaced table's metadata does not carry
-    * over. `(<column defs>)` is an empty typed table with its declared
-    * metadata (reference CreateTableInfo + constraint binding). */
+    * eagerly so later DML sees a stable snapshot, and returns the
+    * reference's one `Count` row, counted in the snapshot's job; a CTAS
+    * result declares no constraints, so the replaced table's metadata
+    * does not carry over. `(<column defs>)` is an empty typed table with
+    * its declared metadata (reference CreateTableInfo + constraint
+    * binding). */
   private def createTable(spark: SparkSession, s: Stmt, i: Int): Option[DataFrame] = {
     if (!s.isName(i)) return None
     val name = s.text(i)
     if (s.kw(i + 1) == "as" && s.n > i + 2) {
       assertNoFkDependents(spark, name, "drop")
-      val df = sql(spark, s.rest(i + 2)).localCheckpoint()
+      val (df, n) = Engine.checkpointCounted(sql(spark, s.rest(i + 2)))
       df.createOrReplaceTempView(name)
       Engine.putTableEntry(spark, name, Engine.TableEntry())
-      Some(df)
+      import spark.implicits._
+      Some(Seq(n).toDF("Count"))
     } else if (s.groupEnds(i + 1)) {
       assertNoFkDependents(spark, name, "drop")
       val (schema, entry) = columnDefs(spark, name, splitTopLevel(s.inner(i + 1)))
@@ -675,7 +683,8 @@ object SqlDialect {
       .getOrElse(throw new IllegalArgumentException(
         s"INSERT conflict clause on '$name': no PRIMARY KEY declared " +
           "(create the table with a PRIMARY KEY column)"))
-    if (end < s.n && (mode.nonEmpty || conflict.isDefined))
+    val returning = end < s.n
+    if (returning && (mode.nonEmpty || conflict.isDefined))
       throw new UnsupportedOperationException(
         "RETURNING with OR REPLACE / OR IGNORE / ON CONFLICT is not supported")
     // declared-constraint validation (reference PhysicalInsert
@@ -683,54 +692,67 @@ object SqlDialect {
     // the reference's OR IGNORE only forgives key conflicts —
     // while uniqueness raises only on plain INSERT (conflict
     // clauses consume the conflict as their resolution input)
-    entry.filter(_ => validationEnabled(spark)).foreach(e =>
-      Engine.validateConstraints(spark, name, rows, e,
-        checkUnique = mode.isEmpty && conflict.isEmpty))
+    val probes = entry.filter(e => e.constrained && validationEnabled(spark))
     val count = (mode, conflict) match {
       case ("", None) =>
-        val c = rows.count(); Engine.insertInto(spark, name, rows); c
-      case ("OR REPLACE", None) => Engine.insertOrReplace(spark, name, rows, declaredKeys)
-      case (_, None) => Engine.insertOrIgnore(spark, name, rows, declaredKeys)
-      case ("", Some((cols, d))) if kw(d) == "nothing" =>
-        Engine.insertOrIgnore(spark, name, rows, cols.getOrElse(declaredKeys))
-      case ("", Some((cols, d))) =>
-        val assigns = splitTopLevel(s.span(d + 2, end)).map { a =>
-          val eq = a.indexOf('=')
-          require(eq > 0, s"ON CONFLICT DO UPDATE: malformed assignment '$a'")
-          a.substring(0, eq).trim -> a.substring(eq + 1).trim
-        }.toMap
-        Engine.insertOnConflictUpdate(spark, name, rows,
-          cols.getOrElse(declaredKeys), assigns)
-      case (m, Some(_)) =>
+        // the probes and RETURNING read the rows as stored (a nextval or
+        // random() source runs once), and the view changes only after
+        // the probes pass
+        val dml = Engine.stageInsert(spark, name, rows, flagged = returning || probes.nonEmpty)
+        probes.foreach(Engine.validateConstraints(spark, name, dml.rows, _, checkUnique = true))
+        return commit(spark, s, dml)
+      case (m, Some(_)) if m.nonEmpty =>
         throw new UnsupportedOperationException(s"INSERT: cannot combine $m with ON CONFLICT")
+      case _ =>
+        // a conflict form probes the incoming batch: the reference also
+        // checks the rows a conflict skips or replaces, which the stored
+        // state does not hold
+        probes.foreach(Engine.validateConstraints(spark, name, rows, _, checkUnique = false))
+        conflict match {
+          case None if mode == "OR REPLACE" => Engine.insertOrReplace(spark, name, rows, declaredKeys)
+          case None => Engine.insertOrIgnore(spark, name, rows, declaredKeys)
+          case Some((cols, d)) if kw(d) == "nothing" =>
+            Engine.insertOrIgnore(spark, name, rows, cols.getOrElse(declaredKeys))
+          case Some((cols, d)) =>
+            val assigns = splitTopLevel(s.span(d + 2, end)).map { a =>
+              val eq = a.indexOf('=')
+              require(eq > 0, s"ON CONFLICT DO UPDATE: malformed assignment '$a'")
+              a.substring(0, eq).trim -> a.substring(eq + 1).trim
+            }.toMap
+            Engine.insertOnConflictUpdate(spark, name, rows,
+              cols.getOrElse(declaredKeys), assigns)
+        }
     }
-    // RETURNING on plain INSERT: the inserted rows, like the reference
-    Some(if (end < s.n) rows.selectExpr(s.returningItems: _*) else Seq(count).toDF("count"))
+    Some(Seq(count).toDF("count"))
+  }
+
+  /** Make a staged INSERT/DELETE/UPDATE visible; its result is the
+    * RETURNING items over the rows it wrote or removed, or its count. */
+  private def commit(spark: SparkSession, s: Stmt, dml: Engine.Dml): Option[DataFrame] = {
+    import spark.implicits._
+    dml.commit()
+    Some(if (s.returning < s.n) dml.rows.selectExpr(s.returningItems: _*)
+         else Seq(dml.count).toDF("count"))
   }
 
   /** DELETE FROM t [WHERE cond] [RETURNING …]. */
   private def delete(spark: SparkSession, s: Stmt): Option[DataFrame] = {
-    import spark.implicits._
     val end = s.returning
     if (!s.isName(2) || !(end == 3 || (s.kw(3) == "where" && end > 4))) return None
     val name = s.text(2)
     val cond = if (end == 3) lit(true) else expr(s.span(4, end))
-    // materialize the doomed rows BEFORE the view is re-registered
-    // (filter keeps only predicate-TRUE rows — exactly the deleted set)
-    val deleted = spark.table(name).filter(cond).localCheckpoint()
+    val returning = end < s.n
+    val probes = validationEnabled(spark) && referenced(spark, name)
+    val dml = Engine.stageDelete(spark, name, cond, flagged = returning || probes)
     // a deleted key still referenced by a declared child FK raises
     // before the delete lands
-    if (validationEnabled(spark))
-      assertKeysUnreferenced(spark, name, rc => deleted.select(rc.map(col): _*),
-        spark.table(name).filter(!cond))
-    Engine.deleteWhere(spark, name, cond)
-    Some(if (end < s.n) deleted.selectExpr(s.returningItems: _*)
-         else Seq(deleted.count()).toDF("count"))
+    if (probes)
+      assertKeysUnreferenced(spark, name, rc => dml.rows.select(rc.map(col): _*), dml.state)
+    commit(spark, s, dml)
   }
 
   /** UPDATE t SET c = expr[, …] [WHERE cond] [RETURNING …]. */
   private def update(spark: SparkSession, s: Stmt): Option[DataFrame] = {
-    import spark.implicits._
     val end = s.returning
     if (!s.isName(1) || s.kw(2) != "set" || end <= 3) return None
     val name = s.text(1)
@@ -748,12 +770,12 @@ object SqlDialect {
       val rhs = if (rhsText.equalsIgnoreCase("default"))
         tblDefaults.getOrElse(lhs.toLowerCase, "NULL") else rhsText
       lhs -> expr(rhs)
-    }
-    // RETURNING on UPDATE reports the NEW row values: apply the same
-    // assignment fold updateWhere uses, but over the matched rows only
-    val post = assignments.foldLeft(spark.table(name).filter(cond)) {
-      case (acc, (c, v)) => acc.withColumn(c, v)
-    }.localCheckpoint()
+    }.toMap
+    val returning = end < s.n
+    val probes = validationEnabled(spark) &&
+      (entry.exists(_.constrained) || referenced(spark, name))
+    // RETURNING and the probes read the NEW row values as stored
+    val dml = Engine.stageUpdate(spark, name, cond, assignments, flagged = returning || probes)
     // declared-constraint validation on the POST-assignment rows,
     // BEFORE the view is replaced (the reference verifies updates
     // the same way it verifies inserts): NOT NULL + CHECK on the
@@ -761,18 +783,15 @@ object SqlDialect {
     // UNIQUE/PK on the POST-update whole-table key multiset when an
     // assignment touches a declared key — the old/new delta a
     // changed-rows-only check cannot see.
-    val assignedCols = assignments.map(_._1.toLowerCase).toSet
-    lazy val newTable = assignments.foldLeft(spark.table(name)) {
-      case (acc, (c, v)) => acc.withColumn(c, when(cond, v).otherwise(col(c)))
-    }
-    entry.filter(_ => validationEnabled(spark)).foreach { e =>
-      Engine.validateConstraints(spark, name, post, e.copy(unique = Nil),
+    val assignedCols = assignments.keySet.map(_.toLowerCase)
+    entry.filter(_ => probes).foreach { e =>
+      Engine.validateConstraints(spark, name, dml.rows, e.copy(unique = Nil),
         checkUnique = false)
       e.unique
         .filter(_._2.exists(k => assignedCols(k.toLowerCase)))
         .foreach { case (label, keys) =>
           // SQL UNIQUE ignores rows with any NULL key part
-          val keyed = newTable.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+          val keyed = dml.state.filter(keys.map(col(_).isNotNull).reduce(_ && _))
           val dup = keyed.groupBy(keys.map(col): _*)
             .count().filter(col("count") > 1).limit(1).count() > 0
           if (dup) throw new Engine.ConstraintViolation(
@@ -785,14 +804,12 @@ object SqlDialect {
     // keys = old key set EXCEPT the post-update key set (rows not
     // matching cond keep their old key, so a same-key rewrite removes
     // nothing).
-    if (validationEnabled(spark))
+    if (probes)
       assertKeysUnreferenced(spark, name,
         rc => spark.table(name).select(rc.map(col): _*)
-          .except(newTable.select(rc.map(col): _*)),
-        newTable, rc => rc.exists(c => assignedCols(c.toLowerCase)))
-    Engine.updateWhere(spark, name, cond, assignments.toMap)
-    Some(if (end < s.n) post.selectExpr(s.returningItems: _*)
-         else Seq(post.count()).toDF("count"))
+          .except(dml.state.select(rc.map(col): _*)),
+        dml.state, rc => rc.exists(c => assignedCols(c.toLowerCase)))
+    commit(spark, s, dml)
   }
 
   /** ALTER TABLE t RENAME TO u | RENAME COLUMN a TO b | ADD COLUMN c
@@ -865,15 +882,14 @@ object SqlDialect {
           (r, d) => r.option("sep", d)
         }.csv(path)
       }
-    val renamed = rows.toDF(target.columns.toSeq: _*)
-    val n = renamed.count()
-    Engine.insertInto(spark, name, renamed)
+    val n = Engine.insertInto(spark, name, rows.toDF(target.columns.toSeq: _*))
     import spark.implicits._
     Seq(n).toDF("Count")
   }
 
   /** COPY … TO → DataFrame write; returns the copied row count like the
-    * reference (PhysicalCopyToFile, duckdb-4.cpp:4689). Option matrix
+    * reference (PhysicalCopyToFile, duckdb-4.cpp:4689), observed in the
+    * write's own job. Option matrix
     * (r17 BATTERY7): FORMAT, HEADER [bool], DELIMITER/DELIM/SEP, QUOTE,
     * ESCAPE, NULL 'str', COMPRESSION, DATEFORMAT/TIMESTAMPFORMAT
     * (strftime text translated to the writer's pattern language),
@@ -881,16 +897,16 @@ object SqlDialect {
     * on both formats. */
   private def copyTo(spark: SparkSession, src: String, path: String,
                      optPairs: Seq[(String, String)]): DataFrame = {
+    val obs = Observation()
     val df =
-      if (src.startsWith("(")) sql(spark, src.stripPrefix("(").stripSuffix(")"))
-      else spark.table(src)
+      (if (src.startsWith("(")) sql(spark, src.stripPrefix("(").stripSuffix(")"))
+       else spark.table(src)).observe(obs, count(lit(1)).as("n"))
     val optMap = optPairs.toMap
     val fmt = optMap.get("FORMAT").map(strVal(_).toUpperCase).getOrElse(
       if (path.toLowerCase.endsWith(".parquet")) "PARQUET" else "CSV")
     val partitionCols: Seq[String] = optMap.get("PARTITION_BY").toSeq
       .flatMap(v => v.stripPrefix("(").stripSuffix(")").split(",")
         .map(_.trim).filter(_.nonEmpty))
-    val n = df.count()
     if (fmt == "PARQUET") {
       val w0 = df.write.mode("overwrite")
       val w = optMap.get("COMPRESSION")
@@ -923,7 +939,7 @@ object SqlDialect {
       sources.Csv.write(df, path, csvOpts.toMap, partitionCols)
     }
     import spark.implicits._
-    Seq(n).toDF("Count")
+    Seq(obs.get("n").asInstanceOf[Long]).toDF("Count")
   }
 
   /** CREATE [OR REPLACE] SEQUENCE [IF NOT EXISTS] name [START [WITH] n]
@@ -1012,14 +1028,14 @@ object SqlDialect {
     val sampled = rewriteSamples(b)
     val t = if (sampled eq b.q) b else new Stmt(sampled)
     // `LIMIT p%` ending the statement → executed count + limit
-    // (localCheckpoint: the count pass materializes the base result
-    // once and the limit reuses it; floor, not ceil: duck-probed r14b,
-    // LIMIT 26% of 10 rows -> 2)
+    // (the base result is materialized once, counted in that job, and
+    // the limit reuses it, so a sampled base is drawn once; floor, not
+    // ceil: duck-probed r14b, LIMIT 26% of 10 rows -> 2)
     val l = t.n - 3
     if (l > 0 && t.kw(l) == "limit" && t.isNum(l + 1) && t.isPunct(l + 2, "%")) {
-      val base = spark.sql(rewriteCore(spark, t.q.substring(0, t.toks(l).start)))
-        .localCheckpoint()
-      return base.limit(math.floor(base.count() * t.text(l + 1).toDouble / 100.0).toInt)
+      val (base, n) = Engine.checkpointCounted(
+        spark.sql(rewriteCore(spark, t.q.substring(0, t.toks(l).start))))
+      return base.limit(math.floor(n * t.text(l + 1).toDouble / 100.0).toInt)
     }
     // a nested `LIMIT n%` (closing a subquery or CTE) would die as an
     // opaque Spark parse error — refuse loudly instead

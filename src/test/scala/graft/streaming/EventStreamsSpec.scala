@@ -100,7 +100,7 @@ class EventStreamsSpec extends SparkSpec {
       .select(col("user_id"), col("value"))
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.Engine.insertInto(spark, "stream_sink", batch)
+        graft.Engine.insertInto(spark, "stream_sink", batch); ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
