@@ -755,7 +755,7 @@ object Dedup {
     // read FOUR times by this pipeline (prefix side A, prefix side B,
     // refine side A, refine side B), and Catalyst additionally
     // re-evaluates the shingle kernel inside the pushed size/notnull
-    // filter — the before-plan (plans/r18/dedup_prefix_filter_before.txt)
+    // filter — the before-plan (91246ba:plans/r18/dedup_prefix_filter_before.txt)
     // shows 4 duplicated scan→shingle subtrees and 2 duplicated
     // dfreq-aggregate+window subtrees. One eager localCheckpoint of the
     // (id, shingles) rows, and one of the tiny prefix-token relation,

@@ -9,8 +9,9 @@ import graft.operators.{RangeJoin, Recursion}
 /** Relational operator inventory: scans, aggregation, joins, sort/limit,
   * set operations, windows (SURVEY.md §2.1-2.7).
   *
-  * An entry is its oracle SQL ([[registry]]) or, where the dialect does
-  * not plan it the same, declarative DataFrame API — either way Catalyst
+  * An entry is its oracle SQL ([[registry]]) or, where the SQL does not
+  * plan it as well (a measured rewrite, a join hint, an engine
+  * operator), declarative DataFrame API — either way Catalyst
   * plans the physical operators (hash agg partial+final, broadcast vs
   * shuffle join, TakeOrderedAndProject, …). Aggregate outputs are
   * aliased identically to the oracle SQL (the oracle compare hashes by
@@ -27,21 +28,6 @@ object Relational {
   // were ~55 ms of win_ignore_nulls' 248 ms (BASELINE.md round 14)
   private def fround(c: org.apache.spark.sql.Column, s: Int) =
     call_function("fast_round", c, lit(s))
-
-    // run_avg accumulates EXACT integer cents, then ONE shared division —
-  // bit-identical doubles on both engines, so no final round() is needed
-  // (and none would be safe: the engines' round() pipelines disagree on
-  // rational half-cent boundaries — observed 5937.405 → .41 vs .40)
-  private[queries] val winNamedSql =
-    """SELECT c_custkey,
-      |  CAST(row_number() OVER w AS BIGINT) AS rn,
-      |  CAST(rank() OVER w AS BIGINT) AS rnk,
-      |  CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) OVER w AS DOUBLE)
-      |    / (100.0 * count(*) OVER w) AS run_avg
-      |FROM customer
-      |WINDOW w AS (PARTITION BY c_nationkey
-      |             ORDER BY c_acctbal DESC, c_custkey)""".stripMargin
-
 
   private[queries] val sampleSystemSql =
     """WITH pop AS (SELECT count(*) AS n_total FROM lineitem),
@@ -204,26 +190,8 @@ object Relational {
 
     // ---- aggregation (SURVEY §2.4) ----
 
-    "agg_q1_pricing" -> ((s, dir) => {
-      // TPC-H Q1 shape: radix-partitioned hash agg in the reference
-      // (duckdb-3.cpp:8480) = partial+final HashAggregateExec here.
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= expr("timestamp'1998-09-02 00:00:00'"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))), 2).as("sum_charge"),
-          round(avg(col("l_quantity")), 4).as("avg_qty"),
-          round(avg(col("l_extendedprice")), 4).as("avg_price"),
-          round(avg(col("l_discount")), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
     "agg_distinct" -> ((s, dir) => {
-      // r18 (before-plan plans/r18/agg_distinct_before.txt): three
+      // r18 (before-plan 91246ba:plans/r18/agg_distinct_before.txt): three
       // distinct aggregates over DIFFERENT columns plan as an Expand ×3
       // — every scan row tripled before the partial dedup, 1.8M rows
       // into a 5-key hash aggregate (guide §2.3 "shuffle fewer bytes").
@@ -251,22 +219,6 @@ object Relational {
       l1.join(l2, col("l_returnflag") <=> col("__rf2"))
         .join(l3, col("l_returnflag") <=> col("__rf3"))
         .drop("__rf2", "__rf3")
-    }),
-
-    "agg_filtered" -> ((s, dir) => {
-      // FILTER (WHERE …) clause on aggregates (reference: aggregate
-      // filters in PhysicalHashAggregate, duckdb-3.cpp:8480)
-      t(s, dir, "lineitem").groupBy(col("l_returnflag")).agg(
-        count(when(col("l_quantity") > 25, 1)).as("n_big"),
-        round(sum(when(col("l_discount") > 0.05, col("l_extendedprice"))), 2).as("rev_disc"),
-        round(avg(when(col("l_linestatus") === "F", col("l_quantity"))), 4).as("avg_f_qty"))
-    }),
-
-    "agg_string" -> ((s, dir) => {
-      // ordered string_agg (sorted-aggregate machinery, duckdb-5.cpp:1680)
-      t(s, dir, "nation").groupBy(col("n_regionkey").cast("long").as("rk")).agg(
-        array_join(sort_array(collect_list(col("n_name"))), ",").as("names"),
-        count(lit(1)).as("n"))
     }),
 
     "agg_quantile" -> ((s, dir) => {
@@ -353,7 +305,7 @@ object Relational {
       // measured 1.16 s -> ~0.6 s, and the same shape at cluster scale
       // (the 1-row cross join is free)
       // r18 plan defect fix (before-plan
-      // plans/r18/agg_approx_distinct_before.txt): countDistinct and
+      // 91246ba:plans/r18/agg_approx_distinct_before.txt): countDistinct and
       // approx_count_distinct in ONE aggregate makes Spark's
       // distinct-agg rewrite group by the key and drag the HLL through
       // BOTH levels — a 52-long HLL buffer PER DISTINCT KEY (200k keys
@@ -410,32 +362,6 @@ object Relational {
           count(lit(1)).as("n"))
     }),
 
-    "join_full_outer" -> ((s, dir) => {
-      val c = t(s, dir, "customer").filter(col("c_acctbal") > 9000)
-      val o = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
-      c.join(o, col("c_custkey") === col("o_custkey"), "full_outer")
-        .agg(count(lit(1)).as("n_rows"),
-          count(when(col("c_custkey").isNull, 1)).as("n_order_only"),
-          count(when(col("o_orderkey").isNull, 1)).as("n_cust_only"),
-          count(when(col("c_custkey").isNotNull && col("o_orderkey").isNotNull, 1)).as("n_both"))
-    }),
-
-    "join_semi" -> ((s, dir) => {
-      // SEMI join (JoinType duckdb.hpp:13904) — EXISTS
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").filter(col("o_totalprice") > 250000)
-      c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_nationkey").cast("long").as("c_nationkey"))
-    }),
-
-    "join_anti" -> ((s, dir) => {
-      // ANTI join — NOT EXISTS
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
-        .agg(count(lit(1)).as("n_no_orders"),
-          round(sum(col("c_acctbal")), 2).as("sum_bal"))
-    }),
-
     "join_range_autorewrite" -> ((s, dir) => {
       // the SAME plain inequality join as join_range_inequality, but with
       // the RangeJoinRule's fixed-width path (plans.RangeJoinRule): the
@@ -467,64 +393,20 @@ object Relational {
         .agg(count(lit(1)).as("n_pairs"))
     }),
 
-    "join_positional" -> ((s, dir) => {
-      // positional join (duckdb-4.cpp:10097): zip by row_number
-      val wN = Window.orderBy(col("n_nationkey"))
-      val wR = Window.orderBy(col("r_regionkey"))
-      val n = t(s, dir, "nation").select(col("n_name"), row_number().over(wN).as("rn"))
-      val r = t(s, dir, "region").select(col("r_name"), row_number().over(wR).as("rn"))
-      n.join(r, Seq("rn"), "full_outer")
-        .select(col("rn").cast("long").as("rn"), col("n_name"), col("r_name"))
-    }),
-
     // ---- sort / limit / top-k (SURVEY §2.6) ----
 
     "sort_topn" -> ((s, dir) => {
-      // ORDER BY + LIMIT → TakeOrderedAndProject (PhysicalTopN analog)
+      // ORDER BY + LIMIT → TakeOrderedAndProject (PhysicalTopN analog).
+      // Kept by measurement: the SQL orders by the rounded alias, so it
+      // rounds every row before the top-N; this rounds only the 10 kept
+      // (sf0.1 Bench median 0.068 s here vs 0.123 s as the SQL)
       t(s, dir, "orders")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("o_totalprice"))
         .limit(10)
     }),
 
-    "sort_multi_nulls" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_quantity").desc,
-          col("l_orderkey").asc, col("l_linenumber").asc)
-        .select(col("l_returnflag"), col("l_quantity"), col("l_orderkey"),
-          col("l_linenumber").cast("long").as("l_linenumber"))
-        .limit(100)
-    }),
-
-    "limit_offset" -> ((s, dir) => {
-      t(s, dir, "orders").orderBy(col("o_orderkey"))
-        .select(col("o_orderkey"), col("o_orderstatus"))
-        .offset(100).limit(50)
-    }),
-
     // ---- set operations (SURVEY §2.7) ----
-
-    "set_union_distinct" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select((col("c_nationkey") % 7).cast("long").as("k"))
-      val su = t(s, dir, "supplier").select((col("s_nationkey") % 5).cast("long").as("k"))
-      c.union(su).distinct()
-    }),
-
-    "set_allvariants" -> ((s, dir) => {
-      // EXCEPT ALL / INTERSECT ALL (bag semantics — multiplicities
-      // subtract / take the min, unlike the DISTINCT set forms above);
-      // aggregated so duplicate multiplicity is what the hash checks
-      val c = t(s, dir, "customer")
-        .select((col("c_nationkey") % 9).cast("long").as("k"))
-      val o = t(s, dir, "orders")
-        .select((col("o_custkey") % 9).cast("long").as("k"))
-      val ea = c.exceptAll(o).groupBy(col("k")).agg(count(lit(1)).as("n_except_all"))
-      val ia = c.intersectAll(o).groupBy(col("k")).agg(count(lit(1)).as("n_intersect_all"))
-      ea.join(ia, Seq("k"), "full_outer")
-        .select(col("k"),
-          coalesce(col("n_except_all"), lit(0L)).as("n_except_all"),
-          coalesce(col("n_intersect_all"), lit(0L)).as("n_intersect_all"))
-    }),
 
     "set_recursive_cte" -> ((s, _) => {
       // WITH RECURSIVE (PhysicalRecursiveCTE, duckdb-4.cpp:7608) via the
@@ -539,21 +421,9 @@ object Relational {
 
     // ---- window functions (SURVEY §2.5) ----
 
-    "win_rank_family" -> ((s, dir) => {
-      val w = Window.partitionBy(col("c_nationkey"))
-        .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
-      t(s, dir, "customer").select(
-        col("c_custkey"), col("c_nationkey").cast("long").as("c_nationkey"),
-        row_number().over(w).cast("long").as("rn"),
-        rank().over(w).cast("long").as("rnk"),
-        dense_rank().over(w).cast("long").as("drnk"),
-        round(percent_rank().over(w), 6).as("prnk"),
-        round(cume_dist().over(w), 6).as("cd"),
-        ntile(4).over(w).cast("long").as("quartile"))
-        .filter(col("rn") <= 20)
-    }),
-
     "win_lead_lag" -> ((s, dir) => {
+      // Kept by measurement: fround instead of the SQL's round() on five
+      // columns of every row (sf0.1 Bench median 0.336 s vs 0.461 s)
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
       val wFull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -566,40 +436,6 @@ object Relational {
         fround(nth_value(col("o_totalprice"), 2).over(wFull), 2).as("second_price"))
     }),
 
-    "win_frames_rows" -> ((s, dir) => {
-      val base = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey"),
-        fround(sum(col("o_totalprice")).over(
-          base.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2).as("running_sum"),
-        fround(avg(col("o_totalprice")).over(
-          base.rowsBetween(-2, Window.currentRow)), 4).as("moving_avg3"),
-        count(lit(1)).over(
-          base.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("running_n"))
-    }),
-
-    "win_frames_range" -> ((s, dir) => {
-      // RANGE frame with a value offset over a numeric order key
-      val w = Window.orderBy(col("o_orderkey")).rangeBetween(-100L, 0L)
-      t(s, dir, "orders").filter(col("o_orderkey") <= 2000).select(
-        col("o_orderkey"),
-        round(sum(col("o_totalprice")).over(w), 2).as("range_sum"),
-        count(lit(1)).over(w).as("range_n"))
-    }),
-
-    "win_qualify" -> ((s, dir) => {
-      // QUALIFY (QualifyBinder, duckdb-internal.hpp:72604): project the
-      // window column, then filter on it
-      val w = Window.partitionBy(col("c_nationkey"))
-        .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
-      t(s, dir, "customer")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
-        .select(col("c_nationkey").cast("long").as("c_nationkey"),
-          col("c_custkey"), col("c_acctbal"), col("rn").cast("long").as("rn"))
-    }),
-
     "win_share_of_total" -> ((s, dir) => {
       // whole-partition windowed aggregate (no ORDER BY)
       val w = Window.partitionBy(col("l_orderkey"))
@@ -607,17 +443,6 @@ object Relational {
         col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
         round(col("l_extendedprice") / sum(col("l_extendedprice")).over(w), 6).as("share"),
         count(lit(1)).over(w).as("n_items"))
-    })
-  ,
-
-    "sub_all_rewrite" -> ((s, dir) => {
-      // `> ALL (…)` has no Spark form — rewritten to > (SELECT max(…)),
-      // equivalent for non-empty null-free subqueries
-      Engine.registerAll(s, dir)
-      s.sql(
-        """SELECT count(*) AS n_top FROM supplier
-          |WHERE s_acctbal > (SELECT max(a) FROM
-          |  (SELECT avg(c_acctbal) AS a FROM customer GROUP BY c_nationkey))""".stripMargin)
     }),
 
     "win_ignore_nulls" -> ((s, dir) => {
@@ -810,27 +635,6 @@ object Relational {
         .agg(count(lit(1)).as("n_overlap"), sum(col("c_custkey")).as("sum_cust"))
     }),
 
-    "join_lateral" -> ((s, dir) => {
-      // correlated LATERAL join (reference LATERAL binder,
-      // duckdb-9.cpp:1099; duckdb-internal.hpp:73153) — top-2 customers
-      // per nation via a correlated, limited lateral subquery; Catalyst
-      // decorrelates to a ranked window, the plan a 100 TB run wants
-      Engine.registerAll(s, dir)
-      s.sql(
-        """SELECT n.n_name, t.c_custkey, round(t.c_acctbal, 2) AS acctbal
-          |FROM nation n, LATERAL (
-          |  SELECT c_custkey, c_acctbal FROM customer
-          |  WHERE c_nationkey = n.n_nationkey
-          |  ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t""".stripMargin)
-    }),
-
-    "win_named" -> ((s, dir) => {
-      // named WINDOW clause shared by several functions (reference
-      // window binder; same text runs on both engines)
-      Engine.registerAll(s, dir)
-      s.sql(winNamedSql)
-    }),
-
     "set_union_by_name" -> ((s, dir) => {
       // UNION ALL BY NAME (reference duckdb-8.cpp:7905): by-name column
       // matching with null fill for missing columns
@@ -841,16 +645,6 @@ object Relational {
           |SELECT r_name AS name, r_regionkey AS k, 1 AS extra FROM region""".stripMargin)
         .agg(count(lit(1)).as("n"), sum(col("k")).as("k_sum"),
           count(col("extra")).as("n_extra"))
-    }),
-
-    "win_filtered" -> ((s, dir) => {
-      // FILTER clause on window aggregates (reference window binder
-      // accepts agg FILTER (...) OVER w) — Spark rewrite: agg(CASE)
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("n_regionkey"))
-      t(s, dir, "nation").select(
-        col("n_regionkey"), col("n_nationkey"),
-        count(when(col("n_nationkey") % 2 === 0, 1)).over(w).cast("long").as("n_even"),
-        sum(when(col("n_nationkey") > 10, col("n_nationkey"))).over(w).cast("long").as("s_hi"))
     }),
 
     "agg_mad" -> ((s, dir) => {
@@ -903,17 +697,6 @@ object Relational {
           array_join(col("nm"), "|").as("names"),
           array_join(slice(col("nm"), 1, 2), "|").as("first2"),
           size(col("nm")).cast("long").as("n"))
-    }),
-
-    "agg_grouping_fn" -> ((s, dir) => {
-      // GROUPING() marker function over ROLLUP (distinguishes "NULL
-      // because superaggregate" from data NULLs — reference GroupingFn)
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          grouping(col("l_returnflag")).cast("long").as("g_rf"),
-          grouping(col("l_linestatus")).cast("long").as("g_ls"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
     })
   )
 
@@ -1235,8 +1018,7 @@ object Relational {
       """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
         |  round(l_extendedprice / sum(l_extendedprice) OVER (PARTITION BY l_orderkey), 6) AS share,
         |  count(*) OVER (PARTITION BY l_orderkey) AS n_items
-        |FROM lineitem WHERE l_orderkey <= 500""".stripMargin
-  ,
+        |FROM lineitem WHERE l_orderkey <= 500""".stripMargin,
 
     "sub_scalar_correlated" ->
       """SELECT o_orderstatus, count(*) AS n_above,
@@ -1401,7 +1183,20 @@ object Relational {
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
 
-    "win_named" -> winNamedSql,
+    // named WINDOW clause shared by several functions. run_avg
+    // accumulates EXACT integer cents, then ONE shared division —
+    // bit-identical doubles on both engines, so no final round() is needed
+    // (and none would be safe: the engines' round() pipelines disagree on
+    // rational half-cent boundaries — observed 5937.405 → .41 vs .40)
+    "win_named" ->
+      """SELECT c_custkey,
+        |  CAST(row_number() OVER w AS BIGINT) AS rn,
+        |  CAST(rank() OVER w AS BIGINT) AS rnk,
+        |  CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) OVER w AS DOUBLE)
+        |    / (100.0 * count(*) OVER w) AS run_avg
+        |FROM customer
+        |WINDOW w AS (PARTITION BY c_nationkey
+        |             ORDER BY c_acctbal DESC, c_custkey)""".stripMargin,
 
     "join_range_autoplan" ->
       """SELECT s_suppkey, count(*) AS n_in_band

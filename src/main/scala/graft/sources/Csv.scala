@@ -122,12 +122,14 @@ object Csv {
     Dialect(best.delim, best.quote, header)
   }
 
-  /** Sniff a file's dialect from its first [[SniffBytes]] bytes
+  /** The sample both detections read (the dialect sniff and the
+    * quoted-newline scan): one file's first [[SniffBytes]] bytes
     * (gzip-transparent by extension, like the reference's compressed
-    * reads), optionally skipping `skip` physical lines first. Driver-side
-    * by design: dialect detection reads ONE file head regardless of
-    * dataset size — the same O(sample) cost the reference pays. */
-  def sniffFile(spark: SparkSession, path: String, skip: Int = 0): Dialect = {
+    * reads) after `skip` physical lines, and whether the byte cap cut it
+    * short. Driver-side by design: detection reads ONE file head
+    * regardless of dataset size — the same O(sample) cost the reference
+    * pays. */
+  private def sample(spark: SparkSession, path: String, skip: Int): (String, Boolean) = {
     val conf = spark.sparkContext.hadoopConfiguration
     // resolve globs AND directories (a Spark-written CSV sink is a
     // directory of part files + _SUCCESS markers) to data files, in name
@@ -179,8 +181,7 @@ object Csv {
       if (fallback.isEmpty) fallback = Some(s)
       if (s._1.linesIterator.count(_.trim.nonEmpty) >= 2) picked = Some(s)
     }
-    val (text, truncated) = picked.orElse(fallback).get
-    sniffText(text, truncated)
+    picked.orElse(fallback).get
   }
 
   /** Does the sample hold a newline INSIDE a quoted field? Drives the
@@ -192,46 +193,16 @@ object Csv {
     * (documented; pass an explicit quote + a head-of-file probe row to
     * force it). multiLine costs intra-file parallelism, so it engages
     * only on evidence. */
-  private def sampleHasQuotedNewline(spark: SparkSession, path: String,
-                                     quote: Char, skip: Int): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = globFiles(spark, path)
-    if (files.isEmpty) return false
-    val p = new org.apache.hadoop.fs.Path(files.head)
-    val fs = p.getFileSystem(conf)
-    // recurse to the first DATA FILE (hive-partitioned layouts nest
-    // key=value directories)
-    def firstFile(x: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] =
-      if (fs.getFileStatus(x).isFile) {
-        val n = x.getName
-        if (n.startsWith("_") || n.startsWith(".")) None else Some(x)
-      } else fs.listStatus(x).map(_.getPath).sortBy(_.getName)
-        .iterator.flatMap(firstFile).nextOption()
-    val f0 = firstFile(p).getOrElse(return false)
-    val raw = fs.open(f0)
-    try {
-      val in: java.io.InputStream =
-        if (f0.getName.endsWith(".gz") || f0.getName.endsWith(".gzip"))
-          new java.util.zip.GZIPInputStream(raw)
-        else raw
-      val buf = new Array[Byte](SniffBytes)
-      var off = 0
-      var n = 0
-      while (off < SniffBytes && { n = in.read(buf, off, SniffBytes - off); n > 0 })
-        off += n
-      val text0 = new String(buf, 0, off, java.nio.charset.StandardCharsets.UTF_8)
-      val text = if (skip > 0) text0.linesWithSeparators.drop(skip).mkString
-        else text0
-      var inQ = false
-      var i = 0
-      while (i < text.length) {
-        val c = text.charAt(i)
-        if (c == quote) inQ = !inQ
-        else if (c == '\n' && inQ) return true
-        i += 1
-      }
-      false
-    } finally raw.close()
+  private def hasQuotedNewline(text: String, quote: Char): Boolean = {
+    var inQ = false
+    var i = 0
+    while (i < text.length) {
+      val c = text.charAt(i)
+      if (c == quote) inQ = !inQ
+      else if (c == '\n' && inQ) return true
+      i += 1
+    }
+    false
   }
 
   /** Reference option name → Spark CSV option (full named-parameter list:
@@ -254,7 +225,7 @@ object Csv {
     *                      struct syntax
     *  - hive_partitioning Spark discovers key=value directories natively
     *  - auto_detect       dialect sniffing is the DEFAULT whenever a
-    *                      dialect knob is unspecified (see [[sniffFile]])
+    *                      dialect knob is unspecified (see [[sample]])
     *  - sample_size / sample_chunk_size / sample_chunks  sniffer hints;
     *                      this sniffer reads a fixed 64 KiB head and
     *                      Spark's type inference does a full pass
@@ -332,13 +303,14 @@ object Csv {
         "before parsing; combine them by reading each file separately)")
 
     val delimGiven = lower.contains("sep") || lower.contains("delim")
+    val (text, truncated) = sample(spark, path, skip)
     val sniffed: Option[Dialect] =
       if (delimGiven && lower.contains("quote") && lower.contains("header")) None
-      else Some(sniffFile(spark, path, skip))
+      else Some(sniffText(text, truncated))
 
     val effQuote: Char = lower.get("quote").filter(_.nonEmpty).map(_.charAt(0))
       .orElse(sniffed.map(_.quote)).getOrElse('"')
-    val quotedNewlines = sampleHasQuotedNewline(spark, path, effQuote, skip)
+    val quotedNewlines = hasQuotedNewline(text, effQuote)
 
     def reader: DataFrameReader = {
       var b = spark.read.option("inferSchema", columns.isEmpty.toString)

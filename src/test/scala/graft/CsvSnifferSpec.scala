@@ -59,6 +59,26 @@ class CsvSnifferSpec extends SparkSpec {
     assert(df.agg(sum(col("qty"))).head().getLong(0) == 30L)
   }
 
+  test("a quoted newline in the sampled file is read whole behind a header-only file") {
+    import java.nio.file.Files
+    // the quoted-newline scan reads the sniffer's sample, which skips
+    // the header-only first file
+    def glob(b: String): String = {
+      val dir = Files.createTempDirectory("graft_sniff_qnl_")
+      Files.write(dir.resolve("a.csv"), "id,note\n".getBytes)
+      Files.write(dir.resolve("b.csv"), (b + "1,\"line one\nline two\"\n2,plain\n").getBytes)
+      s"$dir/*.csv"
+    }
+    // every file with its header: DuckDB 1.0 returns these 2 rows
+    val headed = Csv.read(spark, glob("id,note\n"))
+    assert(headed.columns.toSeq == Seq("id", "note"))
+    assert(headed.collect().map(_.getString(1)).toSeq.sorted ==
+      Seq("line one\nline two", "plain"))
+    // a headerless data file: the record is not torn either
+    val bare = Csv.read(spark, glob("")).collect().flatMap(_.toSeq).map(String.valueOf)
+    assert(bare.contains("line one\nline two") && !bare.exists(_.contains("two\"")))
+  }
+
   test("newlines inside quoted fields do not split records") {
     val recs = Csv.parseRecords("1,\"a\nb\",2\n3,c,4\n", ',', '"', truncated = false)
     assert(recs == Vector(Vector("1", "a\nb", "2"), Vector("3", "c", "4")))

@@ -3,12 +3,21 @@ package graft
 import scala.collection.mutable
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LocalRelation, LogicalPlan}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
 /** Every registry query at sf0.001 on the shared session, as `Verify`
   * runs it on its one session:
   *  - it executes;
+  *  - the plan that ran (AQE-final, stages opened) has no
+  *    condition-less inner/cross nested-loop join or cartesian product
+  *    over a build side of more than one row, unless [[crossAllowed]]
+  *    names the entry;
   *  - its SQL-twin outcome keeps or improves the committed table
   *    `registry_twins.tsv` (test resources).
   *
@@ -73,6 +82,37 @@ class RegistrySweepSpec extends SparkSpec {
       plan.collect { case j: Join => j.hint })
   }
 
+  /** Entries whose product is the query: each name with its reason. */
+  private val crossAllowed: Map[String, String] = Map(
+    "join_cross" -> "CROSS JOIN is the query (nation x region)")
+
+  private val crossHits = mutable.LinkedHashMap.empty[String, Seq[String]]
+
+  /** Rows a side produced in the run, from the first node down it that
+    * counts them (stage and reuse wrappers count nothing). */
+  private def producedRows(p: SparkPlan): Option[Long] = p match {
+    case q: QueryStageExec => producedRows(q.plan)
+    case r: ReusedExchangeExec => producedRows(r.child)
+    case _ => p.metrics.get("numOutputRows").map(_.value)
+      .orElse(p.children.headOption.flatMap(producedRows))
+  }
+
+  /** Condition-less inner/cross products whose build side produced more
+    * than one row: a nested-loop join's build side, or a cartesian
+    * product's smaller side. A 1-row side (a global aggregate) is a
+    * free broadcast; anything more multiplies the other side. */
+  private def crossProducts(df: DataFrame): Seq[String] =
+    finalNodes(df.queryExecution.executedPlan).flatMap {
+      case j: BroadcastNestedLoopJoinExec
+          if j.condition.isEmpty && (j.joinType == Inner || j.joinType == Cross) =>
+        val build = if (j.buildSide == BuildLeft) j.left else j.right
+        producedRows(build).filter(_ > 1).map(n => s"BroadcastNestedLoopJoin, build side $n rows")
+      case c: CartesianProductExec if c.condition.isEmpty =>
+        val sides = Seq(c.left, c.right).flatMap(producedRows)
+        Option.when(sides.size == 2 && sides.min > 1)(s"CartesianProduct, smaller side ${sides.min} rows")
+      case _ => None
+    }
+
   private def errorClass(e: Throwable): String = e match {
     case st: SparkThrowable if st.getCondition != null => st.getCondition
     case _ => e.getClass.getSimpleName
@@ -99,11 +139,22 @@ class RegistrySweepSpec extends SparkSpec {
   for (name <- SparkEntry.queries.keys.toSeq.sorted) test(s"registry query $name") {
     val hand = SparkEntry.queries(name)(spark, dir)
     val rows = hand.collect()
+    val products = crossProducts(hand)
+    if (products.nonEmpty) crossHits(name) = products
+    assert(products.isEmpty || crossAllowed.contains(name),
+      s"$name ran a condition-less cross product: ${products.mkString("; ")}\n" +
+        hand.queryExecution.executedPlan)
     val outcome = twinOutcome(name, hand, rows)
     observed(name) = outcome
     val before = committed.getOrElse(name, "(not in the table)")
     assert(outcome == before || rank(outcome) < rank(before),
       s"$name: SQL-twin outcome moved from '$before' to '$outcome'")
+  }
+
+  test("every cross-product allowlist entry is a registry query that runs one") {
+    val stale = crossAllowed.keySet -- crossHits.keySet
+    assert(stale.isEmpty, s"allowlisted without a cross product: ${stale.mkString(", ")}")
+    info(crossHits.map { case (n, p) => s"$n: ${p.mkString("; ")}" }.mkString(" | "))
   }
 
   test("the outcome table names exactly the registry") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one per JVM — tests fork once). */
@@ -10,6 +12,14 @@ object TestSession {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** The plan that ran: AQE's final plan with its query stages opened
+    * (subqueries included). */
+  def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+    case q: QueryStageExec => finalNodes(q.plan)
+    case _ => p +: (p.children ++ p.subqueries).flatMap(finalNodes)
+  }
 
   /** Run `body` with codegen-compile failures made FATAL: Spark's
     * default catches generated-code compile errors and silently falls

@@ -1,8 +1,6 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Plan contract for the scale-path dedup/similarity queries: none of
   * them may run a BroadcastNestedLoopJoin or CartesianProduct — their
@@ -24,13 +22,6 @@ class ScalePathSpec extends SparkSpec {
     // auto range-join planning: written as PLAIN inequality joins, the
     // optimizer rule must supply the bucketed shape with no conf set
     "join_interval_overlap", "join_range_autoplan")
-
-  /** The plan that ran: AQE's final plan with its query stages opened. */
-  private def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
-    case q: QueryStageExec => finalNodes(q.plan)
-    case _ => p +: (p.children ++ p.subqueries).flatMap(finalNodes)
-  }
 
   for (name <- scalePaths) {
     test(s"$name plans without BNLJ or cartesian product") {
