@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions.{coalesce, col, expr, floor, hash, lit, mo
   * `ClientContext::Query`): one object that owns configuration, table
   * resolution and SQL execution. On Spark the parse/bind/optimize/execute
   * pipeline is Catalyst's; this facade only pins the session defaults that
-  * make results reproducible (UTC, fixed shuffle width) and registers the
-  * graft-specific functions (see [[graft.functions.DuckFunctions]]).
+  * make results reproducible (UTC, fixed shuffle width) and installs the
+  * graft functions, rules and strategy ([[graft.plans.GraftExtensions]]).
   */
 object Engine {
 
@@ -47,15 +47,16 @@ object Engine {
       // disabled anyway; "simple" keeps the event cheap (BASELINE.md
       // "Measured fixed-cost floor")
       .config("spark.sql.ui.explainMode", "simple")
+      .withExtensions(new plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    functions.DuckFunctions.register(spark)
     spark
   }
 
-  /** One pinned, conf-tweaked child session per (parent, key) — the
-    * generalization of the no-broadcast child SqlScripts pins for
-    * join_piecewise_merge. Weak-keyed on the parent so stopped parents
+  /** One pinned, conf-tweaked child session per (parent, key), e.g. the
+    * no-broadcast child SqlScripts runs join_piecewise_merge in. The
+    * child inherits the parent's extensions (graft functions and rules)
+    * from `newSession()`. Weak-keyed on the parent so stopped parents
     * don't pin children for the JVM lifetime; memoized so repeat runs
     * of the same query share one child and its resolved-plan caches
     * (a fresh child per call would give table relations new identity
@@ -237,7 +238,6 @@ object Engine {
     })
 
   private def resolveTable(spark: SparkSession, dir: String, name: String): DataFrame = {
-    functions.DuckFunctions.register(spark)
     // ts-unit handling: if the file stores TIMESTAMP(NANOS) it infers as
     // LongType (nanosAsLong, set in tableSchema) and we convert to µs
     // TimestampType here (truncation documented — all graft time
@@ -270,7 +270,6 @@ object Engine {
     new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
 
   def registerAll(spark: SparkSession, dir: String): Unit = {
-    functions.DuckFunctions.register(spark)
     // memoized per (session, dir): several queries call this and each
     // plain registration resolves 10 tables
     val dirs = registeredDirs.computeIfAbsent(spark,
@@ -737,7 +736,6 @@ object Engine {
     * DuckDB-name registry — one row per distinct name. */
   def functionsTable(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    functions.DuckFunctions.register(spark)
     spark.catalog.listFunctions().collect()
       .map(f => f.name.toLowerCase).distinct.sorted.toSeq
       .toDF("function_name")

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{And, BinaryExpression, Cast, Divide, EqualTo, Expression, ExpressionInfo, If, IntegralDivide, Literal, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, BinaryExpression, Cast, Divide, EqualTo, Expression, If, IntegralDivide, Literal, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, DoubleType, IntegerType, LongType, MapType, ShortType}
 
 /** duck's `//` operator (duck-probed r14b): TRUNCATING integer
@@ -50,7 +50,6 @@ case class DuckFloorDiv(left: Expression, right: Expression)
 }
 
 object DuckFloorDiv {
-  val info = new ExpressionInfo(classOf[DuckFloorDiv].getName, "graft_fdiv")
   val builder: Seq[Expression] => Expression =
     args => DuckFloorDiv(args(0), args(1))
 }
@@ -78,6 +77,5 @@ case class DuckLen(child: Expression)
 }
 
 object DuckLen {
-  val info = new ExpressionInfo(classOf[DuckLen].getName, "len")
   val builder: Seq[Expression] => Expression = args => DuckLen(args(0))
 }

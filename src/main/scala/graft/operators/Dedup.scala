@@ -198,32 +198,22 @@ object Dedup {
     * reads the text's UTF-8 bytes in place, no String copy, no codegen
     * fence at the scan. The UDF forms above remain as the reference
     * semantics the specs equivalence-check against. */
-  def hashedShinglesCol(df: DataFrame)(text: Column, n: Int): Column = {
-    graft.functions.DuckFunctions.register(df.sparkSession)
+  def hashedShinglesCol(text: Column, n: Int): Column =
     call_function("hashed_shingles", text, lit(n))
-  }
 
   /** Codegen form of [[minhashBandBuckets]] (graft.plans.MinhashBands). */
-  def minhashBandsCol(df: DataFrame)(sh: Column, numHashes: Int,
-                                     numBands: Int): Column = {
-    graft.functions.DuckFunctions.register(df.sparkSession)
+  def minhashBandsCol(sh: Column, numHashes: Int, numBands: Int): Column =
     call_function("minhash_band_buckets", sh, lit(numHashes), lit(numBands))
-  }
 
   /** Codegen form of [[hashedDeleteNeighborhood]]
     * (graft.plans.DeleteNeighborhoodHashes). */
-  def deleteNeighborhoodHashesCol(df: DataFrame)(s: Column, k: Int): Column = {
-    graft.functions.DuckFunctions.register(df.sparkSession)
+  def deleteNeighborhoodHashesCol(s: Column, k: Int): Column =
     call_function("delete_neighborhood_hashes", s, lit(k))
-  }
 
   /** Codegen form of [[jaccardSortedLongs]] (graft.plans.JaccardSorted):
-    * reads the Tungsten arrays in place — no per-row WrappedArray copy.
-    * Registration is idempotent per session. */
-  def jaccardSortedCol(df: DataFrame)(a: Column, b: Column): Column = {
-    graft.functions.DuckFunctions.register(df.sparkSession)
+    * reads the Tungsten arrays in place — no per-row WrappedArray copy. */
+  def jaccardSortedCol(a: Column, b: Column): Column =
     call_function("jaccard_sorted", a, b)
-  }
 
   /** MinHash+LSH near-duplicate candidate pairs, scored with exact
     * shingle Jaccard.
@@ -251,7 +241,7 @@ object Dedup {
     // gate either).
     val sh = df
       .select(col(idCol).as("id"),
-        hashedShinglesCol(df)(col(textCol), shingleN).as("sh"))
+        hashedShinglesCol(col(textCol), shingleN).as("sh"))
     // band-join carries only (band, bucket, id) — the shingle arrays are
     // re-joined for scoring AFTER candidate dedup, so the wide rows never
     // go through the candidate shuffle. Banding runs inside the fused
@@ -265,7 +255,7 @@ object Dedup {
     // banding subtree materializes once for the cap and both join sides.
     val withBands = sh
       .select(col("id"),
-        posexplode_outer(minhashBandsCol(df)(col("sh"), numHashes, numBands))
+        posexplode_outer(minhashBandsCol(col("sh"), numHashes, numBands))
           .as(Seq("band", "bucket")))
       .filter(col("band").isNotNull)
     val pruned = withBands
@@ -283,7 +273,7 @@ object Dedup {
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardSortedCol(df)(col("sh_a"), col("sh_b")).as("jaccard"))
+        jaccardSortedCol(col("sh_a"), col("sh_b")).as("jaccard"))
   }
 
   /** INCREMENTAL near-dup detection: score a NEW batch against an
@@ -322,13 +312,13 @@ object Dedup {
       s"dedupAgainst: numHashes ($numHashes) must be a positive multiple " +
         s"of numBands ($numBands)")
     def shingled(df: DataFrame): DataFrame = df.select(col(idCol).as("id"),
-      hashedShinglesCol(df)(col(textCol), shingleN).as("sh"))
+      hashedShinglesCol(col(textCol), shingleN).as("sh"))
     // posexplode_outer + isNotNull: same optimizer-inlining defense as
     // minhashCandidates (a size(..)>0 filter would be pushed below the
     // projection with the banding kernel inlined per conjunct)
     def banded(sh: DataFrame): DataFrame = sh
       .select(col("id"),
-        posexplode_outer(minhashBandsCol(sh)(col("sh"), numHashes, numBands))
+        posexplode_outer(minhashBandsCol(col("sh"), numHashes, numBands))
           .as(Seq("band", "bucket")))
       .filter(col("band").isNotNull)
     def capped(b: DataFrame): DataFrame = b
@@ -349,7 +339,7 @@ object Dedup {
       .join(bsh.select(col("id").as("batch_id"), col("sh").as("sh_b")), "batch_id")
       .join(hsh.select(col("id").as("hist_id"), col("sh").as("sh_h")), "hist_id")
       .select(col("batch_id"), col("hist_id"),
-        jaccardSortedCol(history)(col("sh_b"), col("sh_h")).as("jaccard"))
+        jaccardSortedCol(col("sh_b"), col("sh_h")).as("jaccard"))
   }
 
   /** [[dedupAgainst]] convenience: the batch rows with NO historical
@@ -451,7 +441,7 @@ object Dedup {
     // groupBy of that single pass — the neighborhood kernel runs once,
     // not once per join side.
     val keyed = base.select(col("id"),
-      explode(deleteNeighborhoodHashesCol(df)(col("s"), maxDist)).as("key"))
+      explode(deleteNeighborhoodHashesCol(col("s"), maxDist)).as("key"))
     // r18 measured negative result (FuzzyLab, OPTIMIZATION_r18.md): the
     // pre-refine dropDuplicates was suspected as the hot spot (740k
     // joined rows → 303k distinct pairs at sf0.1) and moving the dedup
@@ -488,10 +478,9 @@ object Dedup {
     * on the banding hot path, same promotion the minhash twin got with
     * `minhashBandBuckets`/`WordGramHashes`). Planes fold into the plan
     * as a flat ±1 literal. */
-  def signLshBucketsCol(df: DataFrame, v: Column, planes: Array[Array[Double]],
+  def signLshBucketsCol(v: Column, planes: Array[Array[Double]],
                         numBands: Int, bitsPerBand: Int): Column = {
     require(planes.length >= numBands * bitsPerBand, "not enough planes")
-    graft.functions.DuckFunctions.register(df.sparkSession)
     val flat = planes.take(numBands * bitsPerBand).flatten
     call_function("sign_lsh_buckets", v,
       lit(flat), lit(numBands), lit(bitsPerBand))
@@ -558,7 +547,7 @@ object Dedup {
       else col(vecCol)
     val banded = df
       .select(col(idCol).as("id") +: keep.map { case (n, c) => c.as(n) } :+
-        signLshBucketsCol(df, bandIn, planes, numBands, bitsPerBand)
+        signLshBucketsCol(bandIn, planes, numBands, bitsPerBand)
           .as("bks"): _*)
       .select((col("id") +: keep.map { case (n, _) => col(n) }) ++
         (if (keepBks) Seq(col("bks")) else Nil) ++
@@ -765,7 +754,7 @@ object Dedup {
     // restores the inline plan.
     val shAll = df
       .select(col(idCol).as("id"),
-        hashedShinglesCol(df)(col(textCol), shingleN).as("sh"))
+        hashedShinglesCol(col(textCol), shingleN).as("sh"))
     val sh = (if (materialize) shAll.localCheckpoint() else shAll)
       .filter(size(col("sh")) > 0)
     // epsilon guards fp overshoot: t·|S| that is mathematically integral
@@ -816,7 +805,7 @@ object Dedup {
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardSortedCol(df)(col("sh_a"), col("sh_b")).as("jaccard"))
+        jaccardSortedCol(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 

@@ -25,11 +25,8 @@ object RangeJoin {
     * [[graft.plans.BucketIndex]] expression (a Scala UDF here would block
     * whole-stage codegen for the entire probe-side stage). The boundary
     * array folds into the plan as a literal. */
-  private def bucketCol(spark: org.apache.spark.sql.SparkSession,
-                        bounds: Array[Double])(x: Column): Column = {
-    graft.functions.DuckFunctions.register(spark)
+  private def bucketCol(bounds: Array[Double])(x: Column): Column =
     call_function("bucket_index", x.cast("double"), lit(bounds))
-  }
 
   /** Join `points` rows to `ranges` rows whose [loCol, hiCol] interval
     * contains the point, via bucketed equi-join.
@@ -82,7 +79,7 @@ object RangeJoin {
       .approxQuantile(pointCol, probs, 0.001).distinct.sorted
     // bucket(x) = #boundaries <= x (codegen binary search; monotonic, so
     // an interval spans a contiguous run)
-    val bucketU = bucketCol(spark, bounds) _
+    val bucketU = bucketCol(bounds) _
     val pb = points.withColumn("__bucket", bucketU(col(pointCol)))
     val rb = ranges.filter(col(loCol) <= col(hiCol)).withColumn("__bucket",
       explode(sequence(bucketU(col(loCol)), bucketU(col(hiCol)))))
@@ -116,7 +113,7 @@ object RangeJoin {
     val endpoints = left.select(col(llo).cast("double").as("__x"))
       .unionAll(right.select(col(rlo).cast("double").as("__x")))
     val bounds = endpoints.stat.approxQuantile("__x", probs, 0.001).distinct.sorted
-    val bucketU = bucketCol(spark, bounds) _
+    val bucketU = bucketCol(bounds) _
     def span(df: DataFrame, lo: String, hi: String): DataFrame =
       df.filter(col(lo) <= col(hi)).withColumn("__bucket",
         explode(sequence(bucketU(col(lo)), bucketU(col(hi)))))

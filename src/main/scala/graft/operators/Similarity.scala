@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** dot(a, b) over two array<double> columns — the native codegen'd
-    * [[graft.plans.ArrayDot]] expression (registered by
-    * DuckFunctions.register / GraftExtensions). */
+    * [[graft.plans.ArrayDot]] expression (installed by GraftExtensions). */
   def dot(a: Column, b: Column): Column = call_function("array_dot", a, b)
 
   /** [[dot]] over `array<float>` columns, accumulated in double with each
@@ -101,7 +100,6 @@ object Similarity {
     */
   def assignToCentroids(vectors: DataFrame,
                         centroids: Array[(Int, Array[Double])]): DataFrame = {
-    graft.functions.DuckFunctions.register(vectors.sparkSession)
     val cidsLit = typedLit(centroids.map(_._1).toSeq)
     val vecsLit = typedLit(centroids.map(_._2.toSeq).toSeq)
     vectors.withColumn("cid",
@@ -152,7 +150,6 @@ object Similarity {
                           scale: Long = 1000L): DataFrame = {
     require(k >= 1, "semanticClusters: k must be >= 1")
     require(iterations >= 0, "semanticClusters: iterations >= 0")
-    graft.functions.DuckFunctions.register(corpus.sparkSession)
     // null/empty vectors are excluded up front (they have no distance to
     // any centroid); vectors are assumed FIXED-DIMENSION, like every
     // embedding path in this module.
@@ -451,7 +448,6 @@ object Similarity {
                       queries: Array[(Long, Array[Double])],
                       centroids: Array[(Int, Array[Double])],
                       nProbe: Int, k: Int, minHits: Int): DataFrame = {
-    graft.functions.DuckFunctions.register(corpus.sparkSession)
     def probeCells(qv: Array[Double]): Array[Int] = {
       // mirror of centroidScores + array_sort + reverse + slice: sort
       // ascending by (score, cid), reverse, take nProbe

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -122,7 +122,6 @@ object ArgminSqDistLong {
     ArgminSqDistLong(child, centroids.flatten, offs, dims)
   }
 
-  val info = new ExpressionInfo(classOf[ArgminSqDistLong].getName, "argmin_sqdist_long")
 
   /** SQL/`call_function` form: argmin_sqdist_long(w, vecs) with vecs a
     * foldable array<array<bigint>> literal, unpacked at bind time into

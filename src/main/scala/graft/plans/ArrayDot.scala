@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native dot product over two array<double> columns.
   *
@@ -60,7 +58,6 @@ case class ArrayDot(left: Expression, right: Expression)
 }
 
 object ArrayDot {
-  val info = new ExpressionInfo(classOf[ArrayDot].getName, "array_dot")
   val builder: Seq[Expression] => Expression = args => ArrayDot(args(0), args(1))
 }
 
@@ -118,63 +115,6 @@ case class ArrayDotFloat(left: Expression, right: Expression)
 }
 
 object ArrayDotFloat {
-  val info = new ExpressionInfo(classOf[ArrayDotFloat].getName, "array_dot_float")
   val builder: Seq[Expression] => Expression =
     args => ArrayDotFloat(args(0), args(1))
-}
-
-/** Optimizer rule: `pow(x, 2)` → `x * x` (a multiplication beats a
-  * transcendental pow call; the reference's ExpressionRewriter plays the
-  * same role with ArithmeticSimplification, duckdb-7.cpp:13908).
-  * Exists chiefly to exercise the optimizer-extension injection point.
-  */
-object SquarePowRule
-  extends org.apache.spark.sql.catalyst.rules.Rule[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{Cast, LeafExpression, Literal, Multiply, Pow}
-  import org.apache.spark.sql.catalyst.expressions.Expression
-
-  // duplicating the base is only safe/profitable when it is deterministic
-  // (pow(rand(),2) must NOT become rand()*rand()) and cheap to re-evaluate
-  // (a column ref / literal, possibly cast) — the same guard Spark's own
-  // optimizer applies before duplicating expressions
-  private def cheapDeterministic(e: Expression): Boolean = e.deterministic && (e match {
-    case _: LeafExpression => true
-    case c: Cast => c.child.isInstanceOf[LeafExpression]
-    case _ => false
-  })
-
-  override def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-  : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    plan.transformAllExpressions {
-      case Pow(b, Literal(2.0, DoubleType)) if cheapDeterministic(b) => Multiply(b, b)
-    }
-}
-
-/** Injection point for `spark.sql.extensions=graft.plans.GraftExtensions`
-  * (the reference's extension-registration analog: parser/optimizer
-  * extensions, duckdb-8.cpp:7282 / duckdb-7.cpp:14038). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("array_dot"), ArrayDot.info, ArrayDot.builder))
-    ext.injectFunction((FunctionIdentifier("array_dot_float"),
-      ArrayDotFloat.info, ArrayDotFloat.builder))
-    ext.injectFunction((FunctionIdentifier("levenshtein_within"),
-      LevenshteinWithin.info, LevenshteinWithin.builder))
-    ext.injectFunction((FunctionIdentifier("word_gram_hashes"),
-      WordGramHashes.info, WordGramHashes.builder))
-    ext.injectFunction((FunctionIdentifier("ws_token_hashes"),
-      WsTokenHashes.info, WsTokenHashes.builder))
-    ext.injectFunction((FunctionIdentifier("gram_roll_hashes"),
-      GramRollHashes.info, GramRollHashes.builder))
-    ext.injectFunction((FunctionIdentifier("fast_round"),
-      FastRound.info, FastRound.builder))
-    ext.injectFunction((FunctionIdentifier("graft_fdiv"),
-      graft.functions.DuckFloorDiv.info, graft.functions.DuckFloorDiv.builder))
-    ext.injectFunction((FunctionIdentifier("len"),
-      graft.functions.DuckLen.info, graft.functions.DuckLen.builder))
-    ext.injectOptimizerRule(_ => SquarePowRule)
-    ext.injectOptimizerRule(_ => RangeJoinRule)
-    ext.injectPostHocResolutionRule(_ => ResolveReservoirHint)
-    ext.injectPlannerStrategy(_ => ReservoirStrategy)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -56,8 +56,6 @@ case class BucketIndex(child: Expression, bounds: Array[Double])
 }
 
 object BucketIndex {
-  val info = new ExpressionInfo(classOf[BucketIndex].getName, "bucket_index")
-
   /** SQL/`call_function` form: bucket_index(x, array(...boundaries...)).
     * The boundary argument must be a foldable array literal — it is
     * extracted at bind time so the per-row path stays a primitive search. */

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
@@ -116,7 +116,6 @@ object CentroidAssign {
     CentroidAssign(child, cids, flat, offs, dims, invNorms)
   }
 
-  val info = new ExpressionInfo(classOf[CentroidAssign].getName, "centroid_assign")
 
   /** SQL/`call_function` form: centroid_assign(v, cids, vecs) with cids a
     * foldable array<int> literal and vecs a foldable array<array<double>>

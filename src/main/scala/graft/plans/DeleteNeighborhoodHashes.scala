@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -131,8 +131,6 @@ object DeleteNeighborhoodHashes {
     out.result()
   }
 
-  val info = new ExpressionInfo(classOf[DeleteNeighborhoodHashes].getName,
-    "delete_neighborhood_hashes")
   val builder: Seq[Expression] => Expression =
     args => DeleteNeighborhoodHashes(args(0), args(1))
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, Literal}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
 /** `round(double, s)` with the allocation on the cold path only.
@@ -103,6 +103,5 @@ object FastRound {
     else slow(x, s)
   }
 
-  val info = new ExpressionInfo(classOf[FastRound].getName, "fast_round")
   val builder: Seq[Expression] => Expression = args => FastRound(args(0), args(1))
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -113,6 +113,5 @@ object HashedShingles {
     if (m + 1 == out.length) out else java.util.Arrays.copyOf(out, m + 1)
   }
 
-  val info = new ExpressionInfo(classOf[HashedShingles].getName, "hashed_shingles")
   val builder: Seq[Expression] => Expression = args => HashedShingles(args(0), args(1))
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -74,6 +74,5 @@ case class JaccardSorted(left: Expression, right: Expression)
 }
 
 object JaccardSorted {
-  val info = new ExpressionInfo(classOf[JaccardSorted].getName, "jaccard_sorted")
   val builder: Seq[Expression] => Expression = args => JaccardSorted(args(0), args(1))
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -34,7 +34,6 @@ case class LevenshteinWithin(first: Expression, second: Expression, third: Expre
 }
 
 object LevenshteinWithin {
-  val info = new ExpressionInfo(classOf[LevenshteinWithin].getName, "levenshtein_within")
   val builder: Seq[Expression] => Expression =
     args => LevenshteinWithin(args(0), args(1), args(2))
 

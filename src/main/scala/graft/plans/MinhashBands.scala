@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -99,7 +99,6 @@ object MinhashBands {
     out
   }
 
-  val info = new ExpressionInfo(classOf[MinhashBands].getName, "minhash_band_buckets")
   val builder: Seq[Expression] => Expression =
     args => MinhashBands(args(0), args(1), args(2))
 }

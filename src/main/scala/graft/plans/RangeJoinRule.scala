@@ -38,8 +38,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, NumericType,
   * on by default; `spark.graft.rangeJoin.auto=false` disables it (the
   * explicit-width path stays).
   *
-  * Registered via [[GraftExtensions]] and
-  * `spark.experimental.extraOptimizations`.
+  * Installed by [[GraftExtensions]].
   */
 object RangeJoinRule extends Rule[LogicalPlan] {
 

@@ -19,7 +19,7 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * sampling (each row gets a seeded random key; keep the n smallest) —
   * per-partition bounded heaps, one single-partition merge, exact n.
   *
-  * Usage (requires a GraftExtensions session):
+  * Usage (any GraftExtensions session, e.g. Engine.session):
   *   df.hint("graft_reservoir", n, seed)
   */
 case class ReservoirSample(n: Int, seed: Long, child: LogicalPlan) extends UnaryNode {

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -137,7 +137,6 @@ object SignLshBuckets {
     * bucketing (the SQL hardcodes floor(x*1000 + 0.5) identically). */
   final val QuantScale = 1000L
 
-  val info = new ExpressionInfo(classOf[SignLshBuckets].getName, "sign_lsh_buckets")
 
   /** SQL/`call_function` form:
     * sign_lsh_buckets(v, signs_flat, numBands, bitsPerBand) — the sign

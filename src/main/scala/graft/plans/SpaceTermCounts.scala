@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
@@ -86,6 +86,5 @@ object SpaceTermCounts {
     out
   }
 
-  val info = new ExpressionInfo(classOf[SpaceTermCounts].getName, "space_term_counts")
   val builder: Seq[Expression] => Expression = args => SpaceTermCounts(args(0), args(1))
 }

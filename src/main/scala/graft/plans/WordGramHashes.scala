@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -183,7 +183,6 @@ case class GramRollHashes(left: Expression, right: Expression)
 }
 
 object GramRollHashes {
-  val info = new ExpressionInfo(classOf[GramRollHashes].getName, "gram_roll_hashes")
   val builder: Seq[Expression] => Expression = args => GramRollHashes(args(0), args(1))
 }
 
@@ -211,6 +210,5 @@ object WordGramHashes {
     h
   }
 
-  val info = new ExpressionInfo(classOf[WordGramHashes].getName, "word_gram_hashes")
   val builder: Seq[Expression] => Expression = args => WordGramHashes(args(0), args(1))
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -103,6 +103,5 @@ object WsTokenHashes {
     if (cnt == out.length) out else java.util.Arrays.copyOf(out, cnt)
   }
 
-  val info = new ExpressionInfo(classOf[WsTokenHashes].getName, "ws_token_hashes")
   val builder: Seq[Expression] => Expression = args => WsTokenHashes(args(0))
 }

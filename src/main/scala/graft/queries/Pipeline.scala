@@ -179,7 +179,7 @@ object Pipeline {
       val docs0 = t(s, dir, "documents")
       val d = docs0
         .select(col("doc_id"), col("source"),
-          Dedup.hashedShinglesCol(docs0)(col("text"), 3).as("sh"))
+          Dedup.hashedShinglesCol(col("text"), 3).as("sh"))
       // the build side broadcasts, so ANY probe partitioning is valid —
       // round-robin spreads the quadratic scoring across every core
       // (the parquet file is a handful of splits; pair count is x100 the
@@ -191,7 +191,7 @@ object Pipeline {
       val b = d.select(col("source"), col("doc_id").as("id_b"), col("sh").as("sh_b"))
       a.join(b, Seq("source")).filter(col("id_a") < col("id_b"))
         .select(col("source"), col("id_a"), col("id_b"),
-          round(Dedup.jaccardSortedCol(d)(col("sh_a"), col("sh_b")), 6).as("jac"))
+          round(Dedup.jaccardSortedCol(col("sh_a"), col("sh_b")), 6).as("jac"))
         .orderBy(col("jac").desc, col("id_a").asc, col("id_b").asc)
         .limit(30)
     }),
@@ -389,7 +389,6 @@ object Pipeline {
       // exact counts: every estimate undercounts by at most N/(k+1);
       // the oracle states the contract plus the engine-independent
       // corpus scalars.
-      graft.functions.DuckFunctions.register(s)
       val toks = t(s, dir, "documents")
         .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
         .filter(length(col("tok")) > 0)
@@ -595,7 +594,6 @@ object Pipeline {
       // thresholded fuzzy matching with the banded-Levenshtein codegen
       // expression (plans.LevenshteinWithin) vs the oracle's full
       // levenshtein comparison
-      graft.functions.DuckFunctions.register(s)
       val a = t(s, dir, "supplier").select(col("s_suppkey").as("id_a"), col("s_name").as("n_a"))
       val b = t(s, dir, "supplier").select(col("s_suppkey").as("id_b"), col("s_name").as("n_b"))
       a.crossJoin(b).filter(col("id_a") < col("id_b"))

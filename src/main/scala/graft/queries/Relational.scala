@@ -23,12 +23,6 @@ object Relational {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Engine.table(s, dir, name)
 
-  // Bit-identical to functions.round on doubles (FastRoundSpec), minus the
-  // per-row BigDecimal trip — the four/five rounds of the wide window rows
-  // were ~55 ms of win_ignore_nulls' 248 ms (BASELINE.md round 14)
-  private def fround(c: org.apache.spark.sql.Column, s: Int) =
-    call_function("fast_round", c, lit(s))
-
   private[queries] val sampleSystemSql =
     """WITH pop AS (SELECT count(*) AS n_total FROM lineitem),
       |s1 AS (SELECT count(*) AS n1
@@ -368,7 +362,6 @@ object Relational {
       // optimizer itself rewrites it to the bucketed equi-join. The width
       // is pinned only while the plan materializes (optimization is
       // lazy), so it never leaks into the session's later queries.
-      graft.functions.DuckFunctions.register(s)
       val key = "spark.graft.rangeJoin.bucketWidth"
       val before = s.conf.getOption(key)
       s.conf.set(key, "10.0")
@@ -421,21 +414,6 @@ object Relational {
 
     // ---- window functions (SURVEY §2.5) ----
 
-    "win_lead_lag" -> ((s, dir) => {
-      // Kept by measurement: fround instead of the SQL's round() on five
-      // columns of every row (sf0.1 Bench median 0.336 s vs 0.461 s)
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      val wFull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey"),
-        fround(lag(col("o_totalprice"), 1).over(w), 2).as("prev_price"),
-        fround(lead(col("o_totalprice"), 2, 0.0).over(w), 2).as("next2_price"),
-        fround(first(col("o_totalprice")).over(w), 2).as("first_price"),
-        fround(last(col("o_totalprice")).over(wFull), 2).as("last_price"),
-        fround(nth_value(col("o_totalprice"), 2).over(wFull), 2).as("second_price"))
-    }),
-
     "win_share_of_total" -> ((s, dir) => {
       // whole-partition windowed aggregate (no ORDER BY)
       val w = Window.partitionBy(col("l_orderkey"))
@@ -457,10 +435,10 @@ object Relational {
       val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       t(s, dir, "orders").withColumn("v", v).select(
         col("o_custkey"), col("o_orderkey"),
-        fround(last(col("v"), ignoreNulls = true).over(wPrev), 2).as("prev_nn"),
-        fround(lead(col("v"), 1, null, ignoreNulls = true).over(w), 2).as("next_nn"),
-        fround(first(col("v"), ignoreNulls = true).over(wf), 2).as("first_nn"),
-        fround(last(col("v"), ignoreNulls = true).over(wf), 2).as("last_nn"))
+        round(last(col("v"), ignoreNulls = true).over(wPrev), 2).as("prev_nn"),
+        round(lead(col("v"), 1, null, ignoreNulls = true).over(w), 2).as("next_nn"),
+        round(first(col("v"), ignoreNulls = true).over(wf), 2).as("first_nn"),
+        round(last(col("v"), ignoreNulls = true).over(wf), 2).as("last_nn"))
     }),
 
     "sample_bernoulli" -> ((s, dir) => {
@@ -623,7 +601,6 @@ object Relational {
       // (reference join selection, duckdb-4.cpp:9054-9168; no conf
       // needed). The programmatic RangeJoin.intervalOverlap API remains
       // for callers that want explicit control (spec-covered).
-      graft.functions.DuckFunctions.register(s)
       val su = t(s, dir, "supplier")
         .withColumn("s_lo", col("s_acctbal") - (col("s_suppkey") % 50).cast("double"))
         .withColumn("s_hi", col("s_acctbal") + (col("s_suppkey") % 20).cast("double"))

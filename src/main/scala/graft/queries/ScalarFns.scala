@@ -267,7 +267,6 @@ object ScalarFns {
       // regexp_full_match (anchored rlike), jaro_similarity, and the
       // grapheme-cluster family (BreakIterator ≙ utf8proc clusters);
       // é is built decomposed (e + U+0301) on both sides
-      graft.functions.DuckFunctions.register(s)
       val ts = lit("1996-03-05 07:08:09").cast("timestamp")
       val cafe = concat(lit("cafe"), lit("\u0301"))
       s.range(1).select(
@@ -291,7 +290,6 @@ object ScalarFns {
       // prefix/suffix/contains/starts_with + mismatches (hamming) +
       // editdist3 (levenshtein alias) — reference duckdb-2.cpp string
       // predicate and distance registrations
-      graft.functions.DuckFunctions.register(s)
       t(s, dir, "supplier").select(
         col("s_suppkey"),
         col("s_name").startsWith("Supplier").as("p"),
@@ -397,7 +395,6 @@ object ScalarFns {
     "fn_collate" -> ((s, dir) => {
       // NOCASE collation (reference collation registry
       // duckdb-5.cpp:5156) as expression rewrite + strip_accents
-      graft.functions.DuckFunctions.register(s)
       t(s, dir, "nation").agg(
         countDistinct(lower(col("n_name"))).as("n_nocase"),
         min(struct(lower(col("n_name")).as("k"), col("n_name").as("v")))

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import graft.Engine
 
 /** Round-5 batch: the three formerly-guardrailed dialect surfaces
@@ -22,40 +21,6 @@ object SqlScripts {
     * so neither engine needs to create parent directories). */
   private val copyPathSpark = "/tmp/graft_r5_cf_spark.csv"
   private val copyPathDuck = "/tmp/graft_r5_cf_duck.csv"
-
-  /** One pinned no-broadcast child session per (parent, dir). Weak-keyed
-    * on the parent (mirroring Engine's registerAll memo) so stopped
-    * parents don't pin their children for the JVM lifetime; the few
-    * long-lived parents (bench/verify) intentionally keep one child
-    * each, whose plan identity keeps RangeJoinRule's stats cache warm. */
-  private val pinnedNoBroadcast =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, SparkSession]]()
-
-  private def noBroadcastSession(s: SparkSession, dir: String): SparkSession =
-    pinnedNoBroadcast.synchronized {
-      val perDir = {
-        val m = pinnedNoBroadcast.get(s)
-        if (m != null) m else {
-          val m2 = scala.collection.mutable.Map.empty[String, SparkSession]
-          pinnedNoBroadcast.put(s, m2); m2
-        }
-      }
-      perDir.getOrElseUpdate(dir, {
-        val child = s.newSession()
-        child.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        // AQE sizes post-shuffle partitions by shuffle INPUT bytes — for
-        // an output-quadratic range join the pair blowup happens AFTER
-        // the exchange, so input-byte coalescing collapses the refine +
-        // aggregate onto one task. Target small input partitions so the
-        // pair work spreads (r13 PwLab: pair stage 123 ms/1 task →
-        // 74 ms/20 tasks, wall 248 → 190 ms); on a cluster the same
-        // mis-sizing argument holds wherever the join's selectivity ≫ 1.
-        child.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "48kb")
-        child.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-        Engine.registerAll(child, dir)
-        child
-      })
-    }
 
   private def copyFromStmts(out: String) = Seq(
     "CREATE OR REPLACE TABLE cf_nation (k BIGINT, name VARCHAR, rk BIGINT)",
@@ -160,7 +125,19 @@ object SqlScripts {
       // missed RangeJoinRule's bounds cache, and re-ran the plan-time
       // quantile job (~100-190 ms) on every execution of an unchanged
       // query.
-      val child = noBroadcastSession(s, dir)
+      val child = Engine.pinnedSession(s, s"no-broadcast:$dir") { c =>
+        c.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        // AQE sizes post-shuffle partitions by shuffle INPUT bytes — for
+        // an output-quadratic range join the pair blowup happens AFTER
+        // the exchange, so input-byte coalescing collapses the refine +
+        // aggregate onto one task. Target small input partitions so the
+        // pair work spreads (r13 PwLab: pair stage 123 ms/1 task →
+        // 74 ms/20 tasks, wall 248 → 190 ms); on a cluster the same
+        // mis-sizing argument holds wherever the join's selectivity ≫ 1.
+        c.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "48kb")
+        c.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+        Engine.registerAll(c, dir)
+      }
       child.sql(piecewiseMergeSql)
     })
   )

@@ -61,10 +61,10 @@ object DocStreams {
     val docs = graft.Engine.table(spark, dir, "documents")
     val hist = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     val hsh = hist.select(col("doc_id").as("hist_id"),
-      Dedup.hashedShinglesCol(hist)(col("text"), 3).as("sh_h"))
+      Dedup.hashedShinglesCol(col("text"), 3).as("sh_h"))
     val hBands = hsh
       .select(col("hist_id"),
-        posexplode_outer(Dedup.minhashBandsCol(hsh)(col("sh_h"), numHashes, numBands))
+        posexplode_outer(Dedup.minhashBandsCol(col("sh_h"), numHashes, numBands))
           .as(Seq("band", "bucket")))
       .filter(col("band").isNotNull)
       .withColumn("bsize",
@@ -74,10 +74,10 @@ object DocStreams {
     val stream = readDocuments(spark, dir)
       .filter(pmod(col("doc_id"), lit(5)) === 0)
     val sSh = stream.select(col("doc_id").as("batch_id"),
-      Dedup.hashedShinglesCol(docs)(col("text"), 3).as("sh_b"))
+      Dedup.hashedShinglesCol(col("text"), 3).as("sh_b"))
     val sBands = sSh
       .select(col("batch_id"), col("sh_b"),
-        posexplode_outer(Dedup.minhashBandsCol(docs)(col("sh_b"), numHashes, numBands))
+        posexplode_outer(Dedup.minhashBandsCol(col("sh_b"), numHashes, numBands))
           .as(Seq("band", "bucket")))
       .filter(col("band").isNotNull)
     sBands
@@ -86,40 +86,16 @@ object DocStreams {
       .dropDuplicates("batch_id", "hist_id")
       .join(hsh, Seq("hist_id")) // stream-static: stateless
       .select(col("batch_id"), col("hist_id"),
-        Dedup.jaccardSortedCol(docs)(col("sh_b"), col("sh_h")).as("jaccard"))
+        Dedup.jaccardSortedCol(col("sh_b"), col("sh_h")).as("jaccard"))
       .filter(col("jaccard") >= 0.8)
       .select(col("batch_id"), col("hist_id"), round(col("jaccard"), 6).as("jac"))
   }
 
   /** Drive a documents-stream transform to completion (memory sink,
     * AvailableNow, append mode) and return the result as a batch
-    * DataFrame — a REAL Structured Streaming execution, mirroring
-    * [[EventStreams.runToBatch]]'s checkpoint/width handling. */
+    * DataFrame — a REAL Structured Streaming execution through
+    * [[EventStreams.runStream]], the events streams' driver. */
   def runToBatch(spark: SparkSession, dir: String, name: String,
-                 transform: (SparkSession, String) => DataFrame): DataFrame = {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-    try {
-      var w = transform(spark, dir)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      val ckpt =
-        if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-          Some(s"/dev/shm/graft_ckpt_${name}_${System.nanoTime()}")
-        else None
-      ckpt.foreach(c => w = w.option("checkpointLocation", c))
-      val q = w.start()
-      q.awaitTermination()
-      ckpt.foreach { c =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(c))
-      }
-      spark.table(name)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-  }
+                 transform: (SparkSession, String) => DataFrame): DataFrame =
+    EventStreams.runStream(spark, name, "append")(transform(spark, dir))
 }

@@ -96,21 +96,26 @@ object EventStreams {
     */
   def runToBatch(spark: SparkSession, dir: String, name: String,
                  transform: DataFrame => DataFrame): DataFrame =
-    runStream(spark, dir, name, transform, "complete")
+    runStream(spark, name, "complete")(transform(readEvents(spark, dir)))
 
-  /** Start → AvailableNow → await, with a bounded state-store width:
-    * shuffle.partitions at stream START fixes the number of state store
-    * instances per micro-batch; 32 is waste for these cardinalities
-    * (measured: 8 → 4 halves the HDFS-provider commit time at sf0.1
-    * with identical results — on a cluster this knob would be sized to
-    * executor count, exactly like batch shuffle width). */
-  private def runStream(spark: SparkSession, dir: String, name: String,
-                        transform: DataFrame => DataFrame, mode: String): DataFrame = {
+  /** State-store width of every graft stream: shuffle.partitions at
+    * stream START fixes the number of state store instances per
+    * micro-batch; 32 is waste for these cardinalities (measured: 8 → 4
+    * halves the HDFS-provider commit time at sf0.1 with identical
+    * results — on a cluster it would be sized to executor count, exactly
+    * like batch shuffle width). */
+  private val StreamPartitions = 4
+
+  /** The one stream driver (events and documents streams): start →
+    * AvailableNow → await into a memory sink named `name`, with the
+    * state-store width pinned to [[StreamPartitions]] while `stream` is
+    * built and started; returns the sink as a batch DataFrame. */
+  private[streaming] def runStream(spark: SparkSession, name: String, mode: String)
+                                  (stream: => DataFrame): DataFrame = {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
+    spark.conf.set("spark.sql.shuffle.partitions", StreamPartitions.toString)
     try {
-      var w = transform(readEvents(spark, dir))
+      var w = stream
         .writeStream.format("memory").queryName(name)
         .outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -210,5 +215,5 @@ object EventStreams {
   def runToBatchAppend(spark: SparkSession, dir: String, name: String,
                        transform: DataFrame => DataFrame,
                        mode: String = "append"): DataFrame =
-    runStream(spark, dir, name, transform, mode)
+    runStream(spark, name, mode)(transform(readEvents(spark, dir)))
 }

@@ -1,16 +1,30 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedAggregator, UserDefinedFunction}
 
 /** Narrow accessor for `private[sql]` Spark internals the graft planner
   * needs: building a DataFrame from a catalyst LogicalPlan (used by
   * [[graft.plans.RangeJoinRule]] to run its plan-time boundary-sampling
-  * job). Lives under org.apache.spark.sql so the package-private API is
-  * visible; keep this file to the minimum surface.
+  * job) and turning a Scala UDF/UDAF into a function-registry builder
+  * (used by [[graft.plans.GraftExtensions]]). Lives under
+  * org.apache.spark.sql so the package-private API is visible; keep this
+  * file to the minimum surface.
   */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The builder `spark.udf.register(name, f)` installs: the UDF renamed
+    * to `name` (so unaliased output columns read `name(args)`), a
+    * `ScalaAggregator` for `udaf(…)` rows, a `ScalaUDF` otherwise. */
+  def udfBuilder(name: String, f: UserDefinedFunction): Seq[Expression] => Expression =
+    f.withName(name) match {
+      case a: UserDefinedAggregator[_, _, _] => args => ScalaAggregator(a, args)
+      case u: SparkUserDefinedFunction => args => classic.UserDefinedFunctionUtils.toScalaUDF(u, args)
+    }
 }

@@ -30,7 +30,6 @@ class PropertiesSpec extends SparkSpec {
     // Scala char UDF) must produce SAME-CARDINALITY sorted-distinct
     // sets AND identical pairwise jaccard on arbitrary ASCII input —
     // spaces, empties, repeats, and degenerate one-word texts included
-    graft.functions.DuckFunctions.register(spark)
     val word = Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString)
     val text = Gen.chooseNum(0, 12).flatMap(n =>
       Gen.listOfN(n, word).map(_.mkString(" ")))
@@ -66,7 +65,6 @@ class PropertiesSpec extends SparkSpec {
     // counts in slots 1..n — including empty tokens from consecutive
     // spaces, leading/trailing spaces, empty text, duplicated terms in
     // the query list, terms absent from the text, and multi-byte UTF-8
-    graft.functions.DuckFunctions.register(spark)
     val word = Gen.oneOf(Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString),
       Gen.const(""), Gen.const("naïve"), Gen.const("東京"))
     val text = Gen.chooseNum(0, 14).flatMap(n =>
@@ -91,7 +89,6 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("codegen delete_neighborhood_hashes ≡ UDF over random short ASCII strings") {
-    graft.functions.DuckFunctions.register(spark)
     val s = Gen.chooseNum(0, 8).flatMap(n =>
       Gen.listOfN(n, Gen.alphaChar).map(_.mkString))
     forAll(Gen.listOfN(20, s), n = 4) { strs =>
@@ -193,7 +190,6 @@ class PropertiesSpec extends SparkSpec {
     // documented semantics (min-length diff + tail squares, first-wins
     // ties). Random dims INCLUDING ragged vectors shorter/longer than
     // the centroid dim, duplicate centroids (tie exercise), k up to 65.
-    graft.functions.DuckFunctions.register(spark)
     val vecGen = Gen.chooseNum(1, 9).flatMap(d =>
       Gen.listOfN(d, Gen.chooseNum(-2000L, 2000L)))
     val tableGen = for {

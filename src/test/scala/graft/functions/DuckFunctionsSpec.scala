@@ -73,7 +73,6 @@ class DuckFunctionsSpec extends AnyFunSuite {
 
   test("session-info and string-distance registrations") {
     val spark = graft.TestSession.spark
-    DuckFunctions.register(spark)
     val cafe = "café" // decomposed accent: 5 codepoints, 4 graphemes
     val r = spark.sql(
       s"""SELECT graft_version() AS v, current_database() AS db,

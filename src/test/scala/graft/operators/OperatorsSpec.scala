@@ -87,7 +87,6 @@ class DedupSpec extends SparkSpec {
     // compared structurally (set sizes + pairwise jaccard identical);
     // the banding and neighborhood kernels must match value-for-value
     // on ASCII input.
-    graft.functions.DuckFunctions.register(spark)
     withCodegenOnly {
       val texts = Seq(
         "the quick brown fox jumps over the lazy dog",
@@ -181,7 +180,7 @@ class DedupSpec extends SparkSpec {
     val b = docs.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
     val exact = a.crossJoin(b).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        Dedup.jaccardSortedCol(docs)(col("sh_a"), col("sh_b")).as("jac"))
+        Dedup.jaccardSortedCol(col("sh_a"), col("sh_b")).as("jac"))
       .filter(col("jac") >= 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(exact.nonEmpty, "corpus lost its planted near-dup tier")
@@ -290,6 +289,23 @@ class DedupSpec extends SparkSpec {
     assert(brute.nonEmpty && pf == brute)
   }
 
+  test("jaccardThresholdPairs: materialize = true returns the inline plan's pairs and scores") {
+    // the two localCheckpoints are a plan-shape choice only: the same
+    // pairs with bit-equal jaccard, on the corpus the registry runs
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val docs = graft.Engine.table(spark, s"/root/testdata/$sf", "documents")
+      def pairs(materialize: Boolean) = Dedup.jaccardThresholdPairs(docs, "doc_id", "text",
+          shingleN = 3, threshold = 0.8, materialize = materialize)
+        .select("id_a", "id_b", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2))))
+      val inline = pairs(materialize = false)
+      val checkpointed = pairs(materialize = true)
+      assert(inline.nonEmpty, sf)
+      assert(inline.length == inline.distinct.length, sf)
+      assert(checkpointed.sorted.toSeq == inline.sorted.toSeq, sf)
+    }
+  }
+
   test("cosineLshCandidates recovers planted near-dup pairs (exact refine equivalence)") {
     val rng = new scala.util.Random(7)
     def vec(): Array[Double] = Array.fill(64)(rng.nextGaussian())
@@ -308,7 +324,6 @@ class DedupSpec extends SparkSpec {
     val vb = df.select(col("id").as("id_b"), col("v").as("vb"))
     def cos = Similarity.dot(col("va"), col("vb")) /
       (Similarity.norm(col("va")) * Similarity.norm(col("vb")))
-    graft.functions.DuckFunctions.register(spark)
     val found = cand.join(va, "id_a").join(vb, "id_b")
       .filter(cos >= 0.9).select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -13,8 +13,6 @@ import org.apache.spark.sql.functions._
 class CodegenContractSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.DuckFunctions.register(spark)
-
   // spark.range keeps the stage a real codegen stage (literal relations
   // constant-fold to LocalTableScan and prove nothing)
   test("array_dot compiles and evaluates") { withCodegenOnly {

@@ -3,9 +3,12 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Builds a SEPARATE session with GraftExtensions config-injected (the
-  * production path: spark.sql.extensions=graft.plans.GraftExtensions)
-  * and checks both injection points. */
+/** GraftExtensions is the one installation path: Engine.session builds
+  * with it, other deployments set
+  * spark.sql.extensions=graft.plans.GraftExtensions. The first test
+  * builds a SEPARATE session the second way and checks the injection
+  * points; the second checks that a child of the engine session inherits
+  * everything with no registration call. */
 class ExtensionsSpec extends AnyFunSuite {
 
   test("config-injected extensions: array_dot function + pow(x,2) optimizer rule") {
@@ -52,5 +55,23 @@ class ExtensionsSpec extends AnyFunSuite {
       SparkSession.setDefaultSession(default)
       SparkSession.setActiveSession(default)
     }
+  }
+
+  test("a newSession() child of the engine session has every graft function and rule") {
+    val child = graft.TestSession.spark.newSession()
+    val names = graft.functions.DuckFunctions.table.map(_._1)
+    assert(names.distinct.size == names.size,
+      names.diff(names.distinct).mkString("injected twice: ", ", ", ""))
+    val missing = names.filterNot(child.catalog.functionExists)
+    assert(missing.isEmpty, missing.mkString("unresolved in the child: ", ", ", ""))
+    val sq = child.sql("SELECT pow(id, 2) AS sq FROM range(5)")
+    assert(!sq.queryExecution.optimizedPlan.toString.toUpperCase.contains("POWER"))
+    import child.implicits._
+    child.conf.set("spark.graft.rangeJoin.bucketWidth", "8.0")
+    val pts = (1 to 200).map(i => (i.toLong, i * 0.37)).toDF("pid", "x")
+    val rng = (1 to 20).map(i => (i.toLong, i * 2.0, i * 2.0 + 7.0)).toDF("rid", "lo", "hi")
+    val band = pts.join(rng, $"x" > $"lo" && $"x" <= $"hi")
+    assert(band.queryExecution.optimizedPlan.toString.contains("__graft_pbucket"))
+    assert(band.count() > 0)
   }
 }

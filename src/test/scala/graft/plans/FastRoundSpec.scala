@@ -1,6 +1,7 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{Engine, SparkSpec}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
 import org.apache.spark.sql.functions._
 
 /** fast_round must be BIT-IDENTICAL to Spark's round(double, s) — the
@@ -13,9 +14,15 @@ import org.apache.spark.sql.functions._
 class FastRoundSpec extends SparkSpec {
   import spark.implicits._
 
+  // Spark's own Round, evaluated directly: in a plan, FastRoundRule
+  // would turn a DataFrame round() into fast_round and compare it with
+  // itself
+  private val sparkRound = udf((x: Double, s: Int) =>
+    Round(Literal(x), Literal(s)).eval().asInstanceOf[Double])
+
   private def diffCount(xs: Seq[Double], scale: Int): Long = withCodegenOnly {
     xs.toDF("x")
-      .select(col("x"), round(col("x"), scale).as("r"),
+      .select(col("x"), sparkRound(col("x"), lit(scale)).as("r"),
         call_function("fast_round", col("x"), lit(scale)).as("fr"))
       .filter(!(col("r") <=> col("fr")))
       .count()
@@ -53,6 +60,23 @@ class FastRoundSpec extends SparkSpec {
     xs.foreach { x =>
       assert(java.lang.Double.compare(FastRound.round(x, 2),
         FastRound.slow(x, 2)) === 0, s"x=$x")
+    }
+  }
+
+  test("SQL round(DOUBLE, 2) plans fast_round and is bit-equal to BigDecimal HALF_UP") {
+    val dir = "/root/testdata/sf0.001"
+    Engine.registerAll(spark, dir)
+    val df = Engine.sql(spark,
+      "SELECT o_totalprice AS x, round(o_totalprice, 2) AS r FROM orders")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("fast_round"), plan)
+    val rows = df.collect()
+    assert(rows.nonEmpty)
+    rows.foreach { row =>
+      val x = row.getDouble(0)
+      val want = java.math.BigDecimal.valueOf(x)
+        .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue()
+      assert(java.lang.Double.compare(row.getDouble(1), want) == 0, s"x=$x")
     }
   }
 }

@@ -32,7 +32,6 @@ class MinPairOrdSpec extends SparkSpec {
   }
 
   private def pairsDf(rows: Seq[(Int, java.lang.Long, java.lang.Long)]) = {
-    graft.functions.DuckFunctions.register(spark)
     import spark.implicits._
     rows.toDF("g", "doc", "pos")
   }
@@ -121,7 +120,6 @@ class MinPairOrdSpec extends SparkSpec {
   }
 
   test("boilerplateGrams output unchanged by the MinPairOrd rewrite (vs min(struct) reference)") {
-    graft.functions.DuckFunctions.register(spark)
     val docs = graft.Engine.table(spark, "/root/testdata/sf0.001", "documents")
     val ref = minStructReference(docs)
     val got = graft.operators.Curation.boilerplateGrams(
@@ -135,7 +133,6 @@ class MinPairOrdSpec extends SparkSpec {
     // numeric strings order differently from their numbers ("10" < "9"),
     // and a cast to long would NULL any non-numeric id — string ids
     // must take the exact min(struct) path
-    graft.functions.DuckFunctions.register(spark)
     val docs = graft.Engine.table(spark, "/root/testdata/sf0.001", "documents")
       .withColumn("doc_id", col("doc_id").cast("string"))
     val ref = minStructReference(docs)
@@ -148,7 +145,6 @@ class MinPairOrdSpec extends SparkSpec {
 
   test("min_pair_ord rejects non-integral arguments instead of casting them") {
     import spark.implicits._
-    graft.functions.DuckFunctions.register(spark)
     val df = Seq(("a", 1.5, 2)).toDF("s", "d", "i")
     for (bad <- Seq(Seq(col("s"), col("i")), Seq(col("d"), col("i")), Seq(col("i"), col("d")))) {
       val e = intercept[org.apache.spark.sql.AnalysisException] {

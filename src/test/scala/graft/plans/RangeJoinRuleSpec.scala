@@ -164,7 +164,6 @@ class RangeJoinRuleSpec extends SparkSpec {
     val futures = (1 to 2).map { k =>
       Future {
         val child = spark.newSession()
-        graft.functions.DuckFunctions.register(child)
         import child.implicits._
         val pts = (1 to 300).map(i => (i.toLong, i * (0.3 + k))).toDF("pid", "x")
         val rng = (1 to 40).map(i => (i.toLong, i * 2.0, i * 2.0 + 9.0 * k))
@@ -184,7 +183,6 @@ class RangeJoinRuleSpec extends SparkSpec {
   }
 
   test("bucket_index expression: boundary semantics, null, codegen parity") {
-    graft.functions.DuckFunctions.register(spark)
     val df = Seq[java.lang.Double](-5.0, 0.0, 0.5, 1.0, 7.3, null)
       .toDF("x")
       .selectExpr("x", "bucket_index(x, array(0.0D, 1.0D, 5.0D)) AS b")

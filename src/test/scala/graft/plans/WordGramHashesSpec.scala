@@ -7,8 +7,6 @@ import org.apache.spark.unsafe.types.UTF8String
 class WordGramHashesSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.DuckFunctions.register(spark)
-
   /** Reference computation: hash each token, combine each window with
     * the same rolling polynomial — written WITHOUT the rolling update so
     * a drop-term bug in the O(1) update would diverge from it. */
