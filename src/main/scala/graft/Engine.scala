@@ -29,7 +29,9 @@ object Engine {
     * coalescing, which is enabled).
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
+    // getOrCreate returns a session already running in this JVM without
+    // the extensions (Spark only warns); withGraft gives its graft child
+    val spark = withGraft(SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -48,10 +50,29 @@ object Engine {
       // "Measured fixed-cost floor")
       .config("spark.sql.ui.explainMode", "simple")
       .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
+      .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** `spark` if built with [[plans.GraftExtensions]], else its one pinned
+    * child built after adding them to the extensions it shares with its
+    * children, with its runtime SQL and `spark.graft.*` confs, made the
+    * thread's active session (the dialect reads conf there). */
+  def withGraft(spark: SparkSession): SparkSession =
+    if (plans.GraftExtensions.installed(spark)) spark
+    else {
+      // locked: two racing first calls would add the extensions twice
+      val child = synchronized(pinnedSession(spark, "graft") { c =>
+        org.apache.spark.sql.graft.GraftSqlShim.extendChildren(c, new plans.GraftExtensions)
+        spark.conf.getAll.foreach { case (k, v) =>
+          if (c.conf.isModifiable(k) || k.startsWith("spark.graft.")) c.conf.set(k, v)
+        }
+        plans.GraftExtensions.require(c)
+      })
+      SparkSession.setActiveSession(child)
+      child
+    }
 
   /** One pinned, conf-tweaked child session per (parent, key), e.g. the
     * no-broadcast child SqlScripts runs join_piecewise_merge in. The
@@ -270,6 +291,8 @@ object Engine {
     new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
 
   def registerAll(spark: SparkSession, dir: String): Unit = {
+    // fails here, with the deployment rule, on a session without graft
+    plans.GraftExtensions.require(spark)
     // memoized per (session, dir): several queries call this and each
     // plain registration resolves 10 tables
     val dirs = registeredDirs.computeIfAbsent(spark,

@@ -28,15 +28,22 @@ object SparkEntry {
   //   SqlScripts — statement scripts (COPY/RETURNING/SIMILAR TO/catalog fns)
   //   Tpch/TpcDs — optimizer-stress benchmark shapes
   //   Pipeline/PipelineOps — dedup/similarity/text/streaming/multimodal
+  // Each entry runs in Engine.withGraft(session), so any session the
+  // caller built, with or without plans.GraftExtensions, runs it; a
+  // SqlQuery applies it itself and stays one (RegistrySweepSpec reads
+  // the entry's type).
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
+    (graft.queries.Relational.queries ++
       graft.queries.ScalarFns.queries ++
       graft.queries.Pipeline.queries ++
       graft.queries.Catalog.queries ++
       graft.queries.Tpch.queries ++
       graft.queries.TpcDs.queries ++
       graft.queries.SqlScripts.queries ++
-      graft.queries.PipelineOps.queries
+      graft.queries.PipelineOps.queries).map {
+      case e @ (_, _: graft.queries.SqlQuery) => e
+      case (name, q) => name -> ((spark: SparkSession, dir: String) => q(Engine.withGraft(spark), dir))
+    }
 
   def oracleSql: Map[String, String] =
     graft.queries.Relational.oracle ++

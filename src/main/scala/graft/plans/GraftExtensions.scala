@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, LeafExpression, Literal, Multiply, Pow, Round}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType}
   * duckdb-7.cpp:14038). [[graft.Engine.session]] builds with it; any
   * other deployment sets `spark.sql.extensions=graft.plans.GraftExtensions`.
   * Spark passes a session's extensions on to `newSession()`, so child
-  * sessions need no call either.
+  * sessions need no call either. A session built without them gets a
+  * graft child from [[graft.Engine.withGraft]], which the registry's
+  * entry points apply.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -30,6 +32,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPostHocResolutionRule(_ => ResolveReservoirHint)
     ext.injectPlannerStrategy(_ => ReservoirStrategy)
   }
+}
+
+object GraftExtensions {
+  /** True when `spark` was built with the extensions (a registry lookup). */
+  def installed(spark: SparkSession): Boolean =
+    spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("duck_avg"))
+
+  def require(spark: SparkSession): Unit =
+    if (!installed(spark)) throw new IllegalStateException("this session has no graft " +
+      "functions; open it with graft.Engine.session, graft.Engine.withGraft or " +
+      "spark.sql.extensions=graft.plans.GraftExtensions")
 }
 
 /** Optimizer rule: `pow(x, 2)` → `x * x` (a multiplication beats a

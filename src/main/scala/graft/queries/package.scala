@@ -10,11 +10,12 @@ package object queries {
   /** A registry entry that is its SQL text: the base tables registered
     * as views over `dir`, then the text through [[Engine.sql]], the one
     * path from text to result that DuckDB's side of the oracle takes
-    * too. */
+    * too; in [[Engine.withGraft]] of the caller's session. */
   final case class SqlQuery(text: String) extends Build {
     def apply(s: SparkSession, dir: String): DataFrame = {
-      Engine.registerAll(s, dir)
-      Engine.sql(s, text)
+      val spark = Engine.withGraft(s)
+      Engine.registerAll(spark, dir)
+      Engine.sql(spark, text)
     }
   }
 

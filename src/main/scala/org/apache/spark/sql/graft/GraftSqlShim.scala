@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
@@ -10,10 +10,11 @@ import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedAg
 /** Narrow accessor for `private[sql]` Spark internals the graft planner
   * needs: building a DataFrame from a catalyst LogicalPlan (used by
   * [[graft.plans.RangeJoinRule]] to run its plan-time boundary-sampling
-  * job) and turning a Scala UDF/UDAF into a function-registry builder
-  * (used by [[graft.plans.GraftExtensions]]). Lives under
-  * org.apache.spark.sql so the package-private API is visible; keep this
-  * file to the minimum surface.
+  * job), turning a Scala UDF/UDAF into a function-registry builder
+  * (used by [[graft.plans.GraftExtensions]]) and adding extensions to a
+  * running session's children (used by [[graft.Engine.withGraft]]).
+  * Lives under org.apache.spark.sql so the package-private API is
+  * visible; keep this file to the minimum surface.
   */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -27,4 +28,9 @@ object GraftSqlShim {
       case a: UserDefinedAggregator[_, _, _] => args => ScalaAggregator(a, args)
       case u: SparkUserDefinedFunction => args => classic.UserDefinedFunctionUtils.toScalaUDF(u, args)
     }
+
+  /** Adds `install` to the extensions `spark` shares with its
+    * `newSession()` children; states already built keep what they have. */
+  def extendChildren(spark: SparkSession, install: SparkSessionExtensions => Unit): Unit =
+    install(spark.asInstanceOf[classic.SparkSession].extensions)
 }

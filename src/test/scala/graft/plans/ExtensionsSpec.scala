@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * spark.sql.extensions=graft.plans.GraftExtensions. The first test
   * builds a SEPARATE session the second way and checks the injection
   * points; the second checks that a child of the engine session inherits
-  * everything with no registration call. */
+  * everything with no registration call; the third gives the registry a
+  * session built without the extensions. */
 class ExtensionsSpec extends AnyFunSuite {
 
   test("config-injected extensions: array_dot function + pow(x,2) optimizer rule") {
@@ -73,5 +74,39 @@ class ExtensionsSpec extends AnyFunSuite {
     val band = pts.join(rng, $"x" > $"lo" && $"x" <= $"hi")
     assert(band.queryExecution.optimizedPlan.toString.contains("__graft_pbucket"))
     assert(band.count() > 0)
+  }
+
+  test("a session built without the extensions: registerAll names the deployment rule, the registry runs in its graft child") {
+    val default = graft.TestSession.spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val plain = SparkSession.builder()
+        .master("local[2]")
+        .config("spark.sql.shuffle.partitions", "3")
+        .getOrCreate()
+      assert(!GraftExtensions.installed(plain))
+      val dir = "/root/testdata/sf0.001"
+      val err = intercept[IllegalStateException](graft.Engine.registerAll(plain, dir))
+      assert(err.getMessage.contains("spark.sql.extensions=graft.plans.GraftExtensions"),
+        err.getMessage)
+      // SparkEntry.entry: TPC-H Q1 through Engine.sql (duck_avg, duck_sub)
+      val q1 = graft.SparkEntry.entry(plain)
+      assert(q1.count() > 0)
+      val child = q1.sparkSession
+      assert(child ne plain)
+      assert(GraftExtensions.installed(child))
+      assert(!GraftExtensions.installed(plain))
+      assert(child.conf.get("spark.sql.shuffle.partitions") == "3")
+      // one pinned child per session, also for Engine.session over it
+      assert(graft.Engine.withGraft(plain) eq child)
+      SparkSession.setActiveSession(plain)
+      SparkSession.setDefaultSession(plain)
+      assert(graft.Engine.session("local[2]", shufflePartitions = 3) eq child)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.setDefaultSession(default)
+      SparkSession.setActiveSession(default)
+    }
   }
 }

@@ -9,7 +9,6 @@ class JaccardSortedSpec extends SparkSpec {
 
   private def viaExpr(pairs: Seq[(Array[Long], Array[Long])]): Seq[Double] = {
     val df = pairs.toDF("a", "b")
-    Dedup.jaccardSortedCol(col("a"), col("b"))
     df.select(call_function("jaccard_sorted", col("a"), col("b"))).collect().map(_.getDouble(0)).toSeq
   }
 
@@ -39,7 +38,6 @@ class JaccardSortedSpec extends SparkSpec {
     val df = spark.range(10).select(
       array(col("id"), col("id") + 1).as("a"),
       array(col("id") + 1, col("id") + 2).as("b"))
-    Dedup.jaccardSortedCol(col("a"), col("b"))
     val out = df.select(call_function("jaccard_sorted", col("a"), col("b")).as("j"))
     val top = out.queryExecution.executedPlan
     assert(top.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec],
