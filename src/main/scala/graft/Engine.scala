@@ -49,6 +49,16 @@ object Engine {
       // disabled anyway; "simple" keeps the event cheap (BASELINE.md
       // "Measured fixed-cost floor")
       .config("spark.sql.ui.explainMode", "simple")
+      // scan splits sized by bytes, not by per-file open cost: Spark caps
+      // a split at max(openCost, (Σ(file + openCost)) / cores) and packs
+      // each file as file + openCost. At the default 4 MB (an HDFS
+      // open), 4 × 1.6 MB files + 16 tiny ones on 4 cores give a 21.6 MB
+      // cap and all four large files land in ONE split (40,000 of 42,041
+      // rows in one task). A local-disk open costs ~128 KiB of read
+      // time: the cap becomes the per-core byte share (2.2 MB), each
+      // large file gets its own split, tiny files still pack together,
+      // and a table under 128 KiB stays one split.
+      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
       .withExtensions(new plans.GraftExtensions)
       .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 /** Embedding similarity search over an `array<float>` column.
@@ -429,17 +429,15 @@ object Similarity {
     *
     *   scan → per-row: cid (centroid closure), per-query sim +
     *   probe-membership (query vectors/probe cells are plan literals) →
-    *   ONE (qid) exchange → sort (sim desc) → exact_rank = row_number,
-    *   cand_rank = running count of candidate rows over the SAME sort →
-    *   per-qid aggregate riding the SAME partitioning (no exchange).
+    *   per-map-task top-k ([[RecallTopK]], partial) → ONE (qid)
+    *   exchange of at most 2k rows per query and task → merged top-k.
     *
     * Probe-cell selection replicates [[ivfTopK]]'s in-plan
     * `array_sort(struct(s, cid))` semantics exactly (ascending (s, cid),
     * reversed, first nProbe) with the same sequential-dot IEEE
     * arithmetic, so the candidate sets match the operator's. At 100 TB
-    * the corpus still never shuffles — only (qid, sim) pairs do, k per
-    * partition after the rank filter... the same bytes [[ivfTopK]]'s own
-    * window moves, minus the second window and the join.
+    * the corpus still never shuffles, and neither do its (qid, sim)
+    * pairs: each map task sends its own top-k per query.
     *
     * Returns (qid, n_results, recall_ok): n_results = IVF hits in its
     * top-k, recall_ok = |IVF top-k ∩ exact top-k| ≥ minHits.
@@ -447,7 +445,16 @@ object Similarity {
   def ivfRecallReport(corpus: DataFrame, idCol: String, vecCol: String,
                       queries: Array[(Long, Array[Double])],
                       centroids: Array[(Int, Array[Double])],
-                      nProbe: Int, k: Int, minHits: Int): DataFrame = {
+                      nProbe: Int, k: Int, minHits: Int): DataFrame =
+    ivfRecallCounts(ivfScored(corpus, idCol, vecCol, queries, centroids, nProbe), k)
+      .select(col("qid"), col("n_results"), (col("n_hits") >= minHits).as("recall_ok"))
+
+  /** Every (qid, nid ≠ qid) pair of the corpus with its cosine `sim` and
+    * `is_cand` (nid's cell is among the query's nProbe probe cells). */
+  private[graft] def ivfScored(corpus: DataFrame, idCol: String, vecCol: String,
+                               queries: Array[(Long, Array[Double])],
+                               centroids: Array[(Int, Array[Double])],
+                               nProbe: Int): DataFrame = {
     def probeCells(qv: Array[Double]): Array[Int] = {
       // mirror of centroidScores + array_sort + reverse + slice: sort
       // ascending by (score, cid), reverse, take nProbe
@@ -468,25 +475,93 @@ object Similarity {
         array(probeCells(qv).map(lit).toIndexedSeq: _*).as("cells"))
     }
     val v = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val scored = assignToCentroids(v, centroids)
+    assignToCentroids(v, centroids)
       .select(col("id").as("nid"), col("cid"), col("v"),
         explode(array(qStructs.toIndexedSeq: _*)).as("q"))
       .filter(col("q.qid") =!= col("nid"))
       .select(col("q.qid").as("qid"), col("nid"),
         (dot(col("v"), col("q.qv")) / (norm(col("v")) * col("q.qnorm"))).as("sim"),
         array_contains(col("q.cells"), col("cid")).as("is_cand"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    val ranked = scored
-      .withColumn("exact_rank", row_number().over(w))
-      .withColumn("cand_rank",
-        sum(when(col("is_cand"), 1).otherwise(0))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    ranked.groupBy(col("qid"))
-      .agg(count(when(col("is_cand") && col("cand_rank") <= k, 1)).as("n_results"),
-        count(when(col("is_cand") && col("cand_rank") <= k &&
-          col("exact_rank") <= k, 1)).as("n_hits"))
-      .select(col("qid"), col("n_results"),
-        (col("n_hits") >= minHits).as("recall_ok"))
+  }
+
+  /** (qid, n_results, n_hits) of [[ivfScored]] rows ranked per qid by
+    * `sim DESC NULLS LAST, nid ASC`: n_results = |candidate top-k|,
+    * n_hits = |candidate top-k ∩ exact top-k|. */
+  private[graft] def ivfRecallCounts(scored: DataFrame, k: Int): DataFrame = {
+    val recall = udaf(new RecallTopK(k))
+    scored.groupBy(col("qid"))
+      .agg(recall(col("sim"), col("nid"), coalesce(col("is_cand"), lit(false))).as("r"))
+      .select(col("qid"), col("r._1").as("n_results"), col("r._2").as("n_hits"))
+  }
+
+  /** [[RecallTopK]]'s buffer: the k best candidate rows in slots [0, k)
+    * and the k best other rows in [k, 2k), each list best first; `n`
+    * holds the two list lengths. */
+  final case class RecallBuf(sim: Array[Double], isNull: Array[Boolean],
+                             nid: Array[Long], n: Array[Int])
+
+  /** Bounded top-k aggregate of (sim, nid, is_cand) → (n_results, n_hits),
+    * ranking as Spark's `sim DESC NULLS LAST, nid ASC` sort does: NaN
+    * above every number and -0.0 equal to 0.0 (`SQLOrderingUtil`). The
+    * two lists' union holds the exact top-k, and merging two buffers
+    * keeps both lists exact, so each map task ships at most 2k rows per
+    * qid. */
+  final class RecallTopK(k: Int)
+      extends Aggregator[(java.lang.Double, Long, Boolean), RecallBuf, (Long, Long)] {
+    def zero: RecallBuf = RecallBuf(new Array[Double](2 * k), new Array[Boolean](2 * k),
+      new Array[Long](2 * k), new Array[Int](2))
+
+    /** Does the row (an = sim is null, as, ai) rank before slot j? */
+    private def before(b: RecallBuf, an: Boolean, as: Double, ai: Long, j: Int): Boolean =
+      if (an != b.isNull(j)) !an
+      else {
+        val c = if (an) 0
+          else org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(as, b.sim(j))
+        if (c != 0) c > 0 else ai < b.nid(j)
+      }
+
+    private def offer(b: RecallBuf, list: Int, an: Boolean, as: Double, ai: Long): Unit = {
+      val base = list * k
+      val n = b.n(list)
+      var pos = n
+      while (pos > 0 && before(b, an, as, ai, base + pos - 1)) pos -= 1
+      if (pos < k) {
+        val moved = math.min(n, k - 1) - pos
+        System.arraycopy(b.sim, base + pos, b.sim, base + pos + 1, moved)
+        System.arraycopy(b.isNull, base + pos, b.isNull, base + pos + 1, moved)
+        System.arraycopy(b.nid, base + pos, b.nid, base + pos + 1, moved)
+        b.sim(base + pos) = as; b.isNull(base + pos) = an; b.nid(base + pos) = ai
+        b.n(list) = pos + moved + 1
+      }
+    }
+
+    def reduce(b: RecallBuf, a: (java.lang.Double, Long, Boolean)): RecallBuf = {
+      val an = a._1 == null
+      offer(b, if (a._3) 0 else 1, an, if (an) 0.0 else a._1.doubleValue, a._2)
+      b
+    }
+
+    def merge(x: RecallBuf, y: RecallBuf): RecallBuf = {
+      for (list <- 0 to 1; i <- list * k until list * k + y.n(list))
+        offer(x, list, y.isNull(i), y.sim(i), y.nid(i))
+      x
+    }
+
+    def finish(b: RecallBuf): (Long, Long) = {
+      // walk the exact top-k: the first k rows of the two lists merged
+      var i = 0; var j = 0; var hits = 0L
+      while (i + j < k && (i < b.n(0) || j < b.n(1))) {
+        if (j >= b.n(1) || (i < b.n(0) && before(b, b.isNull(i), b.sim(i), b.nid(i), k + j))) {
+          hits += 1; i += 1
+        } else j += 1
+      }
+      (b.n(0).toLong, hits)
+    }
+
+    def bufferEncoder: Encoder[RecallBuf] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[RecallBuf]()
+    def outputEncoder: Encoder[(Long, Long)] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
   }
 
   /** LSH-bucketed approximate NN: bucket every vector, then compute exact

@@ -105,83 +105,79 @@ object Csv {
     }
     val best = cands.maxBy(c => (c.score, c.consistency, c.cols,
       -CandidateDelims.indexOf(c.delim), -CandidateQuotes.indexOf(c.quote)))
-    val header =
-      if (best.rows.length >= 2) {
-        val head = best.rows.head
-        val body = best.rows.tail
-        (0 until best.cols).exists(c =>
-          !typedNonVarchar(head(c)) && head(c).trim.nonEmpty &&
-            body.forall(r => typedNonVarchar(r(c))))
-      } else if (best.rows.length == 1) {
-        // Single-record sample with no typed (non-varchar) field: the
-        // reference sniffer's bias is header=true (duckdb-4.cpp:1949-3700,
-        // all-varchar first row) — the common producer of this shape is a
-        // header-only part file from an empty write partition.
-        best.rows.head.forall(v => !typedNonVarchar(v) && v.trim.nonEmpty)
-      } else false
-    Dialect(best.delim, best.quote, header)
+    Dialect(best.delim, best.quote, looksLikeHeader(best.rows, best.cols))
   }
 
-  /** The sample both detections read (the dialect sniff and the
-    * quoted-newline scan): one file's first [[SniffBytes]] bytes
-    * (gzip-transparent by extension, like the reference's compressed
-    * reads) after `skip` physical lines, and whether the byte cap cut it
-    * short. Driver-side by design: detection reads ONE file head
-    * regardless of dataset size — the same O(sample) cost the reference
-    * pays. */
-  private def sample(spark: SparkSession, path: String, skip: Int): (String, Boolean) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // resolve globs AND directories (a Spark-written CSV sink is a
-    // directory of part files + _SUCCESS markers) to data files, in name
-    // order so the choice is deterministic
-    def dataFiles(p: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.Path] = {
-      val fs = p.getFileSystem(conf)
-      val st = fs.getFileStatus(p)
-      if (st.isFile) {
-        val n = p.getName
-        if (n.startsWith("_") || n.startsWith(".")) Iterator.empty else Iterator.single(p)
-      } else fs.listStatus(p).map(_.getPath).sortBy(_.getName)
-        .iterator.flatMap(dataFiles)
+  /** Header detection on the modal-width records of one sample. */
+  private def looksLikeHeader(rows: Vector[Vector[String]], cols: Int): Boolean =
+    if (rows.length >= 2) {
+      val head = rows.head
+      val body = rows.tail
+      (0 until cols).exists(c =>
+        !typedNonVarchar(head(c)) && head(c).trim.nonEmpty &&
+          body.forall(r => typedNonVarchar(r(c))))
+    } else if (rows.length == 1) {
+      // Single-record sample with no typed (non-varchar) field: the
+      // reference sniffer's bias is header=true (duckdb-4.cpp:1949-3700,
+      // all-varchar first row) — the common producer of this shape is a
+      // header-only part file from an empty write partition.
+      rows.head.forall(v => !typedNonVarchar(v) && v.trim.nonEmpty)
+    } else false
+
+  /** The header flag of one file's records under an already-sniffed
+    * dialect (the rule [[sniffText]] applies to its sample). */
+  private def sniffHeader(records: Vector[Vector[String]]): Boolean = {
+    val rows = records.take(SniffRecords)
+    rows.nonEmpty && {
+      val modal = rows.map(_.length).groupBy(identity).maxBy { case (c, g) => (g.size, c) }._1
+      looksLikeHeader(rows.filter(_.length == modal), modal)
     }
-    def readSample(p: org.apache.hadoop.fs.Path): (String, Boolean) = {
+  }
+
+  /** The data files of a path, glob or directory (a Spark-written CSV
+    * sink is a directory of part files + _SUCCESS markers), in name
+    * order so every choice made from them is deterministic. */
+  private def dataFiles(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.Path] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def under(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
       val fs = p.getFileSystem(conf)
-      val raw = fs.open(p)
-      try {
-        val in: java.io.InputStream =
-          if (p.getName.endsWith(".gz") || p.getName.endsWith(".gzip"))
-            new java.util.zip.GZIPInputStream(raw)
-          else raw
-        val buf = new Array[Byte](SniffBytes)
-        var off = 0
-        var n = 0
-        while (off < SniffBytes && { n = in.read(buf, off, SniffBytes - off); n > 0 })
-          off += n
-        val truncated = n > 0 || off == SniffBytes
-        var text = new String(buf, 0, off, java.nio.charset.StandardCharsets.UTF_8)
-        if (skip > 0)
-          text = text.linesWithSeparators.drop(skip).mkString
-        (text, truncated)
-      } finally raw.close()
+      if (fs.getFileStatus(p).isFile) {
+        val n = p.getName
+        if (n.startsWith("_") || n.startsWith(".")) Seq.empty else Seq(p)
+      } else fs.listStatus(p).map(_.getPath).sortBy(_.getName).toSeq.flatMap(under)
     }
     val files = globFiles(spark, path)
     require(files.nonEmpty, s"sniff: no files match $path")
-    val candidates = files.iterator.map(f => new org.apache.hadoop.fs.Path(f))
-      .flatMap(dataFiles)
-    if (!candidates.hasNext)
-      throw new IllegalArgumentException(s"sniff: no data files under $path")
-    // A partitioned write routinely produces header-only part files (an
-    // empty input partition still writes its header line). Sniffing one of
-    // those loses header detection for the whole dataset, so prefer the
-    // first file whose sample holds >=2 physical records; fall back to the
-    // first data file when every file is that short.
-    var fallback: Option[(String, Boolean)] = None
-    var picked: Option[(String, Boolean)] = None
-    while (picked.isEmpty && candidates.hasNext) {
-      val s = readSample(candidates.next())
-      if (fallback.isEmpty) fallback = Some(s)
-      if (s._1.linesIterator.count(_.trim.nonEmpty) >= 2) picked = Some(s)
-    }
-    picked.orElse(fallback).get
+    val data = files.flatMap(f => under(new org.apache.hadoop.fs.Path(f)))
+    if (data.isEmpty) throw new IllegalArgumentException(s"sniff: no data files under $path")
+    data
+  }
+
+  /** What the detections read of one file: its first [[SniffBytes]]
+    * bytes (gzip-transparent by extension, like the reference's
+    * compressed reads) after `skip` physical lines, and whether the byte
+    * cap cut it short. Driver-side by design: detection reads file
+    * heads regardless of dataset size — the same O(sample) cost the
+    * reference pays. */
+  private def readSample(spark: SparkSession, p: org.apache.hadoop.fs.Path,
+                         skip: Int): (String, Boolean) = {
+    val raw = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    try {
+      val in: java.io.InputStream =
+        if (p.getName.endsWith(".gz") || p.getName.endsWith(".gzip"))
+          new java.util.zip.GZIPInputStream(raw)
+        else raw
+      val buf = new Array[Byte](SniffBytes)
+      var off = 0
+      var n = 0
+      while (off < SniffBytes && { n = in.read(buf, off, SniffBytes - off); n > 0 })
+        off += n
+      val truncated = n > 0 || off == SniffBytes
+      var text = new String(buf, 0, off, java.nio.charset.StandardCharsets.UTF_8)
+      if (skip > 0)
+        text = text.linesWithSeparators.drop(skip).mkString
+      (text, truncated)
+    } finally raw.close()
   }
 
   /** Does the sample hold a newline INSIDE a quoted field? Drives the
@@ -303,7 +299,18 @@ object Csv {
         "before parsing; combine them by reading each file separately)")
 
     val delimGiven = lower.contains("sep") || lower.contains("delim")
-    val (text, truncated) = sample(spark, path, skip)
+    // read on demand and kept: the dialect needs one sample, the
+    // per-file header detection below every file's
+    val samples = dataFiles(spark, path).to(LazyList)
+      .map(p => p -> readSample(spark, p, skip))
+    // A partitioned write routinely produces header-only part files (an
+    // empty input partition still writes its header line). Sniffing one of
+    // those loses the dialect, so sniff the first file whose sample holds
+    // >=2 physical records; fall back to the first data file when every
+    // file is that short.
+    val (text, truncated) = samples
+      .find(_._2._1.linesIterator.count(_.trim.nonEmpty) >= 2)
+      .getOrElse(samples.head)._2
     val sniffed: Option[Dialect] =
       if (delimGiven && lower.contains("quote") && lower.contains("header")) None
       else Some(sniffText(text, truncated))
@@ -312,15 +319,14 @@ object Csv {
       .orElse(sniffed.map(_.quote)).getOrElse('"')
     val quotedNewlines = hasQuotedNewline(text, effQuote)
 
-    def reader: DataFrameReader = {
+    // an explicit header option overrides `header` in the option fold
+    def reader(header: Boolean): DataFrameReader = {
       var b = spark.read.option("inferSchema", columns.isEmpty.toString)
-      sniffed match {
-        case Some(d) =>
-          if (!delimGiven) b = b.option("sep", d.delim.toString)
-          if (!lower.contains("quote")) b = b.option("quote", d.quote.toString)
-          if (!lower.contains("escape")) b = b.option("escape", d.quote.toString)
-          b = b.option("header", d.header.toString)
-        case None => b = b.option("header", "true")
+        .option("header", header.toString)
+      sniffed.foreach { d =>
+        if (!delimGiven) b = b.option("sep", d.delim.toString)
+        if (!lower.contains("quote")) b = b.option("quote", d.quote.toString)
+        if (!lower.contains("escape")) b = b.option("escape", d.quote.toString)
       }
       if (quotedNewlines) b = b.option("multiLine", "true")
       // hive_partitioning over a glob INTO the partition dirs: pin the
@@ -331,6 +337,7 @@ object Csv {
       val base = columns.foldLeft(b) { case (acc, ddl) => acc.schema(ddl) }
       translated.foldLeft(base) { case (acc, (k, v)) => acc.option(k, v) }
     }
+    val header = sniffed.forall(_.header)
 
     var df =
       if (skip > 0) {
@@ -345,16 +352,17 @@ object Csv {
         files.map { f =>
           val lines = spark.sparkContext.textFile(f)
             .zipWithIndex().filter(_._2 >= skip).map(_._1)
-          reader.csv(spark.createDataset(lines))
+          reader(header).csv(spark.createDataset(lines))
         }.reduce(_ unionByName _)
       } else if (unionByName) {
         // schema-per-file + name-based union (reference union_by_name):
         // missing columns null-fill, like MultiFileReader's column map
         val files = globFiles(spark, path)
         require(files.nonEmpty, s"union_by_name: no files match $path")
-        files.map(f => reader.csv(f))
+        files.map(f => reader(header).csv(f))
           .reduce(_.unionByName(_, allowMissingColumns = true))
-      } else reader.csv(path)
+      } else if (lower.contains("header")) reader(header).csv(path)
+      else perFileHeader(path, sniffed.get, samples, reader)
 
     if (addFilename) df = df.withColumn("filename", input_file_name())
     if (normalize) df = df.toDF(df.columns.map(normalizeName).toIndexedSeq: _*)
@@ -363,6 +371,34 @@ object Csv {
       df = df.toDF((ns ++ df.columns.drop(ns.length)).toIndexedSeq: _*)
     }
     df
+  }
+
+  /** Read a glob whose files may disagree on having a header, as DuckDB
+    * 1.0 does: each file's header is detected on its own sample, the
+    * columns are named from the first file (`_c<i>` when it has no
+    * header), and a header line is never read as data. One reader over
+    * the path when every file agrees; otherwise one per header flag,
+    * unioned by position. */
+  private def perFileHeader(path: String, d: Dialect,
+                            samples: Seq[(org.apache.hadoop.fs.Path, (String, Boolean))],
+                            reader: Boolean => DataFrameReader): DataFrame = {
+    val parsed = samples.map { case (p, (text, cut)) =>
+      (p.toString, parseRecords(text, d.delim, d.quote, cut), cut)
+    }
+    val headers = parsed.map(f => sniffHeader(f._2))
+    if (headers.distinct.length == 1) return reader(headers.head).csv(path)
+    val names = parsed.head._2.headOption.toSeq.flatMap(_.zipWithIndex.map {
+      case (n, i) => if (!headers.head || n.isEmpty) s"_c$i" else n
+    })
+    // a whole file that is one header line adds no rows
+    val data = parsed.zip(headers).collect {
+      case ((f, records, cut), h) if !(h && !cut && records.length == 1) => (f, h)
+    }
+    data.groupBy(_._2).toSeq.sortBy(!_._1).map { case (h, fs) =>
+      val df = reader(h).csv(fs.map(_._1): _*)
+      val own = df.columns.toSeq
+      df.toDF((names.take(own.length) ++ own.drop(names.length)): _*)
+    }.reduce(_ union _)
   }
 
   private def globFiles(spark: SparkSession, path: String): Seq[String] = {

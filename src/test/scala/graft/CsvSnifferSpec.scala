@@ -79,6 +79,26 @@ class CsvSnifferSpec extends SparkSpec {
     assert(bare.contains("line one\nline two") && !bare.exists(_.contains("two\"")))
   }
 
+  test("each file of a glob is sniffed for its own header (DuckDB 1.0)") {
+    import java.nio.file.Files
+    def glob(files: (String, String)*): String = {
+      val dir = Files.createTempDirectory("graft_sniff_hdr_")
+      files.foreach { case (n, body) => Files.write(dir.resolve(n), body.getBytes) }
+      s"$dir/*.csv"
+    }
+    // a header-only file names the columns of a headerless one and adds
+    // no row: DuckDB returns these 2 rows under id, note
+    val named = Csv.read(spark,
+      glob("a.csv" -> "id,note\n", "b.csv" -> "1,\"line one\nline two\"\n2,plain\n"))
+    assert(named.columns.toSeq == Seq("id", "note"))
+    assert(named.collect().map(r => (r.get(0).toString, r.getString(1))).toSeq.sortBy(_._1) ==
+      Seq(("1", "line one\nline two"), ("2", "plain")))
+    // a headed file followed by a headerless one: no header line as data
+    val mixed = Csv.read(spark, glob("a.csv" -> "id,qty\n1,10\n", "b.csv" -> "2,20\n3,30\n"))
+    assert(mixed.columns.toSeq == Seq("id", "qty"))
+    assert(mixed.agg(sum(col("qty")), count(lit(1))).head().toSeq == Seq(60L, 3L))
+  }
+
   test("newlines inside quoted fields do not split records") {
     val recs = Csv.parseRecords("1,\"a\nb\",2\n3,c,4\n", ',', '"', truncated = false)
     assert(recs == Vector(Vector("1", "a\nb", "2"), Vector("3", "c", "4")))

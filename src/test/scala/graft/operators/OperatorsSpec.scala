@@ -468,6 +468,57 @@ class SimilaritySpec extends SparkSpec {
       s"fused ${fused.toSeq} != composed ${composed.toSeq}")
   }
 
+  test("ivfRecallReport's per-task top-k equals the unpruned window ranking") {
+    // the unpruned formulation: every (qid, nid) pair crosses the (qid)
+    // exchange and one sort ranks them; the report prunes to each map
+    // task's top-k first, which must not change a count
+    import org.apache.spark.sql.expressions.Window
+    def unpruned(scored: org.apache.spark.sql.DataFrame, k: Int) = {
+      val w = Window.partitionBy($"qid").orderBy($"sim".desc, $"nid".asc)
+      scored.withColumn("exact_rank", row_number().over(w))
+        .withColumn("cand_rank", sum(when($"is_cand", 1).otherwise(0))
+          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy($"qid")
+        .agg(count(when($"is_cand" && $"cand_rank" <= k, 1)).as("n_results"),
+          count(when($"is_cand" && $"cand_rank" <= k && $"exact_rank" <= k, 1)).as("n_hits"))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.get(2))).sortBy(_._1).toSeq
+    def check(corpus: org.apache.spark.sql.DataFrame, queries: Array[(Long, Array[Double])],
+              centroids: Array[(Int, Array[Double])], nProbe: Int, k: Int, minHits: Int): Unit = {
+      val scored = Similarity.ivfScored(corpus, "vec_id", "embedding", queries, centroids, nProbe)
+      val want = rows(unpruned(scored, k))
+      assert(want.nonEmpty)
+      assert(rows(Similarity.ivfRecallCounts(scored, k)) == want)
+      val report = rows(Similarity.ivfRecallReport(corpus, "vec_id", "embedding",
+        queries, centroids, nProbe, k, minHits))
+      assert(report == want.map { case (q, n, h) => (q, n, h.asInstanceOf[Long] >= minHits) })
+    }
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val docs = graft.Engine.table(spark, s"/root/testdata/$sf", "embeddings")
+      val queries = docs.filter($"vec_id" < 5)
+        .select($"vec_id", $"embedding".cast("array<double>")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+      val centroids = Similarity.kmeansCentroids(docs, "vec_id", "embedding", 16, 3)
+      check(docs, queries, centroids, nProbe = 4, k = 10, minHits = 6)
+    }
+    // crafted: sim ties broken by nid (1.0 ×6; 0.0 against -0.0), a NaN
+    // sim (ranks above every number), a null sim (ranks last), fewer
+    // than k candidates, spread over 3 map tasks so buffers merge. (A
+    // zero vector raises DIVIDE_BY_ZERO under ANSI in both formulations.)
+    val vecs = Seq(1.0, 2.0, 3.0, 0.5, 4.0, 7.0).map(c => Seq(c, 0.0)) ++
+      Seq(Seq(Double.NaN, 1.0), null, Seq(0.0, 1.0), Seq(-0.0, -1.0),
+        Seq(-1.0, 0.0), Seq(1.0, 1.0), Seq(1.0, -1.0), Seq(-1.0, 2.0))
+    val corpus = vecs.zipWithIndex.map { case (v, i) => (i.toLong + 1, v) }
+      .toDF("vec_id", "embedding").repartition(3)
+    val centroids = Array((0, Array(1.0, 0.0)), (1, Array(0.0, 1.0)), (2, Array(-1.0, 0.0)))
+    // query 102 probes cell 1 only: its sim ties straddle candidates
+    // and non-candidates, so the nid tie-break decides n_hits
+    val queries = Array((1L, Array(1.0, 0.0)), (100L, Array(0.0, 1.0)),
+      (101L, Array(-1.0, 0.0)), (102L, Array(1.0, 1.0)))
+    for (k <- Seq(3, 10); nProbe <- Seq(1, 2)) check(corpus, queries, centroids, nProbe, k, 2)
+  }
+
   test("centroid assignment plans with no exchange, no UDF, compiles under codegen-only") {
     withCodegenOnly {
       val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)),
