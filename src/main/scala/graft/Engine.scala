@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.{coalesce, col, expr, floor, hash, lit, monotonically_increasing_id, pmod, sum, when}
 
@@ -210,63 +211,6 @@ object Engine {
     if (parquetRowGroups(spark, dir, name) < cores / 2) df.repartition(cores)
     else df
   }
-
-  // Column [min, max] from the same parquet footers (row-group
-  // statistics — the reference's zone maps, duckdb-10.cpp:5441), for
-  // sketches that need a value range at PLAN time without a data pass.
-  private val colRangeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Double, Double)]()
-
-  def parquetColumnRange(spark: SparkSession, dir: String, name: String,
-                         column: String): (Double, Double) =
-    colRangeMemo.computeIfAbsent(s"$dir/$name/$column", { _ =>
-      // LOGICAL-type aware decoding (self-review r10): an int32/int64-
-      // backed DECIMAL's statistics hold the UNSCALED value — divide by
-      // 10^scale or the range is 10^scale off; byte-array-backed stats
-      // (string/binary/fixed-len decimal) have no defensible numeric
-      // reading here, so the column is skipped and the caller's
-      // data-pass fallback below kicks in rather than crashing on
-      // Binary.toString.
-      var lo = Double.PositiveInfinity
-      var hi = Double.NegativeInfinity
-      withFooters(spark, dir, name)(()) { (_, r) =>
-        r.getRowGroups.forEach { rg =>
-          rg.getColumns.forEach { c =>
-            if (c.getPath.toDotString == column && c.getStatistics != null &&
-                c.getStatistics.hasNonNullValue) {
-              val scaleDiv = {
-                val lt = c.getPrimitiveType.getLogicalTypeAnnotation
-                lt match {
-                  case d: org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                    math.pow(10, d.getScale)
-                  case _ => 1.0
-                }
-              }
-              def d(v: Any): Option[Double] = v match {
-                case x: java.lang.Double => Some(x.doubleValue() / scaleDiv)
-                case x: java.lang.Float => Some(x.doubleValue() / scaleDiv)
-                case x: java.lang.Integer => Some(x.doubleValue() / scaleDiv)
-                case x: java.lang.Long => Some(x.doubleValue() / scaleDiv)
-                case _ => None // binary-backed stats: no numeric reading
-              }
-              d(c.getStatistics.genericGetMin).foreach(v => lo = math.min(lo, v))
-              d(c.getStatistics.genericGetMax).foreach(v => hi = math.max(hi, v))
-            }
-          }
-        }
-      }
-      if (lo <= hi) (lo, hi)
-      else {
-        // fallback: one tiny min/max aggregate over the column — the
-        // same plan-time data probe RangeJoinRule's bounds job runs
-        val row = table(spark, dir, name)
-          .agg(org.apache.spark.sql.functions.min(column).cast("double"),
-            org.apache.spark.sql.functions.max(column).cast("double")).head()
-        require(!row.isNullAt(0) && !row.isNullAt(1),
-          s"parquetColumnRange: no stats and no values for $name.$column")
-        (row.getDouble(0), row.getDouble(1))
-      }
-    })
 
   private def resolveTable(spark: SparkSession, dir: String, name: String): DataFrame = {
     // ts-unit handling: if the file stores TIMESTAMP(NANOS) it infers as
@@ -786,12 +730,6 @@ object Engine {
       .filter(pmod(hash(col("__gblk"), lit(seed)), lit(100)) < lit(pct))
       .drop("__gblk")
 
-  /** current_setting / SET analogs (duckdb.hpp:12002). */
-  def currentSetting(spark: SparkSession, key: String): String =
-    spark.conf.get(key)
-  def setSetting(spark: SparkSession, key: String, value: String): Unit =
-    spark.conf.set(key, value)
-
   /** SUMMARIZE analog (duckdb-6.cpp:9493). */
   def summarize(df: DataFrame): DataFrame = df.summary()
 
@@ -905,32 +843,30 @@ object Engine {
     * share one pipeline, so per-operator wall-clock would be fiction.
     */
   def explainAnalyze(spark: SparkSession, df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     // Drive the compiled plan itself (df.count() would re-plan with a
     // different aggregate on top and leave these metrics untouched).
     df.queryExecution.toRdd.foreach(_ => ())
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, Int, String, java.lang.Long)]
-    var nextId = 0
-    def walk(p: SparkPlan, depth: Int): Unit = p match {
-      case a: AdaptiveSparkPlanExec =>
-        // AQE wrapper: report the final (re-optimized) plan it settled on
-        walk(a.executedPlan, depth)
-      case q: QueryStageExec =>
-        // AQE stage bookkeeping node — its children list is empty; the
-        // materialized stage plan hangs off `.plan`
-        walk(q.plan, depth)
-      case _ =>
-        val rows: java.lang.Long =
-          p.metrics.get("numOutputRows").map(m => Long.box(m.value)).orNull
-        out += ((nextId, depth, p.nodeName, rows))
-        nextId += 1
-        p.children.foreach(walk(_, depth + 1))
+    val out = finalPlanNodes(df.queryExecution.executedPlan).zipWithIndex.map {
+      case ((depth, p), id) =>
+        (id, depth, p.nodeName,
+          p.metrics.get("numOutputRows").map(m => Long.box(m.value)).orNull)
     }
-    walk(df.queryExecution.executedPlan, 0)
     import spark.implicits._
-    out.toSeq.toDF("operator_id", "depth", "operator", "output_rows")
+    out.toDF("operator_id", "depth", "operator", "output_rows")
+  }
+
+  /** The physical plan that ran, as (depth, node) in pre-order: AQE's
+    * final plan with its query stages opened, and each node's subquery
+    * plans one level below it, after its children. The AQE wrappers
+    * (`AdaptiveSparkPlanExec`, `QueryStageExec`) are not yielded; a
+    * reused exchange or subquery is a leaf. */
+  def finalPlanNodes(plan: SparkPlan): Seq[(Int, SparkPlan)] = {
+    def walk(p: SparkPlan, depth: Int): Seq[(Int, SparkPlan)] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth)
+      case q: QueryStageExec => walk(q.plan, depth)
+      case _ => (depth, p) +: (p.children ++ p.subqueries).flatMap(walk(_, depth + 1))
+    }
+    walk(plan, 0)
   }
 
   /** EXPORT DATABASE analog (duckdb-4.cpp:9722): dump every temp-view

@@ -18,19 +18,6 @@ object Curation {
   def wsTokens(text: Column): Column =
     filter(split(lower(text), "\\s+"), x => x =!= "")
 
-  /** Distinct word n-grams of a MATERIALIZED token-array column, as
-    * 64-bit rolling hashes ([[graft.plans.WordGramHashes]]). The string
-    * form — `array_join(slice(w, i+1, n), " ")` per gram, the shape the
-    * DuckDB oracle replays — allocates an ~n·wordlen char key per gram
-    * that the probe join only hashes anyway; the expression hashes each
-    * token once and emits 8-byte keys, so the whole-corpus gram pass
-    * carries no string allocations and the eval broadcast map shrinks
-    * ~6x. The token array must be a real column, not an inline
-    * expression: Catalyst would otherwise re-run the split per consumer
-    * (measured 3× on the decontamination pass). */
-  def wordGramsFromTokens(w: Column, n: Int): Column =
-    array_distinct(call_function("word_gram_hashes", w, lit(n)))
-
   /** Per-doc (id, g) distinct-gram rows, fused-tokenizer form (r11):
     * gram_roll_hashes(ws_token_hashes(text), n) emits the exact same
     * keys as word_gram_hashes over [[wsTokens]] with one byte pass. */

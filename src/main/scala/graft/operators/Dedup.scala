@@ -32,25 +32,6 @@ object Dedup {
         x => x.isNotNull))
   }
 
-  /** MinHash signature: for each of `numHashes` seeded hash functions,
-    * the minimum xxhash64 over the shingle set. All per-row expressions —
-    * embarrassingly parallel, no shuffle.
-    */
-  def minhashSignature(shinglesCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      seed => array_min(transform(shinglesCol,
-        sh => xxhash64(sh, seed))))
-
-  /** LSH band keys from a minhash signature: `numBands` hashes, each over
-    * `rows = numHashes / numBands` consecutive signature slots. Docs
-    * sharing any band key are near-dup candidates.
-    */
-  def bandKeys(signatureCol: Column, numBands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(numBands - 1)),
-      b => struct(b.as("band"),
-        xxhash64(concat_ws("_",
-          slice(signatureCol, b * rows + 1, lit(rows)).cast("array<string>")), b).as("bucket")))
-
   /** Exact Jaccard similarity of two (distinct-element) array columns.
     * |A∪B| is derived as |A|+|B|-|A∩B| — one array traversal instead of
     * two (array_union is as expensive as array_intersect).
@@ -60,14 +41,6 @@ object Dedup {
     val union = size(a).cast("double") + size(b).cast("double") - inter
     when(union === 0, 1.0).otherwise(inter / union)
   }
-
-  /** Hash a string-shingle set to a long-shingle set: set cardinalities —
-    * and therefore Jaccard — are preserved (64-bit collisions are
-    * negligible), while pairwise intersection compares longs instead of
-    * strings. The scale move for quadratic candidate scoring.
-    */
-  def hashShingles(shinglesCol: Column): Column =
-    array_distinct(transform(shinglesCol, s => xxhash64(s)))
 
   // ---- JIT'd hot path ----------------------------------------------------
   // Catalyst higher-order lambdas (transform/aggregate) evaluate
@@ -133,11 +106,11 @@ object Dedup {
   }
 
   /** MinHash signature + LSH banding fused in one compiled kernel:
-    * returns `numBands` bucket hashes (index = band). Semantically the
-    * composition minhashSig → bandKeys, but the banding happens on the
+    * returns `numBands` bucket hashes (index = band), one per run of
+    * `rows = numHashes / numBands` slots of [[minhashSig]], banded on the
     * signature array in place — no interpreted `transform`/`slice`/
-    * `concat_ws` lambdas on the hot path, and the per-row generated code
-    * stays small enough to JIT. Docs sharing a bucket at index b agree on
+    * `concat_ws` lambdas on the hot path, and the per-row code stays
+    * small enough to JIT. Docs sharing a bucket at index b agree on
     * signature slots [b·rows, (b+1)·rows). */
   def minhashBandBuckets(sh: Seq[Long], numHashes: Int, numBands: Int): Array[Long] = {
     // layout guard (cheap int checks, also enforced per call in
@@ -190,7 +163,6 @@ object Dedup {
   }
 
   val hashedShinglesUdf = udf(hashedShingles _)
-  val minhashSigUdf = udf(minhashSig _)
   val minhashBandBucketsUdf = udf(minhashBandBuckets _)
   val jaccardSortedLongsUdf = udf(jaccardSortedLongs _)
 
@@ -380,8 +352,6 @@ object Dedup {
     }
     out.toArray
   }
-
-  val deleteNeighborhoodUdf = udf(deleteNeighborhood _)
 
   /** Delete-neighborhood as FNV-1a hashes computed in place — no variant
     * string is ever allocated (the k≤2 hot path hashes the original with
@@ -613,8 +583,8 @@ object Dedup {
     side("_a").join(side("_b"), Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a") +: col("id_b") +:
-        (dotFn(col("__v_a"), col("__v_b")) /
-          (col("__n_a") * col("__n_b"))).as("cos") +:
+        Similarity.cosineFromNorms(dotFn(col("__v_a"), col("__v_b")),
+          col("__n_a"), col("__n_b")).as("cos") +:
         carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
       .dropDuplicates("id_a", "id_b")
   }
@@ -689,8 +659,8 @@ object Dedup {
     val scored = side("_a").hint("SHUFFLE_MERGE").join(side("_b"), Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a") +: col("id_b") +:
-        (dotFn(col("__v_a"), col("__v_b")) /
-          (col("__n_a") * col("__n_b"))).as("cos") +:
+        Similarity.cosineFromNorms(dotFn(col("__v_a"), col("__v_b")),
+          col("__n_a"), col("__n_b")).as("cos") +:
         // UNROLLED equal-band count (r11): numBands is a plan-time
         // constant, so numBands codegen comparisons replace the
         // interpreted zip_with/filter lambda this paid per joined row

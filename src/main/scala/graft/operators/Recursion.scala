@@ -171,20 +171,4 @@ object Recursion {
     }
     acc
   }
-
-  /** UNION ALL-semantics recursion (no dedup), bounded. */
-  def iterateAll(seed: DataFrame, step: DataFrame => DataFrame,
-                 maxIterations: Int): DataFrame = {
-    var acc = seed
-    var frontier = seed
-    var i = 0
-    var done = false
-    while (!done && i < maxIterations) {
-      val next = step(frontier).cache()
-      if (next.isEmpty) done = true
-      else { acc = acc.unionAll(next); frontier = next }
-      i += 1
-    }
-    acc
-  }
 }

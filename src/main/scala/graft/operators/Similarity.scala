@@ -29,8 +29,17 @@ object Similarity {
   /** L2 norm of an array<double> column. */
   def norm(v: Column): Column = sqrt(dot(v, v))
 
+  /** dot / (normA·normB), or -1.0 where that product is 0: DuckDB 1.0's
+    * `list_cosine_similarity` of a zero vector, where the bare divide
+    * fails the query with DIVIDE_BY_ZERO. Each norm is read twice, so
+    * pass columns computed once per vector. */
+  def cosineFromNorms(dotAB: Column, normA: Column, normB: Column): Column = {
+    val denom = normA * normB
+    when(denom === 0.0, lit(-1.0)).otherwise(dotAB / denom)
+  }
+
   /** Cosine similarity of two array<double> columns. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  def cosine(a: Column, b: Column): Column = cosineFromNorms(dot(a, b), norm(a), norm(b))
 
   /** Brute-force cosine top-k: for each query vector (small set,
     * broadcast), the k nearest corpus vectors. Corpus-side norm is
@@ -47,7 +56,7 @@ object Similarity {
       .withColumn("qnorm", norm(col("qv")))
     val scored = c.join(broadcast(q), col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        (dot(col("qv"), col("cv")) / (col("qnorm") * col("cnorm"))).as("sim"))
+        cosineFromNorms(dot(col("qv"), col("cv")), col("qnorm"), col("cnorm")).as("sim"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("qid"), col("nid"), col("rn").cast("long").as("rn"), col("sim"))
@@ -403,18 +412,20 @@ object Similarity {
               numCells: Int, nProbe: Int, k: Int, trainIterations: Int = 3): DataFrame = {
     val centroids = kmeansCentroids(corpus, idCol, vecCol, numCells, trainIterations)
     val v = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val assigned = assignToCentroids(v, centroids)
+    val assigned = assignToCentroids(v, centroids).withColumn("vnorm", norm(col("v")))
     val q = queries.select(col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qv"))
+      .withColumn("qnorm", norm(col("qv")))
     // nProbe nearest cells per query: literal centroid scores sorted
     // per-row — no crossJoin, no window shuffle over the query set
     val cells = array(centroidScores(col("qv"), centroids).toIndexedSeq: _*)
     val probes = q
-      .select(col("qid"), col("qv"),
+      .select(col("qid"), col("qv"), col("qnorm"),
         explode(slice(reverse(array_sort(cells)), 1, nProbe).getField("cid")).as("cid"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
     assigned.join(broadcast(probes), "cid")
       .filter(col("qid") =!= col("id"))
-      .select(col("qid"), col("id").as("nid"), cosine(col("qv"), col("v")).as("sim"))
+      .select(col("qid"), col("id").as("nid"),
+        cosineFromNorms(dot(col("qv"), col("v")), col("qnorm"), col("vnorm")).as("sim"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("qid"), col("nid"), col("rn").cast("long").as("rn"), col("sim"))
   }
@@ -468,19 +479,18 @@ object Similarity {
       scored.sortBy(identity).reverse.take(nProbe).map(_._2)
     }
     val qStructs = queries.map { case (qid, qv) =>
-      val qnorm = { val s = math.sqrt(qv.map(x => x * x).sum); if (s == 0) 1.0 else s }
       struct(lit(qid).as("qid"),
         array(qv.map(lit).toIndexedSeq: _*).as("qv"),
-        lit(qnorm).as("qnorm"),
+        lit(math.sqrt(qv.map(x => x * x).sum)).as("qnorm"),
         array(probeCells(qv).map(lit).toIndexedSeq: _*).as("cells"))
     }
     val v = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     assignToCentroids(v, centroids)
-      .select(col("id").as("nid"), col("cid"), col("v"),
+      .select(col("id").as("nid"), col("cid"), col("v"), norm(col("v")).as("vnorm"),
         explode(array(qStructs.toIndexedSeq: _*)).as("q"))
       .filter(col("q.qid") =!= col("nid"))
       .select(col("q.qid").as("qid"), col("nid"),
-        (dot(col("v"), col("q.qv")) / (norm(col("v")) * col("q.qnorm"))).as("sim"),
+        cosineFromNorms(dot(col("v"), col("q.qv")), col("vnorm"), col("q.qnorm")).as("sim"),
         array_contains(col("q.cells"), col("cid")).as("is_cand"))
   }
 
@@ -583,15 +593,16 @@ object Similarity {
     val b = corpus
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("bucket", lshBucket(col("v"), planes))
+      .withColumn("n", norm(col("v")))
       .withColumn("bsize",
         count(lit(1)).over(Window.partitionBy(col("bucket"))))
       .filter(col("bsize") <= maxBucket)
       .drop("bsize")
-    val l = b.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"))
-    val r = b.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"))
+    val l = b.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"), col("n").as("n_a"))
+    val r = b.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"), col("n").as("n_b"))
     val pairs = l.join(r, Seq("bucket")).filter(col("id_a") < col("id_b"))
       .select(col("bucket"), col("id_a"), col("id_b"),
-        cosine(col("v_a"), col("v_b")).as("sim"))
+        cosineFromNorms(dot(col("v_a"), col("v_b")), col("n_a"), col("n_b")).as("sim"))
     val w = Window.partitionBy(col("id_a")).orderBy(col("sim").desc, col("id_b").asc)
     pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("id_a"), col("id_b"), col("sim"))
@@ -638,12 +649,14 @@ object Similarity {
     // corpus carries float32 embeddings.)
     val qv = embeddings.filter(col(vecIdCol) === queryId)
       .select(col(vecCol).cast("array<float>").as("__qv"))
+      .withColumn("__qn", normF(col("__qv")))
     val scored = embeddings.filter(col(vecIdCol) =!= queryId)
       .select(col(vecIdCol).as("__id"), col(vecCol).cast("array<float>").as("__cv"))
+      .withColumn("__cn", normF(col("__cv")))
       .crossJoin(broadcast(qv))
       .select(col("__id"),
-        round(dotF(col("__qv"), col("__cv")) /
-          (normF(col("__qv")) * normF(col("__cv"))), 6).as("__sim"))
+        round(cosineFromNorms(dotF(col("__qv"), col("__cv")), col("__qn"), col("__cn")), 6)
+          .as("__sim"))
     val w1 = Window.partitionBy(pmod(col("__id"), lit(numShards.toLong)))
       .orderBy(col("__sim").desc, col("__id").asc)
     val survivors = scored.withColumn("__rn1", row_number().over(w1))

@@ -17,12 +17,6 @@ object TextAnalysis {
   /** Token count. */
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 
-  /** BPE-ish subword count estimate: words + punctuation clusters +
-    * digit runs counted separately (regex heuristic, no tokenizer dep). */
-  def subwordCountEstimate(text: Column): Column =
-    size(filter(split(text, "(?<=[a-zA-Z])(?=[^a-zA-Z ])|(?<=[^a-zA-Z ])(?=[a-zA-Z])| ", -1),
-      t => length(t) > 0)).cast("long")
-
   /** Stopword ratio against a small builtin english list. */
   private val stopwords = Seq("the", "a", "an", "of", "to", "and", "in", "is", "it", "for")
 

@@ -39,59 +39,15 @@ case class ArgminSqDistLong(child: Expression, flat: Array[Long],
   override def dataType: DataType = IntegerType
   override def prettyName: String = "argmin_sqdist_long"
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val len = a.numElements()
-    var best = 0
-    var bestD = Long.MaxValue
-    var i = 0
-    while (i < offs.length) {
-      val dim = dims(i)
-      val off = offs(i)
-      val m = math.min(dim, len)
-      var d = 0L
-      var j = 0
-      while (j < m) { val t = a.getLong(j) - flat(off + j); d += t * t; j += 1 }
-      while (j < len) { val t = a.getLong(j); d += t * t; j += 1 }
-      var jc = m
-      while (jc < dim) { val t = flat(off + jc); d += t * t; jc += 1 }
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    best
-  }
+  override def nullSafeEval(v: Any): Any =
+    ArgminSqDistLong.compute(v.asInstanceOf[ArrayData], flat, offs, dims)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val flatRef = ctx.addReferenceObj("flat", flat, "long[]")
     val offsRef = ctx.addReferenceObj("offs", offs, "int[]")
     val dimsRef = ctx.addReferenceObj("dims", dims, "int[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val len = ctx.freshName("len")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val off = ctx.freshName("off")
-      val d = ctx.freshName("d")
-      val j = ctx.freshName("j")
-      val t = ctx.freshName("t")
-      s"""
-         |int $len = $a.numElements();
-         |int $best = 0;
-         |long $bestD = Long.MAX_VALUE;
-         |for (int $i = 0; $i < $offsRef.length; $i++) {
-         |  int $m = java.lang.Math.min($dimsRef[$i], $len);
-         |  int $off = $offsRef[$i];
-         |  long $d = 0L;
-         |  int $j = 0;
-         |  for (; $j < $m; $j++) { long $t = $a.getLong($j) - $flatRef[$off + $j]; $d += $t * $t; }
-         |  for (; $j < $len; $j++) { long $t = $a.getLong($j); $d += $t * $t; }
-         |  for (int ${j}c = $m; ${j}c < $dimsRef[$i]; ${j}c++) { long $t = $flatRef[$off + ${j}c]; $d += $t * $t; }
-         |  if ($d < $bestD) { $bestD = $d; $best = $i; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      s"graft.plans.ArgminSqDistLong.compute($a, $flatRef, $offsRef, $dimsRef)")
   }
 
   // content equality over the arrays so canonicalized plans with equal
@@ -111,6 +67,29 @@ case class ArgminSqDistLong(child: Expression, flat: Array[Long],
 }
 
 object ArgminSqDistLong {
+
+  /** The index of the centroid nearest to `a` in squared L2, first-wins
+    * ties; centroid i is flat[offs_i, offs_i + dims_i). */
+  def compute(a: ArrayData, flat: Array[Long], offs: Array[Int], dims: Array[Int]): Int = {
+    val len = a.numElements()
+    var best = 0
+    var bestD = Long.MaxValue
+    var i = 0
+    while (i < offs.length) {
+      val dim = dims(i)
+      val off = offs(i)
+      val m = math.min(dim, len)
+      var d = 0L
+      var j = 0
+      while (j < m) { val t = a.getLong(j) - flat(off + j); d += t * t; j += 1 }
+      while (j < len) { val t = a.getLong(j); d += t * t; j += 1 }
+      var jc = m
+      while (jc < dim) { val t = flat(off + jc); d += t * t; jc += 1 }
+      if (d < bestD) { bestD = d; best = i }
+      i += 1
+    }
+    best
+  }
 
   /** Build from the driver-side centroid table (index order = table
     * order; the result is the INDEX of the winning centroid). */

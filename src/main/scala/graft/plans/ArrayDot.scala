@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 /** Native dot product over two array<double> columns.
   *
   * The composable form (`zip_with` + `aggregate`) evaluates its lambda
-  * interpreted per element; this expression generates a tight Java loop
+  * interpreted per element; this expression runs one primitive loop
   * inside whole-stage codegen instead — the preference order from
   * SURVEY.md §7.3: builtin < custom Expression < UDF. Null elements are
   * treated as 0 (embeddings are dense); mismatched lengths use the
@@ -22,9 +22,21 @@ case class ArrayDot(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "array_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    ArrayDot.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.plans.ArrayDot.compute($x, $y)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): ArrayDot =
+    copy(left = newLeft, right = newRight)
+}
+
+object ArrayDot {
+  val builder: Seq[Expression] => Expression = args => ArrayDot(args(0), args(1))
+
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -34,31 +46,6 @@ case class ArrayDot(left: Expression, right: Expression)
     }
     s
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i) && !$y.isNullAt($i)) {
-         |    $s += $x.getDouble($i) * $y.getDouble($i);
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): ArrayDot =
-    copy(left = newLeft, right = newRight)
-}
-
-object ArrayDot {
-  val builder: Seq[Expression] => Expression = args => ArrayDot(args(0), args(1))
 }
 
 /** [[ArrayDot]] over `array<float>` inputs, accumulating in double with
@@ -78,9 +65,22 @@ case class ArrayDotFloat(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "array_dot_float"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    ArrayDotFloat.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.plans.ArrayDotFloat.compute($x, $y)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): ArrayDotFloat =
+    copy(left = newLeft, right = newRight)
+}
+
+object ArrayDotFloat {
+  val builder: Seq[Expression] => Expression =
+    args => ArrayDotFloat(args(0), args(1))
+
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -91,30 +91,4 @@ case class ArrayDotFloat(left: Expression, right: Expression)
     }
     s
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i) && !$y.isNullAt($i)) {
-         |    $s += ((double) $x.getFloat($i)) * ((double) $y.getFloat($i));
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): ArrayDotFloat =
-    copy(left = newLeft, right = newRight)
-}
-
-object ArrayDotFloat {
-  val builder: Seq[Expression] => Expression =
-    args => ArrayDotFloat(args(0), args(1))
 }

@@ -13,9 +13,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * (reference join selection: PhysicalPiecewiseMergeJoin/PhysicalIEJoin,
   * duckdb-4.cpp:9054-9168). As a Scala UDF the binary search blocked
   * whole-stage codegen for the entire probe stage and paid a boxing +
-  * WrappedArray copy per row; this expression generates an inline
-  * `Arrays.binarySearch` call instead (preference order from SURVEY.md
-  * §7.3: builtin < custom Expression < UDF). Boundaries are folded into
+  * WrappedArray copy per row; this expression calls
+  * `Arrays.binarySearch` on the primitive boundary array instead
+  * (preference order from SURVEY.md §7.3: builtin < custom Expression
+  * < UDF). Boundaries are folded into
   * the expression at plan time — they are a tiny quantile sketch, not
   * data.
   */
@@ -26,20 +27,12 @@ case class BucketIndex(child: Expression, bounds: Array[Double])
   override def dataType: DataType = LongType
   override def prettyName: String = "bucket_index"
 
-  override def nullSafeEval(x: Any): Any = {
-    val i = java.util.Arrays.binarySearch(bounds, x.asInstanceOf[Double])
-    (if (i >= 0) i + 1 else -i - 1).toLong
-  }
+  override def nullSafeEval(x: Any): Any =
+    BucketIndex.compute(x.asInstanceOf[Double], bounds)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val b = ctx.addReferenceObj("bounds", bounds, "double[]")
-    nullSafeCodeGen(ctx, ev, x => {
-      val i = ctx.freshName("idx")
-      s"""
-         |int $i = java.util.Arrays.binarySearch($b, $x);
-         |${ev.value} = ($i >= 0) ? ($i + 1L) : (long)(-$i - 1);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, x => s"graft.plans.BucketIndex.compute($x, $b)")
   }
 
   // case-class equality on Array is reference equality; compare contents
@@ -56,6 +49,11 @@ case class BucketIndex(child: Expression, bounds: Array[Double])
 }
 
 object BucketIndex {
+  def compute(x: Double, bounds: Array[Double]): Long = {
+    val i = java.util.Arrays.binarySearch(bounds, x)
+    if (i >= 0) i + 1L else -i - 1L
+  }
+
   /** SQL/`call_function` form: bucket_index(x, array(...boundaries...)).
     * The boundary argument must be a foldable array literal — it is
     * extracted at bind time so the per-row path stays a primitive search. */

@@ -32,24 +32,8 @@ case class CentroidAssign(child: Expression, cids: Array[Int],
   override def dataType: DataType = IntegerType
   override def prettyName: String = "centroid_assign"
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val len = a.numElements()
-    var best = Int.MinValue
-    var bestS = Double.NegativeInfinity
-    var i = 0
-    while (i < cids.length) {
-      val n = math.min(dims(i), len)
-      val off = offs(i)
-      var s = 0.0
-      var j = 0
-      while (j < n) { s += a.getDouble(j) * flat(off + j); j += 1 }
-      s *= invNorms(i)
-      if (s > bestS) { bestS = s; best = cids(i) }
-      i += 1
-    }
-    best
-  }
+  override def nullSafeEval(v: Any): Any =
+    CentroidAssign.compute(v.asInstanceOf[ArrayData], cids, flat, offs, dims, invNorms)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cidsRef = ctx.addReferenceObj("cids", cids, "int[]")
@@ -57,30 +41,8 @@ case class CentroidAssign(child: Expression, cids: Array[Int],
     val offsRef = ctx.addReferenceObj("offs", offs, "int[]")
     val dimsRef = ctx.addReferenceObj("dims", dims, "int[]")
     val invRef = ctx.addReferenceObj("invNorms", invNorms, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val len = ctx.freshName("len")
-      val best = ctx.freshName("best")
-      val bestS = ctx.freshName("bestS")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val off = ctx.freshName("off")
-      val s = ctx.freshName("s")
-      val j = ctx.freshName("j")
-      s"""
-         |int $len = $a.numElements();
-         |int $best = Integer.MIN_VALUE;
-         |double $bestS = Double.NEGATIVE_INFINITY;
-         |for (int $i = 0; $i < $cidsRef.length; $i++) {
-         |  int $n = java.lang.Math.min($dimsRef[$i], $len);
-         |  int $off = $offsRef[$i];
-         |  double $s = 0.0;
-         |  for (int $j = 0; $j < $n; $j++) { $s += $a.getDouble($j) * $flatRef[$off + $j]; }
-         |  $s *= $invRef[$i];
-         |  if ($s > $bestS) { $bestS = $s; $best = $cidsRef[$i]; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.plans.CentroidAssign.compute(" +
+      s"$a, $cidsRef, $flatRef, $offsRef, $dimsRef, $invRef)")
   }
 
   // content equality over the arrays so canonicalized plans with equal
@@ -101,6 +63,27 @@ case class CentroidAssign(child: Expression, cids: Array[Int],
 }
 
 object CentroidAssign {
+
+  /** The id of the centroid with the largest dot(a, c_i)·invNorms_i,
+    * first-wins ties; centroid i is flat[offs_i, offs_i + dims_i). */
+  def compute(a: ArrayData, cids: Array[Int], flat: Array[Double], offs: Array[Int],
+              dims: Array[Int], invNorms: Array[Double]): Int = {
+    val len = a.numElements()
+    var best = Int.MinValue
+    var bestS = Double.NegativeInfinity
+    var i = 0
+    while (i < cids.length) {
+      val n = math.min(dims(i), len)
+      val off = offs(i)
+      var s = 0.0
+      var j = 0
+      while (j < n) { s += a.getDouble(j) * flat(off + j); j += 1 }
+      s *= invNorms(i)
+      if (s > bestS) { bestS = s; best = cids(i) }
+      i += 1
+    }
+    best
+  }
 
   /** Build from the driver-side centroid table. */
   def fromCentroids(child: Expression,

@@ -51,31 +51,10 @@ case class FastRound(left: Expression, right: Expression)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val s = scaleVal // fail fast at plan time if non-literal
-    nullSafeCodeGen(ctx, ev, (x, _) => {
-      // the fast path needs 10^s binary-EXACT (s in [0, 22]) so the
-      // final divide is one correctly-rounded op on exact operands;
-      // other scales (negative = round to tens/…, or > 22) take the
-      // reference path — decided here at codegen time, s is a literal
-      if (s < 0 || s > 22)
-        s"${ev.value} = graft.plans.FastRound.slow($x, $s);"
-      else {
-        val y = ctx.freshName("y")
-        val fl = ctx.freshName("fl")
-        val f = ctx.freshName("f")
-        s"""
-           |double $y = $x * ${FastRound.pow10(s)}D;
-           |double $fl = java.lang.Math.floor($y);
-           |double $f = $y - $fl;
-           |if (java.lang.Math.abs($y) < 4.503599627370496E15 &&
-           |    java.lang.Math.abs($f - 0.5) >
-           |      java.lang.Math.max(1.0E-9, 16.0 * java.lang.Math.ulp($y))) {
-           |  ${ev.value} = ($fl + ($f > 0.5 ? 1.0 : 0.0)) / ${FastRound.pow10(s)}D;
-           |} else {
-           |  ${ev.value} = graft.plans.FastRound.slow($x, $s);
-           |}
-         """.stripMargin
-      }
-    })
+    // s is a literal, so the scale range is decided here, once per plan
+    defineCodeGen(ctx, ev, (x, _) =>
+      if (FastRound.exactScale(s)) s"graft.plans.FastRound.halfUp($x, $s, ${FastRound.Pow10(s)}D)"
+      else s"graft.plans.FastRound.slow($x, $s)")
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
@@ -84,7 +63,12 @@ case class FastRound(left: Expression, right: Expression)
 }
 
 object FastRound {
-  def pow10(s: Int): Double = math.pow(10.0, s)
+  // the fast path needs 10^s binary-EXACT (s in [0, 22]) so the final
+  // divide is one correctly-rounded op on exact operands; other scales
+  // (negative = round to tens/…, or > 22) take the reference path
+  private val Pow10: Array[Double] = Array.tabulate(23)(s => math.pow(10.0, s))
+
+  def exactScale(s: Int): Boolean = s >= 0 && s < Pow10.length
 
   /** Exact reference path — what Spark's Round(DoubleType) computes. */
   def slow(x: Double, s: Int): Double =
@@ -92,14 +76,17 @@ object FastRound {
     else java.math.BigDecimal.valueOf(x)
       .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  def round(x: Double, s: Int): Double = {
-    if (s < 0 || s > 22) return slow(x, s) // 10^s not binary-exact
-    val y = x * pow10(s)
+  def round(x: Double, s: Int): Double =
+    if (exactScale(s)) halfUp(x, s, Pow10(s)) else slow(x, s)
+
+  /** HALF_UP at an exact scale s, with p = 10^s. */
+  def halfUp(x: Double, s: Int, p: Double): Double = {
+    val y = x * p
     val fl = math.floor(y)
     val f = y - fl
     if (math.abs(y) < 4.503599627370496e15 &&
         math.abs(f - 0.5) > math.max(1e-9, 16.0 * Math.ulp(y)))
-      (fl + (if (f > 0.5) 1.0 else 0.0)) / pow10(s)
+      (fl + (if (f > 0.5) 1.0 else 0.0)) / p
     else slow(x, s)
   }
 

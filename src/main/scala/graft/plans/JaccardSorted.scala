@@ -26,9 +26,21 @@ case class JaccardSorted(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "jaccard_sorted"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    JaccardSorted.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.plans.JaccardSorted.compute($x, $y)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): JaccardSorted =
+    copy(left = newLeft, right = newRight)
+}
+
+object JaccardSorted {
+  val builder: Seq[Expression] => Expression = args => JaccardSorted(args(0), args(1))
+
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     val m = y.numElements()
     if (n == 0 && m == 0) return 1.0
@@ -41,38 +53,4 @@ case class JaccardSorted(left: Expression, right: Expression)
     }
     inter.toDouble / (n + m - inter).toDouble
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = $x.numElements();
-         |int $m = $y.numElements();
-         |if ($n == 0 && $m == 0) {
-         |  ${ev.value} = 1.0;
-         |} else {
-         |  int $i = 0; int $j = 0; int $inter = 0;
-         |  while ($i < $n && $j < $m) {
-         |    long $xv = $x.getLong($i); long $yv = $y.getLong($j);
-         |    if ($xv == $yv) { $inter++; $i++; $j++; }
-         |    else if ($xv < $yv) { $i++; } else { $j++; }
-         |  }
-         |  ${ev.value} = (double) $inter / (double) ($n + $m - $inter);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): JaccardSorted =
-    copy(left = newLeft, right = newRight)
-}
-
-object JaccardSorted {
-  val builder: Seq[Expression] => Expression = args => JaccardSorted(args(0), args(1))
 }

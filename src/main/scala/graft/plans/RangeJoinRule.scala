@@ -97,6 +97,9 @@ object RangeJoinRule extends Rule[LogicalPlan] {
     override def initialValue: java.lang.Boolean = java.lang.Boolean.FALSE
   }
 
+  /** Rows the plan-time quantile job reads from the join's inputs. */
+  private final val StatsSample = 1000000
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (inStatsJob.get()) return plan
     val width = conf.getConfString("spark.graft.rangeJoin.bucketWidth", "0").toDouble
@@ -170,13 +173,10 @@ object RangeJoinRule extends Rule[LogicalPlan] {
       val union = parts.map { case (p, e) =>
         Project(Seq(Alias(Cast(e, DoubleType), "__graft_q")()), p): LogicalPlan
       }.reduce((a, b) => Union(a, b))
-      // spark.graft.rangeJoin.statsSample bounds the plan-time job's input
-      // (first-N rows; 0 = unbounded). Boundaries only shape load balance,
-      // never correctness, so a bounded sample is always sound.
-      val sampleN = math.min(
-        conf.getConfString("spark.graft.rangeJoin.statsSample", "1000000").toLong,
-        Int.MaxValue.toLong)
-      val limited = if (sampleN > 0) Limit(Literal(sampleN.toInt), union) else union
+      // the plan-time job reads the first StatsSample rows: boundaries
+      // only shape load balance, never correctness, so a bounded sample
+      // is always sound
+      val limited = Limit(Literal(StatsSample), union)
       val df = org.apache.spark.sql.graft.GraftSqlShim.ofRows(spark, limited)
       val probs = (1 until nb).map(_.toDouble / nb).toArray
       // the stats query is optimized on THIS thread — flag the window so

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * `Dedup.cosineLshCandidates`): the UDF paid numBands×bitsPerBand dot
   * products per row through `Seq[Double]` boxing plus a WrappedArray
   * copy, and fenced whole-stage codegen for the scan+band stage. This
-  * expression reads the Tungsten array in place and generates primitive
-  * loops (reference bar: the whole point of the vectorized kernels in
+  * expression reads the Tungsten array in place in primitive loops
+  * (reference bar: the whole point of the vectorized kernels in
   * /root/reference/duckdb-3.cpp is no per-row interpretation; SURVEY §7.3
   * preference order: builtin < custom Expression < UDF). Same treatment
   * as [[WordGramHashes]] gave the minhash banding path in round 4.
@@ -48,70 +48,14 @@ case class SignLshBuckets(child: Expression, signs: Array[Long],
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "sign_lsh_buckets"
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val len = a.numElements()
-    val w = new Array[Long](len)
-    var j = 0
-    while (j < len) {
-      w(j) = math.floor(a.getDouble(j) * SignLshBuckets.QuantScale + 0.5).toLong
-      j += 1
-    }
-    val n = math.min(dim, len)
-    val out = new Array[Long](numBands)
-    var b = 0
-    while (b < numBands) {
-      var bucket = 0L
-      var pb = 0
-      while (pb < bitsPerBand) {
-        val base = (b * bitsPerBand + pb) * dim
-        var s = 0L
-        var j2 = 0
-        while (j2 < n) { s += w(j2) * signs(base + j2); j2 += 1 }
-        if (s >= 0) bucket |= (1L << pb)
-        pb += 1
-      }
-      out(b) = bucket
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(v: Any): Any = new GenericArrayData(
+    SignLshBuckets.compute(v.asInstanceOf[ArrayData], signs, dim, numBands, bitsPerBand))
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val sg = ctx.addReferenceObj("signs", signs, "long[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val len = ctx.freshName("len")
-      val w = ctx.freshName("w")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val b = ctx.freshName("b")
-      val pb = ctx.freshName("pb")
-      val base = ctx.freshName("base")
-      val s = ctx.freshName("s")
-      val j = ctx.freshName("j")
-      s"""
-         |int $len = $a.numElements();
-         |long[] $w = new long[$len];
-         |for (int $j = 0; $j < $len; $j++) {
-         |  $w[$j] = (long) Math.floor(
-         |    $a.getDouble($j) * ${SignLshBuckets.QuantScale}.0 + 0.5);
-         |}
-         |int $n = java.lang.Math.min($dim, $len);
-         |long[] $out = new long[$numBands];
-         |for (int $b = 0; $b < $numBands; $b++) {
-         |  long ${s}bucket = 0L;
-         |  for (int $pb = 0; $pb < $bitsPerBand; $pb++) {
-         |    int $base = ($b * $bitsPerBand + $pb) * $dim;
-         |    long $s = 0L;
-         |    for (int $j = 0; $j < $n; $j++) { $s += $w[$j] * $sg[$base + $j]; }
-         |    if ($s >= 0) ${s}bucket |= (1L << $pb);
-         |  }
-         |  $out[$b] = ${s}bucket;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      "org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(" +
+        s"graft.plans.SignLshBuckets.compute($a, $sg, $dim, $numBands, $bitsPerBand))")
   }
 
   // case-class equality on Array is reference equality; compare contents
@@ -137,6 +81,36 @@ object SignLshBuckets {
     * bucketing (the SQL hardcodes floor(x*1000 + 0.5) identically). */
   final val QuantScale = 1000L
 
+  /** Band buckets of `a` against `signs`, the row-major numBands ×
+    * bitsPerBand planes of dimension `dim`. */
+  def compute(a: ArrayData, signs: Array[Long], dim: Int, numBands: Int,
+              bitsPerBand: Int): Array[Long] = {
+    val len = a.numElements()
+    val w = new Array[Long](len)
+    var j = 0
+    while (j < len) {
+      w(j) = math.floor(a.getDouble(j) * QuantScale + 0.5).toLong
+      j += 1
+    }
+    val n = math.min(dim, len)
+    val out = new Array[Long](numBands)
+    var b = 0
+    while (b < numBands) {
+      var bucket = 0L
+      var pb = 0
+      while (pb < bitsPerBand) {
+        val base = (b * bitsPerBand + pb) * dim
+        var s = 0L
+        var j2 = 0
+        while (j2 < n) { s += w(j2) * signs(base + j2); j2 += 1 }
+        if (s >= 0) bucket |= (1L << pb)
+        pb += 1
+      }
+      out(b) = bucket
+      b += 1
+    }
+    out
+  }
 
   /** SQL/`call_function` form:
     * sign_lsh_buckets(v, signs_flat, numBands, bitsPerBand) — the sign

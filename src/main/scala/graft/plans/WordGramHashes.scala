@@ -32,75 +32,13 @@ case class WordGramHashes(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "word_gram_hashes"
 
-  override def nullSafeEval(toks: Any, nv: Any): Any = {
-    val a = toks.asInstanceOf[ArrayData]
-    val n = nv.asInstanceOf[Int]
-    val len = a.numElements()
-    if (n <= 0 || len < n) return new GenericArrayData(Array.emptyLongArray)
-    val th = new Array[Long](len)
-    var i = 0
-    while (i < len) {
-      // null tokens hash as the empty string (the FNV offset basis) —
-      // the declared element type admits containsNull, and SQL callers
-      // can pass array('a', NULL); internal callers pre-filter empties
-      val u = a.getUTF8String(i)
-      th(i) = if (u == null) WordGramHashes.EmptyHash else WordGramHashes.fnv64(u)
-      i += 1
-    }
-    val out = new Array[Long](len - n + 1)
-    // initial window + rolling update: drop th[i]*P^(n-1), shift, add next
-    var pn = 1L // P^(n-1)
-    var j = 1
-    while (j < n) { pn *= WordGramHashes.P; j += 1 }
-    var h = 0L
-    j = 0
-    while (j < n) { h = h * WordGramHashes.P + th(j); j += 1 }
-    out(0) = h
-    i = 1
-    while (i <= len - n) {
-      h = (h - th(i - 1) * pn) * WordGramHashes.P + th(i + n - 1)
-      out(i) = h
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(toks: Any, nv: Any): Any = new GenericArrayData(
+    WordGramHashes.compute(toks.asInstanceOf[ArrayData], nv.asInstanceOf[Int]))
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, nv) => {
-      val cls = WordGramHashes.getClass.getName.stripSuffix("$")
-      val len = ctx.freshName("len")
-      val th = ctx.freshName("th")
-      val out = ctx.freshName("out")
-      val pn = ctx.freshName("pn")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      s"""
-         |int $len = $a.numElements();
-         |if ($nv <= 0 || $len < $nv) {
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray(new long[0]);
-         |} else {
-         |  long[] $th = new long[$len];
-         |  for (int $i = 0; $i < $len; $i++) {
-         |    $th[$i] = $a.isNullAt($i) ? ${WordGramHashes.EmptyHash}L
-         |      : $cls.fnv64($a.getUTF8String($i));
-         |  }
-         |  long[] $out = new long[$len - $nv + 1];
-         |  long $pn = 1L;
-         |  for (int $j = 1; $j < $nv; $j++) { $pn *= ${WordGramHashes.P}L; }
-         |  long $h = 0L;
-         |  for (int $j = 0; $j < $nv; $j++) { $h = $h * ${WordGramHashes.P}L + $th[$j]; }
-         |  $out[0] = $h;
-         |  for (int $i = 1; $i <= $len - $nv; $i++) {
-         |    $h = ($h - $th[$i - 1] * $pn) * ${WordGramHashes.P}L + $th[$i + $nv - 1];
-         |    $out[$i] = $h;
-         |  }
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($out);
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, nv) =>
+      "org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(" +
+        s"graft.plans.WordGramHashes.compute($a, $nv))")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): WordGramHashes =
@@ -122,60 +60,13 @@ case class GramRollHashes(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "gram_roll_hashes"
 
-  override def nullSafeEval(hs: Any, nv: Any): Any = {
-    val a = hs.asInstanceOf[ArrayData]
-    val n = nv.asInstanceOf[Int]
-    val len = a.numElements()
-    if (n <= 0 || len < n) return new GenericArrayData(Array.emptyLongArray)
-    val th = a.toLongArray()
-    val out = new Array[Long](len - n + 1)
-    var pn = 1L
-    var j = 1
-    while (j < n) { pn *= WordGramHashes.P; j += 1 }
-    var h = 0L
-    j = 0
-    while (j < n) { h = h * WordGramHashes.P + th(j); j += 1 }
-    out(0) = h
-    var i = 1
-    while (i <= len - n) {
-      h = (h - th(i - 1) * pn) * WordGramHashes.P + th(i + n - 1)
-      out(i) = h
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(hs: Any, nv: Any): Any = new GenericArrayData(
+    GramRollHashes.compute(hs.asInstanceOf[ArrayData], nv.asInstanceOf[Int]))
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, nv) => {
-      val len = ctx.freshName("len")
-      val th = ctx.freshName("th")
-      val out = ctx.freshName("out")
-      val pn = ctx.freshName("pn")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      s"""
-         |int $len = $a.numElements();
-         |if ($nv <= 0 || $len < $nv) {
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray(new long[0]);
-         |} else {
-         |  long[] $th = $a.toLongArray();
-         |  long[] $out = new long[$len - $nv + 1];
-         |  long $pn = 1L;
-         |  for (int $j = 1; $j < $nv; $j++) { $pn *= ${WordGramHashes.P}L; }
-         |  long $h = 0L;
-         |  for (int $j = 0; $j < $nv; $j++) { $h = $h * ${WordGramHashes.P}L + $th[$j]; }
-         |  $out[0] = $h;
-         |  for (int $i = 1; $i <= $len - $nv; $i++) {
-         |    $h = ($h - $th[$i - 1] * $pn) * ${WordGramHashes.P}L + $th[$i + $nv - 1];
-         |    $out[$i] = $h;
-         |  }
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($out);
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, nv) =>
+      "org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(" +
+        s"graft.plans.GramRollHashes.compute($a, $nv))")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): GramRollHashes =
@@ -184,6 +75,10 @@ case class GramRollHashes(left: Expression, right: Expression)
 
 object GramRollHashes {
   val builder: Seq[Expression] => Expression = args => GramRollHashes(args(0), args(1))
+
+  def compute(a: ArrayData, n: Int): Array[Long] =
+    if (n <= 0 || a.numElements() < n) Array.emptyLongArray
+    else WordGramHashes.roll(a.toLongArray(), n)
 }
 
 object WordGramHashes {
@@ -194,6 +89,43 @@ object WordGramHashes {
 
   /** Hash of a null token: FNV-1a of zero bytes (= the offset basis). */
   final val EmptyHash = 0xcbf29ce484222325L
+
+  def compute(a: ArrayData, n: Int): Array[Long] = {
+    val len = a.numElements()
+    if (n <= 0 || len < n) return Array.emptyLongArray
+    val th = new Array[Long](len)
+    var i = 0
+    while (i < len) {
+      // null tokens hash as the empty string (the FNV offset basis) —
+      // the declared element type admits containsNull, and SQL callers
+      // can pass array('a', NULL); internal callers pre-filter empties
+      th(i) = if (a.isNullAt(i)) EmptyHash else fnv64(a.getUTF8String(i))
+      i += 1
+    }
+    roll(th, n)
+  }
+
+  /** Position i is the polynomial combination of th[i..i+n-1], for
+    * 0 < n <= th.length: the initial window, then a rolling update
+    * that drops th[i]·P^(n-1), shifts and adds the next hash. */
+  private[plans] def roll(th: Array[Long], n: Int): Array[Long] = {
+    val len = th.length
+    val out = new Array[Long](len - n + 1)
+    var pn = 1L // P^(n-1)
+    var j = 1
+    while (j < n) { pn *= P; j += 1 }
+    var h = 0L
+    j = 0
+    while (j < n) { h = h * P + th(j); j += 1 }
+    out(0) = h
+    var i = 1
+    while (i <= len - n) {
+      h = (h - th(i - 1) * pn) * P + th(i + n - 1)
+      out(i) = h
+      i += 1
+    }
+    out
+  }
 
   /** FNV-1a over the UTF-8 bytes of a token, read in place. */
   def fnv64(s: UTF8String): Long = {

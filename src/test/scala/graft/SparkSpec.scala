@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one per JVM — tests fork once). */
@@ -15,11 +14,7 @@ trait SparkSpec extends AnyFunSuite {
 
   /** The plan that ran: AQE's final plan with its query stages opened
     * (subqueries included). */
-  def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
-    case q: QueryStageExec => finalNodes(q.plan)
-    case _ => p +: (p.children ++ p.subqueries).flatMap(finalNodes)
-  }
+  def finalNodes(p: SparkPlan): Seq[SparkPlan] = Engine.finalPlanNodes(p).map(_._2)
 
   /** Run `body` with codegen-compile failures made FATAL: Spark's
     * default catches generated-code compile errors and silently falls

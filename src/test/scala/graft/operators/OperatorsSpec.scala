@@ -468,6 +468,34 @@ class SimilaritySpec extends SparkSpec {
       s"fused ${fused.toSeq} != composed ${composed.toSeq}")
   }
 
+  test("a zero vector scores DuckDB's -1.0 in cosineTopK, ivfRecallReport and cosineLshScoredPairs") {
+    // DuckDB 1.0: list_cosine_similarity([0,0],[1,2]) = -1.0, and so is
+    // ([0,0],[0,0]); a bare divide by the zero norm fails under ANSI
+    val corpus = Seq((1L, Seq(0.0, 0.0)), (2L, Seq(1.0, 2.0)), (3L, Seq(2.0, 1.0)),
+      (4L, Seq(1.0, 2.0)), (5L, Seq(0.0, 0.0))).toDF("vec_id", "embedding")
+    val topk = Similarity.cosineTopK(corpus, corpus.filter($"vec_id" <= 2), "vec_id", "embedding", 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
+    assert(Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L), (2L, 1L), (2L, 5L)).forall(topk(_) == -1.0), topk)
+    assert(math.abs(topk((2L, 4L)) - 1.0) < 1e-12 && math.abs(topk((2L, 3L)) - 0.8) < 1e-12, topk)
+
+    val queries = Array((1L, Array(0.0, 0.0)), (2L, Array(1.0, 2.0)))
+    val centroids = Array((0, Array(1.0, 0.0)), (1, Array(0.0, 1.0)))
+    val sims = Similarity.ivfScored(corpus, "vec_id", "embedding", queries, centroids, 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(sims.size == 8 && sims.filter(_._1._1 == 1L).values.forall(_ == -1.0) &&
+      sims((2L, 1L)) == -1.0 && sims((2L, 5L)) == -1.0 && math.abs(sims((2L, 4L)) - 1.0) < 1e-12, sims)
+    val report = Similarity.ivfRecallReport(corpus, "vec_id", "embedding",
+      queries, centroids, nProbe = 1, k = 2, minHits = 1).collect()
+    assert(report.map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+
+    // one plane (1, 1): every vector here hashes to the same bucket
+    val pairs = Dedup.cosineLshScoredPairs(corpus, "vec_id", "embedding",
+      Array(Array(1.0, 1.0)), numBands = 1, bitsPerBand = 1, maxBucket = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(pairs.size == 10 && pairs((1L, 5L)) == -1.0 && pairs((2L, 5L)) == -1.0 &&
+      pairs((1L, 3L)) == -1.0 && math.abs(pairs((2L, 4L)) - 1.0) < 1e-12, pairs)
+  }
+
   test("ivfRecallReport's per-task top-k equals the unpruned window ranking") {
     // the unpruned formulation: every (qid, nid) pair crosses the (qid)
     // exchange and one sort ranks them; the report prunes to each map
@@ -504,8 +532,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // crafted: sim ties broken by nid (1.0 ×6; 0.0 against -0.0), a NaN
     // sim (ranks above every number), a null sim (ranks last), fewer
-    // than k candidates, spread over 3 map tasks so buffers merge. (A
-    // zero vector raises DIVIDE_BY_ZERO under ANSI in both formulations.)
+    // than k candidates, spread over 3 map tasks so buffers merge.
     val vecs = Seq(1.0, 2.0, 3.0, 0.5, 4.0, 7.0).map(c => Seq(c, 0.0)) ++
       Seq(Seq(Double.NaN, 1.0), null, Seq(0.0, 1.0), Seq(-0.0, -1.0),
         Seq(-1.0, 0.0), Seq(1.0, 1.0), Seq(1.0, -1.0), Seq(-1.0, 2.0))

@@ -14,21 +14,10 @@ import org.apache.spark.sql.functions._
 class MinPairOrdSpec extends SparkSpec {
 
   import org.apache.spark.sql.execution.SparkPlan
-  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
   private def planNodes(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
     df.collect()
-    val out = scala.collection.mutable.ArrayBuffer[SparkPlan]()
-    def walk(p: SparkPlan): Unit = {
-      out += p
-      p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case other => other.children.foreach(walk)
-      }
-    }
-    walk(df.queryExecution.executedPlan)
-    out.toSeq
+    finalNodes(df.queryExecution.executedPlan)
   }
 
   private def pairsDf(rows: Seq[(Int, java.lang.Long, java.lang.Long)]) = {

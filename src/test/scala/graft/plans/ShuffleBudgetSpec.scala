@@ -17,8 +17,7 @@ import graft.SparkSpec
 class ShuffleBudgetSpec extends SparkSpec {
 
   import org.apache.spark.sql.execution.SparkPlan
-  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-  import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+  import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
   private def materializedShuffles(name: String): (Int, SparkPlan) =
     materializedShufflesOf(
@@ -26,16 +25,9 @@ class ShuffleBudgetSpec extends SparkSpec {
 
   private def materializedShufflesOf(df: org.apache.spark.sql.DataFrame): (Int, SparkPlan) = {
     df.collect()
-    val seen = scala.collection.mutable.Set[Int]()
-    def walk(p: SparkPlan): Unit = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case _: ReusedExchangeExec => () // reads an existing materialization
-      case e: ShuffleExchangeLike => seen += e.id; e.children.foreach(walk)
-      case other => other.children.foreach(walk)
-    }
     val root = df.queryExecution.executedPlan
-    walk(root)
+    // a ReusedExchange is a leaf that reads an existing materialization
+    val seen = finalNodes(root).collect { case e: ShuffleExchangeLike => e.id }.toSet
     (seen.size, root)
   }
 
