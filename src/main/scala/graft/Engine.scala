@@ -744,17 +744,50 @@ object Engine {
     case other => other.toUpperCase
   }
 
-  // Compiled-plan memo for SUMMARIZE, keyed on the input's FULL
-  // canonicalized plan text (not a 32-bit hash — a collision would serve
-  // the wrong table's plan). SUMMARIZE is a catalog inspection command
-  // run repeatedly against stable tables; re-deriving the same
-  // physical plan (analysis + optimization + codegen + AQE bookkeeping)
-  // on every call was pure driver floor (~80-90 ms, BASELINE.md floor).
-  // The memoized Dataset re-executes its job from the files on every
-  // collect() — results are NOT cached — but the file LISTING is captured
-  // at first planning, so files added under the same path after the
-  // first SUMMARIZE need a new session to be seen (same snapshot
-  // contract as the schema memo above).
+  /** Memo key for a result that depends on `df`'s data: the canonical
+    * analyzed plan text plus the sorted (path, length, modification
+    * time) of every file its file relations list. The text alone does
+    * not pin the data: a parquet scan renders without its path, so two
+    * directories with one schema share it. The listing is the one each
+    * relation captured when it was planned: no job and no file-system
+    * call. None when a leaf's rows are not in the plan at all
+    * (`LocalRelation` elides its rows; LogicalRDD/ExternalRDD and
+    * InMemoryRelation render an opaque id): such a plan is not memoized.
+    * Class-name match because LogicalRDD/ExternalRDD live in the
+    * private execution package. */
+  def planKey(df: DataFrame): Option[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+      PartitioningAwareFileIndex}
+    val plan = df.queryExecution.analyzed
+    val opaque = plan.exists { n =>
+      val c = n.getClass.getSimpleName
+      c == "LocalRelation" || c == "LogicalRDD" || c == "ExternalRDD" ||
+        c == "InMemoryRelation"
+    }
+    if (opaque) None
+    else {
+      val files = plan.collect {
+        case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+          l.relation.asInstanceOf[HadoopFsRelation].location
+      }.flatMap {
+        case idx: PartitioningAwareFileIndex =>
+          idx.allFiles().map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}")
+        case idx => idx.inputFiles.toSeq
+      }.sorted
+      Some((plan.canonicalized.toString +: files).mkString("\n"))
+    }
+  }
+
+  // Compiled-plan memo for SUMMARIZE, keyed on [[planKey]] (the full
+  // plan text plus the input files, not a 32-bit hash — a collision
+  // would serve the wrong table's plan). SUMMARIZE is a catalog
+  // inspection command run repeatedly against stable tables;
+  // re-deriving the same physical plan (analysis + optimization +
+  // codegen + AQE bookkeeping) on every call was pure driver floor
+  // (~80-90 ms, BASELINE.md floor). The memoized Dataset re-executes its
+  // job on every collect() — results are NOT cached. The memo lives for
+  // the whole JVM, across sessions; a table planned after one of its
+  // files is rewritten or added has a new key, so it is planned afresh.
   private val summarizeMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
@@ -780,8 +813,7 @@ object Engine {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val fields = df.schema.fields
-    val key = df.queryExecution.analyzed.canonicalized.toString
-    val aggDf = summarizeMemo.computeIfAbsent(key, { _ =>
+    def plan(): DataFrame = {
       // branch A (HashAggregate, codegen): row count, per-column
       // non-null counts, min/max of every non-string column
       val numAggs = count(lit(1)).cast("string").as("__total") +:
@@ -817,7 +849,11 @@ object Engine {
         built.queryExecution.executedPlan
       } finally spark.conf.set("spark.sql.adaptive.enabled", before)
       built
-    })
+    }
+    val aggDf = planKey(df) match {
+      case Some(key) => summarizeMemo.computeIfAbsent(key, _ => plan())
+      case None => plan()
+    }
     val merged: Map[String, String] = aggDf.collect().iterator
       .flatMap(_.getMap[String, String](0).iterator).toMap
     val total = merged("__total").toLong

@@ -341,6 +341,7 @@ object DuckFunctions {
     r("space_term_counts", graft.plans.SpaceTermCounts.builder)
     r("fast_round", graft.plans.FastRound.builder)
     r("sign_lsh_buckets", graft.plans.SignLshBuckets.builder)
+    r("lsh_bucket_pairs", graft.plans.LshBucketPairs.builder)
     r("hashed_shingles", graft.plans.HashedShingles.builder)
     r("minhash_band_buckets", graft.plans.MinhashBands.builder)
     r("delete_neighborhood_hashes", graft.plans.DeleteNeighborhoodHashes.builder)

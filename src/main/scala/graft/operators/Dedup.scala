@@ -218,8 +218,8 @@ object Dedup {
     // re-joined for scoring AFTER candidate dedup, so the wide rows never
     // go through the candidate shuffle. Banding runs inside the fused
     // compiled kernel (minhashBandBuckets), not the interpreted
-    // bandKeys expression form. Same single-pass shape as
-    // [[cosineLshCandidates]]: posexplode_OUTER defeats the optimizer's
+    // bandKeys expression form. Same banding moves as the cosine-LSH
+    // paths ([[lshBands]]): posexplode_OUTER defeats the optimizer's
     // inferred size>0 filter (which would inline the banding kernel), and
     // the WINDOW skew cap (buckets > maxBucket dropped — hot bucket =
     // degenerate text; same move as a salting cutoff) rides the
@@ -438,9 +438,10 @@ object Dedup {
     * INTEGER-EXACT bucketing: vectors are quantized to floor(x*1000+0.5)
     * longs, so the plane dot products (±1 components) are exact integer
     * sums — any engine that replays the same planes computes bit-identical
-    * buckets (the oracle SQL does exactly that). Plan shape: bucket per
-    * row (map-only UDF) → explode (band, bucket) → skew-capped self-join
-    * on the band key = ONE shuffle — the scale path that replaces the
+    * buckets (the oracle SQL does exactly that). Plan shape: band buckets
+    * per row (codegen kernel, map-only) → explode (band, bucket) → ONE
+    * exchange on (band, bucket) → skew cap → each bucket's pairs from
+    * [[graft.plans.LshBucketPairs]] — the scale path that replaces the
     * all-pairs cosine product.
     */
   /** Column form of the fused sign-LSH banding kernel
@@ -456,32 +457,13 @@ object Dedup {
       lit(flat), lit(numBands), lit(bitsPerBand))
   }
 
-  /** Banded + skew-capped rows shared by the candidate/scored variants:
-    * (id, <keep…>, band, bucket), one row per (doc, band).
-    *
-    * Plan-shape notes, load-bearing at every scale:
-    *  - posexplode_OUTER + isNotNull on the GENERATED column: a non-outer
-    *    explode makes the optimizer infer `size(bks)>0 AND isnotnull(bks)`
-    *    and inline the banding kernel into that filter — the dot-product
-    *    kernel would run 3x per row. The outer form infers nothing and
-    *    null/empty `bks` cannot occur (fixed numBands output on a
-    *    non-null vector), so the post-filter drops only null-vector rows.
-    *  - WINDOW-counted skew cap, not a groupBy+anti-join on the hot
-    *    buckets: the self-join above must shuffle the banded
-    *    rows by (band, bucket) anyway, so the window rides the join's
-    *    own exchange (no extra shuffle, only a per-partition sort) and
-    *    the WHOLE pipeline — embedding scan + dot-product kernel +
-    *    shuffle — is ONE canonically-equal subtree that AQE's
-    *    ReuseExchange materializes once for the hot count and both join
-    *    sides. The groupBy form computes a second full scan+kernel pass
-    *    for the count.
-    */
   /** True when `vecCol` on `df` is `array<float>` — the LSH paths then
     * keep the un-widened floats through the banded exchange (half the
-    * bytes per vector copy) and use the float dot kernel; the banding
-    * kernel input alone is cast (below the exchange, integer-exact
-    * quantization either way). Measured r12 (LshLab): the double-array
-    * carry was ~70 ms of the banded write stage on 2000x64 vectors. */
+    * bytes per vector copy) and score them with the float decode of
+    * [[graft.plans.LshBucketPairs]]; the banding kernel input alone is
+    * cast (below the exchange, integer-exact quantization either way).
+    * Measured r12 (LshLab): the double-array carry was ~70 ms of the
+    * banded write stage on 2000x64 vectors. */
   private[graft] def vecIsFloat(df: DataFrame, vecCol: String): Boolean =
     df.select(col(vecCol)).schema.head.dataType match {
       case org.apache.spark.sql.types.ArrayType(
@@ -493,29 +475,29 @@ object Dedup {
     * bucket at bits [i·b, (i+1)·b)) — carried through the banded exchange
     * in place of the 8-long bucket ARRAY when they fit (numBands·b ≤ 64):
     * 8 bytes instead of ~80 (array header + null bitmap + elements) on
-    * every exchanged row, read back on BOTH join sides. Bit 63 may be a
-    * bucket's top bit, so extraction masks after the shift. */
+    * every exchanged row. Bit 63 may be a bucket's top bit; the pair
+    * kernel masks after a logical shift. */
   private def packedBks(bks: Column, numBands: Int, bitsPerBand: Int): Column =
     (0 until numBands).map(i =>
       shiftleft(bks.getItem(i), i * bitsPerBand)).reduce(_ bitwiseOR _)
 
-  private[graft] def packedBandEq(a: Column, b: Column, band: Int,
-                                  bitsPerBand: Int): Column = {
-    val mask = lit((1L << bitsPerBand) - 1L)
-    (shiftright(a, band * bitsPerBand).bitwiseAND(mask)) ===
-      (shiftright(b, band * bitsPerBand).bitwiseAND(mask))
-  }
-
-  private def lshCappedBands(df: DataFrame, idCol: String, vecCol: String,
-                             planes: Array[Array[Double]], numBands: Int,
-                             bitsPerBand: Int, maxBucket: Int,
-                             keep: Seq[(String, Column)],
-                             keepBks: Boolean = false,
-                             packBks: Boolean = false): DataFrame = {
+  /** Banded rows shared by the candidate/scored variants:
+    * (id, <keep…>, [bks | __bksp], band, bucket), one row per (doc, band).
+    * posexplode_OUTER + isNotNull on the GENERATED column: a non-outer
+    * explode makes the optimizer infer `size(bks)>0 AND isnotnull(bks)`
+    * and inline the banding kernel into that filter — the dot-product
+    * kernel would run 3x per row. The outer form infers nothing and
+    * null/empty `bks` cannot occur (fixed numBands output on a non-null
+    * vector), so the post-filter drops only null-vector rows. */
+  private def lshBands(df: DataFrame, idCol: String, vecCol: String,
+                       planes: Array[Array[Double]], numBands: Int,
+                       bitsPerBand: Int, keep: Seq[(String, Column)],
+                       keepBks: Boolean = false,
+                       packBks: Boolean = false): DataFrame = {
     val bandIn =
       if (vecIsFloat(df, vecCol)) col(vecCol).cast("array<double>")
       else col(vecCol)
-    val banded = df
+    df
       .select(col(idCol).as("id") +: keep.map { case (n, c) => c.as(n) } :+
         signLshBucketsCol(bandIn, planes, numBands, bitsPerBand)
           .as("bks"): _*)
@@ -525,38 +507,77 @@ object Dedup {
           .as("__bksp")) else Nil) ++
         Seq(posexplode_outer(col("bks")).as(Seq("band", "bucket"))): _*)
       .filter(col("band").isNotNull)
-    banded
-      .withColumn("bsize",
-        count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-      .filter(col("bsize") <= maxBucket)
-      .drop("bsize")
+  }
+
+  /** Every id-ordered pair within each bucket of `rows` (grouped by
+    * `keys`) of at most `maxBucket` rows: (id_a, id_b, …) from
+    * [[graft.plans.LshBucketPairs]] over the bucket's `members` (a struct
+    * with fields id[, v, n][, bks], carry…). One exchange on `keys`:
+    *  - a WINDOW-counted skew cap, not a groupBy + anti-join on the hot
+    *    buckets: the window, the collect and the pair kernel all ride
+    *    that one exchange (the window adds a per-partition sort, no
+    *    shuffle), and the scan + banding kernel run once. A hot bucket
+    *    is dropped by the spillable window before `collect_list` could
+    *    hold it, so no group in memory exceeds `maxBucket` members.
+    *  - a bucket's pairs come from one loop over its members, each
+    *    vector decoded once: no m² joined rows, half of them rejected
+    *    by `id_a < id_b`, each re-reading two `UnsafeArrayData`. */
+  private[graft] def cappedBucketPairs(rows: DataFrame, keys: Seq[String],
+                                       maxBucket: Int, members: Seq[Column],
+                                       numBands: Int = 0,
+                                       bitsPerBand: Int = 0): DataFrame = {
+    val k = keys.map(col)
+    rows
+      .withColumn("__bsize", count(lit(1)).over(Window.partitionBy(k: _*)))
+      .filter(col("__bsize") <= maxBucket)
+      .groupBy(k: _*).agg(collect_list(struct(members: _*)).as("__members"))
+      .select(call_function("lsh_bucket_pairs", col("__members"),
+        lit(numBands), lit(bitsPerBand)))
   }
 
   def cosineLshCandidates(df: DataFrame, idCol: String, vecCol: String,
                           planes: Array[Array[Double]], numBands: Int,
-                          bitsPerBand: Int, maxBucket: Int): DataFrame = {
-    val capped = lshCappedBands(df, idCol, vecCol, planes, numBands,
-      bitsPerBand, maxBucket, Nil)
-    capped.select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(capped.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+                          bitsPerBand: Int, maxBucket: Int): DataFrame =
+    cappedBucketPairs(lshBands(df, idCol, vecCol, planes, numBands, bitsPerBand, Nil),
+      Seq("band", "bucket"), maxBucket, Seq(col("id")))
       .dropDuplicates("id_a", "id_b")
+
+  /** Banded, capped, scored pairs: (id_a, id_b, cos, [band_collisions],
+    * <c>_a, <c>_b …). Vectors (and any `carry` columns) ride the one
+    * banded exchange and the cosine is computed in the pair kernel, so
+    * only NARROW rows (ids, score, carried scalars) leave the bucket
+    * stage. Norms are computed ONCE PER VECTOR below the exchange (r11):
+    * per pair only the cross dot remains. `collisions` adds each pair's
+    * band-agreement count, from the band buckets carried packed into one
+    * long when they fit (r12: ~72 fewer bytes per exchanged row). */
+  private def cosineLshPairs(df: DataFrame, idCol: String, vecCol: String,
+                             planes: Array[Array[Double]], numBands: Int,
+                             bitsPerBand: Int, maxBucket: Int, carry: Seq[String],
+                             collisions: Boolean): DataFrame = {
+    require(!carry.exists(Set("id", "v", "n", "bks")),
+      s"carry columns may not be named id, v, n or bks: ${carry.mkString(", ")}")
+    val normC =
+      if (vecIsFloat(df, vecCol)) Similarity.normF(col(vecCol))
+      else Similarity.norm(col(vecCol))
+    val packed = collisions && numBands * bitsPerBand <= 64
+    val banded = lshBands(df, idCol, vecCol, planes, numBands, bitsPerBand,
+      carry.map(c => c -> col(c)) :+ ("__v" -> col(vecCol)) :+ ("__n" -> normC),
+      keepBks = collisions && !packed, packBks = packed)
+    val bks =
+      if (!collisions) Nil
+      else Seq(col(if (packed) "__bksp" else "bks").as("bks"))
+    cappedBucketPairs(banded, Seq("band", "bucket"), maxBucket,
+      Seq(col("id"), col("__v").as("v"), col("__n").as("n")) ++ bks ++ carry.map(col),
+      numBands, bitsPerBand)
   }
 
-  /** Sign-LSH candidates with the exact-cosine refine FUSED into the band
-    * join: vectors (and any `carry` columns) ride the banded rows through
-    * the join's own exchange, the cosine is computed at the join output,
-    * and only NARROW rows (ids, score, carried scalars) reach the
-    * pair-dedup shuffle. This removes the two post-candidate id-joins of
-    * the re-join form — at scale those were two extra shuffles of the
-    * whole embedding table plus two join stages per refine; here the
-    * banded exchange (already carrying the rows ×numBands) is the single
-    * wide shuffle, materialized once via ReuseExchange for the cap and
-    * both join sides. A near-dup pair colliding in k bands computes its
-    * cosine k times before dedup — k·dim multiply-adds inside codegen,
-    * cheaper than one extra shuffle join at any k in use.
+  /** Sign-LSH candidates with the exact-cosine refine FUSED into the
+    * bucket stage ([[cosineLshPairs]]): no post-candidate id-joins — at
+    * scale those were two extra shuffles of the whole embedding table
+    * plus two join stages per refine. A near-dup pair colliding in k
+    * bands computes its cosine k times before the pair-dedup shuffle —
+    * k·dim multiply-adds, cheaper than one extra shuffle join at any k
+    * in use.
     *
     * Output: (id_a, id_b, cos, <c>_a, <c>_b …) — one row per candidate
     * pair, cos and carried values identical whichever band produced it.
@@ -564,36 +585,16 @@ object Dedup {
   def cosineLshScoredPairs(df: DataFrame, idCol: String, vecCol: String,
                            planes: Array[Array[Double]], numBands: Int,
                            bitsPerBand: Int, maxBucket: Int,
-                           carry: Seq[String] = Nil): DataFrame = {
-    // norms precompute ONCE PER VECTOR below the banded exchange (r11):
-    // computing them at the join output paid 2 extra dim-length dot
-    // products per CANDIDATE PAIR (a vector in k pairs re-normed k
-    // times) — per-pair math drops 3x to just the cross dot
-    val isF = vecIsFloat(df, vecCol)
-    val dotFn = if (isF) Similarity.dotF _ else Similarity.dot _
-    val normC = if (isF) Similarity.normF(col(vecCol))
-                else Similarity.norm(col(vecCol))
-    val capped = lshCappedBands(df, idCol, vecCol, planes, numBands,
-      bitsPerBand, maxBucket, carry.map(c => c -> col(c)) :+
-        ("__v" -> col(vecCol)) :+ ("__n" -> normC))
-    def side(sfx: String) =
-      capped.select(col("band") +: col("bucket") +: col("id").as(s"id$sfx") +:
-        col("__v").as(s"__v$sfx") +: col("__n").as(s"__n$sfx") +:
-        carry.map(c => col(c).as(s"$c$sfx")): _*)
-    side("_a").join(side("_b"), Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a") +: col("id_b") +:
-        Similarity.cosineFromNorms(dotFn(col("__v_a"), col("__v_b")),
-          col("__n_a"), col("__n_b")).as("cos") +:
-        carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
+                           carry: Seq[String] = Nil): DataFrame =
+    cosineLshPairs(df, idCol, vecCol, planes, numBands, bitsPerBand, maxBucket,
+      carry, collisions = false)
       .dropDuplicates("id_a", "id_b")
-  }
 
   /** [[cosineLshScoredPairs]] WITHOUT the pair-dedup shuffle: a pair
     * colliding in k bands is emitted k times, each row carrying
     * `band_collisions` = k (the count of bands where both sides' bucket
-    * arrays agree, computed from the carried arrays at the join output —
-    * no exchange). A downstream DUPLICATE-INSENSITIVE aggregate can then
+    * words agree, computed in the pair kernel — no exchange). A
+    * downstream DUPLICATE-INSENSITIVE aggregate can then
     * recover exact distinct-pair statistics by weighting each row
     * 1/band_collisions (integer-exactly: weight L/k with L a multiple of
     * lcm(1..numBands), then divide the summed weight by L), folding the
@@ -602,7 +603,7 @@ object Dedup {
     *
     * Cap interplay (the reason this is a separate variant, not the
     * default): `band_collisions` counts collisions over ALL bands, but
-    * the join emits rows only for bands that SURVIVED the skew cap. If a
+    * pairs are emitted only for buckets that SURVIVED the skew cap. If a
     * pair collides in a capped (hot) bucket AND a cold one, its emitted
     * multiplicity is less than `band_collisions` and the weighted sum
     * under-counts. A per-group divisibility-by-L assert downstream
@@ -628,52 +629,8 @@ object Dedup {
                                    bitsPerBand: Int, maxBucket: Int,
                                    carry: Seq[String] = Nil,
                                    verifyCollisions: Boolean = false): DataFrame = {
-    // norms once per vector below the exchange (r11) — same 3x per-pair
-    // math cut as [[cosineLshScoredPairs]]
-    val isF = vecIsFloat(df, vecCol)
-    val dotFn = if (isF) Similarity.dotF _ else Similarity.dot _
-    val normC = if (isF) Similarity.normF(col(vecCol))
-                else Similarity.norm(col(vecCol))
-    // bucket arrays ride the exchange only for the per-pair collision
-    // count — pack them into one long when they fit (r12: ~72 fewer bytes
-    // per exchanged row, written once, read + sorted on both join sides)
-    val packed = numBands * bitsPerBand <= 64
-    val capped = lshCappedBands(df, idCol, vecCol, planes, numBands,
-      bitsPerBand, maxBucket, carry.map(c => c -> col(c)) :+
-        ("__v" -> col(vecCol)) :+ ("__n" -> normC),
-      keepBks = !packed, packBks = packed)
-    val bksCol = if (packed) "__bksp" else "bks"
-    def side(sfx: String) =
-      capped.select(col("band") +: col("bucket") +: col("id").as(s"id$sfx") +:
-        col("__v").as(s"__v$sfx") +: col("__n").as(s"__n$sfx") +:
-        col(bksCol).as(s"__bks$sfx") +:
-        carry.map(c => col(c).as(s"$c$sfx")): _*)
-    // SHUFFLE_MERGE pin: a broadcast self-join would COMPUTE the
-    // banded/capped subtree twice (each side scans + re-kernels + its
-    // own exchange feeding the window); as a sort-merge self-join the
-    // two sides are canonically equal, so ReuseExchange materializes
-    // the subtree once and the merge consumes the (band, bucket) sort
-    // the window cap already paid for — one wide exchange total, at
-    // every scale (the big-data plan shape, pinned so small-stats
-    // local runs keep it too).
-    val scored = side("_a").hint("SHUFFLE_MERGE").join(side("_b"), Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a") +: col("id_b") +:
-        Similarity.cosineFromNorms(dotFn(col("__v_a"), col("__v_b")),
-          col("__n_a"), col("__n_b")).as("cos") +:
-        // UNROLLED equal-band count (r11): numBands is a plan-time
-        // constant, so numBands codegen comparisons replace the
-        // interpreted zip_with/filter lambda this paid per joined row
-        // (HOFs are CodegenFallback); ≥1 by construction (the row
-        // exists because the arrays agree at its own band). Packed form
-        // compares masked bit fields of the two longs instead of array
-        // elements — same count, no per-element array access.
-        (0 until numBands).map(i =>
-          when(if (packed) packedBandEq(col("__bks_a"), col("__bks_b"),
-                 i, bitsPerBand)
-               else col("__bks_a").getItem(i) === col("__bks_b").getItem(i), 1)
-            .otherwise(0)).reduce(_ + _).as("band_collisions") +:
-        carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
+    val scored = cosineLshPairs(df, idCol, vecCol, planes, numBands, bitsPerBand,
+      maxBucket, carry, collisions = true)
     if (!verifyCollisions) scored
     else {
       val w = org.apache.spark.sql.expressions.Window

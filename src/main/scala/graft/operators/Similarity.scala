@@ -173,19 +173,18 @@ object Similarity {
     // depends only on (corpus plan, params), so first call per key
     // trains and later calls serve the stored table — a repeated
     // pipeline (cluster, then semDedup over the same corpus) pays
-    // training once. Keyed on the FULL canonicalized plan text, not a
-    // 32-bit semanticHash (a hash collision would silently serve the
-    // wrong centroids); the SQL oracle replays training from scratch
-    // each run, so a stale/wrong memo hit cannot pass verification.
-    // Plans whose text does NOT capture their data (LocalRelation etc.,
-    // see [[memoSafePlan]]) bypass the memo entirely.
-    val planKey = corpus.queryExecution.analyzed.canonicalized
-    val centroids =
-      if (memoSafePlan(planKey))
-        centroidMemo.getOrCompute(
-          (planKey.toString, idCol, vecCol, k, iterations, scale))(
+    // training once. Keyed on [[graft.Engine.planKey]] (the FULL plan
+    // text plus the input files, not a 32-bit semanticHash — a hash
+    // collision would silently serve the wrong centroids); the SQL oracle
+    // replays training from scratch each run, so a stale/wrong memo hit
+    // cannot pass verification. Plans whose text does NOT capture their
+    // data (LocalRelation etc.) have no key and bypass the memo.
+    val centroids = graft.Engine.planKey(corpus) match {
+      case Some(key) =>
+        centroidMemo.getOrCompute((key, idCol, vecCol, k, iterations, scale))(
           trainLloyd(base, k, iterations))
-      else trainLloyd(base, k, iterations)
+      case None => trainLloyd(base, k, iterations)
+    }
     // Assignment runs as ONE codegen expression
     // ([[graft.plans.ArgminSqDistLong]]): argmin of the exact integer
     // squared distance over the whole centroid table, first-wins ties;
@@ -197,29 +196,10 @@ object Similarity {
         .cast("int").as("cid"))
   }
 
-  /** Memo-key safety gate: canonicalized-plan TEXT is a sound memo key
-    * only when the text pins down the data. File scans do (path +
-    * schema + pushed filters render); in-memory leaves do NOT —
-    * `LocalRelation` renders as `LocalRelation [cols]` with the rows
-    * elided, and LogicalRDD/ExternalRDD/InMemoryRelation render an
-    * opaque RDD/cache id — so two different in-memory corpora with the
-    * same schema would collide and silently serve each other's trained
-    * model. Those plans bypass the memo (training an in-memory corpus
-    * is cheap by definition; the memo exists for the re-scanned-table
-    * serving path). Class-name match because LogicalRDD/ExternalRDD
-    * live in the private execution package. */
-  private def memoSafePlan(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-    !plan.exists { n =>
-      val c = n.getClass.getSimpleName
-      c == "LocalRelation" || c == "LogicalRDD" || c == "ExternalRDD" ||
-        c == "InMemoryRelation"
-    }
-
   /** Bounded per-JVM model memo (LRU on access): an unbounded map would
     * grow for the process lifetime in a service that clusters many
     * distinct corpora — each entry holds k·dim values plus a full
-    * canonicalized plan string. Eviction only costs a retrain.
+    * [[graft.Engine.planKey]] string. Eviction only costs a retrain.
     *
     * Concurrency: the map lock is held only for get/put; the training
     * thunk runs OUTSIDE it inside a per-key [[java.util.concurrent.FutureTask]]
@@ -313,34 +293,31 @@ object Similarity {
   }
 
   /** Per-JVM memo of trained IVF coarse quantizers, keyed on the
-    * corpus's CANONICALIZED logical plan text plus
+    * corpus's [[graft.Engine.planKey]] (plan text plus input files) and
     * every training parameter. An IVF index is trained OFFLINE and
     * served many times in any production ANN system (FAISS/ScaNN build
     * once, probe millions) — retraining per query would be the modeling
-    * error. Staleness contract: mutating the corpus under a memoized
-    * plan serves the old quantizer until retrain (new session / changed
-    * params) — the same explicit-rebuild contract real ANN indexes have;
-    * recall is a property the caller re-verifies after bulk loads.
+    * error. A corpus planned after one of its files is rewritten or
+    * added has a new key, so it retrains.
     */
   private val quantizerMemo = new ModelMemo[
     (String, String, String, Int, Int, Int), Array[(Int, Array[Double])]](64)
 
   /** [[kmeansCentroids]] through the offline-index memo: first call per
     * (corpus plan, params) trains, later calls serve the stored
-    * centroids with zero cluster work. The key carries the FULL
-    * canonicalized plan text, not a 32-bit semanticHash — a hash
-    * collision between two different corpora would silently serve the
-    * wrong centroids JVM-wide, and the plan text makes that impossible
-    * (equal text = semantically equal plan by construction). */
+    * centroids with zero cluster work. The key is the FULL plan text
+    * plus the input files ([[graft.Engine.planKey]]), not a 32-bit
+    * semanticHash — a hash collision between two different corpora
+    * would silently serve the wrong centroids JVM-wide. */
   def kmeansCentroidsCached(corpus: DataFrame, idCol: String, vecCol: String,
                             k: Int, iterations: Int,
                             sampleCap: Int = 65536): Array[(Int, Array[Double])] = {
-    val planKey = corpus.queryExecution.analyzed.canonicalized
-    if (memoSafePlan(planKey))
-      quantizerMemo.getOrCompute(
-        (planKey.toString, idCol, vecCol, k, iterations, sampleCap))(
-        kmeansCentroids(corpus, idCol, vecCol, k, iterations, sampleCap))
-    else kmeansCentroids(corpus, idCol, vecCol, k, iterations, sampleCap)
+    graft.Engine.planKey(corpus) match {
+      case Some(key) =>
+        quantizerMemo.getOrCompute((key, idCol, vecCol, k, iterations, sampleCap))(
+          kmeansCentroids(corpus, idCol, vecCol, k, iterations, sampleCap))
+      case None => kmeansCentroids(corpus, idCol, vecCol, k, iterations, sampleCap)
+    }
   }
 
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
@@ -582,27 +559,17 @@ object Similarity {
                        numPlanes: Int = 12, dim: Int = 64, k: Int = 5,
                        maxBucket: Int = 1000): DataFrame = {
     val planes = hyperplanes(numPlanes, dim)
-    // skew guard (same move as Dedup.minhashCandidates): a degenerate
-    // bucket — e.g. all-zero vectors hashing together — would make the
-    // in-bucket self-join quadratic; cap it like a salting cutoff.
-    // WINDOW-counted cap riding the self-join's own bucket exchange
-    // (same single-pass shape as Dedup.cosineLshCandidates): the join
-    // must shuffle the banded rows by bucket anyway, so the window adds
-    // no shuffle and the scan + 12-plane bucket expression materializes
-    // once for the cap and both join sides instead of three times.
     val b = corpus
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("bucket", lshBucket(col("v"), planes))
       .withColumn("n", norm(col("v")))
-      .withColumn("bsize",
-        count(lit(1)).over(Window.partitionBy(col("bucket"))))
-      .filter(col("bsize") <= maxBucket)
-      .drop("bsize")
-    val l = b.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"), col("n").as("n_a"))
-    val r = b.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"), col("n").as("n_b"))
-    val pairs = l.join(r, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      .select(col("bucket"), col("id_a"), col("id_b"),
-        cosineFromNorms(dot(col("v_a"), col("v_b")), col("n_a"), col("n_b")).as("sim"))
+    // the bucket-pair path of the banded dedup (one bucket exchange, a
+    // window skew cap, the pair kernel); the cap drops a degenerate
+    // bucket — e.g. all-zero vectors hashing together — like a salting
+    // cutoff instead of scoring it quadratically
+    val pairs = Dedup.cappedBucketPairs(b, Seq("bucket"), maxBucket,
+        Seq(col("id"), col("v"), col("n")))
+      .withColumnRenamed("cos", "sim")
     val w = Window.partitionBy(col("id_a")).orderBy(col("sim").desc, col("id_b").asc)
     pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("id_a"), col("id_b"), col("sim"))

@@ -341,9 +341,10 @@ object Pipeline {
       // so the bucketed plan is verified end to end cross-engine
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").as("v"))
-      // refine fused into the band join (vectors ride the one banded
-      // exchange un-widened as array<float> — half the bytes, bit-identical
-      // cosine; see cosineLshScoredPairs / ArrayDotFloat).
+      // refine fused into the bucket stage (vectors ride the one bucket
+      // exchange un-widened as array<float> — half the bytes — and each
+      // bucket's pairs are scored by the lsh_bucket_pairs kernel, which
+      // widens per element: the same cosine bits as array_dot_float).
       // Weighted variant: with numBands = 1 a pair can collide at most
       // once, so the dropDuplicates exchange of the default form is pure
       // overhead — band_collisions is constantly 1 and is dropped.
@@ -669,15 +670,17 @@ object Pipeline {
 
     "dedup_embedding_cosine_lsh" -> ((s, dir) => {
       // scale path for dedup_embedding_cosine: banded sign-LSH candidate
-      // generation (one band-key shuffle, skew-capped, codegen banding
-      // kernel) with the exact-cosine refine FUSED into the band join —
-      // vectors + labels ride the single banded exchange, no
+      // generation (codegen banding kernel, one (band, bucket) shuffle,
+      // window skew cap) with the exact-cosine refine FUSED into the
+      // bucket stage — vectors + labels ride the single banded exchange,
+      // each bucket is collected and its id-ordered pairs are scored in
+      // one primitive loop (lsh_bucket_pairs), no self-join and no
       // post-candidate id-joins. Buckets are integer-exact (quantized
       // vectors, ±1 planes) so the oracle replays the same bucketing in
       // SQL.
       //
       // TWO-barrier plan (was three): the pair-dedup shuffle is folded
-      // into the label aggregate — each joined row carries its pair's
+      // into the label aggregate — each pair row carries its pair's
       // band-collision count k and weighs L/k with L = lcm(1..16), so
       // the per-label sums are EXACTLY L x the distinct-pair counts
       // (integer arithmetic throughout; each pair's k rows contribute
@@ -688,8 +691,8 @@ object Pipeline {
       // so degenerate data fails loudly instead of silently drifting.
       // v stays array<float>: the banded exchange carries one vector copy
       // per (row, band), and un-widened floats HALVE those bytes; the
-      // float dot kernel widens per element, so cos is bit-identical to
-      // the cast-to-double form (r12, LshLab measurement)
+      // pair kernel widens per element, so cos is bit-identical to the
+      // cast-to-double form (r12, LshLab measurement)
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label").cast("long").as("label"),
           col("embedding").as("v"))

@@ -2,11 +2,12 @@ package graft.plans
 
 import graft.SparkSpec
 
-/** Runtime proof of the single-pass LSH banding design: the self-join's
-  * two sides and the window skew cap must all read ONE materialized
-  * shuffle of the banded rows. The static plan cannot show this — AQE
-  * performs exchange reuse while materializing query stages — so the
-  * contract is asserted on the FINAL adaptive plan after execution.
+/** Runtime proof of the single-pass banding designs: every consumer of
+  * the banded rows (the window skew cap, the bucket-pair kernel or a
+  * self-join's two sides) reads ONE materialized shuffle of them. The
+  * static plan cannot show this — AQE performs exchange reuse while
+  * materializing query stages — so the contract is asserted on the
+  * FINAL adaptive plan after execution.
   */
 class LshExchangeReuseSpec extends SparkSpec {
 
@@ -18,10 +19,8 @@ class LshExchangeReuseSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
   }
 
-  test("cosine-LSH self-join reuses the banded exchange at runtime") {
+  test("cosine-LSH pairs come from lsh_bucket_pairs over one banded exchange") {
     val plan = finalPlan("dedup_embedding_cosine_lsh")
-    assert(plan.contains("ReusedExchange"),
-      s"expected the second join side to reuse the banded shuffle:\n$plan")
     // the banding subtree (explode of the kernel output) materialized once
     val explodes = "posexplode".r.findAllIn(plan).size
     assert(explodes == 1,
@@ -31,16 +30,16 @@ class LshExchangeReuseSpec extends SparkSpec {
     // to boxed per-row interpretation (round-4 verdict finding #1)
     assert(!plan.contains("UDF") && plan.contains("sign_lsh_buckets"),
       s"banding stage is not the codegen kernel:\n$plan")
-    // r12 exchange-diet pins: vectors ride the banded exchange UN-WIDENED
-    // (the float dot kernel at the join output — a plain array_dot here
-    // means a cast-to-double array is being carried at twice the bytes),
-    // and the 8-long bucket array is packed into ONE long below the
-    // exchange (shiftleft compose) with masked bit-field compares
-    // (shiftright) at the join output instead of array getItems
-    assert(plan.contains("array_dot_float"),
-      s"join-output cosine is not the float kernel (double carry?):\n$plan")
-    assert(plan.contains("shiftleft") && plan.contains("shiftright"),
-      s"bucket array is not packed through the exchange:\n$plan")
+    // each bucket's pairs come from the pair kernel, not a self-join
+    assert(plan.contains("lsh_bucket_pairs") && !plan.contains("SortMergeJoin"),
+      s"bucket pairs are not generated by lsh_bucket_pairs:\n$plan")
+    // vectors ride the banded exchange UN-WIDENED as array<float>: the
+    // cast to double feeds the banding kernel below the exchange only
+    val lines = plan.split("\n")
+    val banded = lines.indexWhere(_.contains("Exchange hashpartitioning(band"))
+    assert(banded > 0, s"no banded exchange:\n$plan")
+    assert(!lines.take(banded).exists(_.contains("array<double>")),
+      s"a double-array vector is carried above the banded exchange:\n$plan")
   }
 
   test("minhash band join reuses the banded exchange at runtime") {
