@@ -19,7 +19,7 @@ class LshExchangeReuseSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
   }
 
-  test("cosine-LSH pairs come from lsh_bucket_pairs over one banded exchange") {
+  test("cosine-LSH pairs come from lsh_bucket_pairs on one banded exchange") {
     val plan = finalPlan("dedup_embedding_cosine_lsh")
     // the banding subtree (explode of the kernel output) materialized once
     val explodes = "posexplode".r.findAllIn(plan).size
